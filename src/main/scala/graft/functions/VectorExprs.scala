@@ -488,8 +488,12 @@ object VectorExprs {
       val arr = input.asInstanceOf[ArrayData]
       val n = arr.numElements()
       if (n < 2) return new GenericArrayData(Array.empty[Any])
+      val pairs = n.toLong * (n - 1) / 2
+      if (pairs > org.apache.spark.unsafe.array.ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
+        throw new IllegalArgumentException(
+          s"graft_sorted_pairs: array too large for pair expansion ($n elements, $pairs pairs)")
       val elems = arr.toObjectArray(elemType)
-      val out = new Array[Any](n * (n - 1) / 2)
+      val out = new Array[Any](pairs.toInt)
       var k = 0
       var i = 0
       while (i < n - 1) {

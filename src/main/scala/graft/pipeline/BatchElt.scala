@@ -104,14 +104,14 @@ object BatchElt {
         Ops.handleString(normalized, stringCols),
         Seq("issued_shares")),
       dropCols = silverCompanySchema.fieldNames.toSeq)
-    if (!cleaned.isEmpty) {
-      val deduped = Ops.deduplicate(cleaned, Seq("symbol"), "ingest_timestamp")
-      if (!deduped.isEmpty)
-        // ingest_timestamp stats: the next incrementalFrom probe is a
-        // manifest lookup, not a silver-table scan
-        Merge.mergeScd2(silver, deduped, Seq("symbol"), Seq("issued_shares"), clock,
-          statsCols = Seq("ingest_timestamp"))
-    }
+    // handleNull dropped every null-key row and deduplicate keeps one
+    // row per key group, so the dedup output is empty exactly when
+    // `cleaned` is: one probe gates the commit
+    if (!cleaned.isEmpty)
+      // ingest_timestamp stats: the next incrementalFrom probe is a
+      // manifest lookup, not a silver-table scan
+      Merge.mergeScd2(silver, Ops.deduplicate(cleaned, Seq("symbol"), "ingest_timestamp"),
+        Seq("symbol"), Seq("issued_shares"), clock, statsCols = Seq("ingest_timestamp"))
   }
 
   /** t4 — bronze.raw_industry → silver.processed_industry (SCD1). */
@@ -128,11 +128,9 @@ object BatchElt {
         Ops.handleString(normalized, industryStringCols),
         Seq("level")),
       dropCols = silverIndustrySchema.fieldNames.toSeq)
-    if (!cleaned.isEmpty) {
-      val deduped = Ops.deduplicate(cleaned, Seq("icb_code"), "ingest_timestamp")
-      if (!deduped.isEmpty)
-        Merge.mergeScd1(silver, deduped, Seq("icb_code"), statsCols = Seq("ingest_timestamp"))
-    }
+    if (!cleaned.isEmpty)
+      Merge.mergeScd1(silver, Ops.deduplicate(cleaned, Seq("icb_code"), "ingest_timestamp"),
+        Seq("icb_code"), statsCols = Seq("ingest_timestamp"))
   }
 
   /** t5 — silver → gold.dim_company: current company versions joined to
@@ -163,42 +161,45 @@ object BatchElt {
       statsCols = Seq("ingest_timestamp"))
   }
 
-  /** A task in the mini DAG runner: name, upstream dependencies, body. */
+  /** A task of [[runDag]]: name, upstream dependencies, body. */
   final case class Task(name: String, deps: Seq[String])(val body: () => Unit)
 
-  /** Minimal topological DAG runner replicating the Airflow ordering
-    * (fan-in: t5 waits on t3 AND t4). Sequential like the reference's
-    * SequentialExecutor; the structure is what matters for parity.
+  /** Run `tasks` through [[Orchestrator.runOnce]]: a task starts once
+    * all its deps succeed, so independent branches overlap. Returns the
+    * task names in topological order. If a task fails, the run still
+    * settles (its downstreams never start), then the first failed
+    * task's own exception is rethrown.
     */
-  def runDag(tasks: Seq[Task]): Seq[String] = {
-    val byName = tasks.map(t => t.name -> t).toMap
-    val done = scala.collection.mutable.LinkedHashSet.empty[String]
-    def run(name: String, visiting: Set[String]): Unit = {
-      if (done.contains(name)) return
-      require(!visiting.contains(name), s"dependency cycle at $name")
-      val t = byName(name)
-      t.deps.foreach(run(_, visiting + name))
-      t.body()
-      done += name
-    }
-    tasks.foreach(t => run(t.name, Set.empty))
-    done.toSeq
+  def runDag(tasks: Seq[Task]): Seq[String] =
+    run("run_dag", new Timestamp(System.currentTimeMillis()),
+      tasks.map(t => Orchestrator.TaskDef(t.name, t.deps)(_ => t.body())))
+
+  /** One [[Orchestrator.runOnce]]; the first failure in topological
+    * order escapes as its original exception.
+    */
+  private def run(dagId: String, at: Timestamp, tasks: Seq[Orchestrator.TaskDef]): Seq[String] = {
+    val result = Orchestrator.runOnce(dagId, tasks, at)
+    result.tasks.valuesIterator.flatMap(_.failure).nextOption().foreach(e => throw e)
+    result.tasks.keys.toSeq
   }
 
-  /** The reference DAG wired end-to-end over two CSVs. */
+  /** The reference DAG wired end-to-end over two CSVs. The two branches
+    * overlap: they write disjoint tables, and every read follows its
+    * producer through a dep.
+    */
   def runCompanyElt(
       lake: Lakehouse,
       companyCsv: String,
       industryCsv: String,
       clock: Timestamp,
-      batchId: String): Seq[String] =
-    runDag(Seq(
-      Task("raw_company", Seq.empty)(() =>
-        loadBronzeCsv(lake, companyCsv, "raw_company", clock, batchId)),
-      Task("raw_industry", Seq.empty)(() =>
-        loadBronzeCsv(lake, industryCsv, "raw_industry", clock, batchId)),
-      Task("processed_company", Seq("raw_company"))(() => processCompany(lake, clock)),
-      Task("processed_industry", Seq("raw_industry"))(() => processIndustry(lake)),
-      Task("dim_company", Seq("processed_company", "processed_industry"))(() =>
+      batchId: String): Seq[String] = {
+    import Orchestrator.TaskDef
+    run("batch_elt_company", clock, Seq(
+      TaskDef("raw_company")(_ => loadBronzeCsv(lake, companyCsv, "raw_company", clock, batchId)),
+      TaskDef("raw_industry")(_ => loadBronzeCsv(lake, industryCsv, "raw_industry", clock, batchId)),
+      TaskDef("processed_company", Seq("raw_company"))(_ => processCompany(lake, clock)),
+      TaskDef("processed_industry", Seq("raw_industry"))(_ => processIndustry(lake)),
+      TaskDef("dim_company", Seq("processed_company", "processed_industry"))(_ =>
         buildDimCompany(lake))))
+  }
 }

@@ -1,16 +1,21 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import java.util.concurrent.LinkedBlockingQueue
 
+import scala.annotation.tailrec
 import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Airflow-shaped orchestration semantics for the batch ELT DAG —
   * the scheduling layer the reference runs as an Airflow deployment
   * (`/root/reference/src/dags/batch_elt_company.py:9-31`: `default_args`
   * retries + `retry_delay`, `start_date`, `schedule`, `catchup`).
   *
-  * [[BatchElt.runDag]] replicates the reference's dependency ORDERING;
-  * this object adds the run-state machine around it:
+  * [[runOnce]] is the one DAG runner (behind [[BatchElt.runDag]] too):
+  * a task starts as soon as all its deps have succeeded, so independent
+  * branches overlap, wrapped in the run-state machine:
   *
   *   - per-task retries with a delay between attempts (`retry_delay`),
   *     injectable sleep so specs run wall-clock-free
@@ -53,9 +58,11 @@ object Orchestrator {
   }
 
   /** Outcome of one task within a DAG run: terminal state, number of
-    * attempts actually made (0 for upstream_failed), last error.
+    * attempts actually made (0 for upstream_failed), last failure.
     */
-  final case class TaskResult(state: TaskState, attempts: Int, error: Option[String])
+  final case class TaskResult(state: TaskState, attempts: Int, failure: Option[Throwable]) {
+    def error: Option[String] = failure.map(_.toString)
+  }
 
   final case class DagRunResult(
       dagId: String,
@@ -74,17 +81,17 @@ object Orchestrator {
       scheduleMs: Option[Long],
       catchup: Boolean = false)
 
-  /** Deterministic topological order: tasks run in declaration order
-    * subject to dependencies (depth-first over deps, like
-    * [[BatchElt.runDag]]); unknown deps and cycles are authoring errors
-    * surfaced eagerly, before anything executes.
+  /** Deterministic topological order: declaration order subject to
+    * dependencies (depth-first over deps). [[runOnce]] reports results in
+    * this order; unknown deps and cycles are authoring errors surfaced
+    * eagerly, before anything executes.
     */
   def topoOrder(tasks: Seq[TaskDef]): Seq[TaskDef] = {
     val byName = tasks.map(t => t.name -> t).toMap
     require(byName.size == tasks.size, "duplicate task names")
     tasks.foreach(t =>
       t.deps.foreach(d => require(byName.contains(d), s"task ${t.name}: unknown dep $d")))
-    val ordered = scala.collection.mutable.LinkedHashSet.empty[String]
+    val ordered = mutable.LinkedHashSet.empty[String]
     def visit(name: String, visiting: Set[String]): Unit = {
       if (ordered.contains(name)) return
       require(!visiting.contains(name), s"dependency cycle at $name")
@@ -95,56 +102,133 @@ object Orchestrator {
     ordered.toSeq.map(byName)
   }
 
-  /** Execute one DAG run at `logicalDate`. Sequential like the
-    * reference's executor; `sleep` is the retry-delay effect (inject a
-    * no-op in tests).
+  /** Execute one DAG run at `logicalDate`. Each task starts, on its own
+    * worker thread, as soon as every one of its deps has succeeded, so
+    * independent branches overlap; `sleep` is the retry-delay effect
+    * (inject a no-op in tests — it may be called from several workers at
+    * once). The result lists the tasks in [[topoOrder]], whatever order
+    * they finished in.
+    *
+    * An `InterruptedException` inside a task fails that task at once and
+    * sets the caller's interrupt flag when the run returns; so does a body
+    * that leaves its own interrupt flag set (restore-then-throw, NIO's
+    * `ClosedByInterruptException`), as when bodies ran on the caller's
+    * thread. Such a flag does not cancel the rest of the run. Interrupting
+    * the caller while it waits interrupts every running task and starts
+    * no new one: ready tasks are recorded `Failed` after 0 attempts. A
+    * fatal error in a task body is rethrown here once the workers stop.
     */
   def runOnce(
       dagId: String,
       tasks: Seq[TaskDef],
       logicalDate: Timestamp,
       sleep: Long => Unit = Thread.sleep): DagRunResult = {
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, TaskResult]
-    topoOrder(tasks).foreach { t =>
-      val blocked = t.deps.exists(d => results(d).state != TaskState.Success)
-      if (blocked) {
-        results += t.name -> TaskResult(TaskState.UpstreamFailed, 0, None)
-      } else {
-        var attempt = 0
-        var outcome: Option[TaskResult] = None
-        while (outcome.isEmpty) {
-          attempt += 1
-          try {
-            t.body(RunContext(dagId, logicalDate, attempt))
-            outcome = Some(TaskResult(TaskState.Success, attempt, None))
-          } catch {
-            // cancellation is not a transient failure: restore the
-            // interrupt flag and fail immediately — never burn the retry
-            // budget re-running whole task bodies after a shutdown request
-            case e: InterruptedException =>
-              Thread.currentThread().interrupt()
-              outcome = Some(TaskResult(TaskState.Failed, attempt, Some(e.toString)))
-            case scala.util.control.NonFatal(_) if attempt <= t.retries =>
-              // an interrupt landing during the retry delay must resolve
-              // like the in-body interrupt path — restore the flag and
-              // record Failed — not escape runOnce and discard the
-              // accumulated results
-              if (t.retryDelayMs > 0) {
-                try sleep(t.retryDelayMs)
-                catch {
-                  case e: InterruptedException =>
-                    Thread.currentThread().interrupt()
-                    outcome = Some(TaskResult(TaskState.Failed, attempt, Some(e.toString)))
-                }
-              }
-            case scala.util.control.NonFatal(e) =>
-              outcome = Some(TaskResult(TaskState.Failed, attempt, Some(e.toString)))
-          }
+    val order = topoOrder(tasks)
+    val results = mutable.HashMap.empty[String, TaskResult]
+    val workers = mutable.LinkedHashMap.empty[String, Thread]
+    val finished = new LinkedBlockingQueue[(String, Either[Throwable, TaskResult], Boolean)]
+    var cancelled: Option[InterruptedException] = None
+    var bodyInterrupted = false
+    // one pass in topological order settles every task whose deps are
+    // all settled: a dep that did not succeed marks it upstream_failed
+    // (transitively, as the pass reaches its downstreams), all deps
+    // succeeded starts it on its own worker
+    def launchReady(): Unit = order.foreach { t =>
+      if (!results.contains(t.name) && !workers.contains(t.name)) {
+        val deps = t.deps.map(results.get)
+        if (deps.exists(_.exists(_.state != TaskState.Success)))
+          results(t.name) = TaskResult(TaskState.UpstreamFailed, 0, None)
+        else if (deps.forall(_.isDefined)) cancelled match {
+          case Some(e) => results(t.name) = TaskResult(TaskState.Failed, 0, Some(e))
+          case None =>
+            val w = new Thread(
+              () => {
+                val outcome =
+                  try Right(attempt(t, RunContext(dagId, logicalDate, 1), sleep))
+                  catch { case e: Throwable => Left(e) }
+                // `add`, not `put`: `put` throws while this thread's
+                // interrupt flag is set, and the caller would wait for
+                // this task forever. The flag itself is handed on.
+                finished.add((t.name, outcome, Thread.interrupted()))
+              },
+              s"dag-$dagId-${t.name}")
+            w.setDaemon(true)
+            workers(t.name) = w
+            w.start()
         }
-        results += t.name -> outcome.get
       }
     }
-    DagRunResult(dagId, logicalDate, ListMap(results.toSeq: _*))
+    try {
+      launchReady()
+      while (workers.keysIterator.exists(!results.contains(_))) {
+        val next =
+          try Some(finished.take())
+          catch {
+            case e: InterruptedException =>
+              // the caller asked to stop: interrupt the running bodies,
+              // start nothing new
+              cancelled = cancelled.orElse(Some(e))
+              workers.valuesIterator.foreach(_.interrupt())
+              None
+          }
+        next.foreach { case (name, outcome, flagged) =>
+          if (flagged) bodyInterrupted = true
+          results(name) = outcome.fold(e => throw e, identity)
+          launchReady()
+        }
+      }
+    } finally {
+      // only a fatal error leaves bodies running here: stop those too
+      workers.foreach { case (name, w) => if (!results.contains(name)) w.interrupt() }
+      joinAll(workers.values)
+    }
+    if (cancelled.isDefined || bodyInterrupted ||
+        results.values.exists(_.failure.exists(_.isInstanceOf[InterruptedException])))
+      Thread.currentThread().interrupt()
+    DagRunResult(dagId, logicalDate, ListMap(order.map(t => t.name -> results(t.name)): _*))
+  }
+
+  /** Run `t` from `ctx.attempt` on, retrying within its budget. */
+  @tailrec
+  private def attempt(t: TaskDef, ctx: RunContext, sleep: Long => Unit): TaskResult = {
+    def failed(e: Throwable) = TaskResult(TaskState.Failed, ctx.attempt, Some(e))
+    val error =
+      try { t.body(ctx); None }
+      catch {
+        case e: InterruptedException => Some(e)
+        case NonFatal(e) => Some(e)
+      }
+    error match {
+      case None => TaskResult(TaskState.Success, ctx.attempt, None)
+      // cancellation is not a transient failure: fail immediately —
+      // never burn the retry budget re-running whole task bodies after
+      // a shutdown request
+      case Some(e: InterruptedException) => failed(e)
+      case Some(e) if ctx.attempt > t.retries => failed(e)
+      case Some(_) =>
+        // an interrupt landing during the retry delay resolves like the
+        // in-body interrupt path
+        val cut =
+          if (t.retryDelayMs <= 0) None
+          else
+            try { sleep(t.retryDelayMs); None }
+            catch { case e: InterruptedException => Some(e) }
+        cut match {
+          case Some(e) => failed(e)
+          case None => attempt(t, ctx.copy(attempt = ctx.attempt + 1), sleep)
+        }
+    }
+  }
+
+  /** Wait until every worker has exited, so none outlives the run. */
+  private def joinAll(workers: Iterable[Thread]): Unit = {
+    var interrupted = false
+    workers.foreach { w =>
+      while (w.isAlive)
+        try w.join()
+        catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
   }
 
   /** Logical dates due at `now`: one per schedule interval [T,

@@ -45,14 +45,16 @@ object ExtQueries {
     * full physical planning + RDD DAG build of the scan per call site
     * (and reads the pre-AQE count) — all to make a 1-bit decision
     * (r21 ADVICE). Falls back to `target` (= never widen) when a file's
-    * size is unreadable, the conservative no-shuffle default.
+    * size cannot be looked up locally — unreadable, a non-local scheme,
+    * or a path `java.net.URI` rejects (a space in a directory name) —
+    * the conservative no-shuffle default.
     */
-  private def scanPartitionEstimate(spark: SparkSession, df: DataFrame): Long = {
+  private[queries] def scanPartitionEstimate(spark: SparkSession, df: DataFrame): Long = {
     val conf = spark.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
     val sizes = df.inputFiles.map { f =>
-      val p = java.nio.file.Paths.get(new java.net.URI(f))
-      try java.nio.file.Files.size(p) catch { case _: java.io.IOException => -1L }
+      try java.nio.file.Files.size(java.nio.file.Paths.get(new java.net.URI(f)))
+      catch { case scala.util.control.NonFatal(_) => -1L }
     }
     if (sizes.isEmpty || sizes.exists(_ < 0)) spark.sparkContext.defaultParallelism.toLong
     else {

@@ -141,4 +141,17 @@ class ParitySpec extends SparkSpec {
       assert(a == b, "pair sets or order diverge")
     }
   }
+
+  test("SortedPairs rejects an array whose pair count overflows an Int") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    // 70 000 elements -> 2 449 965 000 pairs, past Int.MaxValue
+    val big = Literal(
+      new GenericArrayData(Array.tabulate[Any](70000)(_.toLong)),
+      ArrayType(LongType, containsNull = false))
+    val e = intercept[IllegalArgumentException](
+      VectorExprs.SortedPairs(big, "p1", "p2").eval())
+    assert(e.getMessage.contains("array too large for pair expansion"))
+  }
 }

@@ -88,4 +88,41 @@ class BatchEltSpec extends SparkSpec {
         BatchElt.Task("y", Seq("x"))(() => ())))
     }
   }
+
+  test("a day whose company rows are all dirty commits nothing to silver") {
+    val lake = BatchElt.Lakehouse(spark, scratchDir("lake-dirty"))
+    BatchElt.runCompanyElt(lake, fixture("company.csv"), fixture("industry.csv"), t1, "b1")
+    val silver = lake.table("silver", "processed_company")
+    val before = silver.latestVersion()
+    val dirty = java.nio.file.Paths.get(scratchDir("dirty-csv"), "company.csv")
+    java.nio.file.Files.write(dirty, java.util.Arrays.asList(
+      "symbol,organ_name,icb_code1,icb_code2,icb_code3,icb_code4,issue_share",
+      "ACB,Asia Commercial Bank,8000,8300,8350,8355,-1", // non-positive shares -> NULL -> dropped
+      ",Nameless Symbol,8000,8300,8350,8355,1000", // null key
+      "VCB,,8000,8300,8350,8355,1000")) // null name
+    BatchElt.runCompanyElt(lake, dirty.toString, fixture("industry.csv"), t2, "b2")
+    assert(silver.latestVersion() == before)
+    assert(silver.read().count() == 7)
+  }
+
+  test("a failing task's own exception escapes runDag; its downstream never runs") {
+    class TaskBoom extends RuntimeException("task boom")
+    val ran = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val workers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    def body(name: String)(f: => Unit): () => Unit = () => {
+      workers.add(Thread.currentThread())
+      ran.add(name)
+      f
+    }
+    intercept[TaskBoom] {
+      BatchElt.runDag(Seq(
+        BatchElt.Task("fails", Seq.empty)(body("fails")(throw new TaskBoom)),
+        BatchElt.Task("sibling", Seq.empty)(body("sibling")(())),
+        BatchElt.Task("downstream", Seq("fails"))(body("downstream")(()))))
+    }
+    assert(ran.contains("fails") && ran.contains("sibling"))
+    assert(!ran.contains("downstream"))
+    assert(!workers.contains(Thread.currentThread()))
+    workers.forEach(t => assert(!t.isAlive, s"runner thread ${t.getName} outlived runDag"))
+  }
 }

@@ -1,34 +1,79 @@
 package graft.pipeline
 
 import java.sql.Timestamp
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import Orchestrator._
 
-/** Pins the Airflow-shaped run-state machine: ordering, retry budget +
-  * delay, failure propagation to downstreams while siblings continue,
-  * and schedule/catchup due-date computation. Pure driver-side — no
-  * SparkSession needed.
+/** Pins the Airflow-shaped run-state machine: ordering, overlap of
+  * independent branches, retry budget + delay, failure propagation to
+  * downstreams while siblings continue, and schedule/catchup due-date
+  * computation. Pure driver-side — no SparkSession needed.
   */
 class OrchestratorSpec extends AnyFunSuite {
 
   private val t0 = Timestamp.valueOf("2025-01-01 00:00:00")
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def diamond(log: collection.mutable.Buffer[String], failIn: Set[String] = Set.empty) =
-    Seq(
-      TaskDef("a")(_ => { log += "a"; if (failIn("a")) sys.error("boom a") }),
-      TaskDef("b", Seq("a"))(_ => { log += "b"; if (failIn("b")) sys.error("boom b") }),
-      TaskDef("c", Seq("a"))(_ => { log += "c"; if (failIn("c")) sys.error("boom c") }),
-      TaskDef("d", Seq("b", "c"))(_ => { log += "d"; if (failIn("d")) sys.error("boom d") }))
+  /** Start/end stamps per task from one shared monotonic tick, so "x
+    * started after y finished" is a plain comparison across threads.
+    */
+  private final class Stamps {
+    private val tick = new AtomicLong
+    private val spans = collection.mutable.Buffer.empty[(String, Long, Long)]
+    def record(name: String)(body: => Unit): Unit = {
+      val start = tick.incrementAndGet()
+      try body
+      finally {
+        val end = tick.incrementAndGet()
+        synchronized(spans += ((name, start, end)))
+      }
+    }
+    def ran: Seq[String] = synchronized(spans.map(_._1).toSeq)
+    def start(name: String): Long = synchronized(spans.find(_._1 == name).get._2)
+    def end(name: String): Long = synchronized(spans.find(_._1 == name).get._3)
+  }
+
+  private def diamond(stamps: Stamps, failIn: Set[String] = Set.empty) = {
+    def task(name: String, deps: String*) = TaskDef(name, deps)(_ =>
+      stamps.record(name)(if (failIn(name)) sys.error(s"boom $name")))
+    Seq(task("a"), task("b", "a"), task("c", "a"), task("d", "b", "c"))
+  }
+
+  /** Every task that ran did so exactly once and started only after each
+    * of its deps had finished.
+    */
+  private def assertDepsFinishedFirst(tasks: Seq[TaskDef], stamps: Stamps): Unit = {
+    val ran = stamps.ran
+    assert(ran.distinct == ran, s"a task ran twice: $ran")
+    for (t <- tasks if ran.contains(t.name); d <- t.deps)
+      assert(stamps.start(t.name) > stamps.end(d), s"${t.name} started before its dep $d finished")
+  }
 
   test("runs in dependency order with fan-in, all success") {
-    val log = collection.mutable.Buffer.empty[String]
-    val r = runOnce("dag", diamond(log), t0, sleep = _ => ())
-    assert(log.toSeq == Seq("a", "b", "c", "d"))
+    val stamps = new Stamps
+    val tasks = diamond(stamps)
+    val r = runOnce("dag", tasks, t0, sleep = _ => ())
+    assert(stamps.ran.sorted == Seq("a", "b", "c", "d"))
+    assertDepsFinishedFirst(tasks, stamps)
     assert(r.succeeded)
     assert(r.tasks.values.forall(_.attempts == 1))
+    assert(r.tasks.keys.toSeq == Seq("a", "b", "c", "d")) // topological, not completion order
+  }
+
+  test("independent branches overlap: b finishes only once c has started") {
+    val cStarted = new CountDownLatch(1)
+    val tasks = Seq(
+      TaskDef("a")(_ => ()),
+      TaskDef("b", Seq("a"))(_ =>
+        if (!cStarted.await(30, TimeUnit.SECONDS)) sys.error("c never ran alongside b")),
+      TaskDef("c", Seq("a"))(_ => cStarted.countDown()),
+      TaskDef("d", Seq("b", "c"))(_ => ()))
+    val r = runOnce("dag", tasks, t0, sleep = _ => ())
+    assert(r.succeeded, r.tasks.toString)
   }
 
   test("retries until success, sleeping retry_delay between attempts") {
@@ -55,14 +100,23 @@ class OrchestratorSpec extends AnyFunSuite {
   }
 
   test("failure marks transitive downstream upstream_failed, sibling branch still runs") {
-    val log = collection.mutable.Buffer.empty[String]
-    val r = runOnce("dag", diamond(log, failIn = Set("b")), t0, sleep = _ => ())
+    val stamps = new Stamps
+    val tasks = diamond(stamps, failIn = Set("b"))
+    val r = runOnce("dag", tasks, t0, sleep = _ => ())
     assert(r.tasks("a").state == TaskState.Success)
     assert(r.tasks("b").state == TaskState.Failed)
     assert(r.tasks("c").state == TaskState.Success) // independent branch
     assert(r.tasks("d").state == TaskState.UpstreamFailed)
     assert(r.tasks("d").attempts == 0)
-    assert(log.toSeq == Seq("a", "b", "c")) // d never executed
+    assert(stamps.ran.sorted == Seq("a", "b", "c")) // d never executed
+    assertDepsFinishedFirst(tasks, stamps)
+  }
+
+  test("a failed task keeps its own exception") {
+    val boom = new IllegalStateException("boom")
+    val r = runOnce("dag", Seq(TaskDef("t")(_ => throw boom)), t0, sleep = _ => ())
+    assert(r.tasks("t").failure.contains(boom))
+    assert(r.tasks("t").error.contains(boom.toString))
   }
 
   test("attempt number is exposed in the run context") {
@@ -93,6 +147,69 @@ class OrchestratorSpec extends AnyFunSuite {
     // the interrupt flag must be restored for the caller (and cleared
     // here so it can't poison later tests on this thread)
     assert(Thread.interrupted())
+  }
+
+  /** Run `tasks` on a fresh caller thread; returns the result and the
+    * caller's interrupt flag after the run, failing if it never returns.
+    */
+  private def runOnCaller(tasks: Seq[TaskDef])(whileRunning: Thread => Unit): (DagRunResult, Boolean) = {
+    @volatile var result: DagRunResult = null
+    @volatile var flagAfter = false
+    val caller = new Thread(() => {
+      result = runOnce("dag", tasks, t0, sleep = _ => ())
+      flagAfter = Thread.currentThread().isInterrupted
+    })
+    caller.setDaemon(true)
+    caller.start()
+    whileRunning(caller)
+    caller.join(30000)
+    assert(!caller.isAlive, "runOnce never returned")
+    (result, flagAfter)
+  }
+
+  test("interrupting the caller interrupts running tasks and starts no downstream") {
+    val started = new CountDownLatch(1)
+    val (r, flagAfter) = runOnCaller(Seq(
+      TaskDef("slow")(_ => { started.countDown(); new CountDownLatch(1).await() }),
+      TaskDef("after", Seq("slow"))(_ => ()))) { caller =>
+      assert(started.await(30, TimeUnit.SECONDS))
+      caller.interrupt()
+    }
+    assert(r.tasks("slow").state == TaskState.Failed)
+    assert(r.tasks("slow").failure.exists(_.isInstanceOf[InterruptedException]))
+    assert(r.tasks("after").state == TaskState.UpstreamFailed)
+    assert(flagAfter)
+  }
+
+  test("a body that restores its interrupt flag, then throws, still reports Failed") {
+    val (r, flagAfter) = runOnCaller(Seq(
+      TaskDef("flagged") { _ =>
+        Thread.currentThread().interrupt()
+        throw new RuntimeException("closed by interrupt")
+      },
+      TaskDef("after", Seq("flagged"))(_ => ())))(_ => ())
+    assert(r.tasks("flagged").state == TaskState.Failed)
+    assert(r.tasks("flagged").failure.exists(_.getMessage == "closed by interrupt"))
+    assert(r.tasks("after").state == TaskState.UpstreamFailed)
+    assert(flagAfter)
+  }
+
+  test("a body that swallows the caller's interrupt and returns still reports") {
+    val started = new CountDownLatch(1)
+    val (r, flagAfter) = runOnCaller(Seq(
+      TaskDef("slow") { _ =>
+        started.countDown()
+        try new CountDownLatch(1).await()
+        catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+      },
+      TaskDef("after", Seq("slow"))(_ => ()))) { caller =>
+      assert(started.await(30, TimeUnit.SECONDS))
+      caller.interrupt()
+    }
+    assert(r.tasks("slow").state == TaskState.Success)
+    assert(r.tasks("after").state == TaskState.Failed)
+    assert(r.tasks("after").attempts == 0)
+    assert(flagAfter)
   }
 
   test("unknown dep and cycles rejected before any task runs") {
