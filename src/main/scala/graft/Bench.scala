@@ -114,25 +114,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle-partition override for scale rehearsals: at 10×+ the
-    // shipped SFs, 32 partitions put 10× the data through each task and
-    // the heavy shuffles spill — the knob every real cluster sizes to
-    // its SF (AQE coalesces back for the small queries). Absent env →
-    // exactly the driver-contract 32.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = Sessions.local()
     // JVM/session warm-up so the first measured query isn't charged for
     // codegen + executor spin-up
     probeTable(sfDir).foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())

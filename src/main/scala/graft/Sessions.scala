@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** The one session factory: Bench, Verify, the tools, the pipeline
+  * benchmark and the test suites all build their session here.
   *
   * Defaults tuned for the harness's local[32] / 128 GiB box, but every
   * knob here is the same one you'd set on a 1000-executor cluster:
@@ -21,6 +22,9 @@ object Sessions {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
+      // engine extensions (optimizer rules, MERGE parser, compiled SQL
+      // functions); on a cluster the same thing ships as
+      // spark.sql.extensions=graft.plans.GraftExtensions
       .withExtensions(new graft.plans.GraftExtensions)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -31,10 +35,6 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // engine extensions (compiled SQL functions + HOF strength-reduction
-    // rule); on a cluster the same thing ships as
-    // spark.sql.extensions=graft.plans.GraftExtensions
-    graft.plans.GraftExtensions.install(spark)
     spark
   }
 

@@ -87,7 +87,7 @@ object Bpe {
       // not tokens; the corpus-scale pass already happened in
       // wordTypes). When that table fits the driver bound, run the
       // whole merge loop locally in one collect — zero per-round jobs,
-      // zero checkpoint churn (JobProf: the engine loop was ~20 jobs /
+      // zero checkpoint churn (measured: the engine loop was ~20 jobs /
       // several seconds of submission+planning overhead at merges=6;
       // every real tokenizer trainer fits driver-side for this
       // reason). Oversized type tables keep the engine loop, which

@@ -58,7 +58,7 @@ object Clustering {
       val assigned =
         if (centroids.size <= LiteralCentroidCap)
           corpus.select(
-            (-bestOf(centroids, corpus, col(vecCol)).getField("nc")).cast("int").as("cluster"),
+            (-bestOf(centroids, col(vecCol)).getField("nc")).cast("int").as("cluster"),
             col(vecCol))
         else assignByJoin(corpus, idCol, vecCol, centroids).select(col("cluster"), col(vecCol))
       centroids = Embeddings
@@ -85,11 +85,10 @@ object Clustering {
     */
   private[ext] def scoredArray(
       centroids: Seq[(Int, Seq[Double])],
-      spark: org.apache.spark.sql.SparkSession,
       vec: Column): Column =
     array(centroids.map { case (cid, cv) =>
       struct(
-        round(graft.functions.VectorExprs.arrayCosine(spark, vec, typedlit(cv)), 6).as("s"),
+        round(graft.functions.VectorExprs.arrayCosine(vec, typedlit(cv)), 6).as("s"),
         lit(-cid).as("nc"))
     }: _*)
 
@@ -98,9 +97,8 @@ object Clustering {
     */
   private def bestOf(
       centroids: Seq[(Int, Seq[Double])],
-      corpus: DataFrame,
       vec: Column): Column =
-    array_max(scoredArray(centroids, corpus.sparkSession, vec))
+    array_max(scoredArray(centroids, vec))
 
   /** Up to this many centroids, assignment/probing is a pure projection
     * over literal centroid structs (zero shuffle, zero join — the plan
@@ -141,7 +139,7 @@ object Clustering {
     // array<double> too, and ArrayCosine's mixed float/double loop makes
     // the two paths arithmetic-identical (parity is bit-exact, not
     // approximate)
-    val cos = graft.functions.VectorExprs.arrayCosine(spark, col(vecCol), col("_centroid"))
+    val cos = graft.functions.VectorExprs.arrayCosine(col(vecCol), col("_centroid"))
     // surrogate ROW key, not idCol: grouping on idCol would collapse
     // duplicate (or null) ids into one synthetic row — the literal path
     // assigns per ROW, and the two paths must stay row-equivalent
@@ -177,7 +175,7 @@ object Clustering {
     // array<double> too, and ArrayCosine's mixed float/double loop makes
     // the two paths arithmetic-identical (parity is bit-exact, not
     // approximate)
-    val cos = graft.functions.VectorExprs.arrayCosine(spark, col(vecCol), col("_centroid"))
+    val cos = graft.functions.VectorExprs.arrayCosine(col(vecCol), col("_centroid"))
     // surrogate ROW key (see assignByJoin): duplicate/null query ids
     // must each keep their own nprobe lists, exactly like the literal
     // per-row path
@@ -205,7 +203,7 @@ object Clustering {
       iters: Int): DataFrame = {
     val centroids = kmeansFit(corpus, idCol, vecCol, k, iters)
     if (centroids.size <= LiteralCentroidCap) {
-      val b = bestOf(centroids, corpus, col(vecCol))
+      val b = bestOf(centroids, col(vecCol))
       corpus.select(
         col(idCol),
         (-b.getField("nc")).cast("int").as("cluster"),
@@ -236,7 +234,6 @@ object Clustering {
       threshold: Double,
       k: Int,
       iters: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
     val centroids = kmeansFit(corpus, idCol, vecCol, k, iters)
     // ONE assignment frame, self-joined on aliases: both join sides share a
     // byte-identical plan up to the cluster-keyed exchange, so Spark's
@@ -251,7 +248,7 @@ object Clustering {
     val assigned =
       if (centroids.size <= LiteralCentroidCap)
         corpus.select(
-          (-bestOf(centroids, corpus, col(vecCol)).getField("nc")).cast("int").as("cluster"),
+          (-bestOf(centroids, col(vecCol)).getField("nc")).cast("int").as("cluster"),
           col(idCol).as("id"),
           col(vecCol).as("vec"))
       else
@@ -267,7 +264,7 @@ object Clustering {
       .filter(col("a.id") < col("b.id"))
       .withColumn(
         "cosine",
-        round(graft.functions.VectorExprs.arrayCosine(spark, col("a.vec"), col("b.vec")), 6))
+        round(graft.functions.VectorExprs.arrayCosine(col("a.vec"), col("b.vec")), 6))
       .filter(col("cosine") >= threshold)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("cosine"))
   }

@@ -152,7 +152,6 @@ object Dedup {
         col(idCol).as("id"),
         graft.functions.VectorExprs
           .shingleHashes(
-            df.sparkSession,
             split(trim(lower(col(textCol))), "\\s+"),
             shingleN,
             P)
@@ -160,7 +159,7 @@ object Dedup {
       .select(
         col("id"),
         graft.functions.VectorExprs
-          .minhashSig(df.sparkSession, col("hashes"), as, bs, P)
+          .minhashSig(col("hashes"), as, bs, P)
           .as("sig"))
   }
 
@@ -223,13 +222,11 @@ object Dedup {
       threshold: Double = 0.5,
       shingleN: Int = 3,
       maxPostings: Int = 0): DataFrame = {
-    val spark = df.sparkSession
     val sets = df
       .select(
         col(idCol).as("id"),
         graft.functions.VectorExprs
           .shingleHashes(
-            spark,
             split(trim(lower(col(textCol))), "\\s+"),
             shingleN,
             Long.MaxValue)
@@ -329,7 +326,6 @@ object Dedup {
       textCol: String,
       threshold: Double = 0.8,
       shingleN: Int = 3): DataFrame = {
-    val spark = df.sparkSession
     // The shingle-set frame is traversed five times (document-frequency
     // aggregation, prefix build, probe side, and both verification
     // joins); Spark shares no subplans across those branches, so
@@ -341,7 +337,6 @@ object Dedup {
         col(idCol).as("id"),
         graft.functions.VectorExprs
           .shingleHashes(
-            spark,
             split(trim(lower(col(textCol))), "\\s+"),
             shingleN,
             Long.MaxValue)
@@ -443,7 +438,7 @@ object Dedup {
       .groupBy(col("band"), col("bucket"))
       .agg(array_sort(collect_list(col("id"))).as("ids"))
       .filter(size(col("ids")) >= 2)
-      .select(explode(orderedPairs(df.sparkSession, col("ids"))).as("p"))
+      .select(explode(orderedPairs(col("ids"))).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .distinct()
   }
@@ -456,9 +451,8 @@ object Dedup {
     * interpreted per element. O(n²) per bucket with n capped by the
     * caller's bucket bound.
     */
-  private def orderedPairs(
-      spark: org.apache.spark.sql.SparkSession, sorted: Column): Column =
-    graft.functions.VectorExprs.sortedPairs(spark, sorted, "id_a", "id_b")
+  private def orderedPairs(sorted: Column): Column =
+    graft.functions.VectorExprs.sortedPairs(sorted, "id_a", "id_b")
 
   /** End-to-end MinHash+LSH near-dup detection: candidates from LSH,
     * verified with exact shingle Jaccard ≥ `threshold`.
@@ -481,7 +475,7 @@ object Dedup {
     val hashedRaw = df.select(
       col(idCol).as("id"),
       graft.functions.VectorExprs
-        .shingleHashes(spark, split(trim(lower(col(textCol))), "\\s+"), shingleN, Long.MaxValue)
+        .shingleHashes(split(trim(lower(col(textCol))), "\\s+"), shingleN, Long.MaxValue)
         .as("sh"))
     // The hashed frame feeds BOTH verify joins. SIZE-GATED persist (the
     // MERGE probe's r21 lesson, applied here after the driver measured
@@ -513,7 +507,7 @@ object Dedup {
         // floor-form 4-dp rounding: engine-exact on .5 boundaries (see
         // ngramJaccardPairs)
         floor(
-          graft.functions.VectorExprs.jaccardLongs(spark, col("sh_a"), col("sh_b")) * 10000
+          graft.functions.VectorExprs.jaccardLongs(col("sh_a"), col("sh_b")) * 10000
             + 0.5) / 10000.0)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -568,7 +562,7 @@ object Dedup {
     val sigs = df.select(
       col(idCol).as("id"),
       graft.functions.VectorExprs
-        .simhash64(df.sparkSession, split(trim(lower(col(textCol))), "\\s+"))
+        .simhash64(split(trim(lower(col(textCol))), "\\s+"))
         .as("sig"))
     simhashPairsFromSigs(sigs, maxHamming, maxBucket, chunkBits = 16)
   }
@@ -591,7 +585,7 @@ object Dedup {
     val sigs = df.select(
       col(idCol).as("id"),
       graft.functions.VectorExprs
-        .simhashMd5(df.sparkSession, split(trim(lower(col(textCol))), "\\s+"))
+        .simhashMd5(split(trim(lower(col(textCol))), "\\s+"))
         .as("sig"))
     simhashPairsFromSigs(sigs, maxHamming, maxBucket, chunkBits = 15)
   }
@@ -894,11 +888,10 @@ object Dedup {
       evalTextCol: String,
       shingleN: Int = 3,
       minOverlap: Int = 1): DataFrame = {
-    val spark = corpus.sparkSession
     def hashed(df: DataFrame, tc: String, keep: Seq[Column]): DataFrame =
       df.select(
         keep :+ graft.functions.VectorExprs
-          .shingleHashes(spark, split(trim(lower(col(tc))), "\\s+"), shingleN, Long.MaxValue)
+          .shingleHashes(split(trim(lower(col(tc))), "\\s+"), shingleN, Long.MaxValue)
           .as("sh"): _*)
     val evalGrams = hashed(eval, evalTextCol, Seq.empty)
       .select(explode(col("sh")).as("g"))
@@ -937,7 +930,7 @@ object Dedup {
       .withColumn(
         "cosine",
         round(
-          graft.functions.VectorExprs.arrayCosine(df.sparkSession, col("vec_a"), col("vec_b")),
+          graft.functions.VectorExprs.arrayCosine(col("vec_a"), col("vec_b")),
           6))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
@@ -968,7 +961,6 @@ object Dedup {
       bits: Int = -1,
       corpusCount: Long = -1L,
       maxBucket: Int = 10000): DataFrame = {
-    val spark = df.sparkSession
     val effBits =
       if (bits > 0) bits
       else Similarity.autoBits(if (corpusCount >= 0) corpusCount else df.count())
@@ -978,7 +970,7 @@ object Dedup {
         explode(array((0 until tables).map { t =>
           struct(
             lit(t).as("tbl"),
-            Similarity.lshSignatureCompiled(spark, col(vecCol), t, effBits).as("bucket"))
+            Similarity.lshSignatureCompiled(col(vecCol), t, effBits).as("bucket"))
         }: _*)).as("tb"))
       .select(col("id"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
     val bounded = bucketed
@@ -998,7 +990,7 @@ object Dedup {
       .withColumn(
         "cosine",
         round(
-          graft.functions.VectorExprs.arrayCosine(spark, col("vec_a"), col("vec_b")),
+          graft.functions.VectorExprs.arrayCosine(col("vec_a"), col("vec_b")),
           6))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))

@@ -73,14 +73,12 @@ object ProductQuant {
     * array_max's lexicographic compare IS "min rounded distance, ties
     * -> min centroid id".
     */
-  private def bestCode(df: DataFrame, sub: Column, codebook: Codebook): Column = {
-    val spark = df.sparkSession
+  private def bestCode(sub: Column, codebook: Codebook): Column =
     -array_max(array(codebook.map { case (cid, cv) =>
       struct(
-        -round(graft.functions.VectorExprs.arrayL2Sq(spark, sub, typedlit(cv)), 6).as("d"),
+        -round(graft.functions.VectorExprs.arrayL2Sq(sub, typedlit(cv)), 6).as("d"),
         lit(-cid).as("nc"))
     }: _*)).getField("nc")
-  }
 
   /** Train per-subspace codebooks with `iters` Lloyd rounds each.
     * All m subspaces train CONCURRENTLY in each round: one assignment
@@ -117,7 +115,7 @@ object ProductQuant {
         explode(array((0 until m).map { j =>
           val sub = subvec(col(vecCol), j, dsub)
           struct(
-            (bestCode(corpus, sub, books(j)).cast("int") + lit(j * k)).as("g"),
+            (bestCode(sub, books(j)).cast("int") + lit(j * k)).as("g"),
             transform(sub, x => x.cast("double")).as("sv"))
         }: _*)).as("t"))
         .select(col("t.g").as("g"), col("t.sv").as("sv"))
@@ -152,14 +150,13 @@ object ProductQuant {
       books: Seq[Codebook],
       k: Int,
       keep: Seq[String] = Nil): DataFrame = {
-    val spark = corpus.sparkSession
     val m = books.length
     require(
       BigInt(k).pow(m) <= BigInt(Long.MaxValue),
       s"k^m = $k^$m does not fit a packed BIGINT code")
     val dsub = books.head.head._2.length
     val codes = (0 until m).map { j =>
-      bestCode(corpus, subvec(col(vecCol), j, dsub), books(j)).cast("long").as(s"c_$j")
+      bestCode(subvec(col(vecCol), j, dsub), books(j)).cast("long").as(s"c_$j")
     }
     val withCodes = corpus.select(
       (col(idCol) +: keep.map(col) :+ col(vecCol).as("__v")) ++ codes: _*)
@@ -174,7 +171,7 @@ object ProductQuant {
         books(j).foldLeft(lit(0.0)) { case (acc, (cid, cv)) =>
           when(
             col(s"c_$j") === cid,
-            round(graft.functions.VectorExprs.arrayL2Sq(spark, sub, typedlit(cv)), 6))
+            round(graft.functions.VectorExprs.arrayL2Sq(sub, typedlit(cv)), 6))
             .otherwise(acc)
         }
       }
@@ -222,7 +219,7 @@ object ProductQuant {
     val coarseIds = coarse.map(_._1)
     // list_id of a vector: the SAME argmin rule as pqFit's assignment
     // (bestCode — one definition of the tie-break contract)
-    def listOf(vec: Column): Column = bestCode(corpus, vec, coarse).cast("int")
+    def listOf(vec: Column): Column = bestCode(vec, coarse).cast("int")
 
     // residuals: v − centroid[list]; the centroid array indexes by the
     // POSITION of the list id in the codebook (ids need not be dense

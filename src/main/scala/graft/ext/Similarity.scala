@@ -58,7 +58,7 @@ object Similarity {
       .withColumn(
         "cosine",
         round(
-          graft.functions.VectorExprs.arrayCosine(corpus.sparkSession, col("q_vec"), col("c_vec")),
+          graft.functions.VectorExprs.arrayCosine(col("q_vec"), col("c_vec")),
           6))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -100,11 +100,10 @@ object Similarity {
 
   /** Compiled [[lshSignature]] (identical buckets, one pass per row). */
   def lshSignatureCompiled(
-      spark: org.apache.spark.sql.SparkSession,
       vec: Column,
       table: Int,
       bits: Int): Column =
-    graft.functions.VectorExprs.hyperplaneSig(spark, vec, table, bits)
+    graft.functions.VectorExprs.hyperplaneSig(vec, table, bits)
 
   /** IVF (inverted-file) approximate top-k — the other scale path.
     *
@@ -180,11 +179,10 @@ object Similarity {
       idCol: String,
       vecCol: String,
       centroids: Seq[(Int, Seq[Double])]): DataFrame = {
-    val spark = corpus.sparkSession
     if (centroids.size <= Clustering.LiteralCentroidCap) {
       // scored literal-centroid array: struct(sim6, -list_id) so array_max's
       // lexicographic compare IS "max rounded sim, ties -> min list_id"
-      def scored(vec: Column): Column = Clustering.scoredArray(centroids, spark, vec)
+      def scored(vec: Column): Column = Clustering.scoredArray(centroids, vec)
       corpus.select(
         col(idCol).as("neighbor_id"),
         col(vecCol).as("c_vec"),
@@ -208,9 +206,8 @@ object Similarity {
       vecCol: String,
       centroids: Seq[(Int, Seq[Double])],
       nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
     if (centroids.size <= Clustering.LiteralCentroidCap) {
-      def scored(vec: Column): Column = Clustering.scoredArray(centroids, spark, vec)
+      def scored(vec: Column): Column = Clustering.scoredArray(centroids, vec)
       queries
         .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"), scored(col(vecCol)).as("sc"))
         .select(
@@ -233,8 +230,7 @@ object Similarity {
       nprobe: Int = 4,
       iters: Int = 2,
       trainCap: Long = 20000L): DataFrame = {
-    val spark = corpus.sparkSession
-    val cos = (a: Column, b: Column) => graft.functions.VectorExprs.arrayCosine(spark, a, b)
+    val cos = (a: Column, b: Column) => graft.functions.VectorExprs.arrayCosine(a, b)
 
     val centroids = Clustering.kmeansFit(
       // the sample must hold comfortably more rows than nlist or the
@@ -293,7 +289,6 @@ object Similarity {
     val effBits =
       if (bits > 0) bits
       else autoBits(if (corpusCount >= 0) corpusCount else corpus.count())
-    val spark = corpus.sparkSession
     def signed(df: DataFrame, id: String, vec: String): DataFrame =
       df.select(
         col(idCol).as(id),
@@ -301,7 +296,7 @@ object Similarity {
         explode(array((0 until tables).map { t =>
           struct(
             lit(t).as("tbl"),
-            lshSignatureCompiled(spark, col(vecCol), t, effBits).as("bucket"))
+            lshSignatureCompiled(col(vecCol), t, effBits).as("bucket"))
         }: _*)).as("tb"))
         .select(col(id), col(vec), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
 
@@ -315,7 +310,7 @@ object Similarity {
       .withColumn(
         "cosine",
         round(
-          graft.functions.VectorExprs.arrayCosine(corpus.sparkSession, col("q_vec"), col("c_vec")),
+          graft.functions.VectorExprs.arrayCosine(col("q_vec"), col("c_vec")),
           6))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -411,7 +406,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn(
         "cosine",
-        round(graft.functions.VectorExprs.arrayCosine(spark, col("q_vec"), col("c_vec")), 6))
+        round(graft.functions.VectorExprs.arrayCosine(col("q_vec"), col("c_vec")), 6))
       .withColumn("rank", row_number().over(rankW))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))

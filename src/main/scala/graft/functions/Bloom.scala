@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlInternals.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.call_function
 
 /** Column forms of Spark's OWN bloom-filter expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the pair the
@@ -40,37 +40,17 @@ object Bloom {
     * partition regardless of row count (the same bounded-state argument
     * as every sketch in [[Sketches]]).
     */
-  def bloomAgg(spark: SparkSession, hashed: Column, estItems: Long): Column = {
+  def bloomAgg(hashed: Column, estItems: Long): Column = {
     val est = math.max(1L, estItems)
-    val bits = numBitsFor(est)
-    // One fixed registry name with est/bits passed as (foldable) argument
-    // literals — re-registering per distinct (est, bits) pair would grow
-    // the session FunctionRegistry without bound across repeated
-    // bfsHops/incremental-dedup calls.
-    val name = "graft_bloom_agg"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-    call_function(
-      name,
-      hashed,
-      org.apache.spark.sql.functions.lit(est),
-      org.apache.spark.sql.functions.lit(bits))
+    column(new BloomFilterAggregate(expression(hashed), Literal(est), Literal(numBitsFor(est)))
+      .toAggregateExpression())
   }
 
   /** Probe: `might_contain(bloomBlob, xxhash64(v))`. `bloom` must be
     * foldable (a `lit(blob)`); false ⇒ v was definitely never inserted.
+    * A NULL hash gives NULL (the raw-key
+    * [[VectorExprs.bloomMightContain]] gives false).
     */
-  def mightContain(spark: SparkSession, bloom: Column, hashed: Column): Column = {
-    // DISTINCT registry name from VectorExprs.bloomMightContain's
-    // graft_bloom_might_contain: the two builders have different key
-    // contracts (pre-hashed BIGINT, NULL->NULL here vs raw key,
-    // NULL->false there) and a shared name means whichever registered
-    // last silently wins for any column analyzed afterward
-    val name = "graft_bloom_might_contain_hashed"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
-    call_function(name, bloom, hashed)
-  }
+  def mightContain(bloom: Column, hashed: Column): Column =
+    column(BloomFilterMightContain(expression(bloom), expression(hashed)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlInternals.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Distinct-count sketches as NATIVE Catalyst aggregates.
@@ -203,20 +203,12 @@ object Sketches {
   }
 
   /** Column form of [[KMinSet]]. */
-  def kmvSet(spark: org.apache.spark.sql.SparkSession, hash: Column, k: Int): Column = {
-    val name = s"graft_kmv_set_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => KMinSet(exprs.head, k), "scala_udf")
-    call_function(name, hash)
-  }
+  def kmvSet(hash: Column, k: Int): Column =
+    column(KMinSet(expression(hash), k).toAggregateExpression())
 
-  /** Column form with `k` baked into the registration. */
-  def kmvDistinct(spark: org.apache.spark.sql.SparkSession, hash: Column, k: Int): Column = {
-    val name = s"graft_kmv_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => KMinValues(exprs.head, k), "scala_udf")
-    call_function(name, hash)
-  }
+  /** Column form of [[KMinValues]]. */
+  def kmvDistinct(hash: Column, k: Int): Column =
+    column(KMinValues(expression(hash), k).toAggregateExpression())
 
   /** Count-min sketch (Cormode & Muthukrishnan 2005) as a native
     * aggregate: a d×w counter matrix where row i counts occurrences per
@@ -321,15 +313,8 @@ object Sketches {
   /** Column form: aggregate d pre-hashed bucket columns into one d×w
     * count-min matrix (row-major `array<bigint>` of length d·w).
     */
-  def cmsSketch(
-      spark: org.apache.spark.sql.SparkSession,
-      buckets: Seq[Column],
-      w: Int): Column = {
-    val name = s"graft_cms_${buckets.length}_$w"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => CountMinMatrix(exprs, w), "scala_udf")
-    call_function(name, buckets: _*)
-  }
+  def cmsSketch(buckets: Seq[Column], w: Int): Column =
+    column(CountMinMatrix(buckets.map(expression), w).toAggregateExpression())
 
   /** Mutable bottom-k buffer: (hash, value) pairs under lexicographic
     * order, bounded to k pairs, with the pair count tracked so update
@@ -484,16 +469,8 @@ object Sketches {
   }
 
   /** Column form of [[BottomKSample]]. */
-  def bottomKSample(
-      spark: org.apache.spark.sql.SparkSession,
-      hash: Column,
-      value: Column,
-      k: Int): Column = {
-    val name = s"graft_bottomk_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BottomKSample(exprs(0), exprs(1), k), "scala_udf")
-    call_function(name, hash, value)
-  }
+  def bottomKSample(hash: Column, value: Column, k: Int): Column =
+    column(BottomKSample(expression(hash), expression(value), k).toAggregateExpression())
 
   /** Misra–Gries heavy-hitters summary (Misra & Gries 1982; merge rule
     * from Agarwal et al., "Mergeable Summaries", PODS 2012) as a native
@@ -685,10 +662,6 @@ object Sketches {
   }
 
   /** Column form of [[MisraGries]]. */
-  def mgTopK(spark: org.apache.spark.sql.SparkSession, item: Column, k: Int): Column = {
-    val name = s"graft_mg_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MisraGries(exprs.head, k), "scala_udf")
-    call_function(name, item)
-  }
+  def mgTopK(item: Column, k: Int): Column =
+    column(MisraGries(expression(item), k).toAggregateExpression())
 }

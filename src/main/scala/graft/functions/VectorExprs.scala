@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlInternals.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, col, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -252,11 +252,7 @@ object VectorExprs {
       copy(left = l, right = r)
   }
 
-  def zorder2(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zorder2", exprs => ZOrder2(exprs(0), exprs(1)), "scala_udf")
-    call_function("graft_zorder2", a, b)
-  }
+  def zorder2(a: Column, b: Column): Column = column(ZOrder2(expression(a), expression(b)))
 
   /** Hilbert curve index of two non-negative dimensions on a
     * 2^order × 2^order grid — the compiled form of the `aggregate`-fold
@@ -310,17 +306,9 @@ object VectorExprs {
       copy(left = l, right = r)
   }
 
-  /** Compiled Hilbert key with `order` baked into the registration. */
-  def hilbert2(
-      spark: org.apache.spark.sql.SparkSession,
-      a: Column,
-      b: Column,
-      order: Int): Column = {
-    val name = s"graft_hilbert2_$order"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => Hilbert2(exprs(0), exprs(1), order), "scala_udf")
-    call_function(name, a, b)
-  }
+  /** Compiled Hilbert key on a 2^order × 2^order grid. */
+  def hilbert2(a: Column, b: Column, order: Int): Column =
+    column(Hilbert2(expression(a), expression(b), order))
 
   /** Dot product over two numeric arrays with the EXACT null/length
     * semantics of the declarative
@@ -512,16 +500,8 @@ object VectorExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def sortedPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      sorted: Column,
-      f1: String,
-      f2: String): Column = {
-    val name = s"graft_sorted_pairs_${f1}_$f2"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SortedPairs(exprs.head, f1, f2), "scala_udf")
-    call_function(name, sorted)
-  }
+  def sortedPairs(sorted: Column, f1: String, f2: String): Column =
+    column(SortedPairs(expression(sorted), f1, f2))
 
   /** Exact Jaccard over two long-array SETS (distinct elements assumed,
     * as [[ShingleHashes]] emits): |A∩B| / |A∪B| via one hash-set probe
@@ -578,11 +558,8 @@ object VectorExprs {
       copy(left = l, right = r)
   }
 
-  def jaccardLongs(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard_longs", exprs => JaccardLongs(exprs(0), exprs(1)), "scala_udf")
-    call_function("graft_jaccard_longs", a, b)
-  }
+  def jaccardLongs(a: Column, b: Column): Column =
+    column(JaccardLongs(expression(a), expression(b)))
 
   /** 64-bit SimHash from a token-string array: xxhash64 each token
     * (Spark's own seed-42 XXH64, same as the `xxhash64` function),
@@ -730,19 +707,9 @@ object VectorExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Compiled hyperplane signature with (table, bits) baked into the
-    * registration.
-    */
-  def hyperplaneSig(
-      spark: org.apache.spark.sql.SparkSession,
-      vec: Column,
-      table: Int,
-      bits: Int): Column = {
-    val name = s"graft_hplane_${table}_$bits"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => HyperplaneSig(exprs.head, table, bits), "scala_udf")
-    call_function(name, vec)
-  }
+  /** Compiled hyperplane signature of hash table `table`. */
+  def hyperplaneSig(vec: Column, table: Int, bits: Int): Column =
+    column(HyperplaneSig(expression(vec), table, bits))
 
   /** Bloom-filter membership probe: `left` is the serialized
     * `org.apache.spark.util.sketch.BloomFilter` bitmap (a foldable
@@ -800,14 +767,11 @@ object VectorExprs {
 
   /** Probe a pre-built bloom filter as a compiled column predicate. */
   def bloomMightContain(
-      spark: org.apache.spark.sql.SparkSession,
       filter: org.apache.spark.util.sketch.BloomFilter,
       key: Column): Column = {
     val bos = new java.io.ByteArrayOutputStream()
     filter.writeTo(bos)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain", exprs => BloomMightContain(exprs(0), exprs(1)), "scala_udf")
-    call_function("graft_bloom_might_contain", lit(bos.toByteArray), key)
+    column(BloomMightContain(Literal(bos.toByteArray), expression(key)))
   }
 
   /** Squared L2 distance over two numeric arrays — SEQUENTIAL
@@ -862,63 +826,20 @@ object VectorExprs {
       copy(left = l, right = r)
   }
 
-  /** Register SQL-callable forms once per session; idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_array_cosine", exprs => ArrayCosine(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_array_l2sq", exprs => ArrayL2Sq(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash_md5", exprs => SimHashMd5(exprs.head), "scala_udf")
-  }
+  def arrayCosine(a: Column, b: Column): Column =
+    column(ArrayCosine(expression(a), expression(b)))
 
-  def arrayCosine(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_array_cosine", a, b)
-  }
+  def arrayL2Sq(a: Column, b: Column): Column =
+    column(ArrayL2Sq(expression(a), expression(b)))
 
-  def arrayL2Sq(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_array_l2sq", a, b)
-  }
+  def simhash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
 
-  def simhash64(spark: org.apache.spark.sql.SparkSession, tokens: Column): Column = {
-    register(spark)
-    call_function("graft_simhash64", tokens)
-  }
+  def simhashMd5(tokens: Column): Column = column(SimHashMd5(expression(tokens)))
 
-  def simhashMd5(spark: org.apache.spark.sql.SparkSession, tokens: Column): Column = {
-    register(spark)
-    call_function("graft_simhash_md5", tokens)
-  }
+  def shingleHashes(tokens: Column, n: Int, p: Long): Column =
+    column(ShingleHashes(expression(tokens), n, p))
 
-  /** Shingle hashes with given (n, p) baked into the registration. */
-  def shingleHashes(
-      spark: org.apache.spark.sql.SparkSession,
-      tokens: Column,
-      n: Int,
-      p: Long): Column = {
-    val name = s"graft_shingles_$n"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleHashes(exprs.head, n, p), "scala_udf")
-    call_function(name, tokens)
-  }
-
-  /** MinHash with a given permutation family: registered per distinct
-    * k (the (a,b,p) parameters are baked into the registered closure).
-    */
-  def minhashSig(
-      spark: org.apache.spark.sql.SparkSession,
-      hashes: Column,
-      as: Seq[Long],
-      bs: Seq[Long],
-      p: Long): Column = {
-    val name = s"graft_minhash_${as.length}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinHashSig(exprs.head, as, bs, p), "scala_udf")
-    call_function(name, hashes)
-  }
+  /** MinHash with a given (as, bs, p) permutation family. */
+  def minhashSig(hashes: Column, as: Seq[Long], bs: Seq[Long], p: Long): Column =
+    column(MinHashSig(expression(hashes), as, bs, p))
 }

@@ -61,12 +61,8 @@ object ZOrder {
     * fold ~3 s of q_hilbert_scan at sf0.1. HilbertSpec pins both forms
     * against an independent reference transcription.)
     */
-  def hilbertKey(
-      spark: org.apache.spark.sql.SparkSession,
-      a: Column,
-      b: Column,
-      order: Int = 16): Column = {
+  def hilbertKey(a: Column, b: Column, order: Int = 16): Column = {
     require(order >= 1 && order <= 31, s"hilbert order must be in [1,31], got $order")
-    VectorExprs.hilbert2(spark, a.cast("long"), b.cast("long"), order)
+    VectorExprs.hilbert2(a.cast("long"), b.cast("long"), order)
   }
 }

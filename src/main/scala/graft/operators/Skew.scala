@@ -73,7 +73,7 @@ object Skew {
     */
   def clusterByZOrder(df: DataFrame, colA: String, colB: String, partitions: Int): DataFrame = {
     val z = graft.functions.VectorExprs
-      .zorder2(df.sparkSession, col(colA).cast("long"), col(colB).cast("long"))
+      .zorder2(col(colA).cast("long"), col(colB).cast("long"))
     df.withColumn("__graft_z", z)
       .repartitionByRange(partitions, col("__graft_z"))
       .sortWithinPartitions(col("__graft_z"))

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -91,7 +91,7 @@ object LakeBroadcastHint extends Rule[LogicalPlan] {
       case t: graft.tables.v2.GraftSqlTable => Some(t.sizeAtMost(conf.autoBroadcastJoinThreshold))
       case _ => None
     }
-    // post-pushdown shape (extraOptimizations run after all default batches)
+    // post-pushdown shape (a plan whose scans were already pushed down)
     case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
       s.relation.table match {
         case t: graft.tables.v2.GraftSqlTable => Some(t.sizeAtMost(conf.autoBroadcastJoinThreshold))
@@ -159,23 +159,4 @@ object GraftExtensions {
     "graft_simhash64" -> arity("graft_simhash64", 1)(e => VectorExprs.SimHash64(e.head)),
     "graft_bloom_might_contain" -> arity("graft_bloom_might_contain", 2)(e =>
       VectorExprs.BloomMightContain(e(0), e(1))))
-
-  /** Install on an ALREADY-BUILT session (tests, notebooks):
-    * `experimental.extraOptimizations` for the rule, temp-function
-    * registry for the SQL functions. Idempotent.
-    */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(HofDotStrengthReduction)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ HofDotStrengthReduction
-    }
-    if (!spark.experimental.extraOptimizations.contains(LakeBroadcastHint)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LakeBroadcastHint
-    }
-    functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, exprs => builder(exprs), "scala_udf")
-    }
-  }
 }

@@ -283,7 +283,7 @@ object AnalyticsQueries {
     Testdata.events(spark, sfDir)
       .groupBy(col("event_type"))
       .agg(
-        round(graft.functions.Sketches.kmvDistinct(spark, h, 256), 4).as("kmv_users"),
+        round(graft.functions.Sketches.kmvDistinct(h, 256), 4).as("kmv_users"),
         countDistinct(col("user_id")).as("exact_users"))
   }
 
@@ -394,7 +394,7 @@ object AnalyticsQueries {
     val sideA = col("event_type") === "click" && pmod(col("user_id"), lit(2)) === 0
     val sideB = col("event_type") === "purchase" && pmod(col("user_id"), lit(3)) === 0
     def sketchOf(side: org.apache.spark.sql.Column, alias: String): DataFrame =
-      ev.filter(side).agg(graft.functions.Sketches.kmvSet(spark, h, k).as(alias))
+      ev.filter(side).agg(graft.functions.Sketches.kmvSet(h, k).as(alias))
     val exactUnion = ev
       .filter(sideA || sideB)
       .agg(countDistinct(col("user_id")).as("exact_union"))
@@ -489,7 +489,7 @@ object AnalyticsQueries {
     val sideA = col("event_type") === "click" && pmod(col("user_id"), lit(2)) === 0
     val sideB = col("event_type") === "purchase" && pmod(col("user_id"), lit(3)) === 0
     def sketchOf(side: org.apache.spark.sql.Column, alias: String): DataFrame =
-      ev.filter(side).agg(graft.functions.Sketches.kmvSet(spark, h, k).as(alias))
+      ev.filter(side).agg(graft.functions.Sketches.kmvSet(h, k).as(alias))
     val exactDiff = ev
       .filter(sideA)
       .select(col("user_id"))
@@ -575,7 +575,7 @@ object AnalyticsQueries {
     val keys = spark.read.parquet(tablePath(sfDir, "lineitem")).select(col("l_partkey"))
     val sketch = keys.agg(
       graft.functions.Sketches
-        .cmsSketch(spark, (0 until d).map(i => bucket(i, col("l_partkey"))), w)
+        .cmsSketch((0 until d).map(i => bucket(i, col("l_partkey"))), w)
         .as("sketch"))
     val exact = keys
       .filter(col("l_partkey").isin(probeKeys: _*))
@@ -639,7 +639,7 @@ object AnalyticsQueries {
       .select(col("lang"), explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
     terms
       .groupBy(col("lang"))
-      .agg(graft.functions.Sketches.mgTopK(spark, col("term"), 64).as("mg"))
+      .agg(graft.functions.Sketches.mgTopK(col("term"), 64).as("mg"))
       .select(col("lang"), posexplode(slice(col("mg"), 1, 10)))
       .select(
         col("lang"),
@@ -686,7 +686,7 @@ object AnalyticsQueries {
     def sketchOf(df: DataFrame, alias: String): DataFrame =
       df.agg(
         graft.functions.Sketches
-          .cmsSketch(spark, (0 until d).map(i => bucket(i, col("user_id"))), w)
+          .cmsSketch((0 until d).map(i => bucket(i, col("user_id"))), w)
           .as(alias))
     // true pair count: sum over users of clicks(u) * purchases(u)
     val exact = sideA
@@ -1174,7 +1174,7 @@ object AnalyticsQueries {
     val ev = Testdata.events(spark, sfDir)
     val sk = ev
       .groupBy(col("event_type"))
-      .agg(graft.functions.Sketches.bottomKSample(spark, h, col("value"), k).as("sample"))
+      .agg(graft.functions.Sketches.bottomKSample(h, col("value"), k).as("sample"))
       .select(col("event_type"), explode(col("sample")).as("v"))
       .groupBy(col("event_type"))
       .agg(
@@ -1450,7 +1450,7 @@ object AnalyticsQueries {
     // (sorted array ⇒ p1 < p2 by construction), replacing the previous
     // distinct + self-join + where shape — identical edge set, one less
     // full shuffle of the part-order table (r21 A/B at sf0.1: 5.8 → 2.9 s
-    // for the edge build, TriProf). The per-order array is bounded by
+    // for the edge build). The per-order array is bounded by
     // items/order exactly like the join fan-out was, so the shape is
     // unchanged at scale.
     val edges = spark.read
@@ -1463,7 +1463,7 @@ object AnalyticsQueries {
       // interpreted per element, allocating a slice copy + expression
       // walk per inner step (r22 A/B at sf0.1: see OPTIMIZATION_r22.md)
       .select(explode(
-        graft.functions.VectorExprs.sortedPairs(spark, col("ps"), "p1", "p2")).as("e"))
+        graft.functions.VectorExprs.sortedPairs(col("ps"), "p1", "p2")).as("e"))
       .select(col("e.p1").as("p1"), col("e.p2").as("p2"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1637,10 +1637,10 @@ object AnalyticsQueries {
           scratch = Some(cand)
           val blob = visited
             .agg(graft.functions.Bloom
-              .bloomAgg(spark, xxhash64(col("node")), visitedRows).as("bf"))
+              .bloomAgg(xxhash64(col("node")), visitedRows).as("bf"))
             .head.getAs[Array[Byte]](0)
           val maybeSeen = graft.functions.Bloom
-            .mightContain(spark, lit(blob), xxhash64(col("node")))
+            .mightContain(lit(blob), xxhash64(col("node")))
           cand.filter(!maybeSeen)
             .unionByName(cand.filter(maybeSeen).join(visited, Seq("node"), "left_anti"))
         } else if (visitedRows <= 1000000L) {

@@ -1385,7 +1385,7 @@ object CoreQueries {
     table.append(events, statsCols = Seq("ts", "user_id"))
     val day = datediff(col("ts").cast("date"), to_date(lit("1970-01-01")))
     table.compactClusteredBy(
-      hilbertKey(spark, col("user_id"), day.cast("long")), Seq("user_id", "ts"), numFiles = 16)
+      hilbertKey(col("user_id"), day.cast("long")), Seq("user_id", "ts"), numFiles = 16)
     val byUser = table.readBetween("user_id", Some(30L), Some(40L))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"), round(sum(col("value")), 4).as("sum_value"))

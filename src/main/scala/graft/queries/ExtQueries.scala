@@ -48,6 +48,11 @@ object ExtQueries {
     * size cannot be looked up locally — unreadable, a non-local scheme,
     * or a path `java.net.URI` rejects (a space in a directory name) —
     * the conservative no-shuffle default.
+    *
+    * Undercounts self-unions: `Dataset.inputFiles` dedupes files that
+    * several union branches scan, so for `corpusNearDups` (the corpus
+    * unioned with a perturbed copy of part of itself) the estimate can
+    * be about half of the old `rdd.getNumPartitions`.
     */
   private[queries] def scanPartitionEstimate(spark: SparkSession, df: DataFrame): Long = {
     val conf = spark.sessionState.conf
@@ -426,7 +431,7 @@ object ExtQueries {
   def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
     // widened: the compiled shingle+signature pass is CPU-dense per doc
     // and the documents scan is 1-2 splits at bench scale, so unwidened
-    // it runs on 1-2 of N cores (JobProf: two ~2 s 2-task stages at 32
+    // it runs on 1-2 of N cores (measured: two ~2 s 2-task stages at 32
     // cores; widened A/B 1.30×, guide §2.5/§2.6). No-op once the corpus
     // scan is as wide as the session.
     Dedup.minhashDedupPairs(
@@ -926,11 +931,11 @@ object ExtQueries {
       .join(broadcast(q), col("query_id") =!= col("vec_id"))
       .withColumn(
         "cosine_16",
-        round(graft.functions.VectorExprs.arrayCosine(spark, col("q16"), col("emb16")), 6))
+        round(graft.functions.VectorExprs.arrayCosine(col("q16"), col("emb16")), 6))
       .withColumn(
         "cosine_full",
         round(
-          graft.functions.VectorExprs.arrayCosine(spark, col("qfull"), col("embedding")),
+          graft.functions.VectorExprs.arrayCosine(col("qfull"), col("embedding")),
           6))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -964,7 +969,7 @@ object ExtQueries {
       .join(broadcast(anchors), col("anchor_id") =!= col("vec_id"))
       .withColumn(
         "cosine",
-        round(graft.functions.VectorExprs.arrayCosine(spark, col("a_vec"), col("embedding")), 6))
+        round(graft.functions.VectorExprs.arrayCosine(col("a_vec"), col("embedding")), 6))
       .filter(col("cosine") < 0.9)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("anchor_id"))
@@ -1087,7 +1092,7 @@ object ExtQueries {
   def similarityIvf(spark: SparkSession, sfDir: String): DataFrame = {
     // widened: Lloyd assignment and the final cosine ranking are
     // CPU-dense per vector and the embeddings scan is a single split at
-    // bench scale — unwidened they run on 1 core (JobProf: the 1.26 s
+    // bench scale — unwidened they run on 1 core (measured: the 1.26 s
     // ranked-join job and the ~1 s per-iteration jobs were 1-task
     // stages at 32 cores; guide §2.5/§2.6). No-op on an already-wide
     // scan.
@@ -2981,7 +2986,7 @@ object ExtQueries {
       .withColumn(
         "cosine",
         round(
-          graft.functions.VectorExprs.arrayCosine(spark, col("q_vec"), col("embedding")),
+          graft.functions.VectorExprs.arrayCosine(col("q_vec"), col("embedding")),
           6))
       .select(col("vec_id"), col("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)

@@ -301,7 +301,7 @@ object ScaleQueries {
     spark.read
       .parquet(tablePath(sfDir, "lineitem"))
       .select(col("l_orderkey"), col("l_extendedprice"))
-      .filter(graft.functions.VectorExprs.bloomMightContain(spark, bloom, col("l_orderkey")))
+      .filter(graft.functions.VectorExprs.bloomMightContain(bloom, col("l_orderkey")))
       .join(urgent, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_items"), round(sum(col("l_extendedprice")), 4).as("sum_price"))

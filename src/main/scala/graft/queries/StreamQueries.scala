@@ -140,7 +140,7 @@ object StreamQueries {
             .withColumn("uh", h)
             .groupBy(col("event_type"), window(col("ts"), "1 hour").as("w"))
             .agg(
-              round(graft.functions.Sketches.kmvDistinct(spark, col("uh"), 64), 4)
+              round(graft.functions.Sketches.kmvDistinct(col("uh"), 64), 4)
                 .as("kmv_users"),
               count(lit(1)).as("n_events")))
       .select(
@@ -455,7 +455,7 @@ object StreamQueries {
             .groupBy(col("event_type"), window(col("ts"), "1 hour").as("w"))
             .agg(
               graft.functions.Sketches
-                .bottomKSample(spark, col("hv"), col("value"), 32)
+                .bottomKSample(col("hv"), col("value"), 32)
                 .as("sample"),
               count(lit(1)).as("n_events")))
       .select(

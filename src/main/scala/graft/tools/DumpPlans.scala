@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for a comma-separated list of
@@ -11,16 +10,8 @@ import org.apache.spark.sql.execution.ExplainMode
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val Array(outDir, qlist, sfDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     qlist.split(",").foreach { q =>
       try {

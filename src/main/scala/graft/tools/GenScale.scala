@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: replicate an sf directory `copies`×
@@ -43,13 +43,7 @@ object GenScale {
       case Array(s, d, c, t) => (s, d, c, Some(t.split(",").toSet))
     }
     val copies = copiesStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     def replicate(table: String)(mutate: (DataFrame, Int) => DataFrame): Unit = {
       if (onlyTables.exists(!_.contains(table))) return

@@ -2,11 +2,12 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Narrow, clearly-scoped bridge to two `private[sql]` entry points the
-  * MERGE INTO command needs: building a DataFrame from a constructed
-  * LogicalPlan. Lives in Spark's package solely for access — the same
-  * technique Spark connectors use for their command implementations; no
-  * Spark internals are modified or shadowed.
+/** Narrow, clearly-scoped bridge to the `private[sql]` entry points the
+  * MERGE INTO command and the Column helpers need: building a DataFrame
+  * from a constructed LogicalPlan, and converting between a Column and
+  * its Catalyst expression. Lives in Spark's package solely for access —
+  * the same technique Spark connectors use for their command
+  * implementations; no Spark internals are modified or shadowed.
   */
 object GraftSqlInternals {
 
@@ -19,6 +20,10 @@ object GraftSqlInternals {
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** The Catalyst expression behind a [[Column]] (inverse of [[column]]). */
+  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    classic.ExpressionUtils.expression(c)
 
   /** Drop the session's cached catalog-plugin instances. Spark
     * instantiates a catalog once per name and caches it for the session

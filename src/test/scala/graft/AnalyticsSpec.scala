@@ -24,20 +24,20 @@ class AnalyticsSpec extends SparkSpec {
     // below k distinct: the buffer holds everything -> exact
     val small = (1 to 100).map(i => (i % 37).toLong).toDF("v")
     def hash = conv(substring(md5(col("v").cast("string")), 1, 15), 16, 10).cast("long")
-    val exactSmall = small.agg(graft.functions.Sketches.kmvDistinct(spark, hash, 256)).head.getDouble(0)
+    val exactSmall = small.agg(graft.functions.Sketches.kmvDistinct(hash, 256)).head.getDouble(0)
     assert(exactSmall == 37.0, s"below-k must be exact, got $exactSmall")
     // above k: standard KMV error ~ 1/sqrt(k) (6.25% at k=256); allow 3 sigma
     val big = (1 to 20000).map(_.toLong).toDF("v")
-    val est = big.agg(graft.functions.Sketches.kmvDistinct(spark, hash, 256)).head.getDouble(0)
+    val est = big.agg(graft.functions.Sketches.kmvDistinct(hash, 256)).head.getDouble(0)
     assert(math.abs(est - 20000) / 20000.0 <= 0.19, s"est=$est for 20000 distinct")
     // merge path: estimate must not depend on partitioning (map-side
     // partial buffers merge associatively)
-    val est2 = big.repartition(13).agg(graft.functions.Sketches.kmvDistinct(spark, hash, 256))
+    val est2 = big.repartition(13).agg(graft.functions.Sketches.kmvDistinct(hash, 256))
       .head.getDouble(0)
     assert(est == est2, s"partitioning changed the estimate: $est vs $est2")
     // duplicates collapse: distinct of values, not rows
     val dup = big.union(big)
-    val est3 = dup.agg(graft.functions.Sketches.kmvDistinct(spark, hash, 256)).head.getDouble(0)
+    val est3 = dup.agg(graft.functions.Sketches.kmvDistinct(hash, 256)).head.getDouble(0)
     assert(est3 == est, s"duplicates changed the estimate: $est3 vs $est")
   }
 
@@ -48,7 +48,7 @@ class AnalyticsSpec extends SparkSpec {
     val df = (1 to 20000).map(_.toLong).toDF("v")
     def hash = conv(substring(md5(col("v").cast("string")), 1, 15), 16, 10).cast("long")
     def sketchOf(d: org.apache.spark.sql.DataFrame): Seq[Long] =
-      d.agg(graft.functions.Sketches.kmvSet(spark, hash, k)).head.getSeq[Long](0)
+      d.agg(graft.functions.Sketches.kmvSet(hash, k)).head.getSeq[Long](0)
     val s = sketchOf(df)
     assert(s.length == k)
     assert(s == s.sorted, "k-min set must be ascending")
@@ -76,7 +76,7 @@ class AnalyticsSpec extends SparkSpec {
     val df = rows.toDF("v")
     def sketchOf(d: org.apache.spark.sql.DataFrame): Array[Long] =
       d.agg(graft.functions.Sketches
-          .cmsSketch(spark, (0 until 3).map(i => bucket(i, col("v"))), w))
+          .cmsSketch((0 until 3).map(i => bucket(i, col("v"))), w))
         .head.getSeq[Long](0).toArray
     val sketch = sketchOf(df)
     assert(sketch.length == 3 * w)
@@ -87,7 +87,7 @@ class AnalyticsSpec extends SparkSpec {
     // probe estimates: min over rows, NEVER below the true count
     val probed = df.distinct()
       .crossJoin(df.agg(graft.functions.Sketches
-        .cmsSketch(spark, (0 until 3).map(i => bucket(i, col("v"))), w).as("sketch")))
+        .cmsSketch((0 until 3).map(i => bucket(i, col("v"))), w).as("sketch")))
       .select(
         col("v"),
         least((0 until 3).map(i =>
@@ -188,7 +188,7 @@ class AnalyticsSpec extends SparkSpec {
     val k = 128
     def hash = conv(substring(md5(col("id").cast("string")), 1, 15), 16, 10).cast("long")
     def sampleOf(d: org.apache.spark.sql.DataFrame): Seq[Double] =
-      d.agg(graft.functions.Sketches.bottomKSample(spark, hash, col("v"), k))
+      d.agg(graft.functions.Sketches.bottomKSample(hash, col("v"), k))
         .head.getSeq[Double](0)
     // below k pairs: the sample IS the whole (sorted) value multiset
     val small = (1 to 50).map(i => (i.toLong, i * 1.5)).toDF("id", "v")

@@ -243,7 +243,7 @@ class PropertySpec extends SparkSpec {
     forAllSeeded(Gen.zip(streamGen, Gen.chooseNum(4, 16)), 6) { case (items, k) =>
       val got = items.toDF("item")
         .repartition(5)
-        .agg(graft.functions.Sketches.mgTopK(spark, col("item"), k).as("mg"))
+        .agg(graft.functions.Sketches.mgTopK(col("item"), k).as("mg"))
         .select(explode(col("mg")))
         .select(col("col.item"), col("col.est"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -282,7 +282,7 @@ class PropertySpec extends SparkSpec {
       val side = 1 << order
       val cells = for { x <- 0L until side; y <- 0L until side } yield (x, y)
       val got = cells.toDF("x", "y")
-        .select($"x", $"y", graft.functions.ZOrder.hilbertKey(spark, $"x", $"y", order).as("d"))
+        .select($"x", $"y", graft.functions.ZOrder.hilbertKey($"x", $"y", order).as("d"))
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       cells.foreach { case (x, y) => assert(got((x, y)) == ref(order, x, y)) }
       assert(got.values.toSet == (0L until side.toLong * side).toSet, "must be a bijection")

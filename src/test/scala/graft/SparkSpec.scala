@@ -5,15 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite via lazy val). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(cores = 4, appName = getClass.getSimpleName)
 
   def scratchDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-test-$tag-").toString

@@ -594,7 +594,7 @@ class DedupSpec extends SparkSpec {
     val sigs = withCopies.select(
       col("id"),
       graft.functions.VectorExprs
-        .simhash64(spark, split(trim(lower(col("text"))), "\\s+")).as("sig"))
+        .simhash64(split(trim(lower(col("text"))), "\\s+")).as("sig"))
     val a = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
     val b = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
     val brute = a.join(b, col("id_a") < col("id_b"))
@@ -616,7 +616,7 @@ class DedupSpec extends SparkSpec {
     val sigs = withCopies.select(
       col("id"),
       graft.functions.VectorExprs
-        .simhashMd5(spark, split(trim(lower(col("text"))), "\\s+")).as("sig"))
+        .simhashMd5(split(trim(lower(col("text"))), "\\s+")).as("sig"))
     val a = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
     val b = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
     val brute = a.join(b, col("id_a") < col("id_b"))
@@ -633,7 +633,7 @@ class DedupSpec extends SparkSpec {
     val tok = withCopies.limit(20).select(
       explode(split(trim(lower(col("text"))), "\\s+")).as("t"))
     val mismatch = tok.select(
-      graft.functions.VectorExprs.simhashMd5(spark, array(col("t"))).as("compiled"),
+      graft.functions.VectorExprs.simhashMd5(array(col("t"))).as("compiled"),
       conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("declared"))
       .collect()
     mismatch.foreach { r =>
@@ -785,7 +785,7 @@ class SimilaritySpec extends SparkSpec {
     assert(centroids.size > Clustering.LiteralCentroidCap,
       s"fixture must exceed the cap, got ${centroids.size}")
 
-    def scored = Clustering.scoredArray(centroids, spark, col("vec"))
+    def scored = Clustering.scoredArray(centroids, col("vec"))
 
     // assignment parity: (cluster, cosine) per id, bit-exact
     val lit = corpus.select(

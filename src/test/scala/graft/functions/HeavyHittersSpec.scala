@@ -12,7 +12,7 @@ class HeavyHittersSpec extends SparkSpec {
   private def summarize(items: Seq[String], k: Int, parts: Int): Map[String, Long] =
     items.toDF("item")
       .repartition(parts)
-      .agg(Sketches.mgTopK(spark, col("item"), k).as("mg"))
+      .agg(Sketches.mgTopK(col("item"), k).as("mg"))
       .select(explode(col("mg")))
       .select(col("col.item"), col("col.est"))
       .collect()
@@ -60,7 +60,7 @@ class HeavyHittersSpec extends SparkSpec {
       ("g2", "z"), ("g2", "y"), ("g2", "y"))
       .toDF("g", "item")
     val rows = df.groupBy(col("g"))
-      .agg(Sketches.mgTopK(spark, col("item"), 4).as("mg"))
+      .agg(Sketches.mgTopK(col("item"), 4).as("mg"))
       .select(col("g"), col("mg").cast("array<struct<item:string,est:bigint>>"))
       .as[(String, Seq[(String, Long)])]
       .collect()

@@ -34,7 +34,7 @@ class HilbertSpec extends SparkSpec {
   test("hilbertKey matches the reference loop on the full 16x16 grid (order 4)") {
     val cells = for { x <- 0L until 16L; y <- 0L until 16L } yield (x, y)
     val got = cells.toDF("x", "y")
-      .select($"x", $"y", ZOrder.hilbertKey(spark, $"x", $"y", order = 4).as("d"))
+      .select($"x", $"y", ZOrder.hilbertKey($"x", $"y", order = 4).as("d"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap
@@ -48,7 +48,7 @@ class HilbertSpec extends SparkSpec {
   test("hilbertKey at the default order agrees with the reference on scattered points") {
     val pts = Seq((0L, 0L), (65535L, 65535L), (12345L, 54321L), (1L, 65535L), (40000L, 3L))
     val got = pts.toDF("x", "y")
-      .select(ZOrder.hilbertKey(spark, $"x", $"y").as("d"))
+      .select(ZOrder.hilbertKey($"x", $"y").as("d"))
       .collect().map(_.getLong(0)).toSeq
     assert(got === pts.map { case (x, y) => refXy2d(16, x, y) })
   }
@@ -83,7 +83,7 @@ class HilbertSpec extends SparkSpec {
     val t = LakeTable(spark, scratchDir("hilbert"))
     t.append(grid.toDF("x", "y", "id"), statsCols = Seq("x", "y"))
     t.compactClusteredBy(
-      ZOrder.hilbertKey(spark, $"x", $"y", order = 5), Seq("x", "y"), numFiles = 16)
+      ZOrder.hilbertKey($"x", $"y", order = 5), Seq("x", "y"), numFiles = 16)
     val (xs, _, _, (_, xSkip)) = t.readBetweenWithFilePruneInfo("x", Some(3), Some(4))
     val (ys, _, _, (_, ySkip)) = t.readBetweenWithFilePruneInfo("y", Some(3), Some(4))
     assert(xSkip > 0 && ySkip > 0, s"hilbert must prune both dims: x=$xSkip y=$ySkip")

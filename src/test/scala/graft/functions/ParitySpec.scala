@@ -20,7 +20,7 @@ class ParitySpec extends SparkSpec {
       .toDF("a", "b")
     val out = df.select(
       Similarity.cosine(col("a"), col("b")).as("hof"),
-      VectorExprs.arrayCosine(spark, col("a"), col("b")).as("compiled"))
+      VectorExprs.arrayCosine(col("a"), col("b")).as("compiled"))
     assert(out.filter(col("hof") =!= col("compiled")).count() == 0)
   }
 
@@ -39,9 +39,9 @@ class ParitySpec extends SparkSpec {
     def run(factoryMode: String): Seq[Double] = {
       spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
       try df.select(
-        VectorExprs.arrayCosine(spark, col("a"), col("b")).as("ff"),
-        VectorExprs.arrayCosine(spark, col("ad"), col("bd")).as("dd"),
-        VectorExprs.arrayCosine(spark, col("a"), col("bd")).as("fd"))
+        VectorExprs.arrayCosine(col("a"), col("b")).as("ff"),
+        VectorExprs.arrayCosine(col("ad"), col("bd")).as("dd"),
+        VectorExprs.arrayCosine(col("a"), col("bd")).as("fd"))
         .collect()
         .flatMap(r => Seq(r.getDouble(0), r.getDouble(1), r.getDouble(2))).toSeq
       finally spark.conf.unset("spark.sql.codegen.factoryMode")
@@ -60,7 +60,7 @@ class ParitySpec extends SparkSpec {
     val df = data.toDF("a", "b")
     def run(factoryMode: String): Seq[Double] = {
       spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
-      try df.select(VectorExprs.jaccardLongs(spark, col("a"), col("b")).as("j"))
+      try df.select(VectorExprs.jaccardLongs(col("a"), col("b")).as("j"))
         .collect().map(_.getDouble(0)).toSeq
       finally spark.conf.unset("spark.sql.codegen.factoryMode")
     }
@@ -75,7 +75,7 @@ class ParitySpec extends SparkSpec {
     for (table <- 0 until 3; bits <- Seq(4, 11)) {
       val out = df.select(
         Similarity.lshSignature(col("vec"), table, bits).as("hof"),
-        Similarity.lshSignatureCompiled(spark, col("vec"), table, bits).as("compiled"))
+        Similarity.lshSignatureCompiled(col("vec"), table, bits).as("compiled"))
       assert(out.filter(col("hof") =!= col("compiled")).count() == 0, s"t=$table bits=$bits")
     }
   }
@@ -90,9 +90,8 @@ class ParitySpec extends SparkSpec {
       round(Dedup.jaccard(col("ta"), col("tb")), 9).as("strings"),
       round(
         VectorExprs.jaccardLongs(
-          spark,
-          VectorExprs.shingleHashes(spark, split(trim(lower(col("ta"))), "\\s+"), 3, Long.MaxValue),
-          VectorExprs.shingleHashes(spark, split(trim(lower(col("tb"))), "\\s+"), 3, Long.MaxValue)),
+          VectorExprs.shingleHashes(split(trim(lower(col("ta"))), "\\s+"), 3, Long.MaxValue),
+          VectorExprs.shingleHashes(split(trim(lower(col("tb"))), "\\s+"), 3, Long.MaxValue)),
         9).as("hashed"))
     assert(out.filter(col("strings") =!= col("hashed")).count() == 0)
   }
@@ -103,7 +102,7 @@ class ParitySpec extends SparkSpec {
       .toDF("t")
     val out = df.select(
       Dedup.simhash64(col("t")).as("hof"),
-      VectorExprs.simhash64(spark, split(trim(lower(col("t"))), "\\s+")).as("compiled"))
+      VectorExprs.simhash64(split(trim(lower(col("t"))), "\\s+")).as("compiled"))
     assert(out.filter(col("hof") =!= col("compiled")).count() == 0)
   }
 
@@ -114,13 +113,36 @@ class ParitySpec extends SparkSpec {
     val out = df.select(
       Dedup.minhashSignature(col("t"), 16, 3).as("hof"),
       VectorExprs
-        .minhashSig(spark,
-          VectorExprs.shingleHashes(spark, toks, 3, 4294967311L), as, bs, 4294967311L)
+        .minhashSig(VectorExprs.shingleHashes(toks, 3, 4294967311L), as, bs, 4294967311L)
         .as("compiled"))
     // same shingle set + same permutation family -> same signature values
     out.collect().foreach { r =>
       assert(r.getSeq[Long](0).sorted == r.getSeq[Long](1).sorted)
     }
+  }
+
+  test("two columns of one helper in one select keep their own parameters") {
+    // shingle columns that differ only in p, and minhash columns with
+    // equal k that differ only in (as, bs): each column must equal the
+    // same column selected alone
+    val df = Seq("the quick brown fox jumps over the lazy dog", "a b c d e").toDF("t")
+    val toks = split(trim(lower(col("t"))), "\\s+")
+    val p = 4294967311L
+    val (as, bs) = Dedup.permParams(16)
+    def reduced = VectorExprs.shingleHashes(toks, 3, p)
+    val builders: Seq[() => org.apache.spark.sql.Column] = Seq(
+      () => reduced,
+      () => VectorExprs.shingleHashes(toks, 3, Long.MaxValue),
+      () => VectorExprs.minhashSig(reduced, as.take(8), bs.take(8), p),
+      () => VectorExprs.minhashSig(reduced, as.drop(8), bs.drop(8), p))
+    val together = df.select(builders.zipWithIndex.map { case (b, i) => b().as(s"c$i") }: _*)
+      .collect().map(r => builders.indices.map(r.getSeq[Long]))
+    builders.zipWithIndex.foreach { case (b, i) =>
+      val alone = df.select(b().as("c")).collect().map(_.getSeq[Long](0))
+      assert(together.map(_(i)).toSeq == alone.toSeq, s"column $i took another column's parameters")
+    }
+    assert(together.forall(_(0).forall(h => h >= 0 && h < p)), "p-reduced shingles out of range")
+    assert(together.exists(r => r(0) != r(1)) && together.exists(r => r(2) != r(3)))
   }
 
   test("compiled SortedPairs matches the nested transform/slice HOF, pairs and order") {
@@ -134,7 +156,7 @@ class ParitySpec extends SparkSpec {
         "y -> struct(x AS p1, y AS p2))))")
     val out = df.select(
       hof.as("hof"),
-      VectorExprs.sortedPairs(spark, col("ps"), "p1", "p2").as("compiled"))
+      VectorExprs.sortedPairs(col("ps"), "p1", "p2").as("compiled"))
     out.collect().foreach { r =>
       val a = r.getSeq[org.apache.spark.sql.Row](0).map(p => (p.getLong(0), p.getLong(1)))
       val b = r.getSeq[org.apache.spark.sql.Row](1).map(p => (p.getLong(0), p.getLong(1)))

@@ -62,7 +62,7 @@ class SkewSpec extends SparkSpec {
     // exact interleave relative to the origin: left operand takes the odd
     // (higher) bit positions, matching ZOrder.zorderKey — z(0b11,0)-z0 =
     // 0b1010, z(0,0b11)-z0 = 0b0101 (sign-bias shifts all keys by a constant)
-    val z = graft.functions.VectorExprs.zorder2(spark, col("a").cast("long"), col("b").cast("long"))
+    val z = graft.functions.VectorExprs.zorder2(col("a").cast("long"), col("b").cast("long"))
     val vals = Seq((0L, 0L), (3L, 0L), (0L, 3L), (1L, 1L), (-1L, 0L), (Int.MaxValue.toLong, 0L))
       .toDF("a", "b").select(z.as("z")).collect().map(_.getLong(0)).toSeq
     val z0 = vals(0)

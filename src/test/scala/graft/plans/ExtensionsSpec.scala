@@ -4,11 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.ext.Similarity
+import graft.functions.VectorExprs
 
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
-
-  private def installed(): Unit = GraftExtensions.install(spark)
 
   /** Round-trip through parquet so ConvertToLocalRelation can't fold the
     * whole plan before the rewrite is visible.
@@ -20,7 +19,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("HOF dot product strength-reduces to the compiled ArrayDot, bit-identical result") {
-    installed()
     val df = viaParquet(
       Seq(
         (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
@@ -37,7 +35,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("rewrite preserves zip_with NULL semantics: unequal lengths and NULL elements") {
-    installed()
     val df = viaParquet(
       Seq(
         (Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](1.0)),       // unequal -> NULL
@@ -56,7 +53,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("float arrays: exact-widening casts are stripped into the compiled loop") {
-    installed()
     val df = viaParquet(Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b"), "ext-float")
     val ad = transform(col("a"), x => x.cast("double"))
     val bd = transform(col("b"), x => x.cast("double"))
@@ -70,7 +66,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("Similarity.cosine results are unchanged by the rule (bit parity with compiled path)") {
-    installed()
     val rnd = new scala.util.Random(11)
     val df = (0 until 50)
       .map(i => (i.toLong, Array.fill(16)(rnd.nextFloat()).toSeq, Array.fill(16)(rnd.nextFloat()).toSeq))
@@ -79,15 +74,27 @@ class ExtensionsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val viaCompiled = df.select(
       col("id"),
-      graft.functions.VectorExprs.arrayCosine(spark, col("a"), col("b")).as("c"))
+      VectorExprs.arrayCosine(col("a"), col("b")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(viaHof == viaCompiled)
   }
 
-  test("SQL-visible functions work after install") {
-    installed()
+  test("SQL-visible functions registered by the session extension") {
     val r = spark.sql("SELECT graft_array_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .head().getDouble(0)
     assert(r == 11.0)
+  }
+
+  test("a Sessions.local session adds no extra optimizations and still rewrites the HOF dot") {
+    // the rules arrive once, through the extension injected at build time
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    val df = viaParquet(Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b"), "ext-session")
+    val out = df.select(
+      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0), (acc, v) => acc + v))
+    val optimized = out.queryExecution.optimizedPlan
+    assert(
+      optimized.flatMap(_.expressions).exists(_.exists(_.isInstanceOf[VectorExprs.ArrayDot])),
+      optimized.toString)
+    assert(out.head().getDouble(0) == 11.0)
   }
 }

@@ -1,7 +1,5 @@
 package graft.tables
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM writer harness for the cross-PROCESS commit-race spec:
   * appends `n` one-row batches to the table at `root` through the full
   * [[LakeTable.append]] path (real parquet writes, real CAS manifest
@@ -13,12 +11,7 @@ object CasRaceMain {
   def main(args: Array[String]): Unit = {
     val Array(root, writer, nStr) = args
     val n = nStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"cas-race-$writer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(cores = 2, appName = s"cas-race-$writer")
     try {
       import spark.implicits._
       val t = LakeTable(spark, root)
