@@ -104,14 +104,12 @@ object BatchElt {
         Ops.handleString(normalized, stringCols),
         Seq("issued_shares")),
       dropCols = silverCompanySchema.fieldNames.toSeq)
-    // handleNull dropped every null-key row and deduplicate keeps one
-    // row per key group, so the dedup output is empty exactly when
-    // `cleaned` is: one probe gates the commit
-    if (!cleaned.isEmpty)
-      // ingest_timestamp stats: the next incrementalFrom probe is a
-      // manifest lookup, not a silver-table scan
-      Merge.mergeScd2(silver, Ops.deduplicate(cleaned, Seq("symbol"), "ingest_timestamp"),
-        Seq("symbol"), Seq("issued_shares"), clock, statsCols = Seq("ingest_timestamp"))
+    // no probe gates the commit: the merge counts its source rows inside
+    // its own write job, and a day with no clean row publishes nothing.
+    // ingest_timestamp stats: the next incrementalFrom probe is a
+    // manifest lookup, not a silver-table scan
+    Merge.mergeScd2(silver, Ops.deduplicate(cleaned, Seq("symbol"), "ingest_timestamp"),
+      Seq("symbol"), Seq("issued_shares"), clock, statsCols = Seq("ingest_timestamp"))
   }
 
   /** t4 — bronze.raw_industry → silver.processed_industry (SCD1). */
@@ -128,14 +126,16 @@ object BatchElt {
         Ops.handleString(normalized, industryStringCols),
         Seq("level")),
       dropCols = silverIndustrySchema.fieldNames.toSeq)
-    if (!cleaned.isEmpty)
-      Merge.mergeScd1(silver, Ops.deduplicate(cleaned, Seq("icb_code"), "ingest_timestamp"),
-        Seq("icb_code"), statsCols = Seq("ingest_timestamp"))
+    // like processCompany: an empty day publishes nothing, with no probe
+    Merge.mergeScd1(silver, Ops.deduplicate(cleaned, Seq("icb_code"), "ingest_timestamp"),
+      Seq("icb_code"), statsCols = Seq("ingest_timestamp"))
   }
 
   /** t5 — silver → gold.dim_company: current company versions joined to
     * the industry dim via the 4-level iterated broadcast flatten, then
-    * gold-normalized (extras dropped) and appended incrementally.
+    * gold-normalized (extras dropped) and appended incrementally. A day
+    * with no new current rows publishes no gold version; the append
+    * counts its rows in its own write job instead of a probe first.
     */
   def buildDimCompany(lake: Lakehouse): Unit = {
     val silverCompany = lake.table("silver", "processed_company")
@@ -144,7 +144,6 @@ object BatchElt {
 
     val current = silverCompany.read().filter(col("is_current") === 1)
     val incoming = gold.incrementalFrom(current, "ingest_timestamp")
-    if (incoming.isEmpty) return
 
     val dim = silverIndustry.read().select(col("icb_code"), col("en_icb_name"))
     val joined = Ops.joinDimIterated(
@@ -158,7 +157,8 @@ object BatchElt {
     }
     gold.append(
       Ops.normalizeSchema(renamed, goldDimSchema, keepExtra = false),
-      statsCols = Seq("ingest_timestamp"))
+      statsCols = Seq("ingest_timestamp"),
+      skipIfEmpty = true)
   }
 
   /** A task of [[runDag]]: name, upstream dependencies, body. */

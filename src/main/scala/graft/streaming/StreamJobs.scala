@@ -1009,6 +1009,9 @@ object StreamJobs {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        // mergeScd1 would publish nothing for an empty batch on its own,
+        // but only after rewriting the whole target and dropping the
+        // result; probing one micro-batch is the cheaper way to skip
         if (!batch.isEmpty) {
           graft.tables.Merge.mergeScd1(table, batch, keyCols)
         }

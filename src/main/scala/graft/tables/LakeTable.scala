@@ -132,20 +132,6 @@ final class LakeTable(val spark: SparkSession, val root: String) {
 
   // ---- writes -------------------------------------------------------------
 
-  /** Write `df`'s rows as a new immutable commit dir; return its relative
-    * name (empty input still commits an empty dir entry-less manifest)
-    * plus the batch's (min, max) range for each of `statsCols`.
-    *
-    * Stats ride the write job itself via `df.observe` (CollectMetrics):
-    * min and max fold in as the rows stream to parquet, so declaring
-    * stats columns costs zero extra scans — at 100 TB a post-write
-    * re-read of the committed files would be a second pass over the
-    * whole batch. The max half maintains the table-level incremental
-    * watermark; the full (min, max) pair is the commit dir's zonemap
-    * entry ([[LakeTable.readBetween]] prunes on it). If the observation
-    * did not fire (defensive: metrics are delivered by a listener), fall
-    * back to the footer-stats rescan.
-    */
   /** The ONE write-side transform every data-writing path shares —
     * derive the hidden-partitioning dir columns (with the source /
     * collision requires and the UTC pin), then project logical column
@@ -177,35 +163,57 @@ final class LakeTable(val spark: SparkSession, val root: String) {
       withDirCols(n).as(colMapping.getOrElse(n, n))): _*)
   }
 
+  /** Write `df`'s rows as a new immutable commit dir; return its relative
+    * name plus the batch's (min, max) range for each of `statsCols`.
+    *
+    * Stats ride the write job itself via `df.observe` (CollectMetrics):
+    * min and max fold in as the rows stream to parquet, so declaring
+    * stats columns costs zero extra scans — at 100 TB a post-write
+    * re-read of the committed files would be a second pass over the
+    * whole batch. The max half maintains the table-level incremental
+    * watermark; the full (min, max) pair is the commit dir's zonemap
+    * entry ([[LakeTable.readBetween]] prunes on it). If the observation
+    * did not fire (defensive: metrics are delivered by a listener), fall
+    * back to the footer-stats rescan.
+    *
+    * `batchFlag` names a boolean column of `df` that marks the rows
+    * standing for the caller's incoming batch; it is not written. Its
+    * count rides the same observe. When the count is zero the batch was
+    * empty: the written dir is deleted and no dir name is returned, so
+    * the caller publishes nothing. If the observation did not fire the
+    * count is unknown, and the dir is kept.
+    */
   private def writeCommitDir(
       df: DataFrame,
       partitionBy: Seq[String],
       statsCols: Seq[String] = Seq.empty,
       writeOptions: Map[String, String] = Map.empty,
       constraints: Map[String, String] = Map.empty,
-      colMapping: Map[String, String] = Map.empty)
+      colMapping: Map[String, String] = Map.empty,
+      batchFlag: Option[String] = None)
       : (Option[String], Map[String, (String, String)]) = {
     val commitName = s"commit-${UUID.randomUUID()}"
     val dest = dataDir.resolve(commitName)
-    val present = statsCols.filter(df.columns.contains)
-    present.foreach(c => Stats.requireSupported(df.schema(c).dataType, c))
+    val data = withoutFlag(df, batchFlag)
+    val present = statsCols.filter(data.columns.contains)
+    present.foreach(c => Stats.requireSupported(data.schema(c).dataType, c))
     // CHECK-constraint violation counts ride the SAME observe as the
     // stats — enforcement costs zero extra scans; a NULL predicate is a
     // violation (SQL CHECK stance, matching Expectations)
     val consSeq = constraints.toSeq.sortBy(_._1)
-    requireConstraintColumns(consSeq, df.columns)
+    requireConstraintColumns(consSeq, data.columns)
     val consAggs = consSeq.map { case (n, p) =>
       sum(when(!coalesce(expr(p), lit(false)), 1L).otherwise(0L)).as(s"__viol_$n")
     }
+    val aggs = present.flatMap(c =>
+      Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))) ++ consAggs ++
+      batchFlag.map(f => count_if(col(f)).as("__batch_rows"))
     val obs =
-      if (present.isEmpty && consSeq.isEmpty) None
+      if (aggs.isEmpty) None
       else Some(new org.apache.spark.sql.Observation(commitName))
     val toWrite = obs match {
-      case None => df
-      case Some(o) =>
-        val aggs = present.flatMap(c =>
-          Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))) ++ consAggs
-        df.observe(o, aggs.head, aggs.tail: _*)
+      case None => data
+      case Some(o) => withoutFlag(df.observe(o, aggs.head, aggs.tail: _*), batchFlag)
     }
     // hidden-partitioning: transform specs derive their physical dir
     // column here (never part of the declared schema); identity writes
@@ -215,8 +223,9 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     val writer = physDf.write.mode("overwrite").options(writeOptions)
     val w = if (pspecs.nonEmpty) writer.partitionBy(pspecs.map(_.dirCol): _*) else writer
     w.parquet(dest.toString)
-    val (stats, violations): (Map[String, (String, String)], Seq[(String, Long)]) = obs match {
-      case None => (Map.empty, Seq.empty)
+    val (stats, violations, batchRows)
+        : (Map[String, (String, String)], Seq[(String, Long)], Option[Long]) = obs match {
+      case None => (Map.empty, Seq.empty, None)
       case Some(o) =>
         try {
           val row = scala.concurrent.Await.result(
@@ -233,7 +242,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
               .map(v => n -> v.asInstanceOf[Long])
               .filter(_._2 > 0)
           }
-          (st, vi)
+          (st, vi, batchFlag.map(_ => row.getAs[Long]("__batch_rows")))
         } catch {
           // NonFatal, not just TimeoutException: the parquet data is
           // already on disk at this point, so ANY await/listener failure
@@ -248,19 +257,19 @@ final class LakeTable(val spark: SparkSession, val root: String) {
             // fallback and orphan the dir instead of degrading
             // the files store PHYSICAL names — read them as such, then
             // project back to logical so constraint predicates resolve
-            val physSchema = StructType(df.schema.fields.map(f =>
+            val physSchema = StructType(data.schema.fields.map(f =>
               f.copy(name = colMapping.getOrElse(f.name, f.name))))
             val dir = spark.read
               .option("basePath", dest.toString)
               .schema(physSchema)
               .parquet(dest.toString)
-              .select(df.schema.fieldNames.map(n =>
+              .select(data.schema.fieldNames.map(n =>
                 col(colMapping.getOrElse(n, n)).as(n)): _*)
             val vi = consSeq.flatMap { case (n, p) =>
               val bad = dir.filter(!coalesce(expr(p), lit(false))).count()
               if (bad > 0) Some(n -> bad) else None
             }
-            (statsOf(Seq(commitName), present, colMapping), vi)
+            (statsOf(Seq(commitName), present, colMapping), vi, None)
         }
     }
     if (violations.nonEmpty) {
@@ -271,8 +280,16 @@ final class LakeTable(val spark: SparkSession, val root: String) {
         "CHECK constraint(s) violated by the batch: " +
           violations.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
     }
-    (Some(commitName), stats)
+    if (batchRows.contains(0L)) {
+      // an empty batch: nothing to publish, and no orphan dir left behind
+      deleteDataDir(commitName)
+      (None, Map.empty)
+    } else (Some(commitName), stats)
   }
+
+  /** `df` without its batch-flag column (see [[writeCommitDir]]). */
+  private def withoutFlag(df: DataFrame, batchFlag: Option[String]): DataFrame =
+    batchFlag.fold(df)(df.drop(_))
 
   /** A batch that omits a constrained column would read as NULL after
     * schema evolution, and the documented NULL-as-violation CHECK stance
@@ -505,6 +522,11 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     * [[incrementalFrom]]'s high-watermark probe becomes a manifest read
     * instead of a full-table aggregation — the difference between a
     * metadata lookup and a 100 TB scan per incremental batch.
+    *
+    * `skipIfEmpty` opts this call out of publishing an empty batch: the
+    * row count rides the write job's own observe (no probe job first),
+    * and when it is zero the written dir is deleted and no version is
+    * published. The latest version (or -1) is returned then.
     */
   def append(
       df: DataFrame,
@@ -512,7 +534,8 @@ final class LakeTable(val spark: SparkSession, val root: String) {
       statsCols: Seq[String] = Seq.empty,
       schemaMode: String = "evolve",
       txn: Option[(String, Long)] = None,
-      writeOptions: Map[String, String] = Map.empty): Long = {
+      writeOptions: Map[String, String] = Map.empty,
+      skipIfEmpty: Boolean = false): Long = {
     // idempotent-writer fast path BEFORE any data is written: a replayed
     // micro-batch (same writer id, same epoch) must not even land an
     // orphan commit dir. The commit loop re-checks under the CAS, so a
@@ -538,9 +561,12 @@ final class LakeTable(val spark: SparkSession, val root: String) {
         freshPhysicalFor(m, t, df.schema.fieldNames.filterNot(t.fieldNames.contains).toSeq)
       case _ => Map.empty[String, String]
     }
+    val batchFlag = if (skipIfEmpty) Some(AppendFlag) else None
     val (dirOpt, batchStats) = writeCommitDir(
-      df, effParts, effStats, writeOptions, prev.map(_.constraints).getOrElse(Map.empty),
-      prev.map(_.colMapping).getOrElse(Map.empty) ++ freshMap)
+      batchFlag.fold(df)(df.withColumn(_, lit(true))),
+      effParts, effStats, writeOptions, prev.map(_.constraints).getOrElse(Map.empty),
+      prev.map(_.colMapping).getOrElse(Map.empty) ++ freshMap, batchFlag)
+    if (dirOpt.isEmpty) return prev.map(_.version).getOrElse(-1L)
     val dirs = dirOpt.toSeq
     val batchMax = batchStats.map { case (c, (_, mx)) => c -> mx }
     val merged = Stats.merge(prev.map(_.colMax).getOrElse(Map.empty), batchMax, mergedSchema)
@@ -981,12 +1007,19 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     * Conforms to the table's partition layout and inherits declared
     * stats columns like [[append]] (recomputed from the new contents —
     * an overwrite invalidates the previous running max).
+    *
+    * `batchFlag` names a boolean column of `df` that marks the rows
+    * standing for a merge's source rows; it is not written. Its count
+    * is observed inside the write job, and when it is zero the source
+    * was empty: the rewrite is dropped and no version is published (the
+    * latest version, or -1, is returned).
     */
   def overwrite(
       df: DataFrame,
       partitionBy: Seq[String] = Seq.empty,
       statsCols: Seq[String] = Seq.empty,
-      txn: Option[(String, Long)] = None): Long = {
+      txn: Option[(String, Long)] = None,
+      batchFlag: Option[String] = None): Long = {
     txn.foreach { case (id, epoch) =>
       if (txnVersion(id).exists(_ >= epoch)) return latestVersion().getOrElse(-1L)
     }
@@ -999,9 +1032,10 @@ final class LakeTable(val spark: SparkSession, val root: String) {
       (statsCols ++ prev.map(_.colMax.keys.toSeq).getOrElse(Seq.empty)).distinct
     val (dirOpt, batchStats) = writeCommitDir(
       df, effParts, effStats, constraints = prev.map(_.constraints).getOrElse(Map.empty),
-      colMapping = prev.map(_.colMapping).getOrElse(Map.empty))
-    commit("overwrite", dirOpt.toSeq, keepExisting = false, df.schema, effParts,
-      batchStats.map { case (c, (_, mx)) => c -> mx },
+      colMapping = prev.map(_.colMapping).getOrElse(Map.empty), batchFlag = batchFlag)
+    if (dirOpt.isEmpty) return prev.map(_.version).getOrElse(-1L)
+    commit("overwrite", dirOpt.toSeq, keepExisting = false, withoutFlag(df, batchFlag).schema,
+      effParts, batchStats.map { case (c, (_, mx)) => c -> mx },
       dirOpt.toSeq.map(_ => batchStats), txn = txn)
   }
 
@@ -1046,8 +1080,13 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     * partitions keep their existing files; the new manifest narrows the
     * scope of every older commit dir so readers skip the replaced
     * partition subdirs. No data outside `affected` is copied or moved.
+    * `batchFlag` is [[overwrite]]'s: a merge whose source was empty
+    * publishes nothing.
     */
-  def replacePartitions(df: DataFrame, affected: Seq[String]): Long = {
+  def replacePartitions(
+      df: DataFrame,
+      affected: Seq[String],
+      batchFlag: Option[String] = None): Long = {
     val prev = latestVersion()
       .map(readManifest)
       .getOrElse(throw new IllegalStateException(s"replacePartitions on empty table $root"))
@@ -1066,21 +1105,23 @@ final class LakeTable(val spark: SparkSession, val root: String) {
         "use the whole-table merge/overwrite instead")
     val affectedSet = affected.toSet
     val p0Name = p0.dirCol
+    val schema = withoutFlag(df, batchFlag).schema
 
-    // a replace batch can INTRODUCE columns (the manifest takes
-    // df.schema) — a new name colliding with a dropped/renamed PHYSICAL
+    // a replace batch can INTRODUCE columns (the manifest takes its
+    // schema) — a new name colliding with a dropped/renamed PHYSICAL
     // name needs a fresh physical, exactly like append/stage/alter, or
     // the KEPT dirs' immutable files resurface old data under it
     val prevSchema = scala.util.Try(
       DataType.fromJson(prev.schemaJson).asInstanceOf[StructType]).toOption
     val freshMap = prevSchema
-      .map(t => freshPhysicalFor(prev, t, df.schema.fieldNames.filterNot(t.fieldNames.contains).toSeq))
+      .map(t => freshPhysicalFor(prev, t, schema.fieldNames.filterNot(t.fieldNames.contains).toSeq))
       .getOrElse(Map.empty)
     val effMapping = prev.colMapping ++ freshMap
 
     val (newDirOpt, newStats) = writeCommitDir(
       df, prev.partitionBy, prev.colMax.keys.toSeq, constraints = prev.constraints,
-      colMapping = effMapping)
+      colMapping = effMapping, batchFlag = batchFlag)
+    if (newDirOpt.isEmpty) return prev.version
     val newDir = newDirOpt.get
     val oldStats = prev.commitDirs.zip(prev.effectiveDirStats).toMap
     val oldFileStats = prev.commitDirs.zip(prev.effectiveFileStats).toMap
@@ -1113,7 +1154,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     // back to the aggregation probe.
     val newMax = newStats.map { case (c, (_, mx)) => c -> mx }
     val keptMax = prev.colMax.flatMap { case (c, old) =>
-      newMax.get(c).filter(nv => Stats.geq(nv, old, df.schema(c).dataType)).map(c -> _)
+      newMax.get(c).filter(nv => Stats.geq(nv, old, schema(c).dataType)).map(c -> _)
     }
     writeManifest(
       Manifest(
@@ -1121,7 +1162,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
         "replacePartitions",
         System.currentTimeMillis(),
         entries.map(_._1),
-        df.schema.json,
+        schema.json,
         prev.partitionBy,
         entries.map(_._2),
         keptMax,
@@ -2045,6 +2086,9 @@ final class SchemaDriftException(msg: String) extends IllegalArgumentException(m
 
 object LakeTable {
   def apply(spark: SparkSession, root: String): LakeTable = new LakeTable(spark, root)
+
+  /** The batch flag `append(skipIfEmpty = true)` adds: every row counts. */
+  private val AppendFlag = "__graft_append_row"
 
   /** Parquet bloom-filter write options for point-lookup columns —
     * pass to `append(writeOptions = ...)`. Each column gets a split-

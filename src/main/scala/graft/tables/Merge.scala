@@ -9,13 +9,27 @@ import org.apache.spark.sql.functions._
   * (close-then-insert versioning), with the exact observable semantics of
   * the reference's two-pass Iceberg MERGEs
   * (/root/reference/src/silver/_silver_utils.py:108-186), expressed as
-  * join + union plans committed atomically through [[LakeTable]].
+  * ONE full outer join of target and source per merge, committed
+  * atomically through [[LakeTable]].
   *
   * Spark 4 only parses `MERGE INTO` against a DSv2 table that implements
   * row-level operations; with no Iceberg/Delta jars in the environment the
   * idiomatic route is exactly this read-modify-write plan — which is also
   * what those engines execute under the hood (a join between target and
-  * source, then a rewrite of matched files).
+  * source, then a rewrite of matched files). One join means the source
+  * is planned, read and shuffled once; a source already hash-partitioned
+  * on the keys (a dedup window) feeds the join without a second shuffle.
+  *
+  * An empty source publishes nothing: the merge's write job observes its
+  * source row count, and a zero count drops the written rewrite (see
+  * [[LakeTable.overwrite]]'s `batchFlag`), so there is no probe job first.
+  *
+  * Precondition, for the SCD2 merges: at most one current
+  * (`is_current = 1`) row per non-null key in the target; for the SCD1
+  * merges: at most one row per non-null key. Every merge keeps it when
+  * its source's non-null keys are unique. Under it, each output equals
+  * that of the two-pass plan (close pass, then insert pass) as a
+  * multiset of rows, also for sources with duplicate or null keys.
   *
   * Two commit granularities:
   *   - `mergeScd1` / `mergeScd2` rewrite the whole table — right for
@@ -32,6 +46,8 @@ object Merge {
   private val StartCol = "start_timestamp"
   private val EndCol = "end_timestamp"
   private val CurrentCol = "is_current"
+  /** The rewrite's batch flag: marks one output row per joined source row. */
+  private val SourceRow = "__graft_source_row"
 
   /** Stamp SCD2 bookkeeping columns onto a source batch
     * (reference `_add_scd2_cols`, _silver_utils.py:108-113).
@@ -41,8 +57,22 @@ object Merge {
       .withColumn(EndCol, lit(null).cast("timestamp"))
       .withColumn(CurrentCol, lit(1))
 
-  /** The SCD2 rewrite plan over an arbitrary target slice: close-pass
-    * update of changed current rows + insert pass for new/changed keys.
+  /** `t.k = s.k` over every key: a NULL key never matches. */
+  private def keysMatch(keyCols: Seq[String]): Column =
+    keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
+
+  /** The source's data columns in the target's order, plus the flag that
+    * tells its rows apart after the outer join.
+    */
+  private def flagged(source: DataFrame, dataCols: Seq[String]): DataFrame =
+    source.select(dataCols.map(col) :+ lit(true).as(SourceRow): _*).alias("s")
+
+  /** The SCD2 rewrite plan over an arbitrary target slice: one full
+    * outer join of the target with the stamped source on the keys and
+    * `t.is_current = 1`. Each joined row emits its target row (closed
+    * when a source row matched and a tracked column differs,
+    * null-safely), then its source row when that is new or changed.
+    * Historical and null-key rows come through unmatched and unchanged.
     */
   private def scd2Rewrite(
       target: DataFrame,
@@ -51,39 +81,42 @@ object Merge {
       trackedCols: Seq[String],
       at: Timestamp): DataFrame = {
     val dataCols = target.columns.toSeq // includes scd2 bookkeeping cols
-    val src = stamped.select(dataCols.map(col): _*).alias("s")
-    val tgt = target.alias("t")
+    val onCurrent = keysMatch(keyCols) && col(s"t.$CurrentCol") === 1
+    val joined = target.alias("t").join(flagged(stamped, dataCols), onCurrent, "full_outer")
+    val hasSource = col(s"s.$SourceRow").isNotNull
+    // a matched key is non-null on both sides; an unmatched source row
+    // has a NULL target key
+    val matched = hasSource && col(s"t.${keyCols.head}").isNotNull
+    val hasTarget = !hasSource || matched
+    val changed = trackedCols.map(c => !(col(s"t.$c") <=> col(s"s.$c"))).reduce(_ || _)
+    val close = matched && changed
+    val unchanged = matched && !changed
+    // the flag marks exactly one output row per source row: the insert,
+    // or the untouched target row that made it a no-op
+    val targetRow = struct(dataCols.map {
+      case EndCol => when(close, lit(at)).otherwise(col(s"t.$EndCol")).as(EndCol)
+      case CurrentCol => when(close, lit(0)).otherwise(col(s"t.$CurrentCol")).as(CurrentCol)
+      case c => col(s"t.$c").as(c)
+    } :+ unchanged.as(SourceRow): _*)
+    val sourceRow = struct(dataCols.map(c => col(s"s.$c").as(c)) :+ lit(true).as(SourceRow): _*)
+    joined
+      .select(explode(array(
+        when(hasTarget, targetRow),
+        when(hasSource && !unchanged, sourceRow))).as("r"))
+      .filter(col("r").isNotNull)
+      .select("r.*")
+  }
 
-    val keyEq: Column = keyCols
-      .map(k => col(s"t.$k") === col(s"s.$k"))
-      .reduce(_ && _)
-    val anyTrackedDiffers: Column = trackedCols
-      .map(c => !(col(s"t.$c") <=> col(s"s.$c")))
-      .reduce(_ || _)
-
-    // Close pass: current target rows whose source counterpart changed.
-    val joined = tgt.join(src, keyEq && col(s"t.$CurrentCol") === 1, "left")
-    val sourceMatched = col(s"s.${keyCols.head}").isNotNull
-    val mustClose = sourceMatched && anyTrackedDiffers
-    val rewrittenTarget = joined.select(
-      dataCols.map {
-        case EndCol => when(mustClose, lit(at)).otherwise(col(s"t.$EndCol")).as(EndCol)
-        case CurrentCol => when(mustClose, lit(0)).otherwise(col(s"t.$CurrentCol")).as(CurrentCol)
-        case c => col(s"t.$c").as(c)
-      }: _*)
-
-    // Insert pass: source rows with no *current, tracked-identical* match
-    // (i.e. new keys or changed values) get a fresh open version.
-    val currentTgt = target.filter(col(CurrentCol) === 1).alias("t")
-    val inserts = src
-      .join(
-        currentTgt,
-        keyCols.map(k => col(s"s.$k") === col(s"t.$k")).reduce(_ && _) &&
-          trackedCols.map(c => col(s"s.$c") <=> col(s"t.$c")).reduce(_ && _),
-        "left_anti")
-      .select(dataCols.map(c => col(s"s.$c").as(c)): _*)
-
-    rewrittenTarget.unionByName(inserts)
+  /** The SCD1 rewrite plan: one full outer join on the keys; each row is
+    * the source row where one matched, else the target row.
+    */
+  private def scd1Rewrite(target: DataFrame, source: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val dataCols = target.columns.toSeq
+    val joined = target.alias("t").join(flagged(source, dataCols), keysMatch(keyCols), "full_outer")
+    val hasSource = col(s"s.$SourceRow").isNotNull
+    joined.select(
+      dataCols.map(c => when(hasSource, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)) :+
+        hasSource.as(SourceRow): _*)
   }
 
   /** SCD Type 2 merge. Reference semantics (SURVEY §2.4) preserved:
@@ -96,7 +129,8 @@ object Merge {
     *   - historical (`is_current = 0`) rows are never touched.
     *
     * `at` is the merge instant (the reference uses CURRENT_TIMESTAMP();
-    * deterministic tests pass a fixed clock).
+    * deterministic tests pass a fixed clock). An empty source publishes
+    * no version.
     */
   def mergeScd2(
       table: LakeTable,
@@ -107,15 +141,16 @@ object Merge {
       statsCols: Seq[String] = Seq.empty): Long = {
     val stamped = addScd2Cols(source, at)
     if (!table.exists || table.isEmpty)
-      return table.append(stamped, statsCols = statsCols)
+      return table.append(stamped, statsCols = statsCols, skipIfEmpty = true)
     table.overwrite(
       scd2Rewrite(table.read(), stamped, keyCols, trackedCols, at),
-      statsCols = statsCols)
+      statsCols = statsCols, batchFlag = Some(SourceRow))
   }
 
   /** SCD Type 1 merge: upsert — matched keys take all source columns,
     * unmatched target rows survive, unmatched source rows insert
-    * (reference merge_scd1, _silver_utils.py:157-186).
+    * (reference merge_scd1, _silver_utils.py:157-186). An empty source
+    * publishes no version.
     */
   def mergeScd1(
       table: LakeTable,
@@ -123,12 +158,9 @@ object Merge {
       keyCols: Seq[String],
       statsCols: Seq[String] = Seq.empty): Long = {
     if (!table.exists || table.isEmpty)
-      return table.append(source, statsCols = statsCols)
-    val target = table.read()
-    val dataCols = target.columns.toSeq
-    val src = source.select(dataCols.map(col): _*)
-    val survivors = target.join(src.select(keyCols.map(col): _*), keyCols, "left_anti")
-    table.overwrite(survivors.unionByName(src), statsCols = statsCols)
+      return table.append(source, statsCols = statsCols, skipIfEmpty = true)
+    table.overwrite(scd1Rewrite(table.read(), source, keyCols),
+      statsCols = statsCols, batchFlag = Some(SourceRow))
   }
 
   /** SCD1 upsert WITH SCHEMA EVOLUTION — the Delta
@@ -281,14 +313,12 @@ object Merge {
       source: DataFrame,
       keyCols: Seq[String],
       partCol: String): Long = {
-    if (!table.exists || table.isEmpty) return table.append(source, partitionBy = Seq(partCol))
+    if (!table.exists || table.isEmpty)
+      return table.append(source, partitionBy = Seq(partCol), skipIfEmpty = true)
     val target = table.read()
     val affected = affectedPartitions(target, source, keyCols, partCol)
-    val dataCols = target.columns.toSeq
-    val src = source.select(dataCols.map(col): _*)
     val targetAff = target.filter(col(partCol).cast("string").isin(affected: _*))
-    val survivors = targetAff.join(src.select(keyCols.map(col): _*), keyCols, "left_anti")
-    table.replacePartitions(survivors.unionByName(src), affected)
+    table.replacePartitions(scd1Rewrite(targetAff, source, keyCols), affected, Some(SourceRow))
   }
 
   /** SCD2 merge rewriting only affected partitions (same three-way
@@ -304,12 +334,12 @@ object Merge {
       partCol: String): Long = {
     val stamped = addScd2Cols(source, at)
     if (!table.exists || table.isEmpty)
-      return table.append(stamped, partitionBy = Seq(partCol))
+      return table.append(stamped, partitionBy = Seq(partCol), skipIfEmpty = true)
     val target = table.read()
     val affected = affectedPartitions(target, stamped, keyCols, partCol)
     val targetAff = target.filter(col(partCol).cast("string").isin(affected: _*))
     table.replacePartitions(
       scd2Rewrite(targetAff, stamped, keyCols, trackedCols, at),
-      affected)
+      affected, Some(SourceRow))
   }
 }

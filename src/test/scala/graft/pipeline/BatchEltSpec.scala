@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -94,6 +96,13 @@ class BatchEltSpec extends SparkSpec {
     BatchElt.runCompanyElt(lake, fixture("company.csv"), fixture("industry.csv"), t1, "b1")
     val silver = lake.table("silver", "processed_company")
     val before = silver.latestVersion()
+    def silverDirs() = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(silver.root, "data"))
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val dirsBefore = silverDirs()
+    val gold = lake.table("gold", "dim_company")
+    val goldBefore = gold.latestVersion()
     val dirty = java.nio.file.Paths.get(scratchDir("dirty-csv"), "company.csv")
     java.nio.file.Files.write(dirty, java.util.Arrays.asList(
       "symbol,organ_name,icb_code1,icb_code2,icb_code3,icb_code4,issue_share",
@@ -103,6 +112,10 @@ class BatchEltSpec extends SparkSpec {
     BatchElt.runCompanyElt(lake, dirty.toString, fixture("industry.csv"), t2, "b2")
     assert(silver.latestVersion() == before)
     assert(silver.read().count() == 7)
+    // the merge's write was dropped, not orphaned: no new commit dir
+    assert(silverDirs() == dirsBefore)
+    // no new silver rows that day: gold publishes no version either
+    assert(gold.latestVersion() == goldBefore)
   }
 
   test("a failing task's own exception escapes runDag; its downstream never runs") {

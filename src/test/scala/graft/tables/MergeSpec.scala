@@ -1,12 +1,23 @@
 package graft.tables
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+import graft.operators.Ops
 
-class MergeSpec extends SparkSpec {
+class MergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val t1 = Timestamp.valueOf("2020-01-01 00:00:00")
@@ -79,5 +90,107 @@ class MergeSpec extends SparkSpec {
     val a = table.read().filter($"key" === "a")
       .select($"v", $"name", $"tag").as[(Int, String, String)].head()
     assert(a == ((7, "NA", "ta")))
+  }
+
+  /** Commit dir names under the table's `data/` (none when it is absent). */
+  private def dataDirs(t: LakeTable): Set[String] = {
+    val d = Paths.get(t.root, "data")
+    if (!Files.isDirectory(d)) Set.empty
+    else {
+      val s = Files.list(d)
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+  }
+
+  /** `merge` publishes no version and leaves no dir behind. The empty
+    * source is decided from the count the write job observed: were that
+    * observation lost, the write would fall back (after its 30 s wait)
+    * to publishing the rewrite, and the version check would fail.
+    */
+  private def assertPublishesNothing(t: LakeTable, what: String)(merge: => Long): Unit = {
+    val (version, dirs) = (t.latestVersion(), dataDirs(t))
+    val returned = merge
+    assert(t.latestVersion() == version, s"$what published a version")
+    assert(dataDirs(t) == dirs, s"$what left ${dataDirs(t) -- dirs} under data/")
+    assert(returned == version.getOrElse(-1L))
+  }
+
+  test("an empty source publishes no version and leaves no data dir, on a table or a missing one") {
+    val emptyLocal = Seq.empty[(String, Long)].toDF("key", "shares")
+    val scanned = scratchDir("empty-src") + "/src"
+    Seq(("k9", 90L)).toDF("key", "shares").write.parquet(scanned)
+    // a source that is empty only once its files are read
+    val emptyScan = spark.read.parquet(scanned).filter($"shares" < 0)
+    val b1 = Seq(("k1", 10L), ("k2", 20L)).toDF("key", "shares")
+    Seq("local" -> emptyLocal, "scan" -> emptyScan).foreach { case (kind, empty) =>
+      val scd2 = LakeTable(spark, scratchDir("empty-scd2"))
+      Merge.mergeScd2(scd2, b1, Seq("key"), Seq("shares"), t1)
+      val scd1 = LakeTable(spark, scratchDir("empty-scd1"))
+      Merge.mergeScd1(scd1, b1, Seq("key"))
+      assertPublishesNothing(scd2, s"SCD2 ($kind) on a table")(
+        Merge.mergeScd2(scd2, empty, Seq("key"), Seq("shares"), t2))
+      assertPublishesNothing(scd1, s"SCD1 ($kind) on a table")(Merge.mergeScd1(scd1, empty, Seq("key")))
+      assert(scd2.read().count() == 2 && scd1.read().count() == 2)
+
+      val missing2 = LakeTable(spark, scratchDir("empty-missing2") + "/t")
+      assertPublishesNothing(missing2, s"SCD2 ($kind) on a missing table")(
+        Merge.mergeScd2(missing2, empty, Seq("key"), Seq("shares"), t2))
+      val missing1 = LakeTable(spark, scratchDir("empty-missing1") + "/t")
+      assertPublishesNothing(missing1, s"SCD1 ($kind) on a missing table")(
+        Merge.mergeScd1(missing1, empty, Seq("key")))
+      assert(!missing2.exists && !missing1.exists)
+    }
+  }
+
+  /** The executed plan of the parquet write that `f` issues (listener
+    * delivery is async, so poll for it).
+    */
+  private def writePlanOf(f: => Unit): SparkPlan = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      def write() = plans.asScala.find(p => collect(p) { case w: DataWritingCommandExec => w }.nonEmpty)
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (write().isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      write().getOrElse(fail("no write execution captured"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Joins, windows and file scans in an executed plan. */
+  private def shape(plan: SparkPlan): (Int, Int, Int) = (
+    collect(plan) { case j: BaseJoinExec => j }.size,
+    collect(plan) { case w: WindowExec => w }.size,
+    collect(plan) { case s: FileSourceScanExec => s }.size)
+
+  test("plan pin: a whole-table merge runs one join and reads each input once") {
+    // parquet inputs, so every read of the target or the source is a file scan
+    def parquet(rows: DataFrame, tag: String): DataFrame = {
+      val path = scratchDir(tag) + "/src"
+      rows.write.parquet(path)
+      spark.read.parquet(path)
+    }
+    val raw = parquet(Seq(("k1", 11L, 2), ("k1", 12L, 1), ("k2", 20L, 1), ("k3", 30L, 1))
+      .toDF("key", "shares", "seq"), "pin-src")
+    val deduped = Ops.deduplicate(raw, Seq("key"), "seq").drop("seq")
+
+    val scd2 = LakeTable(spark, scratchDir("pin-scd2"))
+    Merge.mergeScd2(scd2, Seq(("k1", 10L), ("k2", 20L)).toDF("key", "shares"), Seq("key"), Seq("shares"), t1)
+    val plan2 = writePlanOf(Merge.mergeScd2(scd2, deduped, Seq("key"), Seq("shares"), t2))
+    assert(shape(plan2) == ((1, 1, 2)), s"SCD2 (joins, windows, scans) = ${shape(plan2)}:\n$plan2")
+    val rows2 = scd2.read().select("key", "shares", "is_current").as[(String, Long, Int)].collect().sorted.toSeq
+    assert(rows2 == Seq(("k1", 10L, 0), ("k1", 11L, 1), ("k2", 20L, 1), ("k3", 30L, 1)))
+
+    val scd1 = LakeTable(spark, scratchDir("pin-scd1"))
+    Merge.mergeScd1(scd1, Seq(("k1", 10L), ("k4", 40L)).toDF("key", "shares"), Seq("key"))
+    val plan1 = writePlanOf(Merge.mergeScd1(scd1, raw.drop("seq").filter($"key" =!= "k1"), Seq("key")))
+    assert(shape(plan1) == ((1, 0, 2)), s"SCD1 (joins, windows, scans) = ${shape(plan1)}:\n$plan1")
+    val rows1 = scd1.read().as[(String, Long)].collect().sorted.toSeq
+    assert(rows1 == Seq(("k1", 10L), ("k2", 20L), ("k3", 30L), ("k4", 40L)))
   }
 }
