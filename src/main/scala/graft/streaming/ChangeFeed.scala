@@ -177,7 +177,7 @@ object ChangeFeed {
     val inserts = batch.filter(col("_change_type") === "insert").drop("_change_type")
     if (!target.exists || target.isEmpty) {
       // bootstrap: deletes against an empty target are vacuous
-      if (!inserts.isEmpty) { target.append(inserts); () }
+      target.append(inserts, skipIfEmpty = true)
       return
     }
     val touchedKeys = batch.select(keyCols.map(col): _*).distinct()

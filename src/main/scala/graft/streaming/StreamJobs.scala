@@ -926,12 +926,9 @@ object StreamJobs {
           if (table.exists)
             withFp.join(table.read().select(col("fp")), Seq("fp"), "left_anti")
           else withFp
-        // persist across the emptiness probe + append: without it the
-        // O(index) corpus anti-join and the batch fingerprinting run
-        // TWICE per micro-batch (once for isEmpty, once inside append)
-        fresh.persist()
-        try { if (!fresh.isEmpty) { table.append(fresh); () } }
-        finally { fresh.unpersist(blocking = false); () }
+        // an all-duplicate batch publishes no version; the row count rides
+        // the write job, so the anti-join runs once per micro-batch
+        table.append(fresh, skipIfEmpty = true)
         ()
       }
       .trigger(Trigger.AvailableNow())

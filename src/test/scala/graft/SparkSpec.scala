@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite via lazy val). */
@@ -9,4 +16,32 @@ trait SparkSpec extends AnyFunSuite {
 
   def scratchDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-test-$tag-").toString
+
+  /** Action names (`isEmpty`, `collect`, `command`, ...) of the SQL
+    * executions `f` runs in this session or in a session cloned from it
+    * after this call, such as a stream's micro-batches. Listener events
+    * arrive asynchronously on one shared queue, so a tagged marker action
+    * run after `f` is awaited: once it is reported, so is every earlier
+    * execution.
+    */
+  def actionsRunBy(f: => Unit): Seq[String] = {
+    val tag = java.util.UUID.randomUUID().toString
+    val names = new ConcurrentLinkedQueue[String]()
+    val marked = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      private def seen(funcName: String, qe: QueryExecution): Unit =
+        if (qe.logical.toString.contains(tag)) marked.countDown() else names.add(funcName)
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen(funcName, qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen(funcName, qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      spark.range(1).select(lit(tag)).collect()
+      assert(marked.await(30, TimeUnit.SECONDS), "marker execution never reported")
+      names.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

@@ -70,6 +70,14 @@ class ChangeFeedSpec extends SparkSpec {
     assert(tgt.latestVersion() == tgtVersionAfter)
   }
 
+  test("a deletes-only bootstrap batch publishes no version and runs no probe") {
+    val tgt = LakeTable(spark, scratchDir("cdctgt-deletes"))
+    val deletes = Seq((1L, "a", "delete"), (2L, "b", "delete")).toDF("id", "v", "_change_type")
+    val actions = actionsRunBy(ChangeFeed.applyScd1(tgt, Seq("id"))(deletes))
+    assert(tgt.latestVersion().isEmpty)
+    assert(!actions.contains("isEmpty"), s"actions: $actions")
+  }
+
   test("chunked bootstrap walks versions in bounded batches to the same mirror") {
     val src = LakeTable(spark, scratchDir("cdcsrc3"))
     src.append(Seq((1L, "a")).toDF("id", "v"))

@@ -40,18 +40,27 @@ class StreamingStateSpec extends SparkSpec {
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType)))
-    // wave 1: two docs + an in-wave copy of doc 1 (different id, same text)
-    Seq((1L, "alpha beta"), (2L, "gamma delta"), (10L, "alpha  beta "))
-      .toDF("doc_id", "text").write.mode("append").parquet(src)
-    StreamJobs.runStreamingDedupIngest(spark, src, docSchema, "text", table, wd)
-    // wave 2: a copy of doc 2 (dropped) and a genuinely new doc
-    Seq((20L, "GAMMA DELTA"), (3L, "epsilon zeta"))
-      .toDF("doc_id", "text").write.mode("append").parquet(src)
-    StreamJobs.runStreamingDedupIngest(spark, src, docSchema, "text", table, wd)
+    def wave(docs: (Long, String)*): Unit = {
+      docs.toDF("doc_id", "text").write.mode("append").parquet(src)
+      StreamJobs.runStreamingDedupIngest(spark, src, docSchema, "text", table, wd)
+    }
+    val actions = actionsRunBy {
+      // wave 1: two docs + an in-wave copy of doc 1 (different id, same text)
+      wave((1L, "alpha beta"), (2L, "gamma delta"), (10L, "alpha  beta "))
+      // wave 2: a copy of doc 2 (dropped) and a genuinely new doc
+      wave((20L, "GAMMA DELTA"), (3L, "epsilon zeta"))
+      // wave 3: copies only, so the micro-batch has nothing to publish
+      val before = table.latestVersion()
+      wave((30L, "Epsilon Zeta"), (11L, "ALPHA BETA"))
+      assert(table.latestVersion() == before, "an all-duplicate batch published a version")
+    }
     val ids = table.read().select("doc_id").collect().map(_.getLong(0)).toSet
     // both wave-1 copies kept (within-batch passthrough, ws/case-normalized
     // fingerprints make 10 a copy of 1); wave-2 copy of doc 2 dropped
     assert(ids == Set(1L, 2L, 10L, 3L), s"got $ids")
+    // the row count rides the append's write job: no micro-batch runs a
+    // separate emptiness probe before it
+    assert(!actions.contains("isEmpty"), s"actions: $actions")
   }
 
   test("txn append stream: crash-replayed micro-batch commits exactly once") {
