@@ -63,6 +63,14 @@ object StreamJobs {
     finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  /** Scoped at the start of a stateful stream: Spark turns AQE off in
+    * such a stream's cloned session anyway, and AQE on at the start only
+    * makes `ResolveWriteToStream` warn that it is unsupported. A
+    * stateless stream keeps AQE on in its micro-batches (Spark 4.1), so
+    * its start keeps the session's setting.
+    */
+  private val statefulStart = "spark.sql.adaptive.enabled" -> "false"
+
   private val rocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -224,7 +232,8 @@ object StreamJobs {
       out: DataFrame,
       queryName: String,
       checkpoint: String,
-      statePartitions: Int): org.apache.spark.sql.streaming.StreamingQuery =
+      statePartitions: Int,
+      stateful: Boolean): org.apache.spark.sql.streaming.StreamingQuery =
     // Sentinel-driven flushes emit final windows in a NO-DATA micro-batch
     // (the watermark advances after the sentinel batch commits). That
     // batch only runs when noDataMicroBatches is enabled — pin it, don't
@@ -233,7 +242,8 @@ object StreamJobs {
       spark,
       Seq(
         "spark.sql.shuffle.partitions" -> statePartitions.toString,
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true")) {
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
+        Option.when(stateful)(statefulStart)) {
       out.writeStream
         .outputMode("append")
         .format("memory")
@@ -260,7 +270,7 @@ object StreamJobs {
     val stream = spark.readStream.schema(sourceSchema).parquet(sourceDir)
     val joined = project(
       stream.join(org.apache.spark.sql.functions.broadcast(staticDim), joinCols, "left"))
-    val q = startMemorySink(spark, joined, queryName, checkpoint, statePartitions = 8)
+    val q = startMemorySink(spark, joined, queryName, checkpoint, statePartitions = 8, stateful = false)
     try q.processAllAvailable()
     finally q.stop()
     spark.table(queryName)
@@ -337,7 +347,8 @@ object StreamJobs {
     val checkpoint = dir(workDir, s"checkpoint-stateless-${java.util.UUID.randomUUID()}")
     val queryName = s"stateless_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val stream = spark.readStream.schema(sourceSchema).parquet(sourceDir)
-    val q = startMemorySink(spark, transform(stream), queryName, checkpoint, statePartitions = 8)
+    val q = startMemorySink(
+      spark, transform(stream), queryName, checkpoint, statePartitions = 8, stateful = false)
     try q.processAllAvailable()
     finally q.stop()
     spark.table(queryName)
@@ -410,6 +421,7 @@ object StreamJobs {
     // in-heap HDFSBackedStateStore is the executor-OOM ceiling; the
     // provider is pinned into the query's checkpoint at first start.
     val overrides = Seq(
+      statefulStart,
       "spark.sql.shuffle.partitions" -> statePartitions.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
       stateStoreProvider.map("spark.sql.streaming.stateStore.providerClass" -> _)
@@ -501,7 +513,7 @@ object StreamJobs {
     val joined = project(
       l.join(r, col(s"l.$keyCol") === col(s"r.$keyCol") && rangeCondition(l, r), joinType))
 
-    val q = startMemorySink(spark, joined, queryName, checkpoint, statePartitions = 8)
+    val q = startMemorySink(spark, joined, queryName, checkpoint, statePartitions = 8, stateful = true)
     try {
       q.processAllAvailable()
       sentinel.foreach { case (push, _) =>
@@ -568,7 +580,7 @@ object StreamJobs {
     // state-partition policy (see runStatefulAgg): stateful shuffles
     // size to key cardinality, not core count — 200 default stores per
     // micro-batch is pure commit overhead for a handful of keys
-    val q = withScopedConf(spark, Seq("spark.sql.shuffle.partitions" -> "8")) {
+    val q = withScopedConf(spark, Seq(statefulStart, "spark.sql.shuffle.partitions" -> "8")) {
       stream.writeStream
         .outputMode("append")
         .format("memory")
@@ -629,6 +641,7 @@ object StreamJobs {
     val q = withScopedConf(
       spark,
       Seq(
+        statefulStart,
         // state-partition policy (see runStatefulAgg): 8 stores, not 200
         "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
@@ -717,6 +730,7 @@ object StreamJobs {
     val q = withScopedConf(
       spark,
       Seq(
+        statefulStart,
         // state-partition policy (see runStatefulAgg): 8 stores, not 200
         "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
@@ -807,6 +821,7 @@ object StreamJobs {
     val q = withScopedConf(
       spark,
       Seq(
+        statefulStart,
         // state-partition policy (see runStatefulAgg): 8 stores, not 200
         "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
@@ -873,7 +888,7 @@ object StreamJobs {
       .parquet(sourceDir)
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-    val q = startMemorySink(spark, stream, queryName, checkpoint, statePartitions = 8)
+    val q = startMemorySink(spark, stream, queryName, checkpoint, statePartitions = 8, stateful = true)
     try q.processAllAvailable()
     finally q.stop()
     spark.table(queryName)

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Paths
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -51,7 +50,7 @@ class TestdataEncodingSpec extends SparkSpec {
     val writer = ExampleParquetWriter
       .builder(new Path(Paths.get(dir, "events.parquet").toString))
       .withType(msg)
-      .withConf(new Configuration())
+      .withConf(spark.sparkContext.hadoopConfiguration)
       .build()
     try {
       instantsMicros.zipWithIndex.foreach { case (micros, i) =>
@@ -111,7 +110,7 @@ class TestdataEncodingSpec extends SparkSpec {
     val writer = ExampleParquetWriter
       .builder(new Path(sub.resolve("part-0.parquet").toString))
       .withType(msg)
-      .withConf(new Configuration())
+      .withConf(spark.sparkContext.hadoopConfiguration)
       .build()
     try {
       instantsMicros.zipWithIndex.foreach { case (micros, i) =>
