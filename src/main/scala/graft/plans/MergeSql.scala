@@ -2,15 +2,14 @@ package graft.plans
 
 import org.apache.spark.sql.{GraftSqlInternals, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedStar}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedIdentifier, UnresolvedRelation, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.Count
 import org.apache.spark.sql.catalyst.parser.{ParseException, ParserInterface}
-import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.FullOuter
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** `MERGE INTO` as SQL over [[graft.tables.LakeTable]] targets — the
   * SQL surface of the reference's entire merge layer
@@ -35,15 +34,15 @@ import org.apache.spark.sql.types.StructType
   *     assignments / `DELETE` — the full-sync surface (delete or
   *     deactivate target rows absent from the source; the reference's
   *     SCD2 close pass, `_silver_utils.py:136-142`, is the degenerate
-  *     form). By-source clauses see ONLY the target: they rewrite over
-  *     a target-anti-source join where source columns are not in
-  *     scope, so a source reference fails resolution loudly — the
-  *     Delta/SQL-standard rule, enforced by plan shape;
+  *     form). By-source clauses see ONLY the target: they are evaluated
+  *     over the target alone, before the join, so a source reference
+  *     fails resolution loudly — the Delta/SQL-standard rule, enforced
+  *     by plan shape;
   *   - arbitrary `ON` condition.
   * Schema evolution is rejected
   * loudly. A target row matching multiple source rows is an error
-  * (the SQL-standard / Delta / Iceberg cardinality rule), enforced
-  * with one inner-join probe before the rewrite.
+  * (the SQL-standard / Delta / Iceberg cardinality rule), raised by the
+  * rewrite's write job from the same one join, with no probe before it.
   */
 object MergeSqlTargets {
 
@@ -592,19 +591,33 @@ final case class GraftCtasCommand(
   }
 }
 
+
 /** The executable MERGE: reads the target's CURRENT snapshot, applies
-  * the clause semantics as one declarative join-rewrite plan, and
-  * commits through `LakeTable.overwrite` (atomic manifest swap — the
-  * same commit the programmatic `Merge.mergeScd1/2` rewrites use).
+  * the clause semantics as one declarative plan, and commits through
+  * `LakeTable.overwrite` (atomic manifest swap — the same commit the
+  * programmatic `Merge.mergeScd1/2` rewrites use).
   *
-  * Plan shape (all Catalyst-declarative, no driver row handling):
-  * matched side = target LEFT OUTER JOIN source(+true marker) on the
-  * merge condition, a first-match-wins clause index, DELETE rows
-  * filtered, per-column CASE projecting update values; insert side =
-  * source LEFT ANTI JOIN target, its own clause index/filter and
-  * projection; UNION of both replaces the table. At scale the join is
-  * the standard MERGE shuffle (broadcastable small source), and the
-  * cardinality probe shares the matched-side join's persisted output.
+  * Plan shape (all Catalyst-declarative, no driver row handling), one
+  * join for every clause combination:
+  *   - the target carries a row id plus its NOT MATCHED BY SOURCE clause
+  *     index and values, evaluated over the target alone; the source
+  *     carries a row id (its marker) plus its NOT MATCHED clause index
+  *     and values, evaluated over the source alone. Each family sees only
+  *     its own side: a source reference in a by-source clause fails
+  *     analysis, and an unqualified name resolves to that side;
+  *   - one FULL OUTER join on the merge condition yields matched,
+  *     target-only and source-only rows;
+  *   - a window numbers the source rows each target row matched;
+  *   - one projection applies the MATCHED clauses and picks each row's
+  *     values by its kind; DELETE rows and source rows no insert clause
+  *     takes are filtered out. Every assigned value is cast to its
+  *     declared column type (store assignment, as in
+  *     [[GraftUpdateCommand]] / Delta / Iceberg).
+  * A target row matching more than one source row fails the write with
+  * `raise_error` when MATCHED clauses exist (the SQL-standard / Delta /
+  * Iceberg cardinality rule) and is kept once when none do. The result
+  * replaces the whole table, so an empty source still publishes a
+  * version.
   */
 final case class GraftMergeIntoCommand(
     root: String,
@@ -612,14 +625,16 @@ final case class GraftMergeIntoCommand(
     sourceAlias: String,
     payload: MergeSqlPayload) extends LeafRunnableCommand {
 
-  private def source = payload.source
-  private def condition = payload.condition
-  private def matchedActions = payload.matchedActions
-  private def notMatchedActions = payload.notMatchedActions
-
-  private val MatchedCol = "__graft_matched"
-  private val ClauseCol = "__graft_clause"
-  private val TidCol = "__graft_tid"
+  // Internal columns. Each clause family's index column `c` carries its
+  // per-target-column values as `c_<column position>`.
+  private val TargetRowId = "__graft_tid"
+  private val SourceRowId = "__graft_sid"
+  private val MatchNumber = "__graft_match"
+  private val MatchedClause = "__graft_matched"
+  private val BySourceClause = "__graft_by_source"
+  private val InsertClause = "__graft_insert"
+  private val Ambiguous = "MERGE INTO: a target row matches multiple source rows " +
+    "(ambiguous merge — the SQL cardinality rule Iceberg/Delta also enforce)"
 
   override def run(spark: SparkSession): Seq[Row] = {
     val table = graft.tables.LakeTable(spark, root)
@@ -627,237 +642,100 @@ final case class GraftMergeIntoCommand(
       table.exists,
       s"MERGE INTO target at $root does not exist; load it first (append/INSERT)")
     val targetDf = table.read()
-    val targetSchema = targetDf.schema
-    val targetPlan = targetDf.queryExecution.analyzed
-    def aliasT = SubqueryAlias(targetAlias, targetPlan)
+    val fields = targetDf.schema.fields.toSeq.zipWithIndex
+    def ref(c: String) = UnresolvedAttribute(Seq(c))
     def tAttr(c: String) = UnresolvedAttribute(Seq(targetAlias, c))
     def sAttr(c: String) = UnresolvedAttribute(Seq(sourceAlias, c))
-    val clauseRef = UnresolvedAttribute(Seq(ClauseCol))
+    def withColumns(cols: Seq[NamedExpression], p: LogicalPlan): LogicalPlan =
+      Project(UnresolvedStar(None) +: cols, p)
+    def firstOf(branches: Seq[(Expression, Expression)], otherwise: Expression): Expression =
+      if (branches.isEmpty) otherwise else CaseWhen(branches, otherwise)
 
-    def assignmentFor(assigns: Seq[Assignment], c: String): Option[Expression] =
-      assigns.collectFirst {
-        case Assignment(k: UnresolvedAttribute, v) if k.nameParts.last.equalsIgnoreCase(c) => v
-      }
-
-    // ---- cardinality rule: no target row may match >1 source row ----
-    // Two enforcement shapes, picked by SOURCE SIZE (the scale knob):
-    //
-    //  - Broadcast-sized source (the overwhelmingly common OLTP-ish
-    //    merge): a separate eager probe join. Both probe and rewrite
-    //    broadcast the source and stream the target, so the "extra" join
-    //    costs one more broadcast build of an already-small side —
-    //    measured cheaper at bench scale than any sharing machinery
-    //    (persisting the joined frame regressed q_merge_sql 1.0 → 2.5 s:
-    //    cache write + columnar encode + an extra shuffle-agg job dwarf a
-    //    second broadcast join over 10k rows).
-    //
-    //  - Past the broadcast threshold (the 100 TB shape, where the
-    //    matched join is a full shuffle of both sides): the matched-side
-    //    join is built ONCE with a synthetic target row id, PERSISTED,
-    //    the probe counts rows per id over the cached frame (a left-outer
-    //    join emits exactly one row per unmatched target row, so >1 rows
-    //    per id ⟺ multiple source matches), and the clause rewrite then
-    //    consumes the SAME cached frame — Delta's discipline of deriving
-    //    the rule from the merge join itself, removing the second full
-    //    scan+shuffle of both sides. MergeSqlSpec pins the shared join.
-    def requireUnambiguous(joined: org.apache.spark.sql.DataFrame): Unit = {
-      val ambiguous = joined
-        .groupBy(col(TidCol))
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("__graft_cnt"))
-        .filter(col("__graft_cnt") > 1)
-        .limit(1)
-      require(
-        ambiguous.isEmpty,
-        "MERGE INTO: a target row matches multiple source rows " +
-          "(ambiguous merge — the SQL cardinality rule Iceberg/Delta also enforce)")
-    }
-    def tWithId = Project(
-      Seq(UnresolvedStar(None), Alias(MonotonicallyIncreasingID(), TidCol)()),
-      aliasT)
-    def eagerProbe(): Unit = {
-      val probe = Aggregate(
-        Seq(UnresolvedAttribute(Seq(TidCol))),
-        Seq(Alias(Count(Seq(Literal(1))).toAggregateExpression(), "cnt")()),
-        Join(tWithId, source, Inner, Some(condition), JoinHint.NONE))
-      val ambiguous = GraftSqlInternals.ofRows(spark, probe)
-        .filter(col("cnt") > 1)
-        .limit(1)
-      require(
-        ambiguous.isEmpty,
-        "MERGE INTO: a target row matches multiple source rows " +
-          "(ambiguous merge — the SQL cardinality rule Iceberg/Delta also enforce)")
-    }
-    // size gate from the optimizer's own estimate of the source subtree
-    // (no execution): exactly the stat the planner will use to pick the
-    // join strategy, so "probe re-joins cheaply" and "the join would
-    // broadcast" coincide
-    val sourceBroadcastable: Boolean = {
-      val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-      thr > 0 && GraftSqlInternals.ofRows(spark, source)
-        .queryExecution.optimizedPlan.stats.sizeInBytes <= thr
-    }
-    val sharedJoins = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-    // one try/finally covers EVERY exit from the first persist() to the
-    // overwrite: requireUnambiguous throws on ambiguous merges AFTER the
-    // join is persisted (and any failure building the rest of the plan
-    // lands here too) — without this the cached target×source join leaked
-    // in the CacheManager for the session lifetime on those paths
-    try {
-
-      // ---- matched side: target vs source, clause-indexed ----
-      val bySourceActions = payload.notMatchedBySourceActions
-
-      def passthroughAll(p: LogicalPlan): LogicalPlan =
-        Project(targetSchema.fields.map(f => Alias(tAttr(f.name), f.name)()).toSeq, p)
-
-      // the clause machinery one action family shares: first-match-wins
-      // CASE index (optionally guarded, for the matched marker), DELETE
-      // rows filtered, then a per-column projection where every assigned
-      // value is cast to the DECLARED column type (store-assignment, as
-      // in GraftUpdateCommand / Delta / Iceberg): a widening expression
-      // like `t.k + 1` on an INT column must store as INT, not coerce
-      // the CASE output and drift the schema. `starFor` supplies the
-      // SET * value per column (None for by-source, which has no source
-      // row — rejected at parse anyway).
-      def clauseRewrite(
-          base: LogicalPlan,
-          actions: Seq[MergeAction],
-          guard: Option[Expression],
-          starFor: Option[String => Expression]): LogicalPlan = {
-        val clauseIdx = CaseWhen(
-          actions.zipWithIndex.map { case (a, i) =>
-            val cond = a.condition.getOrElse(Literal(true))
-            (guard.map(g => And(g, cond): Expression).getOrElse(cond), Literal(i))
-              : (Expression, Expression)
-          },
-          Some(Literal(-1)))
-        val withClause = Project(
-          Seq(UnresolvedStar(None), Alias(clauseIdx, ClauseCol)()),
-          base)
-        val deleteIdxs = actions.zipWithIndex.collect { case (_: DeleteAction, i) => i }
-        val filtered = deleteIdxs.foldLeft[LogicalPlan](withClause) { (p, i) =>
-          Filter(Not(EqualTo(clauseRef, Literal(i))), p)
-        }
-        val cols = targetSchema.fields.map { f =>
-          val branches = actions.zipWithIndex.flatMap {
-            case (_: UpdateStarAction, i) =>
-              starFor.map(s => (EqualTo(clauseRef, Literal(i)): Expression,
-                Cast(s(f.name), f.dataType): Expression))
-            case (UpdateAction(_, assigns, _), i) =>
-              assignmentFor(assigns, f.name)
-                .map(v => (EqualTo(clauseRef, Literal(i)): Expression,
-                  Cast(v, f.dataType): Expression))
+    // `base` plus, as column `clause`, the index of the first of
+    // `actions` whose condition holds under `guard` (-1: none), then each
+    // target column's value under that clause, cast to the declared
+    // type; `kept` is the value where the clause assigns none
+    def withClause(
+        base: LogicalPlan,
+        clause: String,
+        actions: Seq[MergeAction],
+        guard: Expression,
+        kept: StructField => Expression): LogicalPlan = {
+      val index = firstOf(
+        actions.zipWithIndex.map { case (a, i) =>
+          (And(guard, a.condition.getOrElse(Literal.TrueLiteral)), Literal(i))
+        },
+        Literal(-1))
+      val values = fields.map { case (f, j) =>
+        val assigned = actions.zipWithIndex.flatMap { case (a, i) =>
+          val v = a match {
+            case _: UpdateStarAction | _: InsertStarAction => Some(sAttr(f.name))
+            case UpdateAction(_, assigns, _) => RowLevelSql.assignmentFor(assigns, f.name)
+            case InsertAction(_, assigns) => RowLevelSql.assignmentFor(assigns, f.name)
             case _ => None
           }
-          val e =
-            if (branches.isEmpty) tAttr(f.name): Expression
-            else CaseWhen(branches, Some(tAttr(f.name)))
-          Alias(e, f.name)()
+          v.map(e => (EqualTo(ref(clause), Literal(i)): Expression, Cast(e, f.dataType): Expression))
         }
-        Project(cols.toSeq, filtered)
+        Alias(firstOf(assigned, kept(f)), s"${clause}_$j")()
+      }
+      withColumns(values, withColumns(Seq(Alias(index, clause)()), base))
+    }
+    def deleted(clause: String, actions: Seq[MergeAction]): Expression =
+      actions.zipWithIndex.collect { case (_: DeleteAction, i) => Literal(i): Expression } match {
+        case Seq() => Literal.FalseLiteral
+        case idxs => In(ref(clause), idxs)
       }
 
-      val updatedPart: LogicalPlan =
-        if (bySourceActions.isEmpty) {
-          if (matchedActions.isEmpty) passthroughAll(aliasT)
-          else {
-            // one LEFT OUTER join carries both matched rows (clauses
-            // apply, marker-guarded) and unmatched ones (passthrough);
-            // broadcast-sized sources probe eagerly and re-join (cheap),
-            // larger sources build the join once, persist, probe, rewrite
-            val sourceAug = Project(
-              Seq(UnresolvedStar(None), Alias(Literal(true), MatchedCol)()),
-              source)
-            val guard = Some(
-              EqualNullSafe(UnresolvedAttribute(Seq(MatchedCol)), Literal(true)): Expression)
-            if (sourceBroadcastable) {
-              eagerProbe()
-              clauseRewrite(
-                Join(aliasT, sourceAug, LeftOuter, Some(condition), JoinHint.NONE),
-                matchedActions, guard = guard, starFor = Some(sAttr))
-            } else {
-              val joined = GraftSqlInternals.ofRows(
-                spark,
-                Join(tWithId, sourceAug, LeftOuter, Some(condition), JoinHint.NONE)).persist()
-              sharedJoins += joined
-              requireUnambiguous(joined)
-              clauseRewrite(
-                joined.queryExecution.analyzed,
-                matchedActions, guard = guard, starFor = Some(sAttr))
-            }
-          }
-        } else {
-          // by-source clauses split the matched side in two over the SAME
-          // join keys: matched rows (inner join — probed for ≤1 source
-          // match over its own persisted output — or semi when no matched
-          // action exists, which is duplicate-proof without a probe) and
-          // target-only rows (anti join). The anti branch's output has no
-          // source columns AT ALL, so a by-source clause referencing the
-          // source fails resolution loudly — the Delta/SQL rule enforced
-          // by plan shape. At scale: two joins sharing one shuffle key
-          // set (or one broadcast source), each side scanned once.
-          val matchedBranch: LogicalPlan =
-            if (matchedActions.isEmpty)
-              passthroughAll(Join(aliasT, source, LeftSemi, Some(condition), JoinHint.NONE))
-            else if (sourceBroadcastable) {
-              eagerProbe()
-              clauseRewrite(
-                Join(aliasT, source, Inner, Some(condition), JoinHint.NONE),
-                matchedActions, guard = None, starFor = Some(sAttr))
-            } else {
-              val joined = GraftSqlInternals.ofRows(
-                spark,
-                Join(tWithId, source, Inner, Some(condition), JoinHint.NONE)).persist()
-              sharedJoins += joined
-              requireUnambiguous(joined)
-              clauseRewrite(
-                joined.queryExecution.analyzed,
-                matchedActions, guard = None, starFor = Some(sAttr))
-            }
-          val bySourceBranch = clauseRewrite(
-            Join(aliasT, source, LeftAnti, Some(condition), JoinHint.NONE),
-            bySourceActions, guard = None, starFor = None)
-          Union(matchedBranch, bySourceBranch)
-        }
+    val targetSide = withClause(
+      withColumns(
+        Seq(Alias(MonotonicallyIncreasingID(), TargetRowId)()),
+        SubqueryAlias(targetAlias, targetDf.queryExecution.analyzed)),
+      BySourceClause, payload.notMatchedBySourceActions, Literal.TrueLiteral, f => tAttr(f.name))
+    val sourceSide = withClause(
+      withColumns(Seq(Alias(MonotonicallyIncreasingID(), SourceRowId)()), payload.source),
+      InsertClause, payload.notMatchedActions, Literal.TrueLiteral,
+      f => Literal.create(null, f.dataType))
+    val joined = Join(targetSide, sourceSide, FullOuter, Some(payload.condition), JoinHint.NONE)
 
-      // ---- insert side: source LEFT ANTI target ----
-      val insertPart: Option[LogicalPlan] =
-        if (notMatchedActions.isEmpty) None
-        else {
-          val anti = Join(source, aliasT, LeftAnti, Some(condition), JoinHint.NONE)
-          val insIdx = CaseWhen(
-            notMatchedActions.zipWithIndex.map { case (a, i) =>
-              (a.condition.getOrElse(Literal(true)): Expression, Literal(i): Expression)
-            },
-            Some(Literal(-1)))
-          val withClause = Project(
-            Seq(UnresolvedStar(None), Alias(insIdx, ClauseCol)()),
-            anti)
-          val filtered = Filter(GreaterThanOrEqual(clauseRef, Literal(0)), withClause)
-          val cols = targetSchema.fields.map { f =>
-            val branches = notMatchedActions.zipWithIndex.flatMap {
-              case (_: InsertStarAction, i) =>
-                Some((EqualTo(clauseRef, Literal(i)): Expression,
-                  Cast(sAttr(f.name), f.dataType): Expression))
-              case (InsertAction(_, assigns), i) =>
-                Some((EqualTo(clauseRef, Literal(i)): Expression,
-                  assignmentFor(assigns, f.name)
-                    .map(v => Cast(v, f.dataType): Expression)
-                    .getOrElse(Literal.create(null, f.dataType))))
-              case _ => None
-            }
-            Alias(CaseWhen(branches, Some(Literal.create(null, f.dataType))), f.name)()
-          }
-          Some(Project(cols.toSeq, filtered))
-        }
+    val (tid, sid) = (ref(TargetRowId), ref(SourceRowId))
+    val matched = And(IsNotNull(tid), IsNotNull(sid))
+    val targetOnly = IsNull(sid)
+    // unmatched source rows have no target row id: each gets a partition
+    // of its own rather than sharing the null key's
+    val matchNumber = WindowExpression(
+      RowNumber(),
+      WindowSpecDefinition(
+        Seq(tid, If(IsNull(tid), sid, Literal.create(null, LongType))),
+        Seq(SortOrder(sid, Ascending)),
+        UnspecifiedFrame))
+    val numbered = withClause(
+      withColumns(Seq(Alias(matchNumber, MatchNumber)()), joined),
+      MatchedClause, payload.matchedActions, matched, f => tAttr(f.name))
 
-      val result = insertPart match {
-        case Some(ins) => Union(updatedPart, ins)
-        case None => updatedPart
-      }
-      table.overwrite(GraftSqlInternals.ofRows(spark, result))
-    } finally sharedJoins.foreach(_.unpersist(blocking = false))
+    // a target row matched more than once has a row numbered 2 or more:
+    // the write fails there under MATCHED clauses, else the row is dropped
+    val repeat = GreaterThan(ref(MatchNumber), Literal(1))
+    val keepMatched =
+      if (payload.matchedActions.isEmpty) Not(repeat)
+      else If(
+        repeat,
+        UnresolvedFunction("raise_error", Seq(Literal(Ambiguous)), false),
+        Not(deleted(MatchedClause, payload.matchedActions)))
+    val keep = CaseWhen(
+      Seq(
+        matched -> keepMatched,
+        targetOnly -> Not(deleted(BySourceClause, payload.notMatchedBySourceActions))),
+      GreaterThanOrEqual(ref(InsertClause), Literal(0)))
+    val cols = fields.map { case (f, j) =>
+      Alias(
+        CaseWhen(
+          Seq(
+            matched -> ref(s"${MatchedClause}_$j"),
+            targetOnly -> ref(s"${BySourceClause}_$j")),
+          ref(s"${InsertClause}_$j")),
+        f.name)()
+    }
+    table.overwrite(GraftSqlInternals.ofRows(spark, Project(cols, Filter(keep, numbered))))
     Seq.empty
   }
 }

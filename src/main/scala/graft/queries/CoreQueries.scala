@@ -1975,9 +1975,8 @@ object CoreQueries {
     * scenario exercises all three families plus by-source
     * first-match-wins: absent rows with negative balance DELETE, the
     * remainder deactivate via a by-source UPDATE. Scale shape: the
-    * rewrite is two joins over the same key set (inner for matched,
-    * anti for by-source) plus the insert anti-join — each broadcastable
-    * when the source is small, one shuffle partitioning otherwise.
+    * rewrite is one full outer join of target and source, plus a window
+    * on the target row id for the cardinality rule, in one write job.
     */
   def mergeSqlFullSync(spark: SparkSession, sfDir: String): DataFrame = {
     val customer = spark.read
@@ -1991,7 +1990,7 @@ object CoreQueries {
       .withColumn("c_acctbal", col("c_acctbal") * 2)
     // fresh keys shift PAST the live key domain (see shiftPastMax): a
     // colliding source key means two source rows match one target row —
-    // the cardinality probe would abort the MERGE
+    // the cardinality rule would abort the MERGE
     val fresh = shiftPastMax(
       customer.filter(col("c_custkey") % 7 === 0), "c_custkey", customer)
     present.unionByName(fresh).createOrReplaceTempView("fullsync_source")

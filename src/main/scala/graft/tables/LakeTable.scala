@@ -222,7 +222,13 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     val physDf = deriveDirColsAndProjectPhysical(toWrite, pspecs, colMapping)
     val writer = physDf.write.mode("overwrite").options(writeOptions)
     val w = if (pspecs.nonEmpty) writer.partitionBy(pspecs.map(_.dirCol): _*) else writer
-    w.parquet(dest.toString)
+    // a failed write job leaves its (possibly empty) dir behind: remove it
+    try w.parquet(dest.toString)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        deleteDataDir(commitName)
+        throw e
+    }
     val (stats, violations, batchRows)
         : (Map[String, (String, String)], Seq[(String, Long)], Option[Long]) = obs match {
       case None => (Map.empty, Seq.empty, None)

@@ -176,9 +176,9 @@ object Merge {
     *   - matched rows take all source-carried columns, unmatched source
     *     rows insert — [[mergeScd1]] semantics otherwise.
     *
-    * One extra left join against the target's key+retained columns is
-    * the entire cost of retention; the join is on the merge keys the
-    * rewrite already shuffles on.
+    * One full outer join on the keys, as in [[mergeScd1]]: a joined row
+    * with a source row emits it, completed with the matched target row's
+    * retained columns; one without emits its target row.
     */
   def mergeScd1Evolve(
       table: LakeTable,
@@ -191,30 +191,16 @@ object Merge {
     val tCols = target.columns.toSeq
     val sCols = source.columns.toSeq
     require(keyCols.forall(sCols.contains), s"source must carry merge keys $keyCols")
-    val addedCols = sCols.filterNot(tCols.contains)
-    val targetOnly = tCols.filterNot(sCols.contains)
-    val allCols = tCols ++ addedCols // stable order: target first, then drift
-    val survivors = target
-      .join(source.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .select(allCols.map { c =>
-        if (tCols.contains(c)) col(c)
-        else lit(null).cast(source.schema(c).dataType).as(c)
-      }: _*)
-    val upserts =
-      if (targetOnly.isEmpty)
-        source.select(allCols.map(col): _*)
-      else
-        source.alias("s")
-          .join(
-            target.select((keyCols ++ targetOnly).map(col): _*).alias("t"),
-            keyCols,
-            "left")
-          .select(allCols.map { c =>
-            if (keyCols.contains(c)) col(c)
-            else if (sCols.contains(c)) col(s"s.$c").as(c)
-            else col(s"t.$c").as(c)
-          }: _*)
-    table.overwrite(survivors.unionByName(upserts), statsCols = statsCols)
+    val allCols = tCols ++ sCols.filterNot(tCols.contains) // stable order: target first, then drift
+    val joined = target.alias("t").join(flagged(source, sCols), keysMatch(keyCols), "full_outer")
+    val hasSource = col(s"s.$SourceRow").isNotNull
+    table.overwrite(
+      joined.select(allCols.map { c =>
+        if (!sCols.contains(c)) col(s"t.$c").as(c) // NULL on inserts
+        else if (!tCols.contains(c)) col(s"s.$c").as(c) // NULL on unmatched target rows
+        else when(hasSource, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
+      }: _*),
+      statsCols = statsCols)
   }
 
   /** DELETE FROM semantics: atomically rewrite the table keeping only

@@ -20,17 +20,24 @@ trait SparkSpec extends AnyFunSuite {
   /** Action names (`isEmpty`, `collect`, `command`, ...) of the SQL
     * executions `f` runs in this session or in a session cloned from it
     * after this call, such as a stream's micro-batches. Listener events
-    * arrive asynchronously on one shared queue, so a tagged marker action
-    * run after `f` is awaited: once it is reported, so is every earlier
-    * execution.
+    * arrive asynchronously on one shared queue, so tagged marker actions
+    * run before and after `f` bound what is counted: executions reported
+    * before the first marker ended before `f` started, and once the
+    * second is reported, so is every execution of `f`.
     */
   def actionsRunBy(f: => Unit): Seq[String] = {
     val tag = java.util.UUID.randomUUID().toString
+    val (start, end) = (s"$tag-start", s"$tag-end")
+    var started = false // read and set on the listener bus's thread only
     val names = new ConcurrentLinkedQueue[String]()
     val marked = new CountDownLatch(1)
     val listener = new QueryExecutionListener {
-      private def seen(funcName: String, qe: QueryExecution): Unit =
-        if (qe.logical.toString.contains(tag)) marked.countDown() else names.add(funcName)
+      private def seen(funcName: String, qe: QueryExecution): Unit = {
+        val plan = qe.logical.toString
+        if (plan.contains(start)) started = true
+        else if (plan.contains(end)) marked.countDown()
+        else if (started) names.add(funcName)
+      }
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         seen(funcName, qe)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
@@ -38,8 +45,9 @@ trait SparkSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
+      spark.range(1).select(lit(start)).collect()
       f
-      spark.range(1).select(lit(tag)).collect()
+      spark.range(1).select(lit(end)).collect()
       assert(marked.await(30, TimeUnit.SECONDS), "marker execution never reported")
       names.asScala.toSeq
     } finally spark.listenerManager.unregister(listener)

@@ -1,12 +1,29 @@
 package graft.plans
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.tables.{Catalog, LakeTable, Merge}
 
-class MergeSqlSpec extends SparkSpec {
+class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  /** Commit dir names under the table's `data/`. */
+  private def dataDirs(t: LakeTable): Set[String] = {
+    val s = Files.list(Paths.get(t.root, "data"))
+    try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+  }
 
   private def freshTarget(tag: String, rows: Seq[(Int, String, Double)]): LakeTable = {
     val t = LakeTable(spark, scratchDir(tag))
@@ -118,8 +135,8 @@ class MergeSqlSpec extends SparkSpec {
     val t = freshTarget("mbys3", Seq((1, "a", 1.0)))
     MergeSqlTargets.register(spark, "t_mbys3", t.root)
     Seq((1, "x", 2.0)).toDF("k", "name", "bal").createOrReplaceTempView("s_mbys3")
-    // a source reference in a by-source condition cannot resolve (the
-    // anti-join branch has no source columns in scope)
+    // a source reference in a by-source condition cannot resolve (by-source
+    // clauses are evaluated over the target alone, before the join)
     val srcRef = intercept[Exception] {
       spark.sql(
         """MERGE INTO t_mbys3 t USING s_mbys3 s ON t.k = s.k
@@ -157,9 +174,10 @@ class MergeSqlSpec extends SparkSpec {
     assert(t.read().schema("cnt").dataType == org.apache.spark.sql.types.IntegerType)
     val got = t.read().collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(got == Set((1, 5), (2, 21)), s"got $got")
-    // with a matched action present the inner-join rewrite needs the
-    // cardinality probe — duplicates must still fail loudly
+    // with a matched action present the cardinality rule applies —
+    // duplicates must still fail loudly
     Seq((1, 7), (1, 8)).toDF("k", "cnt").createOrReplaceTempView("s_mbys4_dup")
+    val dirs = dataDirs(t)
     val e = intercept[Exception] {
       spark.sql(
         """MERGE INTO t_mbys4 t USING s_mbys4_dup s ON t.k = s.k
@@ -168,6 +186,7 @@ class MergeSqlSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("multiple source rows"), e.getMessage)
     assert(t.read().collect().map(r => (r.getInt(0), r.getInt(1))).toSet == Set((1, 5), (2, 21)))
+    assert(dataDirs(t) == dirs, s"the failed merge left ${dataDirs(t) -- dirs} under data/")
   }
 
   test("MERGE INTO: inline subquery source (USING (SELECT ...)) works") {
@@ -187,56 +206,50 @@ class MergeSqlSpec extends SparkSpec {
     assert(got == Set((1, "a9", 180.0), (2, "bx", 10.0), (9, "i", 2.0)), s"got $got")
   }
 
-  test("MERGE matched rewrite consumes the probe's persisted join, not a second target×source join") {
-    val t = freshTarget("mshare", Seq((1, "a", 1.0), (2, "b", 2.0)))
-    MergeSqlTargets.register(spark, "t_mshare", t.root)
-    Seq((1, "a2", 9.0), (3, "c", 3.0)).toDF("k", "name", "bal")
-      .createOrReplaceTempView("s_mshare")
-    val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
-      override def onFailure(
-          funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+  test("plan pin: every clause combination is one job with one FULL OUTER join") {
+    // a parquet source, so every read of the target or the source is a file scan
+    val srcPath = scratchDir("mpin-src") + "/s"
+    Seq((1, "a2", 9.0), (3, "c", 3.0)).toDF("k", "name", "bal").write.parquet(srcPath)
+    spark.read.parquet(srcPath).createOrReplaceTempView("s_mpin")
+    val clauses = Seq(
+      "WHEN MATCHED THEN UPDATE SET *",
+      "WHEN NOT MATCHED THEN INSERT *",
+      "WHEN NOT MATCHED BY SOURCE THEN DELETE")
+    val combos = (1 to clauses.size).flatMap(clauses.combinations)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    val defaultThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.listenerManager.register(listener)
-    // force the past-broadcast-threshold path: small sources keep the
-    // cheap eager probe (re-joining a broadcast side twice beats cache
-    // machinery), large sources must share ONE persisted matched join
-    val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      spark.sql(
-        """MERGE INTO t_mshare t USING s_mshare s ON t.k = s.k
-          |WHEN MATCHED THEN UPDATE SET *
-          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      // listener delivery is async — poll for the overwrite's plan: the
-      // UNION of (matched rewrite, insert anti). Its matched branch must
-      // read the cardinality probe's cached join (InMemoryTableScan),
-      // never re-run the target×source LEFT OUTER join a second time.
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      def rewrite(): Option[String] = {
-        import scala.jdk.CollectionConverters._
-        plans.asScala.toSeq.find(p => p.contains("LeftAnti") && p.contains("Union"))
+      for (thr <- Seq(defaultThr, "-1"); combo <- combos) {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+        val t = freshTarget("mpin", Seq((1, "a", 1.0), (2, "b", 2.0)))
+        MergeSqlTargets.register(spark, "t_mpin", t.root)
+        val statement = s"MERGE INTO t_mpin t USING s_mpin s ON t.k = s.k ${combo.mkString(" ")}"
+        // actionsRunBy returns once every execution before its end is reported
+        actionsRunBy(())
+        plans.clear()
+        val actions = actionsRunBy(spark.sql(statement))
+        val what = s"threshold $thr, $statement"
+        // the statement's own command and its write: no other job runs
+        assert(actions == Seq("command", "command"), s"$what ran $actions")
+        val plan = plans.asScala
+          .find(p => collect(p) { case w: DataWritingCommandExec => w }.nonEmpty)
+          .getOrElse(fail(s"$what: no write execution captured"))
+        val joins = collect(plan) { case j: BaseJoinExec => j.joinType }
+        assert(joins == Seq(FullOuter), s"$what joins $joins:\n$plan")
+        assert(collect(plan) { case c: InMemoryTableScanExec => c }.isEmpty, s"$what:\n$plan")
+        val scans = collect(plan) { case s: FileSourceScanExec => s }.size
+        assert(scans == 2, s"$what scans $scans files:\n$plan")
       }
-      var found = rewrite()
-      while (found.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(100); found = rewrite()
-      }
-      assert(found.nonEmpty, "no overwrite execution captured")
-      assert(
-        found.get.contains("InMemoryTableScan"),
-        s"matched rewrite must reuse the probe's persisted join:\n${found.get.take(4000)}")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", defaultThr)
       spark.listenerManager.unregister(listener)
     }
-    val got = t.read().collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSet
-    assert(got == Set((1, "a2", 9.0), (2, "b", 2.0), (3, "c", 3.0)), s"got $got")
   }
 
   test("MERGE INTO enforces the source-cardinality rule") {
@@ -244,6 +257,7 @@ class MergeSqlSpec extends SparkSpec {
     MergeSqlTargets.register(spark, "t_msql3", t.root)
     Seq((1, "x", 2.0), (1, "y", 3.0)).toDF("k", "name", "bal")
       .createOrReplaceTempView("s_msql3")
+    val dirs = dataDirs(t)
     val e = intercept[Exception] {
       spark.sql(
         """MERGE INTO t_msql3 t USING s_msql3 s ON t.k = s.k
@@ -252,6 +266,7 @@ class MergeSqlSpec extends SparkSpec {
     assert(e.getMessage.contains("multiple source rows"), e.getMessage)
     // and the table is untouched after the failed merge
     assert(t.read().collect().map(_.getString(1)).toSeq == Seq("a"))
+    assert(dataDirs(t) == dirs, s"the failed merge left ${dataDirs(t) -- dirs} under data/")
   }
 
   test("MERGE INTO an unregistered name falls through to Spark's own path") {

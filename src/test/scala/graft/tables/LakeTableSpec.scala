@@ -2,7 +2,7 @@ package graft.tables
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
 import graft.SparkSpec
 
@@ -422,6 +422,31 @@ class LakeTableSpec extends SparkSpec {
     assert(t.compactIfNeeded(maxCommitDirs = 3).isDefined) // over: compacts
     assert(t.read().count() == 5)
     assert(t.compactIfNeeded(maxCommitDirs = 3).isEmpty) // compacted: single dir now
+  }
+
+  test("a write job that fails in a task leaves no commit dir and publishes no version") {
+    val t = LakeTable(spark, scratchDir("failwrite"))
+    t.append(Seq((1, "a"), (2, "b")).toDF("k", "v"))
+    import scala.jdk.CollectionConverters._
+    def dataDirs(): Set[String] = {
+      val d = java.nio.file.Files.list(java.nio.file.Paths.get(t.root, "data"))
+      try d.iterator().asScala.map(_.getFileName.toString).toSet finally d.close()
+    }
+    val (dirs, version) = (dataDirs(), t.latestVersion())
+    // raises inside the write's task, after the job has created its output
+    // dir (a range, not a local relation, which the optimizer would fold
+    // and so raise while planning)
+    val failing = spark.range(3, 5).select(
+      col("id").cast("int").as("k"),
+      when(col("id") === 4, raise_error(lit("boom"))).otherwise(lit("c")).as("v"))
+    for ((op, write) <- Seq[(String, () => Long)](
+        "append" -> (() => t.append(failing)), "overwrite" -> (() => t.overwrite(failing)))) {
+      val e = intercept[Exception](write())
+      assert(e.getMessage.contains("boom"), s"$op: ${e.getMessage}")
+      assert(dataDirs() == dirs, s"a failed $op left ${dataDirs() -- dirs} under data/")
+      assert(t.latestVersion() == version, s"a failed $op published a version")
+    }
+    assert(t.read().collect().map(_.getInt(0)).toSet == Set(1, 2))
   }
 
   test("empty append still commits and read returns schema'd empty frame") {

@@ -14,7 +14,8 @@ import graft.SparkSpec
   * Random targets are built through earlier merges whose sources have
   * unique non-null keys (so the precondition in the [[Merge]] scaladoc
   * holds), then a last source with duplicate keys runs against them.
-  * Sources carry null keys, null tracked values, and may be empty. After
+  * Sources carry null keys, null tracked values, and may be empty; the
+  * schema-evolving merge also sees its source's columns drift. After
   * every step the table each implementation produced must hold the same
   * rows as a multiset (a missing table holds none).
   */
@@ -75,7 +76,19 @@ class MergeEquivalenceSpec extends SparkSpec {
       (t, s, _) => TwoPass.mergeScd1Partitioned(t, s, key, "p")),
     Variant("mergeScd2Partitioned", scd2 = true,
       (t, s, a) => Merge.mergeScd2Partitioned(t, s, key, tracked, a, "p"),
-      (t, s, a) => TwoPass.mergeScd2Partitioned(t, s, key, tracked, a, "p")))
+      (t, s, a) => TwoPass.mergeScd2Partitioned(t, s, key, tracked, a, "p")),
+    Variant("mergeScd1Evolve", scd2 = false,
+      (t, s, a) => Merge.mergeScd1Evolve(t, drifted(s, a), key),
+      (t, s, a) => TwoPass.mergeScd1Evolve(t, drifted(s, a), key)))
+
+  /** The source as the merge at `a` sees it: the second merge drops `w`
+    * and adds `x`, the third drops `p` and brings `w` back.
+    */
+  private def drifted(source: DataFrame, a: Timestamp): DataFrame = at.indexOf(a) match {
+    case 0 => source
+    case 1 => source.select(col("k"), col("v"), col("p"), concat(col("w"), lit("x")).as("x"))
+    case _ => source.select(col("k"), col("v"), col("w"), concat(col("w"), lit("y")).as("x"))
+  }
 
   test("one-join merges equal the two-pass plans as multisets of rows") {
     // what the sources and targets exercised, over all runs
@@ -110,9 +123,9 @@ class MergeEquivalenceSpec extends SparkSpec {
   }
 }
 
-/** The two-pass merge plans before the one-join rewrite, verbatim, except
-  * that the affected-partition list is collected without the size cap and
-  * the dir-name checks, which these inputs never trip.
+/** The two-pass merge plans before the one-join rewrites, verbatim,
+  * except that the affected-partition list is collected without the size
+  * cap and the dir-name checks, which these inputs never trip.
   */
 private object TwoPass {
   private val StartCol = "start_timestamp"
@@ -188,6 +201,43 @@ private object TwoPass {
     val src = source.select(dataCols.map(col): _*)
     val survivors = target.join(src.select(keyCols.map(col): _*), keyCols, "left_anti")
     table.overwrite(survivors.unionByName(src), statsCols = statsCols)
+  }
+
+  def mergeScd1Evolve(
+      table: LakeTable,
+      source: DataFrame,
+      keyCols: Seq[String],
+      statsCols: Seq[String] = Seq.empty): Long = {
+    if (!table.exists || table.isEmpty)
+      return table.append(source, statsCols = statsCols)
+    val target = table.read()
+    val tCols = target.columns.toSeq
+    val sCols = source.columns.toSeq
+    require(keyCols.forall(sCols.contains), s"source must carry merge keys $keyCols")
+    val addedCols = sCols.filterNot(tCols.contains)
+    val targetOnly = tCols.filterNot(sCols.contains)
+    val allCols = tCols ++ addedCols // stable order: target first, then drift
+    val survivors = target
+      .join(source.select(keyCols.map(col): _*), keyCols, "left_anti")
+      .select(allCols.map { c =>
+        if (tCols.contains(c)) col(c)
+        else lit(null).cast(source.schema(c).dataType).as(c)
+      }: _*)
+    val upserts =
+      if (targetOnly.isEmpty)
+        source.select(allCols.map(col): _*)
+      else
+        source.alias("s")
+          .join(
+            target.select((keyCols ++ targetOnly).map(col): _*).alias("t"),
+            keyCols,
+            "left")
+          .select(allCols.map { c =>
+            if (keyCols.contains(c)) col(c)
+            else if (sCols.contains(c)) col(s"s.$c").as(c)
+            else col(s"t.$c").as(c)
+          }: _*)
+    table.overwrite(survivors.unionByName(upserts), statsCols = statsCols)
   }
 
   private def affectedPartitions(
