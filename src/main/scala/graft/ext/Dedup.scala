@@ -479,22 +479,23 @@ object Dedup {
         .as("sh"))
     // The hashed frame feeds BOTH verify joins. SIZE-GATED persist (the
     // MERGE probe's r21 lesson, applied here after the driver measured
-    // the unconditional persist 0.89× at bench scale): below the
-    // session broadcast threshold the corpus is small enough that
-    // re-running the compiled shingle pass per side is cheaper than the
-    // cache write + columnar encode of the shingle arrays; past it the
-    // corpus-sized pass dominates and sharing wins. The gate reads the
-    // optimizer's own size estimate of the input subtree — no job runs.
+    // the unconditional persist 0.89× at bench scale): below one file
+    // split's worth of input the corpus is small enough that re-running
+    // the compiled shingle pass per side is cheaper than the cache write
+    // + columnar encode of the shingle arrays; past it the corpus-sized
+    // pass dominates and sharing wins. The gate reads the optimizer's
+    // own size estimate of the input subtree against
+    // `filesMaxPartitionBytes` — the rule `Similarity.buildIvfIndex`
+    // uses — so no job runs, and a raised broadcast threshold (a join
+    // setting) does not switch the persist off.
     // NOTE on lifetime (r21 ADVICE): the CacheManager holds persisted
     // plans strongly (ContextCleaner only reclaims unreachable RDDs,
     // which registered plans never are), so when the gate fires the
     // cached frame lives until the caller clears it — the bench's
     // resetSharedState / spark.catalog.clearCache(), or an explicit
     // unpersist by a library caller that loops over corpora.
-    val persistPays = {
-      val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
-      thr <= 0 || df.queryExecution.optimizedPlan.stats.sizeInBytes > thr
-    }
+    val persistPays = df.queryExecution.optimizedPlan.stats.sizeInBytes >
+      spark.sessionState.conf.filesMaxPartitionBytes
     val hashed =
       if (persistPays)
         hashedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

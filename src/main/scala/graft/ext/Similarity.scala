@@ -123,16 +123,17 @@ object Similarity {
     * oracle-checkable rather than rows-only (same contract as
     * `q_kmeans`, which shares the fit).
     *
-    * Scale shape: centroids are collected to the driver (nlist × dim
-    * doubles — KBs) and baked into the plan as literals, so
+    * Scale shape: training is [[Clustering.kmeansFit]]'s in-memory
+    * Lloyd over a bounded sample (one collect of at most
+    * `max(20000, 32·nlist)` vectors, every step-th id past that — the
+    * way FAISS trains its coarse quantizer); pass the corpus cardinality
+    * as `corpusCount` when you know it and the fit runs no count. The
+    * nlist × dim centroids (KBs) are baked into the plan as literals, so
     * nearest-centroid assignment is a PURE PROJECTION over the corpus —
     * an argmax fold over the literal centroid array, no shuffle, no
-    * join, no row ids. The only shuffles in the whole search are the
-    * (list, dim)-keyed mean of the Lloyd step (map-side combined; the
-    * shuffle carries at most nlist × dim partial rows per task) and the
-    * final per-query rank over the candidate set. The corpus itself is
-    * never repartitioned; seed selection is a TakeOrdered top-nlist,
-    * not a full sort.
+    * join, no row ids. The only shuffle in the search is the final
+    * per-query rank over the candidate set; the corpus itself is never
+    * repartitioned.
     */
   /** Corpus-adaptive list count. nlist must GROW with the corpus or the
     * probe degenerates: with a query set proportional to the corpus
@@ -153,18 +154,6 @@ object Similarity {
     // (corpusCount/perList > Int.MaxValue) a .toInt-first wraps
     // negative and the min/max fold collapses nlist to the floor
     math.max(16L, math.min(cap.toLong, corpusCount / perList)).toInt
-
-  /** Deterministic training subsample: Lloyd quality needs a
-    * representative sample, not the corpus — past `trainCap` vectors,
-    * train on every step-th id (exact replay: the rule is a pure
-    * function of ids). A no-op at oracle scale, which is what keeps the
-    * unrolled-SQL oracle valid.
-    */
-  private def trainSet(
-      corpus: DataFrame, idCol: String, corpusCount: Long, trainCap: Long): DataFrame = {
-    val step = math.max(1L, corpusCount / trainCap)
-    if (step <= 1L) corpus else corpus.filter(pmod(col(idCol), lit(step)) === lit(0L))
-  }
 
   /** Corpus inversion `(neighbor_id, c_vec, list_id)` with the
     * literal/broadcast-join dispatch: at or under
@@ -229,28 +218,43 @@ object Similarity {
       nlist: Int = 16,
       nprobe: Int = 4,
       iters: Int = 2,
-      trainCap: Long = 20000L): DataFrame = {
-    val cos = (a: Column, b: Column) => graft.functions.VectorExprs.arrayCosine(a, b)
+      corpusCount: Long = -1L): DataFrame =
+    ivfSearch(queries, corpus, idCol, vecCol,
+      Clustering.kmeansFit(corpus, idCol, vecCol, nlist, iters, corpusCount), k, nprobe)
 
-    val centroids = Clustering.kmeansFit(
-      // the sample must hold comfortably more rows than nlist or the
-      // seed step caps the EFFECTIVE list count at the sample size
-      // (Lloyd degenerating to a sample quantizer) — ~32 vectors per
-      // centroid is the usual floor; a no-op at oracle scale
-      trainSet(corpus, idCol, corpus.count(), math.max(trainCap, 32L * nlist)),
-      idCol, vecCol, nlist, iters)
-    val inverted = invertedIndex(corpus, idCol, vecCol, centroids)
-    val probes = probeSet(queries, idCol, vecCol, centroids, nprobe)
+  /** The search half of [[ivfTopK]] over already-trained `centroids`
+    * (ascending list ids): invert `corpus`, probe each query's `nprobe`
+    * nearest lists, rank their members.
+    */
+  def ivfSearch(
+      queries: DataFrame,
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      centroids: Seq[(Int, Seq[Double])],
+      k: Int,
+      nprobe: Int = 4): DataFrame =
+    rankProbed(
+      invertedIndex(corpus, idCol, vecCol, centroids),
+      probeSet(queries, idCol, vecCol, centroids, nprobe),
+      k)
 
+  /** Top-k per query over the postings `(list_id, neighbor_id, c_vec)`
+    * of its probed lists: 6-dp cosine desc, ties to the lowest neighbor
+    * id. The (small) probe set is broadcast, so the corpus-sized
+    * postings stream through a hash join without repartitioning — and a
+    * persisted index's hive partitions on `list_id` are pruned.
+    */
+  private def rankProbed(postings: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    // broadcast the (small) probe set: the corpus-sized inverted index
-    // streams through a broadcast hash join without repartitioning
-    inverted
+    postings
       .join(broadcast(probes), Seq("list_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(cos(col("q_vec"), col("c_vec")), 6))
+      .withColumn(
+        "cosine",
+        round(graft.functions.VectorExprs.arrayCosine(col("q_vec"), col("c_vec")), 6))
       .withColumn("rank", row_number().over(rankW))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
@@ -339,16 +343,10 @@ object Similarity {
       indexRoot: String,
       nlist: Int = 16,
       iters: Int = 2,
-      trainCap: Long = 20000L): Unit = {
+      corpusCount: Long = -1L): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val centroids = Clustering.kmeansFit(
-      // the sample must hold comfortably more rows than nlist or the
-      // seed step caps the EFFECTIVE list count at the sample size
-      // (Lloyd degenerating to a sample quantizer) — ~32 vectors per
-      // centroid is the usual floor; a no-op at oracle scale
-      trainSet(corpus, idCol, corpus.count(), math.max(trainCap, 32L * nlist)),
-      idCol, vecCol, nlist, iters)
+    val centroids = Clustering.kmeansFit(corpus, idCol, vecCol, nlist, iters, corpusCount)
     graft.tables.LakeTable(spark, s"$indexRoot/centroids")
       .append(centroids.toDF("list_id", "centroid"))
     // SIZE-GATED list clustering before the hive-partitioned write.
@@ -396,19 +394,9 @@ object Similarity {
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
       .sortBy(_._1)
       .toSeq
-    val probes = probeSet(queries, idCol, vecCol, centroids, nprobe)
-    val postings = graft.tables.LakeTable(spark, s"$indexRoot/postings").read()
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    postings
-      .join(broadcast(probes), Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn(
-        "cosine",
-        round(graft.functions.VectorExprs.arrayCosine(col("q_vec"), col("c_vec")), 6))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    rankProbed(
+      graft.tables.LakeTable(spark, s"$indexRoot/postings").read(),
+      probeSet(queries, idCol, vecCol, centroids, nprobe),
+      k)
   }
 }

@@ -1090,20 +1090,24 @@ object ExtQueries {
     * unrolled SQL and must land on the identical result set.
     */
   def similarityIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    // widened: Lloyd assignment and the final cosine ranking are
-    // CPU-dense per vector and the embeddings scan is a single split at
-    // bench scale — unwidened they run on 1 core (measured: the 1.26 s
-    // ranked-join job and the ~1 s per-iteration jobs were 1-task
-    // stages at 32 cores; guide §2.5/§2.6). No-op on an already-wide
-    // scan.
-    val e = widen(spark, embs(spark, sfDir))
+    val e = embs(spark, sfDir)
+    val n = e.count()
     // nlist grows with the corpus (≈1000 vectors/list, min 16): at the
     // oracle SFs this IS 16, so the unrolled-SQL replay stays valid; at
     // rehearsal scale it is what keeps probe work per query flat
     // (fixed nlist=16 measured 50× on 10× data at sf1→sf10)
-    Similarity.ivfTopK(
-      e.filter(col("vec_id") % 100 === 0), e, "vec_id", "embedding", 5,
-      nlist = Similarity.nlistFor(e.count()), nprobe = 4, iters = 2)
+    val centroids = Clustering.kmeansFit(
+      e, "vec_id", "embedding", Similarity.nlistFor(n), iters = 2, corpusCount = n)
+    // only the ranking input is widened: the final cosine ranking is
+    // CPU-dense per vector and the embeddings scan is a single split at
+    // bench scale — unwidened it runs on 1 core (measured: the 1.26 s
+    // ranked-join job was a 1-task stage at 32 cores; guide §2.5/§2.6).
+    // The count and the training collect read the scan as is: the fit is
+    // one collect, which a round-robin exchange would only delay. No-op
+    // on an already-wide scan.
+    val wide = widen(spark, e)
+    Similarity.ivfSearch(
+      wide.filter(col("vec_id") % 100 === 0), wide, "vec_id", "embedding", centroids, 5, nprobe = 4)
   }
 
   /** IVF index PERSISTED then probed ([[Similarity.buildIvfIndex]] /
@@ -1121,9 +1125,10 @@ object ExtQueries {
     // lives in buildIvfIndex's list_id clustering instead
     val e = embs(spark, sfDir)
     val root = graft.util.TempDirs.scratch("ivfidx")
+    val n = e.count()
     Similarity.buildIvfIndex(
       e, "vec_id", "embedding", root,
-      nlist = Similarity.nlistFor(e.count()), iters = 2)
+      nlist = Similarity.nlistFor(n), iters = 2, corpusCount = n)
     Similarity.searchIvfIndex(
       e.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", root, 5, nprobe = 4)
   }

@@ -334,6 +334,26 @@ class DedupSpec extends SparkSpec {
     (base ++ dups).toDF("id", "text")
   }
 
+  test("minhash dedup persists its shingle frame past one file split, whatever the broadcast threshold") {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.files.maxPartitionBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.catalog.clearCache()
+    try {
+      val df = corpus
+      val estimate = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1g")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", (estimate - 1).toString)
+      Dedup.minhashDedupPairs(df, "id", "text", 0.5)
+      assert(!spark.sharedState.cacheManager.isEmpty, "no cached plan registered")
+    } finally {
+      spark.catalog.clearCache()
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("minhash LSH finds every planted near-dup pair and estimates jaccard") {
     val pairs = Dedup.minhashDedupPairs(corpus, "id", "text", 0.5).collect()
     val found = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
