@@ -30,6 +30,10 @@ import org.apache.spark.sql.functions._
   * (the correct large-k plan; the literal array would blow the 64 KB
   * codegen method limit). k is a model parameter (pick
   * ~N/target_cluster_size at scale), NOT a partition count.
+  * [[ProductQuant]] trains its codebooks through the same in-memory
+  * Lloyd under a squared-L2 rule, and every cosine assignment — k-means,
+  * SemDeDup, IVF inversion — goes through [[assign]] (IVF probing
+  * through [[probe]]).
   *
   * Determinism (what makes the result oracle-checkable in another
   * engine): seeds are the k lowest-id vectors; assignment ranks by
@@ -77,7 +81,20 @@ object Clustering {
       vecCol: String,
       k: Int,
       iters: Int,
-      corpusCount: Long = -1L): Seq[(Int, Seq[Double])] = {
+      corpusCount: Long = -1L): Seq[(Int, Seq[Double])] =
+    lloyd(trainingSample(corpus, idCol, vecCol, k, corpusCount), k, iters, byL2 = false)
+
+  /** The vectors a fit over `k` clusters trains on, in ascending id
+    * order (Spark's, nulls first), from one collect: the whole corpus
+    * up to `max(TrainCap, 32·k)` rows, past it every step-th id (see
+    * [[kmeansFit]]).
+    */
+  private[ext] def trainingSample(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      corpusCount: Long): Array[Components] = {
     val cap = math.max(TrainCap, 32L * k)
     val step: Column =
       if (corpusCount >= 0) lit(math.max(1L, corpusCount / cap))
@@ -91,17 +108,31 @@ object Clustering {
     val idOrder = InterpretedOrdering.forSchema(Seq(idType))
     // stable sort: rows with equal ids keep their collected order (Spark
     // picks among them arbitrarily)
-    val vectors = sample.collect()
+    sample.collect()
       .map(r => (InternalRow(toCatalyst(r.get(0))), Components(r.getSeq[Any](1))))
       .sortBy(_._1)(idOrder)
       .map(_._2)
+  }
 
+  /** Seeds and `iters` Lloyd steps over `vectors` (ascending id order):
+    * the (clusterId, centroid) list, ascending ids. The seeds are the
+    * first k vectors as they are; the nearest centroid has the highest
+    * round(cosine, 6), or with `byL2` the lowest round(squared L2, 6)
+    * (see [[nearest]]); the update is the exact 4-dp mean (see
+    * [[update]]).
+    */
+  private[ext] def lloyd(
+      vectors: Array[Components],
+      k: Int,
+      iters: Int,
+      byL2: Boolean): Seq[(Int, Seq[Double])] = {
     // (cluster id, centroid), ascending ids; a seed is its vector as is
     var centroids: Array[(Int, Components)] = vectors.take(k).zipWithIndex.map(_.swap)
     val cluster = new Array[Int](vectors.length)
     (1 to iters).foreach { _ =>
       val cs = centroids
-      IntStream.range(0, vectors.length).parallel().forEach(i => cluster(i) = nearest(vectors(i), cs))
+      IntStream.range(0, vectors.length).parallel()
+        .forEach(i => cluster(i) = nearest(vectors(i), cs, byL2))
       centroids = update(vectors, cluster, cs)
     }
     centroids.toSeq.map { case (cid, c) => (cid, if (c == null) null else c.boxed) }
@@ -111,9 +142,15 @@ object Clustering {
     * as 0.0 (as the centroid literal of the assignment plan reads it)
     * and flagged in `nulls`; `norm` is over `xs`.
     */
-  private final class Components(val xs: Array[Double], val nulls: Array[Boolean]) {
+  private[ext] final class Components(val xs: Array[Double], val nulls: Array[Boolean]) {
     val hasNull: Boolean = nulls.contains(true)
     val norm: Double = math.sqrt(xs.foldLeft(0.0)((acc, x) => acc + x * x))
+
+    /** The components in `[from, until)`, cut as Spark's `slice` cuts
+      * an array (shorter, or empty, past the end).
+      */
+    def slice(from: Int, until: Int): Components =
+      new Components(xs.slice(from, until), nulls.slice(from, until))
 
     /** Boxed, a flagged component as NULL: the shape a collected
       * `array<double>` has.
@@ -136,13 +173,15 @@ object Clustering {
         elems.iterator.map(_ == null).toArray)
   }
 
-  /** Index into `cs` (ascending cluster ids) of the max of
-    * (round(cosine, 6), -cid). The score is NULL for a null vector or
-    * centroid, unequal lengths or a NULL vector element, and a NULL
-    * orders below every number, so a vector scored NULL everywhere
-    * lands in the first cluster.
+  /** Index into `cs` (ascending cluster ids) of the max of (score,
+    * -cid), the score being round(cosine, 6) or, with `byL2`,
+    * -round(squared L2, 6) — [[graft.functions.VectorExprs.ArrayCosine]]'s
+    * and [[graft.functions.VectorExprs.ArrayL2Sq]]'s sequential sums.
+    * The score is NULL for a null vector or centroid, unequal lengths
+    * or a NULL vector element, and a NULL orders below every number, so
+    * a vector scored NULL everywhere lands in the first cluster.
     */
-  private def nearest(v: Components, cs: Array[(Int, Components)]): Int = {
+  private def nearest(v: Components, cs: Array[(Int, Components)], byL2: Boolean): Int = {
     var best = 0
     var bestScore = 0.0
     var scored = false
@@ -153,10 +192,16 @@ object Clustering {
         val c = cs(j)._2
         if (c != null && c.xs.length == xs.length) {
           val ys = c.xs
-          var dot = 0.0
+          var acc = 0.0
           var i = 0
-          while (i < xs.length) { dot += xs(i) * ys(i); i += 1 }
-          val s = round6(if (v.norm == 0.0 || c.norm == 0.0) 0.0 else dot / (v.norm * c.norm))
+          val s =
+            if (byL2) {
+              while (i < xs.length) { val d = xs(i) - ys(i); acc += d * d; i += 1 }
+              -round6(acc)
+            } else {
+              while (i < xs.length) { acc += xs(i) * ys(i); i += 1 }
+              round6(if (v.norm == 0.0 || c.norm == 0.0) 0.0 else acc / (v.norm * c.norm))
+            }
           if (!scored || SQLOrderingUtil.compareDoubles(s, bestScore) > 0) {
             best = j; bestScore = s; scored = true
           }
@@ -206,13 +251,14 @@ object Clustering {
 
   /** Spark's `round(x, 6)` on a double: HALF_UP on `x`'s decimal form.
     * Off a half point by more than the error of `|x|·10⁶` plus that of
-    * the decimal form (both below 1e-9 while |x| < 2), the binary value
-    * rounds the same way, so only near-ties pay for a `BigDecimal`.
+    * the decimal form (together below 2e-7 while |x| < 1000, which
+    * covers cosines and the squared L2 of PQ subvectors), the binary
+    * value rounds the same way, so only near-ties pay for a `BigDecimal`.
     */
   private[ext] def round6(x: Double): Double = {
     val y = math.abs(x) * 1e6
     val f = y - math.floor(y)
-    if (y < 2e6 && math.abs(f - 0.5) > 1e-6) {
+    if (y < 1e9 && math.abs(f - 0.5) > 1e-6) {
       val r = if (f > 0.5) math.floor(y) + 1 else math.floor(y)
       if (r == 0.0) 0.0 else if (x < 0) -r / 1e6 else r / 1e6
     } else if (x.isNaN || x.isInfinite) x
@@ -250,14 +296,6 @@ object Clustering {
         lit(-cid).as("nc"))
     }: _*)
 
-  /** Scored literal-centroid argmax: struct(sim6, -cid), so array_max's
-    * lexicographic compare IS "max rounded sim, ties -> min cluster id".
-    */
-  private def bestOf(
-      centroids: Seq[(Int, Seq[Double])],
-      vec: Column): Column =
-    array_max(scoredArray(centroids, vec))
-
   /** Up to this many centroids, assignment/probing is a pure projection
     * over literal centroid structs (zero shuffle, zero join — the plan
     * every probe-heavy workload wants). Past it the literal array stops
@@ -268,21 +306,90 @@ object Clustering {
     */
   val LiteralCentroidCap: Int = 256
 
-  private[ext] def centroidTable(
-      spark: org.apache.spark.sql.SparkSession,
+  /** Nearest centroid of each row of `df`: the projection `out` builds
+    * from the cluster id (int) and the 6-dp cosine to that centroid
+    * (double), next to `df`'s own columns. Up to [[LiteralCentroidCap]]
+    * centroids that is one projection over the literal scored array,
+    * past it [[assignByJoin]]; with no centroid at all it is zero rows
+    * of the same schema.
+    */
+  private[ext] def assign(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      centroids: Seq[(Int, Seq[Double])])(out: (Column, Column) => Seq[Column]): DataFrame =
+    if (centroids.isEmpty)
+      df.where(lit(false)).select(out(lit(null).cast("int"), lit(null).cast("double")): _*)
+    else if (centroids.size <= LiteralCentroidCap) {
+      val best = array_max(scoredArray(centroids, col(vecCol)))
+      df.select(out((-best.getField("nc")).cast("int"), best.getField("s")): _*)
+    } else
+      assignByJoin(df, idCol, vecCol, centroids).select(out(col("cluster"), col("cosine")): _*)
+
+  /** Each query's `nprobe` nearest centroids, `(query_id, q_vec,
+    * list_id)`, in "descending rounded sim, ties → min list id" order:
+    * the literal scored array sorted, sliced and exploded (projection
+    * only) up to [[LiteralCentroidCap]], past it [[probeByJoin]]; with
+    * no centroid at all zero rows of the same schema.
+    */
+  private[ext] def probe(
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      centroids: Seq[(Int, Seq[Double])],
+      nprobe: Int): DataFrame =
+    if (centroids.isEmpty)
+      queries.where(lit(false))
+        .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"), lit(null).cast("int").as("list_id"))
+    else if (centroids.size <= LiteralCentroidCap)
+      queries
+        .select(
+          col(idCol).as("query_id"),
+          col(vecCol).as("q_vec"),
+          scoredArray(centroids, col(vecCol)).as("sc"))
+        .select(
+          col("query_id"),
+          col("q_vec"),
+          explode(slice(reverse(array_sort(col("sc"))), 1, nprobe)).as("p"))
+        .select(col("query_id"), col("q_vec"), (-col("p.nc")).cast("int").as("list_id"))
+    else
+      probeByJoin(queries, idCol, vecCol, centroids, nprobe)
+        .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"), col("list_id"))
+
+  /** Every row of `df` as `(idCol, vecCol, _rid)` against every
+    * centroid `(_cid, _centroid)` of a broadcast centroid table (nlist ×
+    * dim doubles — MBs at worst). `_rid` is a surrogate ROW key, not idCol: keying on idCol would
+    * collapse duplicate (or null) ids into one synthetic row — the
+    * literal path works per ROW, and the two paths must stay
+    * row-equivalent. `_centroid` is array<double> as the literal path's
+    * typedlit(cv) is, a NULL component read as 0.0 as typedlit reads it
+    * and a null centroid left null, so ArrayCosine scores both paths
+    * bit-identically.
+    */
+  private def againstCentroids(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
       centroids: Seq[(Int, Seq[Double])]): DataFrame = {
+    val spark = df.sparkSession
     import spark.implicits._
-    centroids.toDF("_cid", "_centroid")
+    df.select(col(idCol), col(vecCol))
+      .withColumn("_rid", monotonically_increasing_id())
+      .crossJoin(broadcast(centroids
+        .map { case (cid, c) =>
+          (cid, if (c == null) null else c.asInstanceOf[Seq[java.lang.Double]].map(x =>
+            if (x == null) 0.0 else x.doubleValue))
+        }
+        .toDF("_cid", "_centroid")))
   }
 
   /** Past-cap nearest-centroid assignment (the >LiteralCentroidCap
-    * upgrade path): broadcast the nlist-row centroid table (nlist × dim
-    * doubles — MBs at worst), nested-loop every input row against it,
-    * and reduce back to one row per input with
-    * `max(struct(sim6, -cid))` — the same deterministic "max rounded
-    * sim, ties → min cluster id" rule as the literal path, so the two
-    * paths are bit-identical (pinned by SimilaritySpec parity). The
-    * per-row fan-out of nlist candidate rows collapses map-side
+    * upgrade path): nested-loop every input row against the broadcast
+    * centroids ([[againstCentroids]]) and reduce back to one row per
+    * input with `max(struct(sim6, -cid))` — the same deterministic "max
+    * rounded sim, ties → min cluster id" rule as the literal path, so
+    * the two paths are bit-identical (pinned by SimilaritySpec parity).
+    * The per-row fan-out of nlist candidate rows collapses map-side
     * (partial HashAggregate in the same task that produced them); the
     * one shuffle carries exactly one pre-combined row per input id —
     * O(N) rows regardless of nlist, vs the literal path's zero.
@@ -292,18 +399,8 @@ object Clustering {
       idCol: String,
       vecCol: String,
       centroids: Seq[(Int, Seq[Double])]): DataFrame = {
-    val spark = df.sparkSession
-    // _centroid stays array<double> — the literal path's typedlit(cv) is
-    // array<double> too, and ArrayCosine's mixed float/double loop makes
-    // the two paths arithmetic-identical (parity is bit-exact, not
-    // approximate)
     val cos = graft.functions.VectorExprs.arrayCosine(col(vecCol), col("_centroid"))
-    // surrogate ROW key, not idCol: grouping on idCol would collapse
-    // duplicate (or null) ids into one synthetic row — the literal path
-    // assigns per ROW, and the two paths must stay row-equivalent
-    df.select(col(idCol), col(vecCol))
-      .withColumn("_rid", monotonically_increasing_id())
-      .crossJoin(broadcast(centroidTable(spark, centroids)))
+    againstCentroids(df, idCol, vecCol, centroids)
       .groupBy(col("_rid"))
       .agg(
         first(col(idCol)).as(idCol),
@@ -317,9 +414,9 @@ object Clustering {
   }
 
   /** Past-cap probe selection: each query's nprobe nearest lists via the
-    * same broadcast nested-loop, ranked per query (the query set is the
-    * small side — this window is tiny). Descending rounded sim, ties →
-    * min list id: exactly the literal path's
+    * same broadcast nested-loop, ranked per query row (the query set is
+    * the small side — this window is tiny). Descending rounded sim, ties
+    * → min list id: exactly the literal path's
     * `reverse(array_sort(scored))` order.
     */
   private[ext] def probeByJoin(
@@ -328,21 +425,11 @@ object Clustering {
       vecCol: String,
       centroids: Seq[(Int, Seq[Double])],
       nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    // _centroid stays array<double> — the literal path's typedlit(cv) is
-    // array<double> too, and ArrayCosine's mixed float/double loop makes
-    // the two paths arithmetic-identical (parity is bit-exact, not
-    // approximate)
     val cos = graft.functions.VectorExprs.arrayCosine(col(vecCol), col("_centroid"))
-    // surrogate ROW key (see assignByJoin): duplicate/null query ids
-    // must each keep their own nprobe lists, exactly like the literal
-    // per-row path
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_rid"))
       .orderBy(col("_s").desc, col("_cid").asc)
-    queries.select(col(idCol), col(vecCol))
-      .withColumn("_rid", monotonically_increasing_id())
-      .crossJoin(broadcast(centroidTable(spark, centroids)))
+    againstCentroids(queries, idCol, vecCol, centroids)
       .withColumn("_s", round(cos, 6))
       .withColumn("_pr", row_number().over(w))
       .filter(col("_pr") <= nprobe)
@@ -358,18 +445,9 @@ object Clustering {
       idCol: String,
       vecCol: String,
       k: Int,
-      iters: Int): DataFrame = {
-    val centroids = kmeansFit(corpus, idCol, vecCol, k, iters)
-    if (centroids.size <= LiteralCentroidCap) {
-      val b = bestOf(centroids, col(vecCol))
-      corpus.select(
-        col(idCol),
-        (-b.getField("nc")).cast("int").as("cluster"),
-        b.getField("s").as("cosine"))
-    } else
-      assignByJoin(corpus, idCol, vecCol, centroids)
-        .select(col(idCol), col("cluster"), col("cosine"))
-  }
+      iters: Int): DataFrame =
+    assign(corpus, idCol, vecCol, kmeansFit(corpus, idCol, vecCol, k, iters))((cluster, cosine) =>
+      Seq(col(idCol), cluster.as("cluster"), cosine.as("cosine")))
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv
     * 2303.09540): cluster the corpus, then mark near-duplicate PAIRS
@@ -399,19 +477,10 @@ object Clustering {
     // feeds both sides from the same shuffle files (PlanAuditSpec pins the
     // ReusedExchange node). Distinct column names per side (the previous
     // shape) defeat canonicalization and double the heaviest stage.
-    // same past-cap dispatch as kmeansAssign: past LiteralCentroidCap
-    // the literal scored-array would inline k codegen'd cosines (the
-    // 64 KB method-limit blowup the cap exists to avoid) — SemDeDup
-    // sizes k ~ N/target_cluster_size, so large k is the NORMAL regime
-    val assigned =
-      if (centroids.size <= LiteralCentroidCap)
-        corpus.select(
-          (-bestOf(centroids, col(vecCol)).getField("nc")).cast("int").as("cluster"),
-          col(idCol).as("id"),
-          col(vecCol).as("vec"))
-      else
-        assignByJoin(corpus, idCol, vecCol, centroids).select(
-          col("cluster"), col(idCol).as("id"), col(vecCol).as("vec"))
+    // SemDeDup sizes k ~ N/target_cluster_size, so past-cap k (the
+    // broadcast-join assignment) is the NORMAL regime
+    val assigned = assign(corpus, idCol, vecCol, centroids)((cluster, _) =>
+      Seq(cluster.as("cluster"), col(idCol).as("id"), col(vecCol).as("vec")))
     assigned
       .alias("a")
       // merge hint: broadcasting a corpus-sized side is never right at

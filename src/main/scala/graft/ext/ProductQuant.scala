@@ -12,21 +12,24 @@ import org.apache.spark.sql.functions._
   * bounded reconstruction error, and asymmetric-distance (ADC) scoring
   * against the codebooks never touches the original vectors.
   *
-  * Scale shape (the same contract as [[Clustering]]): codebooks live
-  * on the driver as plan literals (m·k·dsub doubles — KBs), so
-  * ENCODING IS A PURE PROJECTION over the corpus — per subspace an
-  * argmin fold over literal centroids, no shuffle, no join. Training
-  * shuffles only (subspace·cluster, dim)-keyed partial sums (map-side
-  * combined, ≤ m·k·dsub rows per task). The corpus is never collected,
-  * cached, or repartitioned.
+  * Scale shape (the same contract as [[Clustering]]): training is
+  * [[Clustering]]'s in-memory Lloyd on a bounded sample, the way FAISS
+  * trains its quantizers — one Spark action collects at most
+  * `max(Clustering.TrainCap, 32·k)` vectors, then m small fits run in
+  * process, one per subspace. Codebooks ride the plan as literals
+  * (m·k·dsub doubles — KBs), so ENCODING IS A PURE PROJECTION
+  * over the corpus — per subspace an argmin fold over literal
+  * centroids, no shuffle, no join. The corpus is never cached or
+  * repartitioned, and only the training sample is collected.
   *
   * Determinism (what makes the result oracle-checkable in another
   * engine): per subspace, seeds are the k lowest-id subvectors
   * (cluster id = rank in id order); assignment ranks by 6-dp-rounded
   * SEQUENTIAL squared L2 ([[graft.functions.VectorExprs.ArrayL2Sq]])
   * with ties to the LOWEST centroid id; centroid means are exact
-  * integer-scaled 4-dp values ([[Embeddings.groupCentroidComponents]]).
-  * Every engine replaying those rules produces bit-identical codes.
+  * integer-scaled 4-dp values (the rule of
+  * [[Embeddings.groupCentroidComponents]]). Every engine replaying
+  * those rules produces bit-identical codes.
   */
 object ProductQuant {
 
@@ -73,17 +76,21 @@ object ProductQuant {
     * array_max's lexicographic compare IS "min rounded distance, ties
     * -> min centroid id".
     */
-  private def bestCode(sub: Column, codebook: Codebook): Column =
+  private[ext] def bestCode(sub: Column, codebook: Codebook): Column =
     -array_max(array(codebook.map { case (cid, cv) =>
       struct(
         -round(graft.functions.VectorExprs.arrayL2Sq(sub, typedlit(cv)), 6).as("d"),
         lit(-cid).as("nc"))
     }: _*)).getField("nc")
 
-  /** Train per-subspace codebooks with `iters` Lloyd rounds each.
-    * All m subspaces train CONCURRENTLY in each round: one assignment
-    * projection emitting (subspace-tagged cluster, subvector) rows and
-    * one centroid aggregation per round — not m separate jobs.
+  /** Train per-subspace codebooks with `iters` Lloyd rounds each:
+    * one collect of the training sample ([[Clustering.trainingSample]]:
+    * the whole corpus up to `max(Clustering.TrainCap, 32·k)` vectors,
+    * past it every step-th id), then per subspace j an in-memory
+    * [[Clustering]] fit under the L2 rule over the subvectors
+    * `[j·dsub, (j+1)·dsub)` (the subspaces are independent, so m small
+    * fits are one m-subspace Lloyd). `dim` is the length of the
+    * lowest-id vector.
     */
   def pqFit(
       corpus: DataFrame,
@@ -92,49 +99,15 @@ object ProductQuant {
       m: Int,
       k: Int,
       iters: Int): Seq[Codebook] = {
-    val seeds = corpus
-      .orderBy(col(idCol))
-      .limit(k)
-      .select(transform(col(vecCol), x => x.cast("double")).as("v"))
-      .collect()
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](0)) }
-    val dim = seeds.head._2.length
+    val vectors = Clustering.trainingSample(corpus, idCol, vecCol, k, corpusCount = -1L)
+    require(vectors.headOption.exists(_ != null), "pqFit needs a non-null lowest-id vector")
+    val dim = vectors.head.xs.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
-
-    var books: Seq[Codebook] = (0 until m).map { j =>
-      seeds.toSeq.map { case (cid, v) => (cid, v.slice(j * dsub, j * dsub + dsub)) }
+    (0 until m).map { j =>
+      val subs = vectors.map(v => if (v == null) null else v.slice(j * dsub, j * dsub + dsub))
+      Clustering.lloyd(subs, k, iters, byL2 = true)
     }
-
-    (1 to iters).foreach { _ =>
-      // one pass: per subspace j, tag the winning cluster with key
-      // j*k+cid, explode all m tagged subvectors, aggregate every
-      // (subspace, cluster) centroid in a single map-side-combined agg
-      val tagged = corpus.select(
-        explode(array((0 until m).map { j =>
-          val sub = subvec(col(vecCol), j, dsub)
-          struct(
-            (bestCode(sub, books(j)).cast("int") + lit(j * k)).as("g"),
-            transform(sub, x => x.cast("double")).as("sv"))
-        }: _*)).as("t"))
-        .select(col("t.g").as("g"), col("t.sv").as("sv"))
-      val comps = Embeddings
-        .groupCentroidComponents(tagged, "g", "sv")
-        .groupBy(col("g"))
-        .agg(
-          transform(
-            sort_array(collect_list(struct(col("dim"), col("c")))),
-            p => p.getField("c")).as("centroid"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1)))
-        .toSeq
-        .sortBy(_._1)
-      books = (0 until m).map { j =>
-        comps.collect { case (g, c) if g / k == j => (g % k, c) }
-      }
-    }
-    books
   }
 
   /** Encode the corpus: (id, code) where `code` packs the m per-
@@ -200,6 +173,8 @@ object ProductQuant {
     * Returns per query the topK (qid, id, adc_dot), rank by 6-dp score
     * with ties to lowest id. Deterministic end to end (same rules as
     * [[pqFit]]; coarse seeds = nlist lowest-id vectors, 1 Lloyd round).
+    * Training runs two Spark actions: the coarse fit's collect, then
+    * the residual fit's collect over the residual projection.
     */
   def ivfAdcTopK(
       corpus: DataFrame,
@@ -213,7 +188,7 @@ object ProductQuant {
       topK: Int): DataFrame = {
     val spark = corpus.sparkSession
 
-    // coarse quantizer: same deterministic Lloyd as pqFit with m=1
+    // coarse quantizer: pqFit with m = 1, the L2 Lloyd over whole vectors
     val coarse: Codebook = pqFit(corpus, idCol, vecCol, m = 1, k = nlist, iters = 1).head
     val coarseArr = typedlit(coarse.map(_._2))
     val coarseIds = coarse.map(_._1)

@@ -155,59 +155,20 @@ object Similarity {
     // negative and the min/max fold collapses nlist to the floor
     math.max(16L, math.min(cap.toLong, corpusCount / perList)).toInt
 
-  /** Corpus inversion `(neighbor_id, c_vec, list_id)` with the
-    * literal/broadcast-join dispatch: at or under
-    * [[Clustering.LiteralCentroidCap]] lists, one narrow projection
-    * over the corpus — NO exchange; past it, the broadcast-join argmin
-    * (identical assignment rule, one O(N)-row map-side-combined
-    * shuffle) — the cap is where the plan changes shape, not where
-    * nlist stops.
+  /** Corpus inversion `(neighbor_id, c_vec, list_id)` through
+    * [[Clustering.assign]]: at or under [[Clustering.LiteralCentroidCap]]
+    * lists, one narrow projection over the corpus — NO exchange; past
+    * it, the broadcast-join argmin (identical assignment rule, one
+    * O(N)-row map-side-combined shuffle) — the cap is where the plan
+    * changes shape, not where nlist stops.
     */
   private def invertedIndex(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      centroids: Seq[(Int, Seq[Double])]): DataFrame = {
-    if (centroids.size <= Clustering.LiteralCentroidCap) {
-      // scored literal-centroid array: struct(sim6, -list_id) so array_max's
-      // lexicographic compare IS "max rounded sim, ties -> min list_id"
-      def scored(vec: Column): Column = Clustering.scoredArray(centroids, vec)
-      corpus.select(
-        col(idCol).as("neighbor_id"),
-        col(vecCol).as("c_vec"),
-        (-array_max(scored(col(vecCol))).getField("nc")).cast("int").as("list_id"))
-    } else
-      Clustering.assignByJoin(corpus, idCol, vecCol, centroids)
-        .select(
-          col(idCol).as("neighbor_id"),
-          col(vecCol).as("c_vec"),
-          col("cluster").as("list_id"))
-  }
-
-  /** Each query's nprobe nearest lists `(query_id, q_vec, list_id)`,
-    * same dispatch: literal scored-array sort/slice/explode
-    * (projection-only) vs the broadcast-join rank over the small query
-    * side. Both orders are "descending rounded sim, ties → min list id".
-    */
-  private def probeSet(
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Seq[(Int, Seq[Double])],
-      nprobe: Int): DataFrame = {
-    if (centroids.size <= Clustering.LiteralCentroidCap) {
-      def scored(vec: Column): Column = Clustering.scoredArray(centroids, vec)
-      queries
-        .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"), scored(col(vecCol)).as("sc"))
-        .select(
-          col("query_id"),
-          col("q_vec"),
-          explode(slice(reverse(array_sort(col("sc"))), 1, nprobe)).as("p"))
-        .select(col("query_id"), col("q_vec"), (-col("p.nc")).cast("int").as("list_id"))
-    } else
-      Clustering.probeByJoin(queries, idCol, vecCol, centroids, nprobe)
-        .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"), col("list_id"))
-  }
+      centroids: Seq[(Int, Seq[Double])]): DataFrame =
+    Clustering.assign(corpus, idCol, vecCol, centroids)((listId, _) =>
+      Seq(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"), listId.as("list_id")))
 
   def ivfTopK(
       queries: DataFrame,
@@ -236,7 +197,7 @@ object Similarity {
       nprobe: Int = 4): DataFrame =
     rankProbed(
       invertedIndex(corpus, idCol, vecCol, centroids),
-      probeSet(queries, idCol, vecCol, centroids, nprobe),
+      Clustering.probe(queries, idCol, vecCol, centroids, nprobe),
       k)
 
   /** Top-k per query over the postings `(list_id, neighbor_id, c_vec)`
@@ -396,7 +357,7 @@ object Similarity {
       .toSeq
     rankProbed(
       graft.tables.LakeTable(spark, s"$indexRoot/postings").read(),
-      probeSet(queries, idCol, vecCol, centroids, nprobe),
+      Clustering.probe(queries, idCol, vecCol, centroids, nprobe),
       k)
   }
 }

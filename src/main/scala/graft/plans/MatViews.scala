@@ -40,7 +40,6 @@ object MatViews {
     java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
 
   def register(spec: Spec): Unit = registry.put(norm(spec.source.root), spec)
-  def deregister(sourceRoot: String): Unit = registry.remove(norm(sourceRoot))
   def lookup(sourceRoot: String): Option[Spec] = Option(registry.get(norm(sourceRoot)))
   def clear(): Unit = registry.clear()
 }

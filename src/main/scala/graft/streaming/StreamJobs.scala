@@ -152,23 +152,6 @@ object StreamJobs {
     p.toString
   }
 
-  /** Block on a long-running streaming query with a graceful-shutdown
-    * hook (the reference wraps awaitTermination in a KeyboardInterrupt
-    * handler that stops the query —
-    * /root/reference/src/bronze/_bronze_utils.py:78-84): a JVM shutdown
-    * (SIGTERM/ctrl-C) stops the query cleanly so the checkpoint commits
-    * and the next run resumes exactly where it left off.
-    */
-  def awaitWithGracefulShutdown(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val hook = new Thread(() => if (q.isActive) q.stop())
-    Runtime.getRuntime.addShutdownHook(hook)
-    try q.awaitTermination()
-    finally {
-      try Runtime.getRuntime.removeShutdownHook(hook)
-      catch { case _: IllegalStateException => () } // already shutting down
-    }
-  }
-
   /** Append a batch of rows to the staging directory as the
     * (key, value-json) envelope — the test-harness stand-in for the
     * reference's rate-limited Kafka producer (K8,

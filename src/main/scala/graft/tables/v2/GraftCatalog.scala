@@ -585,20 +585,6 @@ final class GraftSqlTable(rootPath: String, versionAsOf: Option[Long] = None)
     }
   }
 
-  /** Per-value footer counts for the LEADING partition column — serves
-    * `GROUP BY <p0>` + COUNT(*) from metadata, the per-partition twin of
-    * [[metadataRowCount]]. Values come from the `p0=value` subdir names
-    * (scoped dirs enumerate only their live values, matching the
-    * replace-partition semantics); counts are footer record sums under
-    * each value dir. Guards mirror the global path: no deletion vectors,
-    * and a NULL-partition dir (`__HIVE_DEFAULT_PARTITION__`) refuses the
-    * whole serve — pushdown can change the plan, never the answer.
-    * Returns dir-name-encoded values (Hive-unescaped); the caller owns
-    * the cast to the column type. Cached per (root, version).
-    */
-  def metadataGroupCounts(): Option[Seq[(String, Long)]] =
-    metadataGroupStats(Seq.empty).map(_.map { case (v, n, _) => (v, n) })
-
   /** Parquet footer statistics types whose min/max round-trip is exact:
     * integral and date physical INT32/INT64 stats. Strings are excluded
     * (parquet-mr may truncate binary stats), floats/doubles are excluded
@@ -611,12 +597,17 @@ final class GraftSqlTable(rootPath: String, versionAsOf: Option[Long] = None)
     case _ => false
   }
 
-  /** Per-value footer stats with exact grouped MIN/MAX alongside the
-    * counts — one footer pass serves `GROUP BY p0` with any mix of
+  /** Per-value footer counts and exact grouped MIN/MAX for the LEADING
+    * partition column, the per-partition twin of [[metadataRowCount]] —
+    * one footer pass serves `GROUP BY p0` with any mix of
     * `count(*) / min(c) / max(c)` over [[footerStatsExact]] columns.
-    * Footer min/max ignore nulls exactly like SQL min/max; a value
-    * whose rows are all-null for `c` serves NULL. A file missing usable
-    * statistics for any requested column refuses the whole serve.
+    * Values come from the `p0=value` subdir names (Hive-unescaped; the
+    * caller owns the cast to the column type). No deletion vectors, and
+    * a NULL-partition dir (`__HIVE_DEFAULT_PARTITION__`) refuses the
+    * whole serve. Footer min/max ignore nulls exactly like SQL min/max;
+    * a value whose rows are all-null for `c` serves NULL. A file missing
+    * usable statistics for any requested column refuses the whole serve.
+    * Cached per (root, version, columns).
     */
   def metadataGroupStats(statCols: Seq[String])
       : Option[Seq[(String, Long, Map[String, Option[(Any, Any)]])]] = {

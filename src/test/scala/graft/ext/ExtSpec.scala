@@ -797,47 +797,55 @@ class SimilaritySpec extends SparkSpec {
     // via scoredArray — the cap must be where the PLAN changes shape,
     // never where the RESULT changes.
     val rnd = new scala.util.Random(11)
-    val corpus = (0 until 320)
+    val dense = (0 until 320)
       .map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() * 2 - 1).toSeq))
       .toDF("id", "vec")
-    val nlist = 280
-    val centroids = Clustering.kmeansFit(corpus, "id", "vec", nlist, 1)
-    assert(centroids.size > Clustering.LiteralCentroidCap,
-      s"fixture must exceed the cap, got ${centroids.size}")
+    // NULL elements: a vector holding one scores NULL everywhere and
+    // lands in cluster 0, whose centroid then has a NULL component
+    val withNulls = dense.withColumn("vec",
+      transform(col("vec"), (x, j) => when(j === 0 && col("id") % 31 === 0, lit(null)).otherwise(x)))
+    Seq(dense -> false, withNulls -> true).foreach { case (corpus, nulls) =>
+      val nlist = 280
+      val centroids = Clustering.kmeansFit(corpus, "id", "vec", nlist, 1)
+      assert(centroids.size > Clustering.LiteralCentroidCap,
+        s"fixture must exceed the cap, got ${centroids.size}")
+      assert(centroids.exists(_._2.asInstanceOf[Seq[Any]].contains(null)) == nulls,
+        "only the NULL-element fixture has a NULL centroid component")
 
-    def scored = Clustering.scoredArray(centroids, col("vec"))
+      def scored = Clustering.scoredArray(centroids, col("vec"))
 
-    // assignment parity: (cluster, cosine) per id, bit-exact
-    val lit = corpus.select(
-        col("id"),
-        (-array_max(scored).getField("nc")).cast("int").as("cluster"),
-        array_max(scored).getField("s").as("cosine"))
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getDouble(2)))).toMap
-    val joined = Clustering.assignByJoin(corpus, "id", "vec", centroids)
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getDouble(2)))).toMap
-    assert(joined == lit, "broadcast-join assignment diverged from the literal rule")
+      // assignment parity: (cluster, cosine) per id, bit-exact
+      val lit = corpus.select(
+          col("id"),
+          (-array_max(scored).getField("nc")).cast("int").as("cluster"),
+          array_max(scored).getField("s").as("cosine"))
+        .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.get(2)))).toMap
+      val joined = Clustering.assignByJoin(corpus, "id", "vec", centroids)
+        .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.get(2)))).toMap
+      assert(joined == lit, "broadcast-join assignment diverged from the literal rule")
 
-    // probe parity: each query's top-nprobe list set, same tie rule
-    val qs = corpus.filter(col("id") % 40 === 0)
-    val litProbe = qs
-      .select(col("id"), explode(slice(reverse(array_sort(scored)), 1, 4)).as("p"))
-      .select(col("id"), (-col("p.nc")).cast("int").as("list_id"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val joinProbe = Clustering.probeByJoin(qs, "id", "vec", centroids, 4)
-      .select("id", "list_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(joinProbe == litProbe, "broadcast-join probe set diverged from the literal rule")
+      // probe parity: each query's top-nprobe list set, same tie rule
+      val qs = corpus.filter(col("id") % 40 === 0)
+      val litProbe = qs
+        .select(col("id"), explode(slice(reverse(array_sort(scored)), 1, 4)).as("p"))
+        .select(col("id"), (-col("p.nc")).cast("int").as("list_id"))
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+      val joinProbe = Clustering.probeByJoin(qs, "id", "vec", centroids, 4)
+        .select("id", "list_id")
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+      assert(joinProbe == litProbe, "broadcast-join probe set diverged from the literal rule")
 
-    // end-to-end past-cap search: well-formed ranked results, and every
-    // returned pair is a genuine neighbor under the exact cosine
-    val ivf = Similarity.ivfTopK(qs, corpus, "id", "vec", 3, nlist = nlist, nprobe = 8, iters = 1)
-      .collect()
-    assert(ivf.nonEmpty)
-    val exactWide = Similarity.bruteForceTopK(qs, corpus, "id", "vec", 40)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = ivf.map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert((got -- exactWide).isEmpty,
-      s"past-cap IVF returned pairs outside brute top-40: ${(got -- exactWide).take(5)}")
+      // end-to-end past-cap search: well-formed ranked results, and every
+      // returned pair is a genuine neighbor under the exact cosine
+      val ivf = Similarity.ivfTopK(qs, corpus, "id", "vec", 3, nlist = nlist, nprobe = 8, iters = 1)
+        .collect()
+      assert(ivf.nonEmpty)
+      val exactWide = Similarity.bruteForceTopK(qs, corpus, "id", "vec", 40)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val got = ivf.map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert((got -- exactWide).isEmpty,
+        s"past-cap IVF returned pairs outside brute top-40: ${(got -- exactWide).take(5)}")
+    }
   }
 
   test("kmeans assignment is partitioning-independent and SemDeDup recovers planted dups") {
@@ -883,6 +891,26 @@ class SimilaritySpec extends SparkSpec {
     val exchanges = centroidsDone.queryExecution.executedPlan.toString
       .linesIterator.count(_.contains("Exchange"))
     assert(exchanges == 0, s"expected projection-only assignment, found $exchanges exchanges")
+  }
+
+  test("a fit with no cluster assigns, dedups and searches zero rows") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("vec", ArrayType(FloatType))))
+    def frame(rows: Row*) = spark.createDataFrame(rows.asJava, schema)
+    def runs(df: org.apache.spark.sql.DataFrame) = Seq(
+      Clustering.kmeansAssign(df, "id", "vec", k = 2, iters = 1),
+      Clustering.semanticDedupPairs(df, "id", "vec", 0.9, k = 2, iters = 1),
+      Similarity.ivfTopK(df, df, "id", "vec", 3, nlist = 2, nprobe = 1, iters = 1))
+    val schemas = runs(frame(Row(1L, Seq(1f, 0f)), Row(2L, Seq(0f, 1f)))).map(_.schema)
+    // an empty corpus, and one of only null or empty vectors
+    for (corpus <- Seq(frame(), frame(Row(1L, null), Row(2L, Seq.empty[Float]))))
+      runs(corpus).zip(schemas).foreach { case (out, expected) =>
+        assert(out.collect().isEmpty)
+        assert(out.schema.map(f => (f.name, f.dataType)) == expected.map(f => (f.name, f.dataType)))
+      }
   }
 
   test("cosine of identical vectors is 1; orthogonal is 0") {
