@@ -64,6 +64,17 @@ import org.apache.spark.sql.SparkSession
   * configuration asked first, so the first build creates it at once
   * from the session's configuration; a later lookup through a bare
   * `new Configuration()` then gets the same instance.
+  *
+  * The first build also sets one named logger to ERROR:
+  * `ResolveWriteToStream`, which warns at every stream start with AQE
+  * on that AQE "is not supported in streaming DataFrames/Datasets and
+  * will be disabled". The warning is wrong for a stateless stream,
+  * whose micro-batches keep AQE on in Spark 4.1, and a stateful stream
+  * starts with AQE off ([[graft.streaming.StreamJobs]]), so each such
+  * line is noise: one unit-test run logged it 39 times. The class's
+  * only other WARN, "Temporary checkpoint location created", cannot
+  * fire here, because every stream start sets `checkpointLocation`.
+  * Every other logger keeps the root level.
   */
 object Sessions {
   def local(
@@ -99,6 +110,9 @@ object Sessions {
         runtime.foreach { case (k, v) => builder.config(k, v) }
         val spark = builder.getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
+        org.apache.logging.log4j.core.config.Configurator.setLevel(
+          "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+          org.apache.logging.log4j.Level.ERROR)
         // the JVM's cached `file:` FileSystem, made from these settings
         new Path("file:///").getFileSystem(spark.sparkContext.hadoopConfiguration)
         spark

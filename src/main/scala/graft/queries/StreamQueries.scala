@@ -293,7 +293,6 @@ object StreamQueries {
           col("r.event_id").as("signup_id"),
           col("l.user_id").as("user_id"),
           round(col("l.value"), 4).as("purchase_value")),
-        () => (),
         col("user_id") === -1L,
         wd)
   }
@@ -397,20 +396,13 @@ object StreamQueries {
     val cut = lit("2024-01-15 00:00:00").cast("timestamp")
     events.filter(col("ts") < cut).write.mode("append").parquet(src)
     events.filter(col("ts") >= cut).write.mode("append").parquet(src)
-    val q = spark.readStream
-      .schema(eventsSchemaNoProps)
-      .option("maxFilesPerTrigger", "4")
-      .parquet(src)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+    StreamJobs.runStream(
+      StreamJobs.fileStream(spark, eventsSchemaNoProps, src, Some(4)),
+      s"$wd/checkpoint",
+      StreamJobs.Sink.ForeachBatch { (batch, _) =>
         table.append(batch)
         view.refresh()
-        ()
-      }
-      .option("checkpointLocation", s"$wd/checkpoint")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      })
     view.read()
       .select(
         col("event_type"),

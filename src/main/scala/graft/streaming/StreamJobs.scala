@@ -1,10 +1,11 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Structured Streaming jobs reproducing the reference's two-hop stream
@@ -21,6 +22,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * the same at-least-once replay contract, and the file sink's
   * `_spark_metadata` commit log makes the micro-batch append
   * effectively-once — the reference's Kafka+Iceberg guarantees.
+  *
+  * Every job reads its parquet dir through [[fileStream]] and starts,
+  * drains and stops its query through [[runStream]], so the
+  * source-offset / checkpoint / sink triple that carries the
+  * exactly-once contract is set up in one place.
   */
 object StreamJobs {
 
@@ -49,47 +55,143 @@ object StreamJobs {
     def load(spark: SparkSession): DataFrame
   }
 
-  /** Save the given session confs, set the overrides, run `body`
-    * (typically a stream `.start()`, which pins them into the query),
-    * and restore — the ONE definition of the scoped-conf contract every
-    * stream start in this file shares, so the restore can never drift
-    * between call sites.
+  /** Shuffle partitions of every stream, and so the state-store count of
+    * every stateful one. The count is pinned per query at first start
+    * from the session's shuffle-partition conf. Unlike batch shuffles,
+    * it should be sized to stateful-key cardinality, not core count:
+    * every micro-batch pays a per-store commit, and the 200 default
+    * stores are pure commit overhead for a handful of keys.
     */
-  private def withScopedConf[T](spark: SparkSession, overrides: Seq[(String, String)])(
-      body: => T): T = {
-    val prev = overrides.map { case (k, _) => k -> spark.conf.get(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
+  private val StatePartitions = 8
 
-  /** Scoped at the start of a stateful stream: Spark turns AQE off in
-    * such a stream's cloned session anyway, and AQE on at the start only
-    * makes `ResolveWriteToStream` warn that it is unsupported. A
-    * stateless stream keeps AQE on in its micro-batches (Spark 4.1), so
-    * its start keeps the session's setting.
-    */
-  private val statefulStart = "spark.sql.adaptive.enabled" -> "false"
+  private val stateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
 
   private val rocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** The one file-stream reader: a parquet dir as a stream of `schema`
+    * rows, at most `maxFilesPerTrigger` new files per micro-batch.
+    */
+  private[graft] def fileStream(
+      spark: SparkSession,
+      schema: StructType,
+      dir: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger
+      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
+      .parquet(dir)
+  }
+
+  /** Where [[runStream]] sends a stream's rows. */
+  private[graft] sealed trait Sink
+  private[graft] object Sink {
+    /** An in-memory table named by the runner: the stopped query's
+      * `name`. The name comes from the checkpoint dir, which every
+      * memory-sink job makes fresh per call.
+      */
+    case object Memory extends Sink
+    /** A function over each micro-batch and its id. */
+    final case class ForeachBatch(f: (DataFrame, Long) => Unit) extends Sink
+    /** The ingest hop's parquet file sink; its `_spark_metadata` log
+      * makes each micro-batch's append effectively-once.
+      */
+    final case class ParquetFiles(dir: String, partitionCols: Seq[String]) extends Sink
+  }
+
+  /** The one start-and-drain path of every stream here: make the
+    * checkpoint dir (and, for a memory sink, the query name), start the
+    * query with its confs scoped to the start, drain it, and stop it if
+    * it still runs.
+    *
+    * The query captures the scoped confs at start; the session gets its
+    * own values back right after, whether or not the start threw, so
+    * none leaks to later caller code:
+    *   - [[StatePartitions]] shuffle partitions;
+    *   - no-data micro-batches on: a sentinel-driven flush emits the
+    *     final windows in a no-data micro-batch (the watermark advances
+    *     after the sentinel batch commits), which runs only when this is
+    *     on, so it is pinned rather than assumed to survive caller
+    *     config;
+    *   - AQE off for a `stateful` stream: Spark turns it off in such a
+    *     stream's cloned session anyway. A stateless stream keeps AQE on
+    *     in its micro-batches (Spark 4.1), so its start keeps the
+    *     session's setting;
+    *   - the RocksDB state store for `transformWithState`, which
+    *     requires it. Every other stream keeps the session's
+    *     `spark.sql.streaming.stateStore.providerClass`: at real state
+    *     cardinality the in-heap default is the executor-OOM ceiling, so
+    *     a caller sets RocksDB there. The provider is pinned into the
+    *     checkpoint at first start.
+    *
+    * `availableNow` runs the query to termination under
+    * `Trigger.AvailableNow`: everything the source holds, in as many
+    * checkpointed micro-batches as its per-trigger cap makes; a rerun
+    * against the same checkpoint processes only what arrived since.
+    * Otherwise the default trigger drains through `processAllAvailable`,
+    * and a `flush` runs after that pass and before a second one. The
+    * second pass also observes a no-data flush batch that runs only
+    * after the last data batch commits its watermark.
+    */
+  private[graft] def runStream(
+      out: DataFrame,
+      checkpoint: String,
+      sink: Sink,
+      stateful: Boolean = false,
+      transformWithState: Boolean = false,
+      availableNow: Boolean = false,
+      flush: Option[() => Unit] = None): StreamingQuery = {
+    val name = Files.createDirectories(Paths.get(checkpoint)).getFileName.toString.replace('-', '_')
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> StatePartitions.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
+      Option.when(stateful || transformWithState)("spark.sql.adaptive.enabled" -> "false") ++
+      Option.when(transformWithState)(stateStoreProvider -> rocksDbProvider)
+    val writer = out.writeStream.outputMode("append").option("checkpointLocation", checkpoint)
+    val sunk = sink match {
+      case Sink.Memory => writer.format("memory").queryName(name)
+      case Sink.ForeachBatch(f) => writer.foreachBatch(f)
+      case Sink.ParquetFiles(dir, partitionCols) =>
+        writer.format("parquet").option("path", dir).partitionBy(partitionCols: _*)
+    }
+    val conf = out.sparkSession.conf
+    val prev = confs.map { case (k, _) => k -> conf.get(k) }
+    val q =
+      try {
+        confs.foreach { case (k, v) => conf.set(k, v) }
+        (if (availableNow) sunk.trigger(Trigger.AvailableNow()) else sunk).start()
+      } finally prev.foreach { case (k, v) => conf.set(k, v) }
+    try {
+      if (availableNow) q.awaitTermination()
+      else {
+        q.processAllAvailable()
+        flush.foreach { f => f(); q.processAllAvailable() }
+      }
+    } finally if (q.isActive) q.stop() // a terminated query has nothing left to stop
+    q
+  }
+
+  /** A checkpoint path under `workDir`: `checkpoint-<tag>`, which a
+    * rerun resumes, or with a fresh UUID appended. A memory-sink job
+    * needs a fresh one: its sink table is fresh per call, so resuming a
+    * previous call's offsets would silently omit already-processed rows.
+    */
+  private def checkpointIn(workDir: String, tag: String, fresh: Boolean = true): String =
+    Paths.get(workDir, if (fresh) s"checkpoint-$tag-${UUID.randomUUID()}" else s"checkpoint-$tag")
+      .toString
+
   /** File-stream envelope source over a staging directory; its
     * offsets-by-file log gives Kafka's at-least-once replay contract.
+    * `maxFilesPerTrigger` bounds the micro-batches — the file-source
+    * analog of the reference's rate-limited Kafka cadence (~150 rows
+    * per 5 s trigger); AvailableNow then drains in several checkpointed
+    * batches.
     */
   final case class FileEnvelopeSource(
       stageDir: String,
       maxFilesPerTrigger: Option[Int] = None) extends EnvelopeSource {
-    override def load(spark: SparkSession): DataFrame = {
-      val reader = spark.readStream.schema(envelopeSchema)
-      // bounded micro-batches — the file-source analog of the reference's
-      // rate-limited Kafka cadence (~150 rows per 5 s trigger);
-      // AvailableNow then drains in several checkpointed batches
-      maxFilesPerTrigger
-        .map(n => reader.option("maxFilesPerTrigger", n))
-        .getOrElse(reader)
-        .parquet(stageDir)
-    }
+    override def load(spark: SparkSession): DataFrame =
+      fileStream(spark, envelopeSchema, stageDir, maxFilesPerTrigger)
   }
 
   /** Kafka envelope source — the production binding (reference
@@ -122,6 +224,14 @@ object StreamJobs {
     }
   }
 
+  /** The (key, value-json) envelope of `input`: the `keyCols` joined by
+    * `_` as the key, the whole row as JSON as the value.
+    */
+  private def envelope(input: DataFrame, keyCols: Seq[String]): DataFrame =
+    input.select(
+      concat_ws("_", keyCols.map(col): _*).as("key"),
+      to_json(struct(input.columns.map(col): _*), envelopeTsFormat).as("value"))
+
   /** In-memory envelope source (tests / notebooks): push batches with
     * [[add]]; supports `Trigger.AvailableNow` like the file source.
     */
@@ -133,15 +243,8 @@ object StreamJobs {
     /** Stage rows as the same (key, value-json) envelope the file
       * producer writes ([[stageEnvelope]]).
       */
-    def add(input: DataFrame, keyCols: Seq[String]): Unit = {
-      val rows = input
-        .select(
-          concat_ws("_", keyCols.map(col): _*).as("key"),
-          to_json(struct(input.columns.map(col): _*), envelopeTsFormat).as("value"))
-        .as[(String, String)]
-        .collect()
-      stream.addData(rows.toIndexedSeq)
-    }
+    def add(input: DataFrame, keyCols: Seq[String]): Unit =
+      stream.addData(envelope(input, keyCols).as[(String, String)].collect().toIndexedSeq)
     override def load(spark: SparkSession): DataFrame =
       stream.toDF().toDF("key", "value")
   }
@@ -158,13 +261,7 @@ object StreamJobs {
     * /root/reference/src/producer/ohlcv_producer.py:42-61).
     */
   def stageEnvelope(input: DataFrame, keyCols: Seq[String], stageDir: String): Unit =
-    input
-      .select(
-        concat_ws("_", keyCols.map(col): _*).as("key"),
-        to_json(struct(input.columns.map(col): _*), envelopeTsFormat).as("value"))
-      .write
-      .mode("append")
-      .parquet(stageDir)
+    envelope(input, keyCols).write.mode("append").parquet(stageDir)
 
   /** Hop 1 — streaming ingest (S3+P1+P2+P5+K2): stream the envelope
     * staging dir, decode JSON against the declared schema, stamp
@@ -184,56 +281,20 @@ object StreamJobs {
       source: Option[EnvelopeSource] = None): String = {
     val stage = dir(workDir, "stage")
     val bronze = dir(workDir, "bronze")
-    val checkpoint = dir(workDir, "checkpoint-ingest")
 
-    val envelope = source
+    val decoded = source
       .getOrElse(FileEnvelopeSource(stage, maxFilesPerTrigger))
       .load(spark)
-    val decoded = envelope
       .select(from_json(col("value").cast(StringType), payloadSchema, envelopeTsFormat).as("data"))
       .select(col("data.*"))
-    val withParts = graft.operators.Ops.datePartCols(decoded, tsCol)
-
-    val writer = withParts.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", bronze)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-    val q = (if (partitioned) writer.partitionBy("event_year", "event_month", "event_day")
-             else writer).start()
-    q.awaitTermination()
+    runStream(
+      graft.operators.Ops.datePartCols(decoded, tsCol),
+      checkpointIn(workDir, "ingest", fresh = false),
+      Sink.ParquetFiles(
+        bronze, if (partitioned) Seq("event_year", "event_month", "event_day") else Nil),
+      availableNow = true)
     bronze
   }
-
-  /** Start a memory-sink append query with the state-store partition
-    * override scoped to the start (see [[runStatefulAgg]] for why state
-    * partitions track key cardinality, not core count).
-    */
-  private def startMemorySink(
-      spark: SparkSession,
-      out: DataFrame,
-      queryName: String,
-      checkpoint: String,
-      statePartitions: Int,
-      stateful: Boolean): org.apache.spark.sql.streaming.StreamingQuery =
-    // Sentinel-driven flushes emit final windows in a NO-DATA micro-batch
-    // (the watermark advances after the sentinel batch commits). That
-    // batch only runs when noDataMicroBatches is enabled — pin it, don't
-    // assume the session default survived caller config.
-    withScopedConf(
-      spark,
-      Seq(
-        "spark.sql.shuffle.partitions" -> statePartitions.toString,
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
-        Option.when(stateful)(statefulStart)) {
-      out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
 
   /** Stream-static join: enrich a stream against a static (batch)
     * dimension — stateless, no watermark needed; the static side is
@@ -248,15 +309,9 @@ object StreamJobs {
       joinCols: Seq[String],
       project: DataFrame => DataFrame,
       workDir: String): DataFrame = {
-    val checkpoint = dir(workDir, s"checkpoint-sstatic-${java.util.UUID.randomUUID()}")
-    val queryName = s"sstatic_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val stream = spark.readStream.schema(sourceSchema).parquet(sourceDir)
     val joined = project(
-      stream.join(org.apache.spark.sql.functions.broadcast(staticDim), joinCols, "left"))
-    val q = startMemorySink(spark, joined, queryName, checkpoint, statePartitions = 8, stateful = false)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+      fileStream(spark, sourceSchema, sourceDir).join(broadcast(staticDim), joinCols, "left"))
+    spark.table(runStream(joined, checkpointIn(workDir, "sstatic"), Sink.Memory).name)
   }
 
   /** foreachBatch transform sink: apply an arbitrary BATCH transform —
@@ -277,9 +332,7 @@ object StreamJobs {
       sourceSchema: StructType,
       transform: DataFrame => DataFrame,
       workDir: String): DataFrame = {
-    val checkpoint = dir(workDir, s"checkpoint-febt-${java.util.UUID.randomUUID()}")
-    val out = dir(workDir, s"febt-out-${java.util.UUID.randomUUID()}")
-    val stream = spark.readStream.schema(sourceSchema).parquet(sourceDir)
+    val out = dir(workDir, s"febt-out-${UUID.randomUUID()}")
     // foreachBatch is AT-LEAST-ONCE: a micro-batch that fails after a
     // partial write is re-delivered on restart, and a plain append sink
     // would duplicate its rows. Each batch therefore lands in its own
@@ -287,18 +340,15 @@ object StreamJobs {
     // attempt, and a batch whose _SUCCESS marker already exists is a
     // committed replay and is skipped (the same idempotence the memory-
     // sink runners get from the sink itself).
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    runStream(
+      fileStream(spark, sourceSchema, sourceDir),
+      checkpointIn(workDir, "febt"),
+      Sink.ForeachBatch { (batch, batchId) =>
         val dest = new java.io.File(out, s"b$batchId")
         if (!new java.io.File(dest, "_SUCCESS").exists()) {
           transform(batch).write.mode("overwrite").parquet(dest.toString)
         }
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      })
     // empty source → foreachBatch never fired → no committed batch dirs
     // and schema inference would throw; derive the result schema by
     // applying the transform to an empty batch instead (the sibling
@@ -327,14 +377,8 @@ object StreamJobs {
       sourceSchema: StructType,
       transform: DataFrame => DataFrame,
       workDir: String): DataFrame = {
-    val checkpoint = dir(workDir, s"checkpoint-stateless-${java.util.UUID.randomUUID()}")
-    val queryName = s"stateless_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val stream = spark.readStream.schema(sourceSchema).parquet(sourceDir)
-    val q = startMemorySink(
-      spark, transform(stream), queryName, checkpoint, statePartitions = 8, stateful = false)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    val out = transform(fileStream(spark, sourceSchema, sourceDir))
+    spark.table(runStream(out, checkpointIn(workDir, "stateless"), Sink.Memory).name)
   }
 
   /** Hop 2 — stateful streaming aggregation (S4+A1+P12+K3) driven to a
@@ -372,6 +416,9 @@ object StreamJobs {
     * mode: stream the table dir, apply `agg` to the watermarked stream,
     * collect through a memory sink, flush trailing state with the
     * caller's sentinel, and filter the sentinel's own key back out.
+    * The first drain pass runs every real micro-batch, an upfront-staged
+    * sentinel among them; `pushSentinel` is an optional second staging
+    * pass (legacy two-pass callers) before the second.
     */
   def runStatefulAgg(
       spark: SparkSession,
@@ -383,52 +430,14 @@ object StreamJobs {
       agg: DataFrame => DataFrame,
       sentinelFilterCol: String,
       watermarkDelay: String = "1 minutes",
-      sentinelKey: String = "__sentinel__",
-      statePartitions: Int = 8,
-      stateStoreProvider: Option[String] = None): DataFrame = {
-    val checkpoint = dir(workDir, s"checkpoint-agg-${java.util.UUID.randomUUID()}")
-    val queryName = s"agg_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-
-    val stream = spark.readStream.schema(bronzeSchema).parquet(bronzeDir)
-    val out = agg(stream.withWatermark(tsCol, watermarkDelay))
-
-    // State-store count is pinned per query at first start from the
-    // session's shuffle-partition conf. Unlike batch shuffles, it should
-    // be sized to stateful-key cardinality, not core count: every
-    // micro-batch pays per-store commit overhead. Scope the override to
-    // the query start and restore the session conf after.
-    // See startMemorySink: the final windows emit in a no-data batch.
-    // All overrides are captured by the query at start and restored by
-    // withScopedConf so they never leak to later caller code. RocksDB
-    // (or any custom) state store: at real state cardinality the default
-    // in-heap HDFSBackedStateStore is the executor-OOM ceiling; the
-    // provider is pinned into the query's checkpoint at first start.
-    val overrides = Seq(
-      statefulStart,
-      "spark.sql.shuffle.partitions" -> statePartitions.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
-      stateStoreProvider.map("spark.sql.streaming.stateStore.providerClass" -> _)
-    val q = withScopedConf(spark, overrides) {
-      out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try {
-      q.processAllAvailable() // all real micro-batches (incl. upfront-staged sentinel)
-      pushSentinel() // optional second staging pass (legacy two-pass callers)
-      // The flush batch is a no-data micro-batch that runs AFTER the last
-      // data batch commits its watermark. A second processAllAvailable
-      // observes it even if the first returned before the flush ran.
-      q.processAllAvailable()
-    } finally q.stop()
-
+      sentinelKey: String = "__sentinel__"): DataFrame = {
+    val out = agg(fileStream(spark, bronzeSchema, bronzeDir).withWatermark(tsCol, watermarkDelay))
+    val q = runStream(
+      out, checkpointIn(workDir, "agg"), Sink.Memory, stateful = true, flush = Some(pushSentinel))
     // null-safe inequality: `=!=` is null-killing, so a NULL group key
     // would silently vanish from the result while the batch oracle
     // keeps the null-key group — only the literal sentinel row drops
-    spark.table(queryName).filter(!(col(sentinelFilterCol) <=> lit(sentinelKey)))
+    spark.table(q.name).filter(!(col(sentinelFilterCol) <=> lit(sentinelKey)))
   }
 
   /** Stream-stream inner join with event-time bounds: two streams over
@@ -455,13 +464,13 @@ object StreamJobs {
     runStreamStreamJoinImpl(
       spark, sourceDir, schema, tsCol, leftFilter, rightFilter, keyCol,
       rangeCondition, project, workDir, watermarkDelay,
-      joinType = "inner", sentinel = None)
+      joinType = "inner", sentinelPred = None)
 
   /** The one stream-stream join driver both public shapes share: the
-    * side builder, watermarking, qualifier-scoped projection and
-    * memory-sink plumbing differ only in join type and the outer
-    * variant's sentinel pass (watermark advancement so unmatched left
-    * rows EMIT — see [[runStreamStreamJoinOuter]]).
+    * side builder, watermarking and qualifier-scoped projection differ
+    * only in join type and the outer variant's second drain pass, which
+    * emits the unmatched left rows once the staged sentinels have
+    * advanced both watermarks (see [[runStreamStreamJoinOuter]]).
     */
   private def runStreamStreamJoinImpl(
       spark: SparkSession,
@@ -476,15 +485,9 @@ object StreamJobs {
       workDir: String,
       watermarkDelay: String,
       joinType: String,
-      sentinel: Option[(() => Unit, org.apache.spark.sql.Column)]): DataFrame = {
-    val tag = if (joinType == "inner") "ssjoin" else "ssouter"
-    val checkpoint = dir(workDir, s"checkpoint-$tag-${java.util.UUID.randomUUID()}")
-    val queryName = s"${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-
+      sentinelPred: Option[org.apache.spark.sql.Column]): DataFrame = {
     def side(f: org.apache.spark.sql.Column, alias: String): DataFrame =
-      spark.readStream
-        .schema(schema)
-        .parquet(sourceDir)
+      fileStream(spark, schema, sourceDir)
         .filter(f)
         .withWatermark(tsCol, watermarkDelay)
         .alias(alias)
@@ -496,17 +499,11 @@ object StreamJobs {
     val joined = project(
       l.join(r, col(s"l.$keyCol") === col(s"r.$keyCol") && rangeCondition(l, r), joinType))
 
-    val q = startMemorySink(spark, joined, queryName, checkpoint, statePartitions = 8, stateful = true)
-    try {
-      q.processAllAvailable()
-      sentinel.foreach { case (push, _) =>
-        push() // advance both watermarks past every real row
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    sentinel.fold(spark.table(queryName)) { case (_, pred) =>
-      spark.table(queryName).filter(!pred)
-    }
+    val tag = if (joinType == "inner") "ssjoin" else "ssouter"
+    val q = runStream(
+      joined, checkpointIn(workDir, tag), Sink.Memory, stateful = true,
+      flush = sentinelPred.map(_ => () => ()))
+    sentinelPred.fold(spark.table(q.name))(pred => spark.table(q.name).filter(!pred))
   }
 
   /** Typed row for the custom-state demo pipeline. */
@@ -537,10 +534,8 @@ object StreamJobs {
       spark: SparkSession,
       sourceDir: String,
       workDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val checkpoint = dir(workDir, s"checkpoint-fmgws-${java.util.UUID.randomUUID()}")
-    val queryName = s"fmgws_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
     def update(
         key: String,
@@ -553,28 +548,47 @@ object StreamJobs {
       Iterator.single(next)
     }
 
-    val stream = spark.readStream
-      .schema(keyedValueSchema)
-      .parquet(sourceDir)
+    val stream = fileStream(spark, keyedValueSchema, sourceDir)
       .as[KeyedValue]
       .groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-
-    // state-partition policy (see runStatefulAgg): stateful shuffles
-    // size to key cardinality, not core count — 200 default stores per
-    // micro-batch is pure commit overhead for a handful of keys
-    val q = withScopedConf(spark, Seq(statefulStart, "spark.sql.shuffle.partitions" -> "8")) {
-      stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    spark.table(
+      runStream(stream.toDF(), checkpointIn(workDir, "fmgws"), Sink.Memory, stateful = true).name)
   }
+
+  /** The one `transformWithState` processor: per key, one value state
+    * that each micro-batch's rows fold into, taken in `order` and
+    * applied by `step`, from `zero(key)` for a key not seen before; it
+    * emits the new state once per micro-batch that touched the key.
+    */
+  private final class FoldProcessor[K, I, S](
+      zero: K => S,
+      order: Iterator[I] => Seq[I],
+      step: (S, I) => S)(implicit encoder: Encoder[S])
+      extends StatefulProcessor[K, I, S] {
+    @transient private var state: ValueState[S] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[S]("fold", encoder, TTLConfig.NONE)
+    override def handleInputRows(key: K, rows: Iterator[I], timerValues: TimerValues): Iterator[S] = {
+      val next = order(rows).foldLeft(Option(state.get()).getOrElse(zero(key)))(step)
+      state.update(next)
+      Iterator.single(next)
+    }
+  }
+
+  /** A micro-batch's events in FULL-precision time order: getTime
+    * truncates to milliseconds, but the batch oracles sort struct(ts, …)
+    * at microsecond precision (Testdata events carry micros) —
+    * same-millisecond events must fold in the same order or
+    * order-sensitive state (EWMA) diverges from the batch hash. getNanos
+    * carries the full sub-second fraction, so (getTime, getNanos, id) is
+    * total and consistent with Spark's timestamp ordering.
+    */
+  private def inEventOrder[E](tsAndId: E => (java.sql.Timestamp, Long))(rows: Iterator[E]): Seq[E] =
+    rows.toVector.sortBy { e =>
+      val (ts, id) = tsAndId(e)
+      (ts.getTime, ts.getNanos.toLong, id)
+    }
 
   /** [[runRunningMaxWithState]]'s semantics on Spark 4's
     * `transformWithState` arbitrary-state API — the successor to
@@ -582,62 +596,30 @@ object StreamJobs {
     * [[org.apache.spark.sql.streaming.StatefulProcessorHandle]] (here
     * one `ValueState[RunningMax]`), per-variable TTL, timers, and
     * independent state evolution. The API requires the RocksDB state
-    * store provider, which is also the right store for state at scale
-    * — pinned here for the query's lifetime via the same scoped-conf
-    * pattern as [[runStatefulAgg]]. StreamingStateSpec pins output
-    * parity with the flatMapGroupsWithState form.
+    * store provider, which [[runStream]] pins for the query's lifetime.
+    * StreamingStateSpec pins output parity with the
+    * flatMapGroupsWithState form.
     */
   def runRunningMaxTransformWithState(
       spark: SparkSession,
       sourceDir: String,
       workDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
     import spark.implicits._
-    val checkpoint = dir(workDir, s"checkpoint-tws-${java.util.UUID.randomUUID()}")
-    val queryName = s"tws_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-
-    class RunningMaxProcessor extends StatefulProcessor[String, KeyedValue, RunningMax] {
-      @transient private var state: ValueState[RunningMax] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[RunningMax](
-          "runningMax", Encoders.product[RunningMax], TTLConfig.NONE)
-      override def handleInputRows(
-          key: String,
-          rows: Iterator[KeyedValue],
-          timerValues: TimerValues): Iterator[RunningMax] = {
-        val batchMax = rows.map(_.v).foldLeft(Double.MinValue)(math.max)
-        val prev = Option(state.get()).getOrElse(RunningMax(key, Double.MinValue, 0L))
-        val next = RunningMax(key, math.max(prev.running_max, batchMax), prev.updates + 1)
-        state.update(next)
-        Iterator.single(next)
-      }
-    }
-
-    val stream = spark.readStream
-      .schema(keyedValueSchema)
-      .parquet(sourceDir)
+    val stream = fileStream(spark, keyedValueSchema, sourceDir)
       .as[KeyedValue]
       .groupByKey(_.k)
-      .transformWithState(new RunningMaxProcessor, TimeMode.None(), OutputMode.Append())
-
-    val q = withScopedConf(
-      spark,
-      Seq(
-        statefulStart,
-        // state-partition policy (see runStatefulAgg): 8 stores, not 200
-        "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
-      stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+      .transformWithState(
+        new FoldProcessor[String, KeyedValue, RunningMax](
+          k => RunningMax(k, Double.MinValue, 0L),
+          // one step per micro-batch, its maximum, so `updates` counts
+          // batches as the flatMapGroupsWithState form does
+          rows => Seq(rows.maxBy(_.v)(Ordering.Double.TotalOrdering)),
+          (s, e) => RunningMax(s.k, math.max(s.running_max, e.v), s.updates + 1)),
+        TimeMode.None(),
+        OutputMode.Append())
+    val q = runStream(
+      stream.toDF(), checkpointIn(workDir, "tws"), Sink.Memory, transformWithState = true)
+    spark.table(q.name)
   }
 
   final case class EwmaEvent(user_id: Long, ts: java.sql.Timestamp, event_id: Long, value: Double)
@@ -661,7 +643,9 @@ object StreamJobs {
     * Each batch APPENDS the updated running state per touched user;
     * the caller unions the runs' outputs and keeps the last emission
     * per user (max `n_events` — strictly increasing, so the pick is
-    * deterministic).
+    * deterministic). The sink is foreachBatch, not a memory sink: the
+    * second wave's run RESUMES from the checkpoint, which the memory
+    * sink refuses to do.
     */
   def runStreamingEwma(
       spark: SparkSession,
@@ -669,66 +653,25 @@ object StreamJobs {
       schema: StructType,
       checkpoint: String,
       outDir: String): Unit = {
-    import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
     import spark.implicits._
-
-    class EwmaProcessor extends StatefulProcessor[Long, EwmaEvent, EwmaState] {
-      @transient private var state: ValueState[EwmaState] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[EwmaState](
-          "ewma", Encoders.product[EwmaState], TTLConfig.NONE)
-      override def handleInputRows(
-          key: Long,
-          rows: Iterator[EwmaEvent],
-          timerValues: TimerValues): Iterator[EwmaState] = {
-        // FULL-precision time order: getTime truncates to milliseconds,
-        // but the batch oracles sort struct(ts, …) at microsecond
-        // precision (Testdata events carry micros) — same-millisecond
-        // events must fold in the same order or order-sensitive state
-        // (EWMA) diverges from the batch hash. getNanos carries the
-        // full sub-second fraction, so (getTime, getNanos, id) is total
-        // and consistent with Spark's timestamp ordering.
-        val sorted = rows.toVector
-          .sortBy(e => (e.ts.getTime, e.ts.getNanos.toLong, e.event_id))
-        val prev = Option(state.get())
-        val next = sorted.foldLeft(
-          prev.getOrElse(EwmaState(key, 0L, 0.0))) { (acc, e) =>
-          val ewma = if (acc.n_events == 0L) e.value else 0.5d * e.value + 0.5d * acc.ewma
-          EwmaState(key, acc.n_events + 1, ewma)
-        }
-        state.update(next)
-        Iterator.single(next)
-      }
-    }
-
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
+    val stream = fileStream(spark, schema, sourceDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[EwmaEvent]
       .groupByKey(_.user_id)
-      .transformWithState(new EwmaProcessor, TimeMode.None(), OutputMode.Append())
-
-    val q = withScopedConf(
-      spark,
-      Seq(
-        statefulStart,
-        // state-partition policy (see runStatefulAgg): 8 stores, not 200
-        "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
-      // foreachBatch, not a memory sink: the second wave's run RESUMES
-      // from the checkpoint, which the memory sink refuses to do
-      stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[EwmaState], _: Long) =>
-          batch.write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
+      .transformWithState(
+        new FoldProcessor[Long, EwmaEvent, EwmaState](
+          k => EwmaState(k, 0L, 0.0),
+          inEventOrder[EwmaEvent](e => (e.ts, e.event_id)),
+          (acc, e) => EwmaState(
+            acc.user_id,
+            acc.n_events + 1,
+            if (acc.n_events == 0L) e.value else 0.5d * e.value + 0.5d * acc.ewma)),
+        TimeMode.None(),
+        OutputMode.Append())
+    runStream(
+      stream.toDF(), checkpoint,
+      Sink.ForeachBatch((batch, _) => batch.write.mode("append").parquet(outDir)),
+      transformWithState = true)
   }
 
   final case class FunnelEvent(
@@ -753,79 +696,44 @@ object StreamJobs {
       schema: StructType,
       checkpoint: String,
       outDir: String): Unit = {
-    import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
     import spark.implicits._
     val sent = 4102444800L
-
-    class FunnelProcessor extends StatefulProcessor[Long, FunnelEvent, FunnelState] {
-      @transient private var state: ValueState[FunnelState] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[FunnelState](
-          "funnel", Encoders.product[FunnelState], TTLConfig.NONE)
-      override def handleInputRows(
-          key: Long,
-          rows: Iterator[FunnelEvent],
-          timerValues: TimerValues): Iterator[FunnelState] = {
-        // FULL-precision time order: getTime truncates to milliseconds,
-        // but the batch oracles sort struct(ts, …) at microsecond
-        // precision (Testdata events carry micros) — same-millisecond
-        // events must fold in the same order or order-sensitive state
-        // (EWMA) diverges from the batch hash. getNanos carries the
-        // full sub-second fraction, so (getTime, getNanos, id) is total
-        // and consistent with Spark's timestamp ordering.
-        val sorted = rows.toVector
-          .sortBy(e => (e.ts.getTime, e.ts.getNanos.toLong, e.event_id))
-        val prev = Option(state.get()).getOrElse(FunnelState(key, 0L, sent, sent, sent))
-        val next = sorted.foldLeft(prev) { (acc, e) =>
-          val t = e.ts.getTime / 1000L // second truncation = the batch fold's unix_timestamp
-          val upd = e.event_type match {
-            case "signup" if acc.s == sent => acc.copy(s = t)
-            case "click" if acc.s < sent && acc.c == sent && t > acc.s => acc.copy(c = t)
-            case "purchase" if acc.c < sent && acc.p == sent && t > acc.c => acc.copy(p = t)
-            case _ => acc
-          }
-          upd.copy(n = acc.n + 1)
-        }
-        state.update(next)
-        Iterator.single(next)
-      }
-    }
-
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
+    val stream = fileStream(spark, schema, sourceDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .filter(col("event_type").isin("signup", "click", "purchase"))
       .as[FunnelEvent]
       .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor, TimeMode.None(), OutputMode.Append())
-
-    val q = withScopedConf(
-      spark,
-      Seq(
-        statefulStart,
-        // state-partition policy (see runStatefulAgg): 8 stores, not 200
-        "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
-      stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[FunnelState], _: Long) =>
-          batch.write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
+      .transformWithState(
+        new FoldProcessor[Long, FunnelEvent, FunnelState](
+          k => FunnelState(k, 0L, sent, sent, sent),
+          inEventOrder[FunnelEvent](e => (e.ts, e.event_id)),
+          (acc, e) => {
+            val t = e.ts.getTime / 1000L // second truncation = the batch fold's unix_timestamp
+            val upd = e.event_type match {
+              case "signup" if acc.s == sent => acc.copy(s = t)
+              case "click" if acc.s < sent && acc.c == sent && t > acc.s => acc.copy(c = t)
+              case "purchase" if acc.c < sent && acc.p == sent && t > acc.c => acc.copy(p = t)
+              case _ => acc
+            }
+            upd.copy(n = acc.n + 1)
+          }),
+        TimeMode.None(),
+        OutputMode.Append())
+    runStream(
+      stream.toDF(), checkpoint,
+      Sink.ForeachBatch((batch, _) => batch.write.mode("append").parquet(outDir)),
+      transformWithState = true)
   }
 
   /** Stream-stream LEFT OUTER join: like [[runStreamStreamJoin]] but
     * unmatched left rows must also emit — which can only happen once
     * the watermark proves no future right row can match, so the caller
-    * appends far-future sentinel rows (passing BOTH side filters, so
-    * both per-stream watermarks advance) after the real data drains.
-    * Sentinel-keyed output is filtered back out via `sentinelPred`.
+    * stages far-future sentinel rows (passing BOTH side filters, so
+    * both per-stream watermarks advance) in the source before the run.
+    * Both watermarks derive from the first batch's max event time, so
+    * the NULL-padded rows emit in a later batch, which the second drain
+    * pass observes. Sentinel-keyed output is filtered back out via
+    * `sentinelPred`.
     */
   def runStreamStreamJoinOuter(
       spark: SparkSession,
@@ -837,14 +745,13 @@ object StreamJobs {
       keyCol: String,
       rangeCondition: (DataFrame, DataFrame) => org.apache.spark.sql.Column,
       project: DataFrame => DataFrame,
-      pushSentinels: () => Unit,
       sentinelPred: org.apache.spark.sql.Column,
       workDir: String,
       watermarkDelay: String = "1 minutes"): DataFrame =
     runStreamStreamJoinImpl(
       spark, sourceDir, schema, tsCol, leftFilter, rightFilter, keyCol,
       rangeCondition, project, workDir, watermarkDelay,
-      joinType = "left_outer", sentinel = Some((pushSentinels, sentinelPred)))
+      joinType = "left_outer", sentinelPred = Some(sentinelPred))
 
   /** Streaming exact dedup (training-data pipeline on a stream): drop
     * duplicate keys arriving within the watermark horizon —
@@ -861,20 +768,10 @@ object StreamJobs {
       keyCols: Seq[String],
       workDir: String,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    // checkpoint UUID'd like every other memory-sink helper here: the
-    // sink table is fresh per call, so resuming offsets from a previous
-    // call's checkpoint would silently omit already-processed rows
-    val checkpoint = dir(workDir, s"checkpoint-dedup-${java.util.UUID.randomUUID()}")
-    val queryName = s"dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
+    val stream = fileStream(spark, schema, sourceDir)
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-    val q = startMemorySink(spark, stream, queryName, checkpoint, statePartitions = 8, stateful = true)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    spark.table(runStream(stream, checkpointIn(workDir, "dedup"), Sink.Memory, stateful = true).name)
   }
 
   /** Streaming corpus ingest with dedup against the lake: each
@@ -908,16 +805,11 @@ object StreamJobs {
       schema: StructType,
       textCol: String,
       table: graft.tables.LakeTable,
-      workDir: String): Unit = {
-    val checkpoint = dir(workDir, "checkpoint-dedup-ingest")
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(sourceDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      workDir: String): Unit =
+    runStream(
+      fileStream(spark, schema, sourceDir, Some(Int.MaxValue)),
+      checkpointIn(workDir, "dedup-ingest", fresh = false),
+      Sink.ForeachBatch { (batch, _) =>
         val withFp = batch.withColumn(
           "fp", graft.ext.TextAnalysis.fingerprintMd5(col(textCol)))
         val fresh =
@@ -927,12 +819,8 @@ object StreamJobs {
         // an all-duplicate batch publishes no version; the row count rides
         // the write job, so the anti-join runs once per micro-batch
         table.append(fresh, skipIfEmpty = true)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      },
+      availableNow = true)
 
   /** Streaming append into a lake table with EXACTLY-ONCE table state
     * under crash-replay: `foreachBatch` commits each micro-batch through
@@ -963,23 +851,13 @@ object StreamJobs {
       workDir: String,
       writerId: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val checkpoint = dir(workDir, "checkpoint-txn-append")
+    val checkpoint = checkpointIn(workDir, "txn-append", fresh = false)
     val id = writerId.getOrElse(checkpoint)
-    val reader = spark.readStream.schema(schema)
-    val withCap = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    val q = withCap
-      .parquet(sourceDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        table.append(batch, txn = Some((id, batchId)))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runStream(
+      fileStream(spark, schema, sourceDir, maxFilesPerTrigger),
+      checkpoint,
+      Sink.ForeachBatch((batch, batchId) => table.append(batch, txn = Some((id, batchId)))),
+      availableNow = true)
   }
 
   /** Streaming upsert into a lakehouse table: each micro-batch is
@@ -987,7 +865,10 @@ object StreamJobs {
     * stream-to-MERGE bridge Iceberg/Delta users rely on, expressed over
     * [[graft.tables.LakeTable]]. Idempotence note: replayed batches
     * re-merge the same rows, and SCD1 upsert is idempotent, so
-    * at-least-once delivery still yields exactly-once table state.
+    * at-least-once delivery still yields exactly-once table state. An
+    * empty micro-batch publishes no version: `mergeScd1` counts the
+    * source rows on its rewrite's own write job, so no batch pays a
+    * separate emptiness probe.
     */
   def runStreamingUpsert(
       spark: SparkSession,
@@ -995,27 +876,12 @@ object StreamJobs {
       schema: StructType,
       keyCols: Seq[String],
       table: graft.tables.LakeTable,
-      workDir: String): Unit = {
-    val checkpoint = dir(workDir, "checkpoint-upsert")
-    val q = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // mergeScd1 would publish nothing for an empty batch on its own,
-        // but only after rewriting the whole target and dropping the
-        // result; probing one micro-batch is the cheaper way to skip
-        if (!batch.isEmpty) {
-          graft.tables.Merge.mergeScd1(table, batch, keyCols)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      workDir: String): Unit =
+    runStream(
+      fileStream(spark, schema, sourceDir),
+      checkpointIn(workDir, "upsert", fresh = false),
+      Sink.ForeachBatch((batch, _) => graft.tables.Merge.mergeScd1(table, batch, keyCols)),
+      availableNow = true)
 
   /** The full two-hop pipeline on a batch input, end to end: stage →
     * ingest hop → bronze → windowed-agg hop → finalized candles.
@@ -1033,12 +899,11 @@ object StreamJobs {
       valueCol: String,
       workDir: String,
       windowDuration: String = "15 minutes",
-      watermarkDelay: String = "1 minutes",
-      stateStoreProvider: Option[String] = None): DataFrame =
+      watermarkDelay: String = "1 minutes"): DataFrame =
     runTwoHopStateful(
       spark, input, payloadSchema, tsCol, idCol, keyCol, workDir,
       stream => Candles.candles(stream, tsCol, idCol, keyCol, valueCol, windowDuration),
-      watermarkDelay, stateStoreProvider)
+      watermarkDelay)
 
   /** Generic two-hop pipeline: stage → ingest hop → bronze → any
     * watermarked stateful aggregation, flushed to a fixpoint with a
@@ -1054,8 +919,7 @@ object StreamJobs {
       keyCol: String,
       workDir: String,
       agg: DataFrame => DataFrame,
-      watermarkDelay: String = "1 minutes",
-      stateStoreProvider: Option[String] = None): DataFrame = {
+      watermarkDelay: String = "1 minutes"): DataFrame = {
     val stage = dir(workDir, "stage")
     val sentinelKey = "__sentinel__"
 
@@ -1067,8 +931,7 @@ object StreamJobs {
     // max(ts); ride it on the staging write job via observe — one pass
     // over the input, not a separate full-scan aggregation first (at
     // corpus scale the second scan is the dominant cost of this hop).
-    val obs = new org.apache.spark.sql.Observation(
-      s"stage-max-${java.util.UUID.randomUUID()}")
+    val obs = new org.apache.spark.sql.Observation(s"stage-max-${UUID.randomUUID()}")
     stageEnvelope(input.observe(obs, max(col(tsCol)).as("maxTs")), Seq(keyCol, idCol), stage)
     val maxTs = scala.concurrent.Await
       .result(obs.future, scala.concurrent.duration.Duration(60, "seconds"))
@@ -1083,7 +946,6 @@ object StreamJobs {
 
     runStatefulAgg(
       spark, bronze, bronzeSchema, tsCol, workDir, () => (),
-      agg, keyCol, watermarkDelay, sentinelKey,
-      stateStoreProvider = stateStoreProvider)
+      agg, keyCol, watermarkDelay, sentinelKey)
   }
 }

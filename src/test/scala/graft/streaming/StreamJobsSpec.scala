@@ -18,6 +18,18 @@ class StreamJobsSpec extends SparkSpec {
 
   private def mk(s: String) = Timestamp.valueOf(s)
 
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with `key` set to `value` on the session, then restore it. */
+  private def withSessionConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body
+    finally spark.conf.set(key, prev)
+  }
+
   test("two-hop streaming candles equal batch candles") {
     val wd = scratchDir("twohop")
     val input = Seq(
@@ -49,13 +61,12 @@ class StreamJobsSpec extends SparkSpec {
       (3L, mk("2024-01-01 10:14:59"), "A", 7.0),
       (4L, mk("2024-01-01 10:20:00"), "A", 3.0),
       (5L, mk("2024-01-01 10:01:00"), "B", 2.0)).toDF("id", "ts", "sym", "v")
-    val rocks = StreamJobs
-      .runTwoHopCandles(
-        spark, input, schema, "ts", "id", "sym", "v", scratchDir("rocks"),
-        stateStoreProvider = Some(
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-      .orderBy("sym", "start_window")
-      .collect()
+    val rocks = withSessionConf(providerKey, rocksDb) {
+      StreamJobs
+        .runTwoHopCandles(spark, input, schema, "ts", "id", "sym", "v", scratchDir("rocks"))
+        .orderBy("sym", "start_window")
+        .collect()
+    }
     val default = StreamJobs
       .runTwoHopCandles(spark, input, schema, "ts", "id", "sym", "v", scratchDir("hdfsb"))
       .orderBy("sym", "start_window")
@@ -71,9 +82,10 @@ class StreamJobsSpec extends SparkSpec {
   test("state store provider conf is genuinely applied (bogus provider fails the query)") {
     val input = Seq((1L, mk("2024-01-01 10:00:10"), "A", 5.0)).toDF("id", "ts", "sym", "v")
     intercept[Exception] {
-      StreamJobs.runTwoHopCandles(
-        spark, input, schema, "ts", "id", "sym", "v", scratchDir("bogus"),
-        stateStoreProvider = Some("com.example.NoSuchProvider"))
+      withSessionConf(providerKey, "com.example.NoSuchProvider") {
+        StreamJobs.runTwoHopCandles(
+          spark, input, schema, "ts", "id", "sym", "v", scratchDir("bogus"))
+      }
     }
   }
 
@@ -191,5 +203,104 @@ class StreamJobsSpec extends SparkSpec {
       msg.contains("Failed to find") || msg.contains("DATA_SOURCE_NOT_FOUND") ||
         msg.toLowerCase.contains("provider"),
       s"failure should be provider lookup, got: ${e.getClass.getName}: $msg")
+  }
+
+  test("a session-set state store provider reaches the windowed agg") {
+    val wd = scratchDir("provider")
+    val input = Seq(
+      (1L, mk("2024-01-01 10:00:10"), "A", 5.0),
+      (2L, mk("2024-03-01 00:00:00"), "__sentinel__", 0.0)).toDF("id", "ts", "sym", "v")
+    StreamJobs.stageEnvelope(input, Seq("sym", "id"), s"$wd/stage")
+    val bronze = StreamJobs.runIngest(spark, schema, "ts", wd)
+    val bronzeSchema = spark.read.parquet(bronze).schema
+    val rows = withSessionConf(providerKey, rocksDb) {
+      StreamJobs.runWindowedAgg(
+        spark, bronze, bronzeSchema, "ts", "id", "sym", "v", wd, () => ()).collect()
+    }
+    assert(rows.map(_.getAs[String]("sym")).toSeq == Seq("A"))
+    // every offset-log entry records the confs the query runs under
+    val aggCheckpoint = new java.io.File(wd).listFiles().filter(_.getName.startsWith("checkpoint-agg-"))
+    assert(aggCheckpoint.length == 1)
+    val firstBatch = scala.io.Source.fromFile(new java.io.File(aggCheckpoint.head, "offsets/0"))
+    val logged = try firstBatch.mkString finally firstBatch.close()
+    assert(logged.contains(s""""$providerKey":"$rocksDb""""), logged)
+  }
+
+  test("every sink kind restores the session's stream confs, after a run and after a failed start") {
+    val rows = Seq(
+      (1L, mk("2024-01-01 10:00:10"), "A", 5.0),
+      (2L, mk("2024-01-01 10:05:00"), "B", 9.0)).toDF("id", "ts", "sym", "v")
+    val ewmaSchema = StructType(Seq(
+      StructField("user_id", LongType),
+      StructField("ts", TimestampType),
+      StructField("event_id", LongType),
+      StructField("value", DoubleType)))
+    def source(wd: String): String = {
+      rows.write.mode("append").parquet(s"$wd/src")
+      s"$wd/src"
+    }
+    // a checkpoint whose metadata cannot be read fails the query's start
+    def corrupt(checkpoint: String): Unit = {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(checkpoint))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(checkpoint, "metadata"), "not json")
+    }
+    // (sink kind, a run, a run whose start throws)
+    val cases: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("memory, stateless",
+        wd => StreamJobs.runStatelessTransform(spark, source(wd), schema, identity, wd).collect(),
+        // a streaming aggregation without a watermark cannot start in append mode
+        wd => StreamJobs.runStatelessTransform(
+          spark, source(wd), schema, _.groupBy("sym").count(), wd)),
+      ("memory, stateful",
+        wd => StreamJobs.runStreamingDedup(spark, source(wd), schema, "ts", Seq("id"), wd).collect(),
+        // an aggregation whose keys miss the watermark column cannot start in append mode
+        wd => StreamJobs.runStatefulAgg(
+          spark, source(wd), schema, "ts", wd, () => (), _.groupBy("sym").count(), "sym")),
+      ("foreachBatch, transformWithState",
+        wd => {
+          rows.select(col("id").as("user_id"), col("ts"), col("id").as("event_id"), col("v").as("value"))
+            .write.parquet(s"$wd/src")
+          StreamJobs.runStreamingEwma(spark, s"$wd/src", ewmaSchema, s"$wd/ckpt", s"$wd/out")
+        },
+        wd => {
+          corrupt(s"$wd/ckpt")
+          StreamJobs.runStreamingEwma(spark, source(wd), ewmaSchema, s"$wd/ckpt", s"$wd/out")
+        }),
+      ("foreachBatch, AvailableNow",
+        wd => StreamJobs.runStreamingUpsert(
+          spark, source(wd), schema, Seq("id"), graft.tables.LakeTable(spark, s"$wd/t"), wd),
+        wd => {
+          corrupt(s"$wd/checkpoint-upsert")
+          StreamJobs.runStreamingUpsert(
+            spark, source(wd), schema, Seq("id"), graft.tables.LakeTable(spark, s"$wd/t"), wd)
+        }),
+      ("AvailableNow file sink",
+        wd => {
+          StreamJobs.stageEnvelope(rows, Seq("sym", "id"), s"$wd/stage")
+          StreamJobs.runIngest(spark, schema, "ts", wd)
+        },
+        wd => {
+          corrupt(s"$wd/checkpoint-ingest")
+          StreamJobs.runIngest(spark, schema, "ts", wd)
+        }))
+
+    val keys = Seq(
+      "spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.adaptive.enabled",
+      providerKey)
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    // values that differ from every value a stream start scopes
+    val session = Seq("3", "false", "true", saved.last._2)
+    try {
+      keys.zip(session).foreach { case (k, v) => spark.conf.set(k, v) }
+      for ((kind, run, failingStart) <- cases) {
+        run(scratchDir("scoped-run"))
+        assert(keys.map(spark.conf.get) == session, s"$kind: after a run")
+        val e = intercept[Exception](failingStart(scratchDir("scoped-fail")))
+        assert(e.getStackTrace.exists(_.getMethodName == "start"), s"$kind: $e did not fail the start")
+        assert(keys.map(spark.conf.get) == session, s"$kind: after a failed start")
+      }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

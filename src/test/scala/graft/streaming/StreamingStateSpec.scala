@@ -162,4 +162,25 @@ class StreamingStateSpec extends SparkSpec {
     assert(rows(0).getAs[Double]("v") == 99.0) // upserted
     assert(rows(2).getAs[Double]("v") == 3.0)  // inserted
   }
+
+  test("streaming upsert runs no emptiness probe, and an empty wave publishes no version") {
+    val wd = scratchDir("supsert-empty")
+    val src = s"$wd/src"
+    val table = LakeTable(spark, s"$wd/table")
+    Seq((1L, mk("2024-01-01 10:00:00"), "a", 1.0), (2L, mk("2024-01-01 10:01:00"), "b", 2.0))
+      .toDF("id", "ts", "k", "v").write.mode("append").parquet(src)
+    val actions = actionsRunBy {
+      StreamJobs.runStreamingUpsert(spark, src, schema, Seq("id"), table, wd)
+      val before = table.latestVersion()
+      // a wave of one empty parquet file: a micro-batch with no rows
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+        .write.mode("append").parquet(src)
+      StreamJobs.runStreamingUpsert(spark, src, schema, Seq("id"), table, wd)
+      assert(table.latestVersion() == before, "an empty micro-batch published a version")
+    }
+    val commits = new java.io.File(s"$wd/checkpoint-upsert/commits").list().count(_.forall(_.isDigit))
+    assert(commits == 2, "the empty wave must run as its own micro-batch")
+    assert(table.read().count() == 2)
+    assert(!actions.contains("isEmpty"), s"actions: $actions")
+  }
 }
