@@ -69,9 +69,9 @@ import org.apache.spark.sql.SparkSession
   * `ResolveWriteToStream`, which warns at every stream start with AQE
   * on that AQE "is not supported in streaming DataFrames/Datasets and
   * will be disabled". The warning is wrong for a stateless stream,
-  * whose micro-batches keep AQE on in Spark 4.1, and a stateful stream
-  * starts with AQE off ([[graft.streaming.StreamJobs]]), so each such
-  * line is noise: one unit-test run logged it 39 times. The class's
+  * whose micro-batches keep AQE on in Spark 4.1, and Spark turns AQE
+  * off in a stateful stream itself (logging its own line from
+  * `MicroBatchExecution`), so each such line is noise: one unit-test run logged it 39 times. The class's
   * only other WARN, "Temporary checkpoint location created", cannot
   * fire here, because every stream start sets `checkpointLocation`.
   * Every other logger keeps the root level.

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Param
+
 /** Pure DataFrame → DataFrame operators: the projection / derivation /
   * cleaning surface of the reference (SURVEY §2.2), re-expressed as
   * Catalyst-friendly column expressions.
@@ -107,15 +109,18 @@ object Ops {
 
   /** Stamp ingestion metadata. `ingestTimestamp` defaults to
     * current_timestamp(); tests pass a fixed instant for determinism.
-    * `batchId` is a per-job driver-side constant (reference stamps
-    * uuid4() once per run via lit — _bronze_utils.py:55), not per-row.
+    * A fixed instant is bound as a [[graft.functions.Param]], so each
+    * run's stamp reuses one compiled class. `batchId` is a per-job
+    * driver-side constant (reference stamps uuid4() once per run via
+    * lit — _bronze_utils.py:55), not per-row; a string literal already
+    * reaches generated code by reference.
     */
   def addMetadata(
       df: DataFrame,
       ingestTimestamp: Option[java.sql.Timestamp] = None,
       dateParts: Boolean = true,
       batchId: Option[String] = None): DataFrame = {
-    val ts = ingestTimestamp.map(t => lit(t)).getOrElse(current_timestamp())
+    val ts = ingestTimestamp.map(Param.of).getOrElse(current_timestamp())
     val base = df.withColumn("ingest_timestamp", ts)
     val withParts =
       if (dateParts)

@@ -2,7 +2,11 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -65,6 +69,12 @@ object BatchElt {
 
   /** t1/t2 — CSV → bronze append with ingestion metadata, partitioned
     * by (ingest_year, ingest_month) like the reference DDL.
+    *
+    * `csvPath` is one file at every caller (a directory or a glob fails
+    * here). Its header is read on the driver ([[readCsv]]), so the load
+    * runs no Spark job before its write. The append records each commit
+    * dir's `ingest_timestamp` range, which the silver hop's incremental
+    * read prunes by.
     */
   def loadBronzeCsv(
       lake: Lakehouse,
@@ -72,19 +82,47 @@ object BatchElt {
       tableName: String,
       clock: Timestamp,
       batchId: String): Unit = {
-    val df = lake.spark.read
+    val stamped = Ops.addMetadata(readCsv(lake.spark, csvPath), Some(clock), dateParts = true, Some(batchId))
+    lake.table("bronze", tableName).append(stamped,
+      partitionBy = Seq("ingest_year", "ingest_month"), statsCols = Seq("ingest_timestamp"))
+  }
+
+  /** What `spark.read.option("header", "true").option("inferSchema",
+    * "false").csv(csvPath)` reads, without the Spark job that reads the
+    * header line to resolve its schema: the same all-string schema is
+    * passed in, named by Spark's own helpers. The first non-blank line
+    * is read through the session's Hadoop `FileSystem`
+    * (`CSVUtils.readHeaderLine`), a UTF-8 byte order mark is dropped
+    * (Hadoop's line reader drops it for the job), univocity's parser
+    * under Spark's `CSVOptions` splits it, and `CSVUtils.makeSafeHeader`
+    * names empty and duplicate fields (`_c<i>`, `<name><i>`,
+    * case-insensitively unless `spark.sql.caseSensitive`). An empty file
+    * has no columns.
+    */
+  private[pipeline] def readCsv(spark: SparkSession, csvPath: String): DataFrame = {
+    val path = new Path(csvPath)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    require(!csvPath.exists("{}[]*?\\".contains(_)), s"not one CSV file but a glob: $csvPath")
+    require(path.getFileSystem(hadoopConf).getFileStatus(path).isFile,
+      s"not one CSV file but a directory: $csvPath")
+    val options = new CSVOptions(Map("header" -> "true"),
+      spark.conf.get("spark.sql.csv.parser.columnPruning.enabled").toBoolean,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val names = CSVUtils.readHeaderLine(path, options, hadoopConf)
+      .flatMap(line => Option(new CsvParser(options.asParserSettings).parseLine(line.stripPrefix("\uFEFF"))))
+      .map(CSVUtils.makeSafeHeader(_, spark.conf.get("spark.sql.caseSensitive").toBoolean, options))
+      .getOrElse(Array.empty[String])
+    spark.read
+      .schema(StructType(names.map(StructField(_, StringType))))
       .option("header", "true")
-      .option("inferSchema", "false")
       .csv(csvPath)
-    val stamped = Ops.addMetadata(df, Some(clock), dateParts = true, Some(batchId))
-    lake.table("bronze", tableName).append(stamped, partitionBy = Seq("ingest_year", "ingest_month"))
   }
 
   /** t3 — bronze.raw_company → silver.processed_company (SCD2). */
   def processCompany(lake: Lakehouse, clock: Timestamp): Unit = {
     val bronze = lake.table("bronze", "raw_company")
     val silver = lake.table("silver", "processed_company")
-    val incoming = silver.incrementalFrom(bronze.read(), "ingest_timestamp")
+    val incoming = silver.incrementalFrom(bronze, "ingest_timestamp")
 
     val renamed = Ops.renameCols(
       incoming,
@@ -116,7 +154,7 @@ object BatchElt {
   def processIndustry(lake: Lakehouse): Unit = {
     val bronze = lake.table("bronze", "raw_industry")
     val silver = lake.table("silver", "processed_industry")
-    val incoming = silver.incrementalFrom(bronze.read(), "ingest_timestamp")
+    val incoming = silver.incrementalFrom(bronze, "ingest_timestamp")
 
     val normalized = Ops.normalizeSchema(incoming, silverIndustrySchema, keepExtra = true)
     val industryStringCols =

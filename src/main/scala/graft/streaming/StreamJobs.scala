@@ -113,10 +113,6 @@ object StreamJobs {
     *     after the sentinel batch commits), which runs only when this is
     *     on, so it is pinned rather than assumed to survive caller
     *     config;
-    *   - AQE off for a `stateful` stream: Spark turns it off in such a
-    *     stream's cloned session anyway. A stateless stream keeps AQE on
-    *     in its micro-batches (Spark 4.1), so its start keeps the
-    *     session's setting;
     *   - the RocksDB state store for `transformWithState`, which
     *     requires it. Every other stream keeps the session's
     *     `spark.sql.streaming.stateStore.providerClass`: at real state
@@ -137,7 +133,6 @@ object StreamJobs {
       out: DataFrame,
       checkpoint: String,
       sink: Sink,
-      stateful: Boolean = false,
       transformWithState: Boolean = false,
       availableNow: Boolean = false,
       flush: Option[() => Unit] = None): StreamingQuery = {
@@ -145,7 +140,6 @@ object StreamJobs {
     val confs = Seq(
       "spark.sql.shuffle.partitions" -> StatePartitions.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
-      Option.when(stateful || transformWithState)("spark.sql.adaptive.enabled" -> "false") ++
       Option.when(transformWithState)(stateStoreProvider -> rocksDbProvider)
     val writer = out.writeStream.outputMode("append").option("checkpointLocation", checkpoint)
     val sunk = sink match {
@@ -433,7 +427,7 @@ object StreamJobs {
       sentinelKey: String = "__sentinel__"): DataFrame = {
     val out = agg(fileStream(spark, bronzeSchema, bronzeDir).withWatermark(tsCol, watermarkDelay))
     val q = runStream(
-      out, checkpointIn(workDir, "agg"), Sink.Memory, stateful = true, flush = Some(pushSentinel))
+      out, checkpointIn(workDir, "agg"), Sink.Memory, flush = Some(pushSentinel))
     // null-safe inequality: `=!=` is null-killing, so a NULL group key
     // would silently vanish from the result while the batch oracle
     // keeps the null-key group — only the literal sentinel row drops
@@ -501,7 +495,7 @@ object StreamJobs {
 
     val tag = if (joinType == "inner") "ssjoin" else "ssouter"
     val q = runStream(
-      joined, checkpointIn(workDir, tag), Sink.Memory, stateful = true,
+      joined, checkpointIn(workDir, tag), Sink.Memory,
       flush = sentinelPred.map(_ => () => ()))
     sentinelPred.fold(spark.table(q.name))(pred => spark.table(q.name).filter(!pred))
   }
@@ -553,7 +547,7 @@ object StreamJobs {
       .groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
     spark.table(
-      runStream(stream.toDF(), checkpointIn(workDir, "fmgws"), Sink.Memory, stateful = true).name)
+      runStream(stream.toDF(), checkpointIn(workDir, "fmgws"), Sink.Memory).name)
   }
 
   /** The one `transformWithState` processor: per key, one value state
@@ -771,7 +765,7 @@ object StreamJobs {
     val stream = fileStream(spark, schema, sourceDir)
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-    spark.table(runStream(stream, checkpointIn(workDir, "dedup"), Sink.Memory, stateful = true).name)
+    spark.table(runStream(stream, checkpointIn(workDir, "dedup"), Sink.Memory).name)
   }
 
   /** Streaming corpus ingest with dedup against the lake: each

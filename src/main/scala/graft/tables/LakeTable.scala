@@ -127,8 +127,17 @@ final class LakeTable(val spark: SparkSession, val root: String) {
 
   def exists: Boolean = latestVersion().isDefined
 
-  def isEmpty: Boolean =
-    latestVersion().forall(v => readManifest(v).commitDirs.isEmpty)
+  def isEmpty: Boolean = liveTip().isEmpty
+
+  /** The latest manifest: one listing of the log and one parse, for a
+    * caller that would otherwise check and then read.
+    */
+  private[tables] def tip(): Option[Manifest] = latestVersion().map(readManifest)
+
+  /** [[tip]] when it lists a commit dir: the version a merge or an
+    * incremental read has rows to read from.
+    */
+  private[tables] def liveTip(): Option[Manifest] = tip().filter(_.commitDirs.nonEmpty)
 
   // ---- writes -------------------------------------------------------------
 
@@ -1200,9 +1209,12 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     val v = versionAsOf.orElse(latestVersion()).getOrElse {
       throw new IllegalStateException(s"table at $root has no commits")
     }
-    val m = readManifest(v)
-    readEntries(m, m.commitDirs.zip(m.effectiveScopes))
+    readAt(readManifest(v))
   }
+
+  /** Every row of the snapshot `m`. */
+  private[tables] def readAt(m: Manifest): DataFrame =
+    readEntries(m, m.commitDirs.zip(m.effectiveScopes))
 
   /** Time travel by wall clock (`FOR TIMESTAMP AS OF`): the newest
     * snapshot committed at or before `tsMillis`. Fails loudly when the
@@ -1221,7 +1233,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
       .getOrElse(throw new IllegalStateException(
         s"no snapshot of $root at or before $tsMillis " +
           "(timestamp predates the table or the snapshot was expired)"))
-    readEntries(at, at.commitDirs.zip(at.effectiveScopes))
+    readAt(at)
   }
 
   /** Assemble a DataFrame over a subset of a manifest's commit dirs. */
@@ -1369,10 +1381,29 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     val m = readManifest(v)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(colName), s"no column $colName in table $root")
+    val p = zonemapPrune(m, colName, lower, upper, lowerOpen = false)
+    val pruned = readSelected(m, p.entries)
+    val withLower = lower.map(l => pruned.filter(col(colName) >= lit(l))).getOrElse(pruned)
+    val residual = upper.map(u => withLower.filter(col(colName) <= lit(u))).getOrElse(withLower)
+    (residual, p.entries.map(_._1), p.skipped, p.files)
+  }
+
+  /** The zonemap pruner of [[readBetween]] and of the table form of
+    * [[incrementalFrom]]: the commit dirs of `m` that may hold a
+    * `colName` value in the interval from `lower` (strict when
+    * `lowerOpen`) to `upper`. See [[Pruned]].
+    */
+  private def zonemapPrune(
+      m: Manifest,
+      colName: String,
+      lower: Option[Any],
+      upper: Option[Any],
+      lowerOpen: Boolean): Pruned = {
+    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     val dt = schema(colName).dataType
     val lowerS = lower.map(Stats.toStringValue)
     val upperS = upper.map(Stats.toStringValue)
-    // overlap test on the closed interval: max >= lower && min <= upper.
+    // overlap test: max >= lower (max > lower when open) && min <= upper.
     // NaN anywhere (a float column whose batch max was NaN — Spark's
     // max() sorts NaN greatest — or a NaN bound) makes every IEEE
     // comparison false, which would SKIP dirs that hold valid rows:
@@ -1383,7 +1414,8 @@ final class LakeTable(val spark: SparkSession, val root: String) {
         (s == "NaN" || s == "-NaN")
     def overlaps(mn: String, mx: String): Boolean =
       isNaN(mn) || isNaN(mx) || lowerS.exists(isNaN) || upperS.exists(isNaN) ||
-        (lowerS.forall(l => Stats.geq(mx, l, dt)) && upperS.forall(u => Stats.geq(u, mn, dt)))
+        (lowerS.forall(l => if (lowerOpen) !Stats.geq(l, mx, dt) else Stats.geq(mx, l, dt)) &&
+          upperS.forall(u => Stats.geq(u, mn, dt)))
     val entries = m.commitDirs.zip(m.effectiveScopes).zip(m.effectiveDirStats)
       .zip(m.effectiveFileStats)
       .map { case (((d, scope), ds), fs) => (d, scope, ds, fs) }
@@ -1443,8 +1475,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
           case None => true // no range recorded — must scan
         }
       }
-    val skipped = skippedZone ++
-      dirPruned.map { case (d, _, ds, fs) => (d, Seq.empty[String], ds, fs) }
+    val skipped = skippedZone.map(_._1) ++ dirPruned.map(_._1)
     // file-granularity pass over the surviving dirs: a dir's file map
     // enumerates every parquet file written to it (dirs are immutable),
     // so selecting from the map is a complete, conservative refinement.
@@ -1470,10 +1501,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
         (d, scope, Some(surviving.keys.toSeq.sorted))
       }
     }
-    val pruned = readSelected(m, refined)
-    val withLower = lower.map(l => pruned.filter(col(colName) >= lit(l))).getOrElse(pruned)
-    val residual = upper.map(u => withLower.filter(col(colName) <= lit(u))).getOrElse(withLower)
-    (residual, kept.map(_._1), skipped.map(_._1), (scannedFiles, skippedFiles))
+    Pruned(refined, kept.map(_._3.get(colName)), skipped, (scannedFiles, skippedFiles))
   }
 
   /** Snapshot history (the reference queries `table.snapshots` —
@@ -2055,25 +2083,71 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     * /root/reference/src/silver/_silver_utils.py:35-49): full source when
     * this table is empty, else strictly-greater-than the max of `tsCol`
     * already landed here. The strict `>` (not `>=`) is a documented
-    * reference behavior (SURVEY §7.5.5).
+    * reference behavior (SURVEY §7.5.5). The comparison is a literal,
+    * so it pushes down to the source's scan.
     */
-  def incrementalFrom(source: DataFrame, tsCol: String): DataFrame = {
-    if (!exists || isEmpty) source
-    else {
-      val m = readManifest(latestVersion().get)
-      m.colMax.get(tsCol) match {
-        case Some(s) =>
-          // manifest-level watermark (maintained by append's statsCols):
-          // the probe reads NO data files — metadata only
-          val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-          source.filter(col(tsCol) > lit(Stats.fromStringValue(s, schema(tsCol).dataType)))
-        case None =>
-          val hwmRow = read().agg(max(col(tsCol))).head()
-          if (hwmRow.isNullAt(0)) source
-          else source.filter(col(tsCol) > lit(hwmRow.get(0)))
-      }
+  def incrementalFrom(source: DataFrame, tsCol: String): DataFrame =
+    watermark(tsCol).fold(source) { case (hwm, _) => after(source, tsCol, hwm) }
+
+  /** [[incrementalFrom]] over a lake table: the same rows as
+    * `incrementalFrom(source.read(), tsCol)`, read from only the
+    * source's commit dirs that can hold one, by the manifest's
+    * per-dir `tsCol` ranges (the source declares `tsCol` in
+    * `statsCols`), the way Iceberg and Delta plan an incremental read:
+    *   - a dir whose recorded max is at or below the watermark is
+    *     skipped; a dir with no recorded range is read;
+    *   - if a read dir may hold a row at or below the watermark (its min
+    *     is, or it has no range), the rows are filtered by the literal
+    *     `tsCol > watermark`, as in the DataFrame form;
+    *   - otherwise every non-null row qualifies, so the filter is
+    *     `tsCol IS NOT NULL`: the same rows (stats ignore NULLs, and
+    *     `>` drops them) from a predicate that is the same every run, so
+    *     the run's plan reuses the last run's compiled classes.
+    * The source's column must have the watermark's type for its ranges
+    * to be compared; else every dir is read, under the literal filter.
+    */
+  def incrementalFrom(source: LakeTable, tsCol: String): DataFrame = {
+    val m = source.tip().getOrElse {
+      throw new IllegalStateException(s"table at ${source.root} has no commits")
+    }
+    watermark(tsCol) match {
+      case None => source.readAt(m)
+      case Some((hwm, dt)) =>
+        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        if (!schema.fields.exists(f => f.name == tsCol && f.dataType == dt))
+          after(source.readAt(m), tsCol, hwm)
+        else {
+          val p = source.zonemapPrune(m, tsCol, Some(hwm), None, lowerOpen = true)
+          val hwmS = Stats.toStringValue(hwm)
+          val pruned = source.readSelected(m, p.entries)
+          val straddles = p.ranges.exists(_.forall { case (mn, _) => Stats.geq(hwmS, mn, dt) })
+          if (straddles) after(pruned, tsCol, hwm) else pruned.filter(col(tsCol).isNotNull)
+        }
     }
   }
+
+  /** `df`'s rows with `tsCol` strictly above `hwm`, by a literal. */
+  private def after(df: DataFrame, tsCol: String, hwm: Any): DataFrame =
+    df.filter(col(tsCol) > lit(hwm))
+
+  /** This table's high watermark on `tsCol` and its type, from one read
+    * of the tip: the manifest's running max when `statsCols` declared
+    * the column (no data file read), else an aggregation over the
+    * table. None when the table holds no commit dir or no non-null
+    * value.
+    */
+  private def watermark(tsCol: String): Option[(Any, DataType)] =
+    liveTip().flatMap { m =>
+      m.colMax.get(tsCol) match {
+        case Some(s) =>
+          val dt = DataType.fromJson(m.schemaJson).asInstanceOf[StructType](tsCol).dataType
+          Some((Stats.fromStringValue(s, dt), dt))
+        case None =>
+          val agg = readAt(m).agg(max(col(tsCol)))
+          val row = agg.head()
+          if (row.isNullAt(0)) None else Some((row.get(0), agg.schema.head.dataType))
+      }
+    }
 }
 
 /** A concurrent writer claimed this manifest version first (the CAS in
@@ -2112,6 +2186,18 @@ object LakeTable {
         s"parquet.bloom.filter.enabled#$c" -> "true",
         s"parquet.bloom.filter.expected.ndv#$c" -> ndv.toString)
     }.toMap
+
+  /** What [[LakeTable.zonemapPrune]] keeps: the read entries (dir,
+    * partition scope, file selection with `None` = the whole dir), each
+    * kept dir's recorded (min, max) of the probed column (`None` = no
+    * range), the skipped dirs, and (files scanned, files skipped) over
+    * the dirs that carry per-file ranges.
+    */
+  private final case class Pruned(
+      entries: Seq[(String, Seq[String], Option[Seq[String]])],
+      ranges: Seq[Option[(String, String)]],
+      skipped: Seq[String],
+      files: (Int, Int))
 
   /** One manifest = one table version. Hand-rolled JSON (no external
     * deps); schema is Spark's own StructType.json.

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Param
+
 /** MERGE INTO rewrites: SCD Type 1 (upsert) and SCD Type 2
   * (close-then-insert versioning), with the exact observable semantics of
   * the reference's two-pass Iceberg MERGEs
@@ -50,10 +52,12 @@ object Merge {
   private val SourceRow = "__graft_source_row"
 
   /** Stamp SCD2 bookkeeping columns onto a source batch
-    * (reference `_add_scd2_cols`, _silver_utils.py:108-113).
+    * (reference `_add_scd2_cols`, _silver_utils.py:108-113). `at` is
+    * bound as a [[Param]], as is the close stamp of [[scd2Rewrite]]: a
+    * merge at a new instant reuses the classes of the last one.
     */
   def addScd2Cols(df: DataFrame, at: Timestamp): DataFrame =
-    df.withColumn(StartCol, lit(at))
+    df.withColumn(StartCol, Param.of(at))
       .withColumn(EndCol, lit(null).cast("timestamp"))
       .withColumn(CurrentCol, lit(1))
 
@@ -94,7 +98,7 @@ object Merge {
     // the flag marks exactly one output row per source row: the insert,
     // or the untouched target row that made it a no-op
     val targetRow = struct(dataCols.map {
-      case EndCol => when(close, lit(at)).otherwise(col(s"t.$EndCol")).as(EndCol)
+      case EndCol => when(close, Param.of(at)).otherwise(col(s"t.$EndCol")).as(EndCol)
       case CurrentCol => when(close, lit(0)).otherwise(col(s"t.$CurrentCol")).as(CurrentCol)
       case c => col(s"t.$c").as(c)
     } :+ unchanged.as(SourceRow): _*)
@@ -140,11 +144,13 @@ object Merge {
       at: Timestamp,
       statsCols: Seq[String] = Seq.empty): Long = {
     val stamped = addScd2Cols(source, at)
-    if (!table.exists || table.isEmpty)
-      return table.append(stamped, statsCols = statsCols, skipIfEmpty = true)
-    table.overwrite(
-      scd2Rewrite(table.read(), stamped, keyCols, trackedCols, at),
-      statsCols = statsCols, batchFlag = Some(SourceRow))
+    table.liveTip() match {
+      case None => table.append(stamped, statsCols = statsCols, skipIfEmpty = true)
+      case Some(m) =>
+        table.overwrite(
+          scd2Rewrite(table.readAt(m), stamped, keyCols, trackedCols, at),
+          statsCols = statsCols, batchFlag = Some(SourceRow))
+    }
   }
 
   /** SCD Type 1 merge: upsert — matched keys take all source columns,
@@ -157,10 +163,12 @@ object Merge {
       source: DataFrame,
       keyCols: Seq[String],
       statsCols: Seq[String] = Seq.empty): Long = {
-    if (!table.exists || table.isEmpty)
-      return table.append(source, statsCols = statsCols, skipIfEmpty = true)
-    table.overwrite(scd1Rewrite(table.read(), source, keyCols),
-      statsCols = statsCols, batchFlag = Some(SourceRow))
+    table.liveTip() match {
+      case None => table.append(source, statsCols = statsCols, skipIfEmpty = true)
+      case Some(m) =>
+        table.overwrite(scd1Rewrite(table.readAt(m), source, keyCols),
+          statsCols = statsCols, batchFlag = Some(SourceRow))
+    }
   }
 
   /** SCD1 upsert WITH SCHEMA EVOLUTION — the Delta
@@ -185,9 +193,10 @@ object Merge {
       source: DataFrame,
       keyCols: Seq[String],
       statsCols: Seq[String] = Seq.empty): Long = {
-    if (!table.exists || table.isEmpty)
-      return table.append(source, statsCols = statsCols)
-    val target = table.read()
+    val target = table.liveTip() match {
+      case None => return table.append(source, statsCols = statsCols)
+      case Some(m) => table.readAt(m)
+    }
     val tCols = target.columns.toSeq
     val sCols = source.columns.toSeq
     require(keyCols.forall(sCols.contains), s"source must carry merge keys $keyCols")
@@ -299,9 +308,10 @@ object Merge {
       source: DataFrame,
       keyCols: Seq[String],
       partCol: String): Long = {
-    if (!table.exists || table.isEmpty)
-      return table.append(source, partitionBy = Seq(partCol), skipIfEmpty = true)
-    val target = table.read()
+    val target = table.liveTip() match {
+      case None => return table.append(source, partitionBy = Seq(partCol), skipIfEmpty = true)
+      case Some(m) => table.readAt(m)
+    }
     val affected = affectedPartitions(target, source, keyCols, partCol)
     val targetAff = target.filter(col(partCol).cast("string").isin(affected: _*))
     table.replacePartitions(scd1Rewrite(targetAff, source, keyCols), affected, Some(SourceRow))
@@ -319,9 +329,10 @@ object Merge {
       at: Timestamp,
       partCol: String): Long = {
     val stamped = addScd2Cols(source, at)
-    if (!table.exists || table.isEmpty)
-      return table.append(stamped, partitionBy = Seq(partCol), skipIfEmpty = true)
-    val target = table.read()
+    val target = table.liveTip() match {
+      case None => return table.append(stamped, partitionBy = Seq(partCol), skipIfEmpty = true)
+      case Some(m) => table.readAt(m)
+    }
     val affected = affectedPartitions(target, stamped, keyCols, partCol)
     val targetAff = target.filter(col(partCol).cast("string").isin(affected: _*))
     table.replacePartitions(

@@ -19,24 +19,29 @@ trait SparkSpec extends AnyFunSuite {
 
   /** Action names (`isEmpty`, `collect`, `command`, ...) of the SQL
     * executions `f` runs in this session or in a session cloned from it
-    * after this call, such as a stream's micro-batches. Listener events
-    * arrive asynchronously on one shared queue, so tagged marker actions
-    * run before and after `f` bound what is counted: executions reported
-    * before the first marker ended before `f` started, and once the
-    * second is reported, so is every execution of `f`.
+    * after this call, such as a stream's micro-batches.
     */
-  def actionsRunBy(f: => Unit): Seq[String] = {
+  def actionsRunBy(f: => Unit): Seq[String] = executionsRunBy(f).map(_._1)
+
+  /** The SQL executions (action name, query execution) `f` runs, as in
+    * [[actionsRunBy]]. Listener events arrive asynchronously on one
+    * shared queue, so tagged marker actions run before and after `f`
+    * bound what is counted: executions reported before the first marker
+    * ended before `f` started, and once the second is reported, so is
+    * every execution of `f`.
+    */
+  def executionsRunBy(f: => Unit): Seq[(String, QueryExecution)] = {
     val tag = java.util.UUID.randomUUID().toString
     val (start, end) = (s"$tag-start", s"$tag-end")
     var started = false // read and set on the listener bus's thread only
-    val names = new ConcurrentLinkedQueue[String]()
+    val seenRuns = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     val marked = new CountDownLatch(1)
     val listener = new QueryExecutionListener {
       private def seen(funcName: String, qe: QueryExecution): Unit = {
         val plan = qe.logical.toString
         if (plan.contains(start)) started = true
         else if (plan.contains(end)) marked.countDown()
-        else if (started) names.add(funcName)
+        else if (started) seenRuns.add(funcName -> qe)
       }
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         seen(funcName, qe)
@@ -49,7 +54,7 @@ trait SparkSpec extends AnyFunSuite {
       f
       spark.range(1).select(lit(end)).collect()
       assert(marked.await(30, TimeUnit.SECONDS), "marker execution never reported")
-      names.asScala.toSeq
+      seenRuns.asScala.toSeq
     } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -2,6 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.streaming.runtime.IncrementalExecution
+import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -224,6 +227,46 @@ class StreamJobsSpec extends SparkSpec {
     val firstBatch = scala.io.Source.fromFile(new java.io.File(aggCheckpoint.head, "offsets/0"))
     val logged = try firstBatch.mkString finally firstBatch.close()
     assert(logged.contains(s""""$providerKey":"$rocksDb""""), logged)
+  }
+
+  test("stateful streams run without AQE and leave the session's AQE setting alone") {
+    val rows = Seq(
+      (1L, mk("2024-01-01 10:00:10"), "A", 5.0),
+      (2L, mk("2024-01-01 10:05:00"), "B", 9.0),
+      (3L, mk("2024-01-01 10:06:00"), "A", 7.0),
+      (4L, mk("2024-03-01 00:00:00"), "__sentinel__", 0.0)).toDF("id", "ts", "sym", "v")
+    def source(wd: String): String = {
+      rows.write.parquet(s"$wd/src")
+      s"$wd/src"
+    }
+    val stateful: Seq[(String, String => Unit)] = Seq(
+      "windowed agg" -> (wd => StreamJobs.runWindowedAgg(
+        spark, source(wd), schema, "ts", "id", "sym", "v", wd, () => ()).collect()),
+      "stream-stream inner join" -> (wd => StreamJobs.runStreamStreamJoin(
+        spark, source(wd), schema, "ts", col("v") > 6.0, col("v") <= 6.0, "sym",
+        (_, _) => col("l.ts") >= col("r.ts") && col("l.ts") <= col("r.ts") + expr("INTERVAL 1 HOUR"),
+        _.select(col("l.id").as("l_id"), col("r.id").as("r_id")), wd).collect()),
+      "dedup" -> (wd => StreamJobs.runStreamingDedup(
+        spark, source(wd), schema, "ts", Seq("id"), wd).collect()),
+      "transformWithState" -> { wd =>
+        rows.select(col("sym").as("k"), col("ts"), col("v")).write.parquet(s"$wd/src")
+        StreamJobs.runRunningMaxTransformWithState(spark, s"$wd/src", wd).collect()
+      })
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.get(aqe)
+    try {
+      for (session <- Seq("true", "false"); (kind, run) <- stateful) {
+        spark.conf.set(aqe, session)
+        val batches = executionsRunBy(run(scratchDir("stateful-aqe"))).collect {
+          case (_, i: IncrementalExecution) => i.executedPlan
+        }
+        assert(batches.nonEmpty, s"$kind: no micro-batch seen")
+        val last = batches.last
+        assert(last.exists(_.isInstanceOf[StatefulOperator]), s"$kind: not stateful\n$last")
+        assert(!last.exists(_.isInstanceOf[AdaptiveSparkPlanExec]), s"$kind: AQE on\n$last")
+        assert(spark.conf.get(aqe) == session, s"$kind: session AQE changed")
+      }
+    } finally spark.conf.set(aqe, saved)
   }
 
   test("every sink kind restores the session's stream confs, after a run and after a failed start") {
