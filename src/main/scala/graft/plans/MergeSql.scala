@@ -16,11 +16,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (`/root/reference/src/silver/_silver_utils.py:136-149,176-183`,
   * Iceberg `MERGE INTO`). Spark parses MERGE for any relation but
   * EXECUTES it only against DSv2 tables implementing row-level
-  * operations; lake tables are v1 paths, so the statement is
-  * intercepted at the PARSER (before any analysis can race: analyzer
-  * resolution would bind clause expressions to a snapshot-pinned view
-  * plan, while the merge must read the CURRENT table version at run
-  * time) and rewritten to [[GraftMergeIntoCommand]], which plans the
+  * operations; a `lake.<ns>.<t>` table is read-only to Spark, so the
+  * statement is intercepted at the PARSER (before analysis binds the
+  * clause expressions to a scan: the merge must read the CURRENT
+  * table version at run time) and rewritten to
+  * [[GraftMergeIntoCommand]], which plans the
   * standard copy-on-write rewrite — the same join-and-replace shape
   * Iceberg/Delta execute under their MERGE — and commits atomically
   * through `LakeTable.overwrite`.
@@ -43,72 +43,44 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * loudly. A target row matching multiple source rows is an error
   * (the SQL-standard / Delta / Iceberg cardinality rule), raised by the
   * rewrite's write job from the same one join, with no probe before it.
-  */
-object MergeSqlTargets {
-
-  // weak-keyed by the session itself (SparkSession uses identity
-  // equality) — registrations are session-scoped like the temp views
-  // they're registered alongside, and die WITH the session: no
-  // process-lifetime leak, no identity-hash collision inheriting
-  // another session's table roots
-  private val targets =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, String]]()
-
-  /** Register `name` as a MERGE-able SQL identifier for this session,
-    * backed by the lake table at `root`.
-    */
-  def register(spark: SparkSession, name: String, root: String): Unit = {
-    val m = targets.synchronized {
-      targets.computeIfAbsent(
-        spark, _ => scala.collection.concurrent.TrieMap.empty[String, String])
-    }
-    m(name.toLowerCase) = root
-    ()
-  }
-
-  /** Sessions currently holding registrations (weak — spec probe). */
-  private[plans] def liveSessionCount: Int = targets.synchronized(targets.size)
-
-  def rootFor(spark: SparkSession, nameParts: Seq[String]): Option[String] =
-    nameParts match {
-      case Seq(name) =>
-        targets.synchronized(Option(targets.get(spark)))
-          .flatMap(_.get(name.toLowerCase))
-      case Seq(cat, schema, table) =>
-        // a 3-part name under an attached GraftCatalog is always a
-        // valid target: <root>/<schema>/<table> (INSERT may create it).
-        // Resolution shares the catalog's own identifier→path rules
-        // (case-insensitive against existing dirs, traversal-checked),
-        // so DML and SELECT can never land on different directories.
-        val impl =
-          try spark.conf.get(s"spark.sql.catalog.$cat")
-          catch { case _: Exception => null }
-        if (impl != classOf[graft.tables.v2.GraftCatalog].getName) None
-        else {
-          val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
-          Some(graft.tables.v2.GraftCatalog.resolvePath(root, Seq(schema, table)).toString)
-        }
-      case _ => None
-    }
-}
-
-/** Delegating parser that rewrites a parsed `MergeIntoTable` whose
-  * target is a registered lake-table name into the runnable command.
-  * Everything else passes straight through to Spark's parser.
+  *
+  * The parser delegates to Spark's and rewrites only row-level
+  * statements whose target is a lake-table name; everything else
+  * passes straight through.
   */
 class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
   extends ParserInterface {
 
+  /** The table root a `<catalog>.<ns>.<table>` name resolves to, when
+    * `<catalog>` is an attached [[graft.tables.v2.GraftCatalog]]: such
+    * a name is always a valid target (INSERT may create it). Resolution
+    * shares the catalog's own identifier→path rules (case-insensitive
+    * against existing dirs, traversal-checked), so DML and SELECT can
+    * never land on different directories. Any other name is not ours.
+    */
+  private def rootFor(nameParts: Seq[String]): Option[String] = nameParts match {
+    case Seq(cat, schema, table) =>
+      val impl =
+        try session.conf.get(s"spark.sql.catalog.$cat")
+        catch { case _: Exception => null }
+      if (impl != classOf[graft.tables.v2.GraftCatalog].getName) None
+      else {
+        val root = session.conf.get(s"spark.sql.catalog.$cat.root")
+        Some(graft.tables.v2.GraftCatalog.resolvePath(root, Seq(schema, table)).toString)
+      }
+    case _ => None
+  }
+
   override def parsePlan(sqlText: String): LogicalPlan =
     delegate.parsePlan(sqlText) match {
-      case m: MergeIntoTable => rewriteIfRegistered(m)
-      case i: InsertIntoStatement => rewriteInsertIfRegistered(i)
-      case d: DeleteFromTable => rewriteDeleteIfRegistered(d)
-      case u: UpdateTable => rewriteUpdateIfRegistered(u)
-      case c: CreateTableAsSelect => rewriteCtasIfRegistered(c)
-      case t: TruncateTable => rewriteTruncateIfRegistered(t)
-      case a: AddCheckConstraint => rewriteAddConstraintIfRegistered(a)
-      case d: DropConstraint => rewriteDropConstraintIfRegistered(d)
+      case m: MergeIntoTable => rewriteMerge(m)
+      case i: InsertIntoStatement => rewriteInsert(i)
+      case d: DeleteFromTable => rewriteDelete(d)
+      case u: UpdateTable => rewriteUpdate(u)
+      case c: CreateTableAsSelect => rewriteCtas(c)
+      case t: TruncateTable => rewriteTruncate(t)
+      case a: AddCheckConstraint => rewriteAddConstraint(a)
+      case d: DropConstraint => rewriteDropConstraint(d)
       case other => other
     }
 
@@ -116,12 +88,12 @@ class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
     * DDL twin of `CALL lake.system.add_check_constraint`: validates
     * existing data, then records the predicate in the manifest so every
     * later write path enforces it. Spark 4 parses the statement natively
-    * ([[AddCheckConstraint]]); only registered lake-table names are
+    * ([[AddCheckConstraint]]); only lake-table names are
     * intercepted, everything else flows to the stock analyzer.
     */
-  private def rewriteAddConstraintIfRegistered(a: AddCheckConstraint): LogicalPlan = {
+  private def rewriteAddConstraint(a: AddCheckConstraint): LogicalPlan = {
     val partsOpt = a.child.collectFirst { case UnresolvedRelation(parts, _, _) => parts }
-    partsOpt.flatMap(parts => MergeSqlTargets.rootFor(session, parts)) match {
+    partsOpt.flatMap(rootFor) match {
       case None => a
       case Some(root) =>
         val cc = a.checkConstraint
@@ -141,12 +113,12 @@ class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
   }
 
   /** `ALTER TABLE t DROP CONSTRAINT [IF EXISTS] name`. */
-  private def rewriteDropConstraintIfRegistered(d: DropConstraint): LogicalPlan = {
+  private def rewriteDropConstraint(d: DropConstraint): LogicalPlan = {
     val partsOpt = d.child match {
       case org.apache.spark.sql.catalyst.analysis.UnresolvedTable(parts, _, _) => Some(parts)
       case _ => None
     }
-    partsOpt.flatMap(parts => MergeSqlTargets.rootFor(session, parts)) match {
+    partsOpt.flatMap(rootFor) match {
       case None => d
       case Some(root) =>
         require(!d.cascade, "graft DROP CONSTRAINT does not support CASCADE")
@@ -154,16 +126,16 @@ class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
     }
   }
 
-  /** `TRUNCATE TABLE` on a registered lake-table name: one
+  /** `TRUNCATE TABLE` on a lake-table name: one
     * empty-snapshot commit (the same shape as `DELETE FROM t` with no
     * WHERE) — history stays time-travel readable, no DV per row.
     */
-  private def rewriteTruncateIfRegistered(t: TruncateTable): LogicalPlan = {
+  private def rewriteTruncate(t: TruncateTable): LogicalPlan = {
     val nameParts = t.table match {
       case org.apache.spark.sql.catalyst.analysis.UnresolvedTable(parts, _, _) => parts
       case _ => return t
     }
-    MergeSqlTargets.rootFor(session, nameParts) match {
+    rootFor(nameParts) match {
       case None => t
       case Some(root) =>
         GraftDeleteFromCommand(root, nameParts.last, new SqlExprPayload(Literal.TrueLiteral))
@@ -176,12 +148,12 @@ class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
     * the schema contract (manifest v0 carries the query schema), the
     * same end state as CREATE-then-INSERT in one atomic commit.
     */
-  private def rewriteCtasIfRegistered(c: CreateTableAsSelect): LogicalPlan = {
+  private def rewriteCtas(c: CreateTableAsSelect): LogicalPlan = {
     val nameParts = c.name match {
       case UnresolvedIdentifier(parts, _) if parts.length == 3 => parts
       case _ => return c
     }
-    MergeSqlTargets.rootFor(session, nameParts) match {
+    rootFor(nameParts) match {
       case None => c
       case Some(root) =>
         val partCols = graft.tables.v2.GraftCatalog.partitionSpecs(c.partitioning)
@@ -217,16 +189,16 @@ class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
       !exprs.exists(_.exists(_.isInstanceOf[SubqueryExpression])),
       s"graft $statement does not support subqueries")
 
-  /** `DELETE FROM` a registered lake-table name — routed to the
+  /** `DELETE FROM` a lake-table name — routed to the
     * deletion-vector path ([[graft.tables.LakeTable.deleteWhereDV]]):
     * merge-on-read, so a 100-row delete costs a 100-key sidecar, never
     * a snapshot rewrite. A bare `DELETE FROM t` (condition literally
     * true) is a truncate: one empty-snapshot commit, no DV over every
     * row. History stays time-travel readable either way.
     */
-  private def rewriteDeleteIfRegistered(d: DeleteFromTable): LogicalPlan = {
+  private def rewriteDelete(d: DeleteFromTable): LogicalPlan = {
     val (nameParts, alias) = targetOf(d.table).getOrElse(return d)
-    MergeSqlTargets.rootFor(session, nameParts) match {
+    rootFor(nameParts) match {
       case None => d
       case Some(root) =>
         rejectSubqueries("DELETE", Seq(d.condition))
@@ -234,14 +206,14 @@ class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
     }
   }
 
-  /** `UPDATE ... SET ... [WHERE ...]` a registered lake-table name —
+  /** `UPDATE ... SET ... [WHERE ...]` a lake-table name —
     * the copy-on-write rewrite (per-column CASE projection over the
     * current snapshot, atomic overwrite commit), the same shape
     * Spark-on-Delta plans for UPDATE without deletion vectors.
     */
-  private def rewriteUpdateIfRegistered(u: UpdateTable): LogicalPlan = {
+  private def rewriteUpdate(u: UpdateTable): LogicalPlan = {
     val (nameParts, alias) = targetOf(u.table).getOrElse(return u)
-    MergeSqlTargets.rootFor(session, nameParts) match {
+    rootFor(nameParts) match {
       case None => u
       case Some(root) =>
         rejectSubqueries("UPDATE", u.assignments.map(_.value) ++ u.condition)
@@ -249,18 +221,18 @@ class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
     }
   }
 
-  /** `INSERT INTO` / `INSERT OVERWRITE` a registered lake-table name —
+  /** `INSERT INTO` / `INSERT OVERWRITE` a lake-table name —
     * the reference's first-load statement
     * (`/root/reference/src/silver/_silver_utils.py:130-135`). A
     * non-existent target is created by the first insert (the reference
     * pre-creates via engine DDL; here the commit log IS the table).
     */
-  private def rewriteInsertIfRegistered(ins: InsertIntoStatement): LogicalPlan = {
+  private def rewriteInsert(ins: InsertIntoStatement): LogicalPlan = {
     val nameParts = ins.table match {
       case UnresolvedRelation(parts, _, _) => parts
       case _ => return ins
     }
-    MergeSqlTargets.rootFor(session, nameParts) match {
+    rootFor(nameParts) match {
       case None => ins
       case Some(root) =>
         require(
@@ -271,14 +243,14 @@ class GraftMergeParser(session: SparkSession, delegate: ParserInterface)
     }
   }
 
-  private def rewriteIfRegistered(m: MergeIntoTable): LogicalPlan = {
+  private def rewriteMerge(m: MergeIntoTable): LogicalPlan = {
     // target: bare name or `name AS alias` — both still unresolved here
     val (nameParts, targetAlias) = m.targetTable match {
       case SubqueryAlias(id, UnresolvedRelation(parts, _, _)) => (parts, id.name)
       case UnresolvedRelation(parts, _, _) => (parts, parts.last)
       case _ => return m
     }
-    MergeSqlTargets.rootFor(session, nameParts) match {
+    rootFor(nameParts) match {
       case None => m // not ours: Spark's own (DSv2) path / error applies
       case Some(root) =>
         require(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import graft.Sessions.tablePath
 import graft.operators.Ops
 import graft.sources.Testdata
-import graft.tables.{Incremental, LakeTable, Merge}
+import graft.tables.{Catalog, Incremental, LakeTable, Merge}
 
 /** The reference-surface operator inventory (SURVEY §2) exercised over
   * the driver's TPC-H-ish testdata, one query per operator family, each
@@ -35,6 +35,15 @@ object CoreQueries {
 
   /** Unique scratch dir for queries that need a LakeTable round trip. */
   private def scratch(tag: String): String = graft.util.TempDirs.scratch(tag)
+
+  /** The lake table SQL names `lake.silver.<name>`, under a fresh
+    * scratch root attached as the `lake` catalog.
+    */
+  private def sqlTarget(spark: SparkSession, tag: String, name: String): LakeTable = {
+    val cat = Catalog(spark, scratch(tag))
+    cat.attachSqlCatalog()
+    cat.table("silver", name)
+  }
 
   private val fmt = "yyyy-MM-dd HH:mm:ss"
 
@@ -1890,12 +1899,11 @@ object CoreQueries {
     val customer = spark.read
       .parquet(p(sfDir, "customer"))
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val table = LakeTable(spark, scratch("mergesql"))
-    graft.plans.MergeSqlTargets.register(spark, "merge_target", table.root)
+    val table = sqlTarget(spark, "mergesql", "merge_target")
     // first load as literal SQL too — the reference's empty-table branch
     // (INSERT INTO ... SELECT, _silver_utils.py:130-135)
     customer.createOrReplaceTempView("merge_first_load")
-    spark.sql("INSERT INTO merge_target SELECT * FROM merge_first_load")
+    spark.sql("INSERT INTO lake.silver.merge_target SELECT * FROM merge_first_load")
     val updates = customer
       .filter(col("c_custkey") % 4 === 0)
       .withColumn("c_acctbal", col("c_acctbal") * 2)
@@ -1903,7 +1911,7 @@ object CoreQueries {
       customer.filter(col("c_custkey") % 7 === 0), "c_custkey", customer)
     updates.unionByName(inserts).createOrReplaceTempView("merge_updates")
     spark.sql(
-      """MERGE INTO merge_target t
+      """MERGE INTO lake.silver.merge_target t
         |USING merge_updates s
         |ON t.c_custkey = s.c_custkey
         |WHEN MATCHED THEN UPDATE SET *
@@ -1929,23 +1937,22 @@ object CoreQueries {
     val customer = spark.read
       .parquet(p(sfDir, "customer"))
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val table = LakeTable(spark, scratch("mergesql2"))
+    val table = sqlTarget(spark, "mergesql2", "scd2_target")
     Merge.mergeScd2(table, customer, Seq("c_custkey"), Seq("c_acctbal"), t1)
     val batch2 = customer
       .filter(col("c_custkey") % 3 === 0)
       .withColumn("c_acctbal", col("c_acctbal") + 100)
       .unionByName(customer.filter(col("c_custkey") % 3 === 1))
     Merge.addScd2Cols(batch2, t2).createOrReplaceTempView("scd2_source")
-    graft.plans.MergeSqlTargets.register(spark, "scd2_target", table.root)
     spark.sql(
-      """MERGE INTO scd2_target AS target
+      """MERGE INTO lake.silver.scd2_target AS target
         |USING scd2_source AS source
         |ON source.c_custkey = target.c_custkey AND target.is_current = 1
         |WHEN MATCHED AND (NOT (source.c_acctbal <=> target.c_acctbal)) THEN
         |  UPDATE SET end_timestamp = TIMESTAMP '2020-02-01 00:00:00', is_current = 0
         |""".stripMargin)
     spark.sql(
-      """MERGE INTO scd2_target AS target
+      """MERGE INTO lake.silver.scd2_target AS target
         |USING scd2_source AS source
         |ON source.c_custkey = target.c_custkey AND target.is_current = 1
         |WHEN NOT MATCHED THEN
@@ -1982,9 +1989,8 @@ object CoreQueries {
     val customer = spark.read
       .parquet(p(sfDir, "customer"))
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val table = LakeTable(spark, scratch("mergefullsync"))
+    val table = sqlTarget(spark, "mergefullsync", "fullsync_target")
     table.append(customer)
-    graft.plans.MergeSqlTargets.register(spark, "fullsync_target", table.root)
     val present = customer
       .filter(col("c_custkey") % 2 === 0)
       .withColumn("c_acctbal", col("c_acctbal") * 2)
@@ -1995,7 +2001,7 @@ object CoreQueries {
       customer.filter(col("c_custkey") % 7 === 0), "c_custkey", customer)
     present.unionByName(fresh).createOrReplaceTempView("fullsync_source")
     spark.sql(
-      """MERGE INTO fullsync_target t
+      """MERGE INTO lake.silver.fullsync_target t
         |USING fullsync_source s
         |ON t.c_custkey = s.c_custkey
         |WHEN MATCHED THEN UPDATE SET *
@@ -2028,12 +2034,11 @@ object CoreQueries {
     val customer = spark.read
       .parquet(p(sfDir, "customer"))
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val table = LakeTable(spark, scratch("deletesql"))
-    graft.plans.MergeSqlTargets.register(spark, "delete_target", table.root)
+    val table = sqlTarget(spark, "deletesql", "delete_target")
     customer.createOrReplaceTempView("delete_first_load")
-    spark.sql("INSERT INTO delete_target SELECT * FROM delete_first_load")
+    spark.sql("INSERT INTO lake.silver.delete_target SELECT * FROM delete_first_load")
     spark.sql(
-      "DELETE FROM delete_target WHERE c_acctbal < 0.0 OR c_custkey % 10 = 3")
+      "DELETE FROM lake.silver.delete_target WHERE c_acctbal < 0.0 OR c_custkey % 10 = 3")
     table.read()
   }
 
@@ -2050,12 +2055,11 @@ object CoreQueries {
     val customer = spark.read
       .parquet(p(sfDir, "customer"))
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val table = LakeTable(spark, scratch("updatesql"))
-    graft.plans.MergeSqlTargets.register(spark, "update_target", table.root)
+    val table = sqlTarget(spark, "updatesql", "update_target")
     customer.createOrReplaceTempView("update_first_load")
-    spark.sql("INSERT INTO update_target SELECT * FROM update_first_load")
+    spark.sql("INSERT INTO lake.silver.update_target SELECT * FROM update_first_load")
     spark.sql(
-      """UPDATE update_target SET c_acctbal = c_acctbal * 2.0 + 1.0
+      """UPDATE lake.silver.update_target SET c_acctbal = c_acctbal * 2.0 + 1.0
         |WHERE c_custkey % 4 = 0""".stripMargin)
     table.read()
   }

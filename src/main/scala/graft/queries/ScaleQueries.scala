@@ -225,9 +225,6 @@ object ScaleQueries {
     """SELECT o_orderkey, o_custkey AS custkey, c_name, o_totalprice
       |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin
 
-  /** spark.sql over LakeTables registered in the session catalog — the
-    * reference's Trino-over-Iceberg capability, engine-side (§2.10).
-    */
   /** Bucketed co-located join: both sides written bucketed (and
     * per-file sorted) on the join key, so the sort-merge join reads
     * bucket i against bucket i with NO exchange on either side — the
@@ -447,16 +444,18 @@ object ScaleQueries {
       |UNION ALL
       |SELECT n_nationkey, n_name, n_regionkey FROM nation""".stripMargin
 
+  /** spark.sql over LakeTables by their `lake.<schema>.<table>` names —
+    * the reference's Trino-over-Iceberg capability, engine-side (§2.10).
+    */
   def sqlOverCatalog(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("cat"))
     cat.createSchema("gold")
     cat.table("gold", "nation").append(spark.read.parquet(tablePath(sfDir, "nation")))
     cat.table("gold", "region").append(spark.read.parquet(tablePath(sfDir, "region")))
-    cat.registerView("gold", "nation")
-    cat.registerView("gold", "region")
+    cat.attachSqlCatalog("lake")
     cat.sql(
       """SELECT r.r_name AS region_name, count(*) AS n_nations
-        |FROM gold_nation n JOIN gold_region r ON n.n_regionkey = r.r_regionkey
+        |FROM lake.gold.nation n JOIN lake.gold.region r ON n.n_regionkey = r.r_regionkey
         |GROUP BY r.r_name""".stripMargin)
   }
 
@@ -465,12 +464,10 @@ object ScaleQueries {
       |FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
       |GROUP BY r.r_name""".stripMargin
 
-  /** The same catalog join through the DSv2 catalog
-    * ([[graft.tables.v2.GraftCatalog]]): `lake.<schema>.<table>` names
-    * resolved by Spark's catalog machinery, reading each table's
-    * CURRENT version per query — nation is appended in TWO waves with
-    * the second landing AFTER the catalog attach, which a
-    * snapshot-pinned view would miss and this read must include.
+  /** The same catalog join, with nation appended in TWO waves and the
+    * second landing AFTER the catalog attach: the DSv2 catalog
+    * ([[graft.tables.v2.GraftCatalog]]) reads each table's CURRENT
+    * version per query, so the read must include it.
     */
   def sqlOverCatalogV2(spark: SparkSession, sfDir: String): DataFrame = {
     val root = graft.util.TempDirs.scratch("catv2")

@@ -2,11 +2,14 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Catalog surface over LakeTables (SURVEY §2.10): schemas as
-  * directories, tables registered as session views so plain
-  * `spark.sql(...)` works over the stored data — the capability the
-  * reference gets from Hive Metastore + Trino ("external SQL over the
-  * same stored tables"), provided engine-side.
+/** Catalog surface over LakeTables (SURVEY §2.10): schemas are
+  * directories under `root`, and SQL reaches every table under it by
+  * one name, `<catalog>.<schema>.<table>`, once [[attachSqlCatalog]]
+  * has attached the root — the capability the reference gets from
+  * Hive Metastore + Trino ("external SQL over the same stored
+  * tables"), provided engine-side. The filesystem layout IS the
+  * metastore, so a fresh session or JVM that attaches the same root
+  * sees every table, with no extra service.
   */
 final case class Catalog(spark: SparkSession, root: String) {
 
@@ -19,26 +22,12 @@ final case class Catalog(spark: SparkSession, root: String) {
   def table(schema: String, name: String): LakeTable =
     LakeTable(spark, s"$root/$schema/$name")
 
-  /** Register a lake table as `<schema>_<name>` for spark.sql use,
-    * reading the current snapshot. The same name also becomes a valid
-    * `MERGE INTO` target ([[graft.plans.MergeSqlTargets]]) — reads go
-    * through the snapshot-pinned view; MERGE reads the CURRENT version
-    * at execution time and commits through the table (re-register the
-    * view to see post-merge data).
-    */
-  def registerView(schema: String, name: String): String = {
-    val viewName = s"${schema}_$name"
-    val t = table(schema, name)
-    t.read().createOrReplaceTempView(viewName)
-    graft.plans.MergeSqlTargets.register(spark, viewName, t.root)
-    viewName
-  }
-
   /** Attach this root as a DSv2 SQL catalog: after this call,
     * `spark.sql("SELECT ... FROM <name>.<schema>.<table>")` resolves
     * through [[graft.tables.v2.GraftCatalog]] and reads each table's
-    * CURRENT version per query (no snapshot-pinned views), and 3-part
-    * names work as `MERGE INTO`/`INSERT INTO` targets.
+    * CURRENT version per query, `SHOW TABLES IN <name>.<schema>` lists
+    * the tables, and 3-part names work as `MERGE INTO`/`INSERT INTO`/
+    * `UPDATE`/`DELETE FROM` targets.
     */
   def attachSqlCatalog(name: String = "lake"): Unit = {
     // Spark caches catalog plugin instances per name for the session
@@ -52,57 +41,6 @@ final case class Catalog(spark: SparkSession, root: String) {
     spark.conf.set(s"spark.sql.catalog.$name.root", root)
     if (prevRoot != null && prevRoot != root)
       org.apache.spark.sql.GraftSqlInternals.resetCatalogCache(spark)
-  }
-
-  /** SHOW SCHEMAS analog: every namespace directory under the root. */
-  def listSchemas(): Seq[String] = {
-    val p = java.nio.file.Paths.get(root)
-    if (!java.nio.file.Files.isDirectory(p)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(p)
-      try {
-        val it = s.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val d = it.next()
-          if (java.nio.file.Files.isDirectory(d)) out += d.getFileName.toString
-        }
-        out.toSeq.sorted
-      } finally s.close()
-    }
-  }
-
-  /** Metastore-style attach: discover and re-register EVERY lake table
-    * under the root as a `<schema>_<name>` view — the one call a fresh
-    * JVM (or `spark.newSession()`) makes to restore the full SQL
-    * surface over previously-written tables. The reference gets this
-    * durability from a shared Hive Metastore service
-    * (/root/reference/docker/spark/conf/spark-defaults.conf:8-12); here
-    * the filesystem layout IS the metastore — schemas are directories,
-    * tables are commit logs — so catalog state survives JVMs with no
-    * extra service, and attach is a directory walk plus one manifest
-    * read per table (no data files touched).
-    */
-  def attach(): Seq[String] =
-    listSchemas().flatMap(s => listTables(s).map(t => registerView(s, t)))
-
-  /** SHOW TABLES analog: every lake table under a schema dir. */
-  def listTables(schema: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(root, schema)
-    if (!java.nio.file.Files.isDirectory(p)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(p)
-      try {
-        val it = s.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val d = it.next()
-          if (java.nio.file.Files.isDirectory(d.resolve("_graft_log")))
-            out += d.getFileName.toString
-        }
-        out.toSeq.sorted
-      } finally s.close()
-    }
   }
 
   def sql(query: String): DataFrame = spark.sql(query)

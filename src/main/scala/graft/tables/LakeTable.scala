@@ -43,7 +43,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 final class LakeTable(val spark: SparkSession, val root: String) {
   import LakeTable._
 
-  private val logDir: Path = Paths.get(root, "_graft_log")
+  private val logDir: Path = logDirOf(Paths.get(root))
   private val dataDir: Path = Paths.get(root, "data")
   private val dvDir: Path = Paths.get(root, "dv")
 
@@ -75,21 +75,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
 
   // ---- log primitives -----------------------------------------------------
 
-  private def versionOf(p: Path): Long = {
-    val n = p.getFileName.toString
-    n.stripPrefix("v").stripSuffix(".json").toLong
-  }
-
-  private def listVersions(): Seq[Path] =
-    if (!Files.isDirectory(logDir)) Seq.empty
-    else {
-      val s = Files.list(logDir)
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.matches("v\\d+\\.json"))
-        .toSeq
-        .sortBy(versionOf)
-      finally s.close()
-    }
+  private def listVersions(): Seq[Path] = manifestFiles(logDir)
 
   def latestVersion(): Option[Long] = listVersions().lastOption.map(versionOf)
 
@@ -99,7 +85,10 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     */
   def availableVersions(): Seq[Long] = listVersions().map(versionOf)
 
-  private def readManifest(version: Long): Manifest = {
+  /** The manifest of `version`; `NoSuchFileException` when the log
+    * holds no such version.
+    */
+  private[tables] def readManifest(version: Long): Manifest = {
     val p = logDir.resolve(f"v$version%020d.json")
     Manifest.fromJson(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
   }
@@ -125,7 +114,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     } finally Files.deleteIfExists(tmp)
   }
 
-  def exists: Boolean = latestVersion().isDefined
+  def exists: Boolean = isTable(Paths.get(root))
 
   def isEmpty: Boolean = liveTip().isEmpty
 
@@ -1222,18 +1211,22 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     * silent empty read would look like data loss) or when the snapshots
     * covering it were expired.
     */
-  def readAsOfTimestamp(tsMillis: Long): DataFrame = {
+  def readAsOfTimestamp(tsMillis: Long): DataFrame = readAt(manifestAsOfTimestamp(tsMillis))
+
+  /** The snapshot [[readAsOfTimestamp]] reads, with its failures: the
+    * one choice of version SQL `TIMESTAMP AS OF` shares.
+    */
+  private[tables] def manifestAsOfTimestamp(tsMillis: Long): Manifest = {
     val versions = listVersions()
     if (versions.isEmpty)
       throw new IllegalStateException(s"table at $root has no commits")
-    val at = versions
+    versions
       .map(p => readManifest(versionOf(p)))
       .filter(_.timestampMs <= tsMillis)
       .lastOption
       .getOrElse(throw new IllegalStateException(
         s"no snapshot of $root at or before $tsMillis " +
           "(timestamp predates the table or the snapshot was expired)"))
-    readAt(at)
   }
 
   /** Assemble a DataFrame over a subset of a manifest's commit dirs. */
@@ -2017,22 +2010,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
         val oldOpt =
           try Some(readManifest(v))
           catch { case scala.util.control.NonFatal(_) => None } // expired manifest
-        val delta = oldOpt.flatMap { old =>
-          val curScopes = m.commitDirs.zip(m.effectiveScopes).toMap
-          // a grown deletion-vector list REMOVED rows from kept dirs —
-          // unchanged commitDirs alone does not make the range additive
-          val additive = old.dvFiles == m.dvFiles &&
-            old.commitDirs.zip(old.effectiveScopes).forall { case (d, s) =>
-              curScopes.get(d).contains(s)
-            }
-          if (!additive) None
-          else {
-            val oldDirs = old.commitDirs.toSet
-            val added = m.commitDirs.zip(m.effectiveScopes).filterNot(e => oldDirs.contains(e._1))
-            Some(readEntries(m, added))
-          }
-        }
-        (cur, delta)
+        (cur, oldOpt.flatMap(addedSince(_, m)).map(readEntries(m, _)))
     }
   }
 
@@ -2059,23 +2037,33 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     require(fromVersion <= to, s"changes($fromVersion, $to): from > to")
     val cur = readManifest(to)
     val old = readManifest(fromVersion)
+    addedSince(old, cur) match {
+      case Some(added) => readEntries(cur, added).withColumn("_change_type", lit("insert"))
+      case None =>
+        // the per-version reads apply each side's own deletion vectors
+        val before = readAt(old)
+        val after = readAt(cur)
+        after.exceptAll(before).withColumn("_change_type", lit("insert"))
+          .unionByName(before.exceptAll(after).withColumn("_change_type", lit("delete")))
+    }
+  }
+
+  /** The commit dirs (with their scopes) `cur` holds beyond `old`, when
+    * the range between them only added rows: None when it dropped or
+    * re-scoped a dir `old` held, or changed the deletion-vector list
+    * (deletion vectors remove rows from kept dirs without touching
+    * `commitDirs`).
+    */
+  private def addedSince(old: Manifest, cur: Manifest): Option[Seq[(String, Seq[String])]] = {
     val curScopes = cur.commitDirs.zip(cur.effectiveScopes).toMap
-    // deletion vectors remove rows without touching commitDirs: a range
-    // whose DV list changed must take the exact multiset-diff path (the
-    // per-version readEntries apply each side's own DVs)
     val additive = old.dvFiles == cur.dvFiles &&
       old.commitDirs.zip(old.effectiveScopes).forall { case (d, s) =>
         curScopes.get(d).contains(s)
       }
-    if (additive) {
+    if (!additive) None
+    else {
       val oldDirs = old.commitDirs.toSet
-      val added = cur.commitDirs.zip(cur.effectiveScopes).filterNot(e => oldDirs.contains(e._1))
-      readEntries(cur, added).withColumn("_change_type", lit("insert"))
-    } else {
-      val before = readEntries(old, old.commitDirs.zip(old.effectiveScopes))
-      val after = readEntries(cur, cur.commitDirs.zip(cur.effectiveScopes))
-      after.exceptAll(before).withColumn("_change_type", lit("insert"))
-        .unionByName(before.exceptAll(after).withColumn("_change_type", lit("delete")))
+      Some(cur.commitDirs.zip(cur.effectiveScopes).filterNot(e => oldDirs.contains(e._1)))
     }
   }
 
@@ -2166,6 +2154,30 @@ final class SchemaDriftException(msg: String) extends IllegalArgumentException(m
 
 object LakeTable {
   def apply(spark: SparkSession, root: String): LakeTable = new LakeTable(spark, root)
+
+  /** Whether `root` holds a lake table: its log lists a manifest. The
+    * one test the SQL catalog, its procedures and [[LakeTable.exists]]
+    * share, so a directory whose log holds no manifest is no table to
+    * any of them.
+    */
+  def isTable(root: Path): Boolean = manifestFiles(logDirOf(root)).nonEmpty
+
+  private def logDirOf(root: Path): Path = root.resolve("_graft_log")
+
+  private def versionOf(p: Path): Long =
+    p.getFileName.toString.stripPrefix("v").stripSuffix(".json").toLong
+
+  /** The manifest files in `logDir`, by ascending version. */
+  private def manifestFiles(logDir: Path): Seq[Path] =
+    if (!Files.isDirectory(logDir)) Seq.empty
+    else {
+      val s = Files.list(logDir)
+      try s.iterator().asScala
+        .filter(p => p.getFileName.toString.matches("v\\d+\\.json"))
+        .toSeq
+        .sortBy(versionOf)
+      finally s.close()
+    }
 
   /** The batch flag `append(skipIfEmpty = true)` adds: every row counts. */
   private val AppendFlag = "__graft_append_row"

@@ -5,8 +5,8 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, SQLContext}
-import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
+import org.apache.spark.sql.{Column, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
@@ -16,6 +16,8 @@ import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.tables.LakeTable
+
 /** DSv2 catalog over a lake-table root (SURVEY §2.10 deepening): with
   * {{{
   *   spark.sql.catalog.lake      = graft.tables.v2.GraftCatalog
@@ -24,12 +26,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (or [[graft.tables.Catalog.attachSqlCatalog]] setting both at
   * runtime), `SELECT ... FROM lake.<schema>.<table>` resolves through
   * Spark's catalog machinery and reads the table's CURRENT version at
-  * each query — unlike the registered temp views, which pin the
-  * snapshot present at registration. Namespaces are directories and
-  * tables are commit logs, so the catalog is stateless: `loadTable` is
-  * a directory probe plus one manifest read (schema comes from the
-  * manifest JSON — no data files touched, no SparkSession needed until
-  * scan time).
+  * each query; it is the one SQL name of a lake table. Namespaces are
+  * directories and tables are commit logs, so the catalog is
+  * stateless: `loadTable` is a log listing plus one manifest read
+  * (schema comes from the manifest JSON — no data files touched). The
+  * log itself is [[LakeTable]]'s alone: every check and read here goes
+  * through it.
   *
   * Read path: the scan bridges to the engine's own reader via
   * [[V1Scan]] — the batch-read fallback Spark provides exactly so v1
@@ -60,9 +62,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
   private def dirOf(namespace: Array[String]): Path =
     GraftCatalog.resolvePath(root, namespace.toSeq)
 
-  private def isLakeTable(p: Path): Boolean =
-    Files.isDirectory(p.resolve("_graft_log"))
-
   // ---- tables --------------------------------------------------------------
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -70,7 +69,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     if (!Files.isDirectory(d)) throw new NoSuchNamespaceException(namespace)
     val s = Files.list(d)
     try s.iterator().asScala
-      .filter(isLakeTable)
+      .filter(LakeTable.isTable)
       .map(p => Identifier.of(namespace, p.getFileName.toString))
       .toArray
     finally s.close()
@@ -78,7 +77,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
 
   override def loadTable(ident: Identifier): Table = {
     val p = dirOf(ident.namespace() :+ ident.name())
-    if (isLakeTable(p)) return new GraftSqlTable(p.toString)
+    if (LakeTable.isTable(p)) return new GraftSqlTable(p.toString)
     // Iceberg-style metadata tables: `lake.<ns>.<t>.snapshots` /
     // `.files` — the trailing identifier selects a metadata relation of
     // the table named by the prefix (the reference queries the same
@@ -88,7 +87,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     val kind = ident.name().toLowerCase
     if (GraftMetaTable.kinds.contains(kind) && ident.namespace().nonEmpty) {
       val tp = dirOf(ident.namespace())
-      if (isLakeTable(tp)) return new GraftMetaTable(tp.toString, kind)
+      if (LakeTable.isTable(tp)) return new GraftMetaTable(tp.toString, kind)
     }
     throw new NoSuchTableException(ident)
   }
@@ -101,7 +100,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     */
   override def loadTable(ident: Identifier, version: String): Table = {
     val p = dirOf(ident.namespace() :+ ident.name())
-    if (!isLakeTable(p)) throw new NoSuchTableException(ident)
+    if (!LakeTable.isTable(p)) throw new NoSuchTableException(ident)
     val v =
       try version.toLong
       catch {
@@ -119,24 +118,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val p = dirOf(ident.namespace() :+ ident.name())
-    if (!isLakeTable(p)) throw new NoSuchTableException(ident)
-    val logDir = p.resolve("_graft_log")
-    val s = Files.list(logDir)
-    val manifests =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally s.close()
-    val tsMillis = timestamp / 1000L
-    val at = manifests
-      .map { mp =>
-        val json = new String(Files.readAllBytes(mp), java.nio.charset.StandardCharsets.UTF_8)
-        graft.tables.LakeTable.Manifest.fromJson(json)
-      }
-      .filter(_.timestampMs <= tsMillis)
-      .lastOption
-      .getOrElse(throw new IllegalStateException(
-        s"no snapshot of $p at or before $tsMillis (timestamp predates the table)"))
+    if (!LakeTable.isTable(p)) throw new NoSuchTableException(ident)
+    val at = LakeTable(SparkSession.active, p.toString).manifestAsOfTimestamp(timestamp / 1000L)
     new GraftSqlTable(p.toString, Some(at.version))
   }
 
@@ -148,8 +131,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     * ARRAY['ingest_year','ingest_month']`), and no data dirs — the
     * standard CREATE-then-INSERT flow, with the write-time schema and
     * partition contracts anchored before the first commit: every later
-    * INSERT/append inherits `partitionBy` from the manifest. No
-    * SparkSession needed: a manifest is one small JSON file.
+    * INSERT/append inherits `partitionBy` from the manifest. The
+    * compare-and-swap on version 0 is [[LakeTable.createIfAbsent]]'s,
+    * so of two racing creates exactly one wins.
     */
   override def createTable(
       ident: Identifier,
@@ -164,19 +148,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
       graft.tables.PartitionSpec.withSource(p, canonical).spec
     }
     val p = dirOf(ident.namespace() :+ ident.name())
-    if (isLakeTable(p)) throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-    val m = graft.tables.LakeTable.Manifest(
-      0L, "create", System.currentTimeMillis(), Seq.empty, schema.json, partCols)
-    val logDir = p.resolve("_graft_log")
-    Files.createDirectories(logDir)
-    val target = logDir.resolve(f"v${0L}%020d.json")
-    val tmp = logDir.resolve(s".tmp-${java.util.UUID.randomUUID()}.json")
-    Files.write(tmp, m.toJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try Files.createLink(target, tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-    } finally Files.deleteIfExists(tmp)
+    if (!LakeTable(SparkSession.active, p.toString).createIfAbsent(schema, partCols))
+      throw new TableAlreadyExistsException(ident)
     new GraftSqlTable(p.toString)
   }
 
@@ -194,9 +167,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val p = dirOf(ident.namespace() :+ ident.name())
-    if (!isLakeTable(p)) throw new NoSuchTableException(ident)
-    val spark = org.apache.spark.sql.SparkSession.active
-    val table = graft.tables.LakeTable(spark, p.toString)
+    if (!LakeTable.isTable(p)) throw new NoSuchTableException(ident)
+    val table = LakeTable(SparkSession.active, p.toString)
     // VALIDATE change KINDS before applying ANY (an unsupported change
     // class must not land after a rename already committed a manifest
     // version), then apply IN DECLARED ORDER — batching consecutive adds
@@ -252,7 +224,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     */
   override def dropTable(ident: Identifier): Boolean = {
     val p = dirOf(ident.namespace() :+ ident.name())
-    if (!isLakeTable(p)) return false
+    if (!LakeTable.isTable(p)) return false
     import scala.util.Using
     Using.resource(Files.walk(p)) { s =>
       s.sorted(java.util.Comparator.reverseOrder())
@@ -268,10 +240,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     */
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
     val from = dirOf(oldIdent.namespace() :+ oldIdent.name())
-    if (!isLakeTable(from)) throw new NoSuchTableException(oldIdent)
+    if (!LakeTable.isTable(from)) throw new NoSuchTableException(oldIdent)
     val to = dirOf(newIdent.namespace() :+ newIdent.name())
     if (Files.exists(to))
-      throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(newIdent)
+      throw new TableAlreadyExistsException(newIdent)
     require(Files.isDirectory(to.getParent),
       s"RENAME TABLE: target namespace ${newIdent.namespace().mkString(".")} does not exist")
     Files.move(from, to, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -387,7 +359,7 @@ object GraftCatalog {
     }
 
   /** Identifier parts → filesystem path, shared by the catalog and the
-    * row-level SQL target resolution ([[graft.plans.MergeSqlTargets]])
+    * row-level SQL target resolution ([[graft.plans.GraftMergeParser]])
     * so DML and SELECT always resolve the SAME directory:
     *
     *   - parts are validated as single path components BEFORE any
@@ -434,8 +406,8 @@ object GraftCatalog {
 }
 
 /** A lake table exposed through the DSv2 `Table` interface. Schema is
-  * read from the latest manifest (one small JSON file — no session, no
-  * data files); the scan defers to `LakeTable.read()` at execution, so
+  * read from the latest manifest (one small JSON file — no data
+  * files); the scan defers to `LakeTable.read()` at execution, so
   * every query sees the current snapshot and deletion vectors apply
   * exactly as in the programmatic read path. A `versionAsOf` pin (from
   * `SELECT ... VERSION AS OF n`) fixes both the schema and the scan to
@@ -456,26 +428,18 @@ final class GraftSqlTable(rootPath: String, versionAsOf: Option[Long] = None)
   override def name(): String =
     versionAsOf.fold(rootPath)(v => s"$rootPath@v$v")
 
-  private lazy val manifest: graft.tables.LakeTable.Manifest = {
-    val logDir = Paths.get(rootPath, "_graft_log")
-    val manifestPath = versionAsOf match {
+  private lazy val manifest: LakeTable.Manifest = {
+    val t = LakeTable(SparkSession.active, rootPath)
+    versionAsOf match {
       case Some(v) =>
-        val p = logDir.resolve(f"v$v%020d.json")
-        if (!Files.isRegularFile(p))
-          throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-            Identifier.of(Array.empty, s"$rootPath VERSION AS OF $v"))
-        p
+        try t.readManifest(v)
+        catch {
+          case _: java.nio.file.NoSuchFileException =>
+            throw new NoSuchTableException(Identifier.of(Array.empty, s"$rootPath VERSION AS OF $v"))
+        }
       case None =>
-        val s = Files.list(logDir)
-        try s.iterator().asScala
-          .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-          .toSeq
-          .maxBy(_.getFileName.toString)
-        finally s.close()
+        t.tip().getOrElse(throw new NoSuchTableException(Identifier.of(Array.empty, rootPath)))
     }
-    val json =
-      new String(Files.readAllBytes(manifestPath), java.nio.charset.StandardCharsets.UTF_8)
-    graft.tables.LakeTable.Manifest.fromJson(json)
   }
 
   override lazy val schema: StructType =

@@ -1,6 +1,5 @@
 package graft.tables.v2
 
-import java.nio.file.Files
 import java.util
 
 import org.apache.spark.sql.SparkSession
@@ -63,8 +62,7 @@ object GraftProcedures {
       require(parts.length == 2 && parts.forall(_.nonEmpty),
         s"$procName: `table` must be 'namespace.table' (catalog-relative), got '$tableName'")
       val p = GraftCatalog.resolvePath(root, parts)
-      require(Files.isDirectory(p.resolve("_graft_log")),
-        s"$procName: no lake table at $tableName")
+      require(graft.tables.LakeTable.isTable(p), s"$procName: no lake table at $tableName")
       val t = graft.tables.LakeTable(SparkSession.active, p.toString)
       val row = new GenericInternalRow(body(t, input))
       val scan = new LocalScan {

@@ -93,20 +93,20 @@ class SkewSpec extends SparkSpec {
 class CatalogSpec extends SparkSpec {
   import spark.implicits._
 
-  test("catalog: schemas, view registration, spark.sql over lake tables, listing") {
+  test("catalog: schemas, spark.sql over lake. names, SHOW TABLES listing") {
     val cat = Catalog(spark, scratchDir("cat"))
     cat.createSchema("silver")
     cat.table("silver", "orders").append(Seq((1, "A", 10.0), (2, "B", 5.0)).toDF("id", "sym", "amt"))
     cat.table("silver", "syms").append(Seq(("A", "Alpha"), ("B", "Beta")).toDF("sym", "name"))
-    cat.registerView("silver", "orders")
-    cat.registerView("silver", "syms")
+    cat.attachSqlCatalog()
 
     val out = cat.sql(
-      """SELECT o.id, s.name, o.amt FROM silver_orders o
-        |JOIN silver_syms s USING (sym) ORDER BY o.id""".stripMargin).collect()
+      """SELECT o.id, s.name, o.amt FROM lake.silver.orders o
+        |JOIN lake.silver.syms s USING (sym) ORDER BY o.id""".stripMargin).collect()
     assert(out.map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSeq ==
       Seq((1, "Alpha", 10.0), (2, "Beta", 5.0)))
-    assert(cat.listTables("silver") == Seq("orders", "syms"))
+    val tables = cat.sql("SHOW TABLES IN lake.silver").collect().map(_.getString(1)).sorted
+    assert(tables.toSeq == Seq("orders", "syms"))
   }
 
   test("catalog attach restores the SQL surface in a fresh session (metastore durability)") {
@@ -117,16 +117,22 @@ class CatalogSpec extends SparkSpec {
     cat.table("silver", "orders").append(Seq((1, 10.0), (2, 5.0)).toDF("id", "amt"))
     cat.table("gold", "daily").append(Seq(("2024-01-01", 15.0)).toDF("d", "total"))
 
-    // a new session models a new JVM: temp views do NOT carry over...
+    // a new session models a new JVM: one attach of the same root
+    // restores every table from the filesystem
     val fresh = spark.newSession()
-    assert(!fresh.catalog.tableExists("silver_orders"))
-    // ...but one attach() walk restores every table from the filesystem
-    val restored = Catalog(fresh, root).attach()
-    assert(restored.toSet == Set("silver_orders", "gold_daily"))
-    assert(fresh.sql("SELECT sum(amt) FROM silver_orders").head().getDouble(0) == 15.0)
-    assert(fresh.sql("SELECT total FROM gold_daily").head().getDouble(0) == 15.0)
-    // the original session remains unpolluted by the fresh session's views
-    assert(!spark.catalog.tableExists("gold_daily"))
+    Catalog(fresh, root).attachSqlCatalog()
+    val namespaces = fresh.sql("SHOW NAMESPACES IN lake").collect().map(_.getString(0)).sorted
+    assert(namespaces.toSeq == Seq("gold", "silver"))
+    assert(fresh.sql("SHOW TABLES IN lake.silver").collect().map(_.getString(1)).toSeq == Seq("orders"))
+    assert(fresh.sql("SHOW TABLES IN lake.gold").collect().map(_.getString(1)).toSeq == Seq("daily"))
+    assert(fresh.sql("SELECT sum(amt) FROM lake.silver.orders").head().getDouble(0) == 15.0)
+    assert(fresh.sql("SELECT total FROM lake.gold.daily").head().getDouble(0) == 15.0)
+    // a write after the attach shows in the next SELECT: the catalog
+    // reads the current version, where a view would pin its snapshot
+    cat.table("silver", "orders").append(Seq((3, 7.0)).toDF("id", "amt"))
+    assert(fresh.sql("SELECT sum(amt) FROM lake.silver.orders").head().getDouble(0) == 22.0)
+    // the original session's catalog binding is the fresh session's business only
+    assert(!spark.conf.getOption("spark.sql.catalog.lake.root").contains(root))
   }
 
   test("compaction collapses commit dirs, preserves data and history") {

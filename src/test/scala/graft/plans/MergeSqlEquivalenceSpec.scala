@@ -13,7 +13,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
-import graft.tables.LakeTable
+import graft.tables.{Catalog, LakeTable}
 
 /** The one-join SQL `MERGE INTO` against the probe-and-union command it
   * replaced ([[ProbedMergeInto]], copied below).
@@ -108,16 +108,16 @@ class MergeSqlEquivalenceSpec extends SparkSpec {
     val seen = scala.collection.mutable.Set.empty[String]
     val parser = new GraftMergeParser(spark, CatalystSqlParser)
     forAllSeeded(runGen, 40) { run =>
-      val current = LakeTable(spark, scratchDir("sqleq-current"))
-      val oracle = LakeTable(spark, scratchDir("sqleq-oracle"))
+      val cat = Catalog(spark, scratchDir("sqleq"))
+      cat.attachSqlCatalog()
+      val current = cat.table("s", "t_eq_current")
+      val oracle = cat.table("s", "t_eq_oracle")
       Seq(current, oracle).foreach(_.append(run.target.toDF("k", "v", "w")))
-      MergeSqlTargets.register(spark, "t_eq_current", current.root)
-      MergeSqlTargets.register(spark, "t_eq_oracle", oracle.root)
       run.source.toDF("k", "v", "w").createOrReplaceTempView("s_eq")
       val before = rows(current)
 
-      val got = outcome(spark.sql(run.statement("t_eq_current")))
-      val want = outcome(parser.parsePlan(run.statement("t_eq_oracle")) match {
+      val got = outcome(spark.sql(run.statement("lake.s.t_eq_current")))
+      val want = outcome(parser.parsePlan(run.statement("lake.s.t_eq_oracle")) match {
         case c: GraftMergeIntoCommand =>
           ProbedMergeInto(c.root, c.targetAlias, c.sourceAlias, c.payload).run(spark)
       })

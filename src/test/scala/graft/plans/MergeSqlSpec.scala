@@ -25,8 +25,17 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
   }
 
-  private def freshTarget(tag: String, rows: Seq[(Int, String, Double)]): LakeTable = {
-    val t = LakeTable(spark, scratchDir(tag))
+  /** The lake table SQL names `lake.s.<name>`, under a fresh catalog
+    * root attached as `lake`.
+    */
+  private def lakeTable(name: String): LakeTable = {
+    val cat = Catalog(spark, scratchDir(name))
+    cat.attachSqlCatalog()
+    cat.table("s", name)
+  }
+
+  private def freshTarget(name: String, rows: Seq[(Int, String, Double)]): LakeTable = {
+    val t = lakeTable(name)
     t.append(rows.toDF("k", "name", "bal"))
     t
   }
@@ -34,11 +43,10 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("MERGE INTO: UPDATE SET * / INSERT * matches the programmatic SCD1 merge") {
     val base = Seq((1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0))
     val updates = Seq((2, "b2", 99.0), (9, "i", 1.0))
-    val viaSql = freshTarget("msql1", base)
-    MergeSqlTargets.register(spark, "t_msql1", viaSql.root)
+    val viaSql = freshTarget("t_msql1", base)
     updates.toDF("k", "name", "bal").createOrReplaceTempView("s_msql1")
     spark.sql(
-      """MERGE INTO t_msql1 t USING s_msql1 s ON t.k = s.k
+      """MERGE INTO lake.s.t_msql1 t USING s_msql1 s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     val viaApi = freshTarget("mapi1", base)
@@ -50,15 +58,14 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MERGE clause values are cast to the declared column types (store assignment)") {
-    val t = LakeTable(spark, scratchDir("mcast"))
+    val t = lakeTable("t_mcast")
     t.append(Seq((1, 10), (2, 20)).toDF("k", "cnt"))
-    MergeSqlTargets.register(spark, "t_mcast", t.root)
     Seq((2, 5), (3, 7)).toDF("k", "cnt").createOrReplaceTempView("s_mcast")
     // BIGINT-typed update and insert values on an INT column: store
     // assignment casts to the DECLARED type — before this rule the CASE
     // output widened to BIGINT and the commit died in SchemaDrift
     spark.sql(
-      """MERGE INTO t_mcast t USING s_mcast s ON t.k = s.k
+      """MERGE INTO lake.s.t_mcast t USING s_mcast s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET cnt = t.cnt + CAST(s.cnt AS BIGINT)
         |WHEN NOT MATCHED THEN INSERT (k, cnt) VALUES (s.k, s.cnt * 2L)""".stripMargin)
     assert(t.read().schema("cnt").dataType == org.apache.spark.sql.types.IntegerType,
@@ -69,7 +76,7 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // INSERT * must store as the target's INT
     Seq((3L, 100L), (4L, 40L)).toDF("k", "cnt").createOrReplaceTempView("s_mcast_star")
     spark.sql(
-      """MERGE INTO t_mcast t USING s_mcast_star s ON t.k = s.k
+      """MERGE INTO lake.s.t_mcast t USING s_mcast_star s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     assert(t.read().schema("cnt").dataType == org.apache.spark.sql.types.IntegerType)
@@ -78,12 +85,11 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MERGE INTO: conditional UPDATE assignments, DELETE clause, conditional INSERT") {
-    val t = freshTarget("msql2", Seq((1, "keep", 5.0), (2, "upd", 10.0), (3, "del", 15.0)))
-    MergeSqlTargets.register(spark, "t_msql2", t.root)
+    val t = freshTarget("t_msql2", Seq((1, "keep", 5.0), (2, "upd", 10.0), (3, "del", 15.0)))
     Seq((2, "u", 100.0), (3, "d", 0.0), (4, "newbig", 50.0), (5, "newsmall", 0.5))
       .toDF("k", "name", "bal").createOrReplaceTempView("s_msql2")
     spark.sql(
-      """MERGE INTO t_msql2 t USING s_msql2 s ON t.k = s.k
+      """MERGE INTO lake.s.t_msql2 t USING s_msql2 s ON t.k = s.k
         |WHEN MATCHED AND s.bal = 0.0 THEN DELETE
         |WHEN MATCHED THEN UPDATE SET bal = s.bal + t.bal
         |WHEN NOT MATCHED AND s.bal > 1.0 THEN INSERT (k, name) VALUES (s.k, s.name)
@@ -97,15 +103,14 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MERGE INTO: WHEN NOT MATCHED BY SOURCE delete/update — the full-sync pattern") {
-    val t = freshTarget("mbys1",
+    val t = freshTarget("t_mbys1",
       Seq((1, "stay", 5.0), (2, "upd", 10.0), (3, "gone-neg", -1.0), (4, "gone-pos", 7.0)))
-    MergeSqlTargets.register(spark, "t_mbys1", t.root)
     Seq((1, "stay2", 50.0), (2, "upd2", 20.0), (9, "new", 9.0))
       .toDF("k", "name", "bal").createOrReplaceTempView("s_mbys1")
     // 3 and 4 are absent from the source: 3 (bal<0) deleted, 4
     // deactivated by the second by-source clause (first-match-wins)
     spark.sql(
-      """MERGE INTO t_mbys1 t USING s_mbys1 s ON t.k = s.k
+      """MERGE INTO lake.s.t_mbys1 t USING s_mbys1 s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *
         |WHEN NOT MATCHED BY SOURCE AND t.bal < 0 THEN DELETE
@@ -117,29 +122,27 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MERGE INTO: by-source-only merge tolerates duplicate source matches (semi/anti)") {
-    val t = freshTarget("mbys2", Seq((1, "a", 1.0), (2, "b", 2.0)))
-    MergeSqlTargets.register(spark, "t_mbys2", t.root)
+    val t = freshTarget("t_mbys2", Seq((1, "a", 1.0), (2, "b", 2.0)))
     // key 1 appears TWICE in the source: with no matched action there is
     // no per-match rewrite, so no cardinality rule applies (Delta
     // semantics) — matched rows pass through once, absent rows delete
     Seq((1, "x", 0.0), (1, "y", 0.0)).toDF("k", "name", "bal")
       .createOrReplaceTempView("s_mbys2")
     spark.sql(
-      """MERGE INTO t_mbys2 t USING s_mbys2 s ON t.k = s.k
+      """MERGE INTO lake.s.t_mbys2 t USING s_mbys2 s ON t.k = s.k
         |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
     val got = t.read().collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSet
     assert(got == Set((1, "a", 1.0)), s"got $got")
   }
 
   test("MERGE INTO: by-source clauses referencing the source fail loudly; SET * rejected") {
-    val t = freshTarget("mbys3", Seq((1, "a", 1.0)))
-    MergeSqlTargets.register(spark, "t_mbys3", t.root)
+    val t = freshTarget("t_mbys3", Seq((1, "a", 1.0)))
     Seq((1, "x", 2.0)).toDF("k", "name", "bal").createOrReplaceTempView("s_mbys3")
     // a source reference in a by-source condition cannot resolve (by-source
     // clauses are evaluated over the target alone, before the join)
     val srcRef = intercept[Exception] {
       spark.sql(
-        """MERGE INTO t_mbys3 t USING s_mbys3 s ON t.k = s.k
+        """MERGE INTO lake.s.t_mbys3 t USING s_mbys3 s ON t.k = s.k
           |WHEN NOT MATCHED BY SOURCE AND s.bal > 0 THEN DELETE""".stripMargin)
     }
     assert(
@@ -151,7 +154,7 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // GraftMergeParser is defense-in-depth behind it
     val star = intercept[Exception] {
       spark.sql(
-        """MERGE INTO t_mbys3 t USING s_mbys3 s ON t.k = s.k
+        """MERGE INTO lake.s.t_mbys3 t USING s_mbys3 s ON t.k = s.k
           |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *""".stripMargin)
     }
     assert(star.getMessage.contains("PARSE_SYNTAX_ERROR"), star.getMessage)
@@ -161,13 +164,12 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MERGE INTO: by-source values cast to declared types; cardinality still enforced with matched actions") {
-    val t = LakeTable(spark, scratchDir("mbys4"))
+    val t = lakeTable("t_mbys4")
     t.append(Seq((1, 10), (2, 20)).toDF("k", "cnt"))
-    MergeSqlTargets.register(spark, "t_mbys4", t.root)
     Seq((1, 5)).toDF("k", "cnt").createOrReplaceTempView("s_mbys4")
     // BIGINT-typed by-source assignment on an INT column → store-assigned
     spark.sql(
-      """MERGE INTO t_mbys4 t USING s_mbys4 s ON t.k = s.k
+      """MERGE INTO lake.s.t_mbys4 t USING s_mbys4 s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET cnt = s.cnt
         |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET cnt = t.cnt + CAST(1 AS BIGINT)
         |""".stripMargin)
@@ -180,7 +182,7 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val dirs = dataDirs(t)
     val e = intercept[Exception] {
       spark.sql(
-        """MERGE INTO t_mbys4 t USING s_mbys4_dup s ON t.k = s.k
+        """MERGE INTO lake.s.t_mbys4 t USING s_mbys4_dup s ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET *
           |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
     }
@@ -190,14 +192,13 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MERGE INTO: inline subquery source (USING (SELECT ...)) works") {
-    val t = freshTarget("msub", Seq((1, "a", 10.0), (2, "b", 20.0)))
-    MergeSqlTargets.register(spark, "t_msub", t.root)
+    val t = freshTarget("t_msub", Seq((1, "a", 10.0), (2, "b", 20.0)))
     Seq((1, "a9", 90.0), (2, "bx", 5.0), (9, "i", 1.0), (10, "j", 0.5))
       .toDF("k", "name", "bal").createOrReplaceTempView("s_msub_raw")
     // the source is an arbitrary query, aliased — filters + projections
     // resolve inside it, and SET */INSERT * see its output columns
     spark.sql(
-      """MERGE INTO t_msub t
+      """MERGE INTO lake.s.t_msub t
         |USING (SELECT k, name, bal * 2 AS bal FROM s_msub_raw WHERE bal >= 1.0) s
         |ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET *
@@ -227,9 +228,8 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       for (thr <- Seq(defaultThr, "-1"); combo <- combos) {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        val t = freshTarget("mpin", Seq((1, "a", 1.0), (2, "b", 2.0)))
-        MergeSqlTargets.register(spark, "t_mpin", t.root)
-        val statement = s"MERGE INTO t_mpin t USING s_mpin s ON t.k = s.k ${combo.mkString(" ")}"
+        val t = freshTarget("t_mpin", Seq((1, "a", 1.0), (2, "b", 2.0)))
+        val statement = s"MERGE INTO lake.s.t_mpin t USING s_mpin s ON t.k = s.k ${combo.mkString(" ")}"
         // actionsRunBy returns once every execution before its end is reported
         actionsRunBy(())
         plans.clear()
@@ -253,14 +253,13 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MERGE INTO enforces the source-cardinality rule") {
-    val t = freshTarget("msql3", Seq((1, "a", 1.0)))
-    MergeSqlTargets.register(spark, "t_msql3", t.root)
+    val t = freshTarget("t_msql3", Seq((1, "a", 1.0)))
     Seq((1, "x", 2.0), (1, "y", 3.0)).toDF("k", "name", "bal")
       .createOrReplaceTempView("s_msql3")
     val dirs = dataDirs(t)
     val e = intercept[Exception] {
       spark.sql(
-        """MERGE INTO t_msql3 t USING s_msql3 s ON t.k = s.k
+        """MERGE INTO lake.s.t_msql3 t USING s_msql3 s ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
     }
     assert(e.getMessage.contains("multiple source rows"), e.getMessage)
@@ -284,40 +283,35 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("INSERT INTO: first load creates the table; positional insert casts to the target schema") {
-    val root = scratchDir("isql1") + "/t"
-    MergeSqlTargets.register(spark, "t_isql1", root)
+    val t = lakeTable("t_isql1")
     Seq((1, "a", 1.5), (2, "b", 2.5)).toDF("k", "name", "bal")
       .createOrReplaceTempView("s_isql1")
-    spark.sql("INSERT INTO t_isql1 SELECT * FROM s_isql1")
-    val t = LakeTable(spark, root)
+    spark.sql("INSERT INTO lake.s.t_isql1 SELECT * FROM s_isql1")
     assert(t.read().count() == 2)
     // positional semantics with differently-NAMED but castable columns
     Seq((3, "c", 9)).toDF("x", "y", "z").createOrReplaceTempView("s_isql1b")
-    spark.sql("INSERT INTO t_isql1 SELECT * FROM s_isql1b")
+    spark.sql("INSERT INTO lake.s.t_isql1 SELECT * FROM s_isql1b")
     val got = t.read().orderBy("k").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSeq
     assert(got == Seq((1, "a", 1.5), (2, "b", 2.5), (3, "c", 9.0)), s"got $got")
   }
 
   test("INSERT INTO with a column list fills unlisted columns with typed NULLs; OVERWRITE replaces") {
-    val root = scratchDir("isql2") + "/t"
-    val t = LakeTable(spark, root)
+    val t = lakeTable("t_isql2")
     t.append(Seq((1, "a", 1.0)).toDF("k", "name", "bal"))
-    MergeSqlTargets.register(spark, "t_isql2", root)
     Seq((5, "e")).toDF("k", "name").createOrReplaceTempView("s_isql2")
-    spark.sql("INSERT INTO t_isql2 (k, name) SELECT k, name FROM s_isql2")
+    spark.sql("INSERT INTO lake.s.t_isql2 (k, name) SELECT k, name FROM s_isql2")
     val got = t.read().orderBy("k").collect()
       .map(r => (r.getInt(0), r.getString(1), if (r.isNullAt(2)) null else r.getDouble(2)))
       .toSeq
     assert(got == Seq((1, "a", 1.0), (5, "e", null)), s"got $got")
-    spark.sql("INSERT OVERWRITE t_isql2 (k, name) SELECT k + 10, name FROM s_isql2")
+    spark.sql("INSERT OVERWRITE lake.s.t_isql2 (k, name) SELECT k + 10, name FROM s_isql2")
     assert(t.read().collect().map(_.getInt(0)).toSeq == Seq(15))
   }
 
   test("DELETE FROM: alias-qualified WHERE deletes via a deletion vector; history time-travels") {
-    val t = freshTarget("dsql1", Seq((1, "a", 1.0), (2, "b", -2.0), (3, "c", 3.0), (4, "d", -4.0)))
-    MergeSqlTargets.register(spark, "t_dsql1", t.root)
-    spark.sql("DELETE FROM t_dsql1 AS x WHERE x.bal < 0 AND x.k > 2")
+    val t = freshTarget("t_dsql1", Seq((1, "a", 1.0), (2, "b", -2.0), (3, "c", 3.0), (4, "d", -4.0)))
+    spark.sql("DELETE FROM lake.s.t_dsql1 AS x WHERE x.bal < 0 AND x.k > 2")
     assert(t.read().collect().map(_.getInt(0)).toSet == Set(1, 2, 3))
     // merge-on-read: the commit is a DV sidecar, not a rewrite
     val ops = t.snapshots().orderBy("version").collect().map(_.getString(2)).toSeq
@@ -327,21 +321,19 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("DELETE FROM: NULL-condition rows are kept; no-match delete is a no-op version") {
-    val t = LakeTable(spark, scratchDir("dsql2"))
+    val t = lakeTable("t_dsql2")
     t.append(Seq((1, Some(1.0)), (2, None), (3, Some(-3.0))).toDF("k", "bal"))
-    MergeSqlTargets.register(spark, "t_dsql2", t.root)
-    spark.sql("DELETE FROM t_dsql2 WHERE bal < 0")
+    spark.sql("DELETE FROM lake.s.t_dsql2 WHERE bal < 0")
     // row 2's predicate is NULL → kept (SQL DELETE removes only true)
     assert(t.read().collect().map(_.getInt(0)).toSet == Set(1, 2))
     val v = t.latestVersion().get
-    spark.sql("DELETE FROM t_dsql2 WHERE bal > 100")
+    spark.sql("DELETE FROM lake.s.t_dsql2 WHERE bal > 100")
     assert(t.latestVersion().get == v, "no-match delete must not commit")
   }
 
   test("DELETE FROM without WHERE truncates with one empty commit, not a DV per row") {
-    val t = freshTarget("dsql3", Seq((1, "a", 1.0), (2, "b", 2.0)))
-    MergeSqlTargets.register(spark, "t_dsql3", t.root)
-    spark.sql("DELETE FROM t_dsql3")
+    val t = freshTarget("t_dsql3", Seq((1, "a", 1.0), (2, "b", 2.0)))
+    spark.sql("DELETE FROM lake.s.t_dsql3")
     assert(t.read().count() == 0)
     assert(t.read().schema.fieldNames.toSeq == Seq("k", "name", "bal"))
     val ops = t.snapshots().orderBy("version").collect().map(_.getString(2)).toSeq
@@ -350,24 +342,22 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("UPDATE: conditional SET with qualified refs; NULL-condition rows keep old values") {
-    val t = LakeTable(spark, scratchDir("usql1"))
+    val t = lakeTable("t_usql1")
     t.append(Seq((1, Some(10.0)), (2, None), (3, Some(30.0))).toDF("k", "bal"))
-    MergeSqlTargets.register(spark, "t_usql1", t.root)
-    spark.sql("UPDATE t_usql1 AS x SET x.bal = x.bal * 2 WHERE x.bal >= 20")
+    spark.sql("UPDATE lake.s.t_usql1 AS x SET x.bal = x.bal * 2 WHERE x.bal >= 20")
     val got = t.read().collect()
       .map(r => (r.getInt(0), if (r.isNullAt(1)) null else r.getDouble(1))).toSet
     assert(got == Set((1, 10.0), (2, null), (3, 60.0)), s"got $got")
   }
 
   test("UPDATE with WHERE is merge-on-read: one commit, no data file rewritten") {
-    val t = LakeTable(spark, scratchDir("umor"))
+    val t = lakeTable("t_umor")
     t.append(Seq((1, 10.0), (2, 20.0), (3, 30.0)).toDF("k", "bal"))
     t.append(Seq((4, 40.0), (5, 50.0)).toDF("k", "bal"))
-    MergeSqlTargets.register(spark, "t_umor", t.root)
     val filesBefore = t.files().select("commit_dir", "relative_path").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     val vBefore = t.snapshots().agg(org.apache.spark.sql.functions.max("version")).head().getLong(0)
-    spark.sql("UPDATE t_umor SET bal = bal + 1000 WHERE k IN (2, 5)")
+    spark.sql("UPDATE lake.s.t_umor SET bal = bal + 1000 WHERE k IN (2, 5)")
     // exactly ONE new snapshot, operation 'update' (atomic DV + rewrite)
     val snaps = t.snapshots().orderBy("version").collect()
     assert(snaps.last.getAs[Long]("version") == vBefore + 1)
@@ -389,15 +379,14 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(t.read().collect().map(r => (r.getInt(0), r.getDouble(1))).toSet == got)
     // no-match UPDATE is a no-op commit-wise
     val vNow = t.snapshots().agg(org.apache.spark.sql.functions.max("version")).head().getLong(0)
-    spark.sql("UPDATE t_umor SET bal = 0 WHERE k = 999")
+    spark.sql("UPDATE lake.s.t_umor SET bal = 0 WHERE k = 999")
     assert(t.snapshots().agg(org.apache.spark.sql.functions.max("version")).head().getLong(0) == vNow)
   }
 
   test("UPDATE without WHERE updates every row; values cast to the declared column type") {
-    val t = freshTarget("usql2", Seq((1, "a", 1.0), (2, "b", 2.0)))
-    MergeSqlTargets.register(spark, "t_usql2", t.root)
+    val t = freshTarget("t_usql2", Seq((1, "a", 1.0), (2, "b", 2.0)))
     // k is Int; the literal is a BIGINT sum — must cast, not evolve
-    spark.sql("UPDATE t_usql2 SET k = k + 100, name = upper(name)")
+    spark.sql("UPDATE lake.s.t_usql2 SET k = k + 100, name = upper(name)")
     val got = t.read().orderBy("k").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSeq
     assert(got == Seq((101, "A", 1.0), (102, "B", 2.0)), s"got $got")
@@ -405,45 +394,20 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("UPDATE rejects unknown and duplicate SET columns; DELETE/UPDATE reject subqueries") {
-    val t = freshTarget("usql3", Seq((1, "a", 1.0)))
-    MergeSqlTargets.register(spark, "t_usql3", t.root)
-    val unknown = intercept[Exception](spark.sql("UPDATE t_usql3 SET nope = 1"))
+    val t = freshTarget("t_usql3", Seq((1, "a", 1.0)))
+    val unknown = intercept[Exception](spark.sql("UPDATE lake.s.t_usql3 SET nope = 1"))
     assert(unknown.getMessage.contains("not in the target schema"), unknown.getMessage)
-    val dup = intercept[Exception](spark.sql("UPDATE t_usql3 SET bal = 1, bal = 2"))
+    val dup = intercept[Exception](spark.sql("UPDATE lake.s.t_usql3 SET bal = 1, bal = 2"))
     assert(dup.getMessage.contains("twice"), dup.getMessage)
     Seq(1).toDF("k").createOrReplaceTempView("sub_src")
     val dsub = intercept[Exception](
-      spark.sql("DELETE FROM t_usql3 WHERE k IN (SELECT k FROM sub_src)"))
+      spark.sql("DELETE FROM lake.s.t_usql3 WHERE k IN (SELECT k FROM sub_src)"))
     assert(dsub.getMessage.contains("does not support subqueries"), dsub.getMessage)
     val usub = intercept[Exception](
-      spark.sql("UPDATE t_usql3 SET bal = (SELECT max(k) FROM sub_src)"))
+      spark.sql("UPDATE lake.s.t_usql3 SET bal = (SELECT max(k) FROM sub_src)"))
     assert(usub.getMessage.contains("does not support subqueries"), usub.getMessage)
     // the failed statements left the table untouched
     assert(t.read().count() == 1)
-  }
-
-  test("MergeSqlTargets registrations are session-scoped and weakly held") {
-    val s2 = spark.newSession()
-    MergeSqlTargets.register(s2, "t_scoped", "/tmp/graft-scope-probe")
-    // scoped: another session (ours) must not resolve s2's names
-    assert(MergeSqlTargets.rootFor(s2, Seq("t_scoped")).isDefined)
-    assert(MergeSqlTargets.rootFor(spark, Seq("t_scoped")).isEmpty)
-    // weak: dropping the only strong reference makes the entry collectible
-    val before = MergeSqlTargets.liveSessionCount
-    locally {
-      var s3 = spark.newSession()
-      MergeSqlTargets.register(s3, "t_weak", "/tmp/graft-weak-probe")
-      assert(MergeSqlTargets.liveSessionCount >= before + 1)
-      s3 = null
-    }
-    var tries = 0
-    while (MergeSqlTargets.liveSessionCount > before && tries < 100) {
-      System.gc(); Thread.sleep(20); tries += 1
-    }
-    // the JVM never guarantees System.gc() collects: a still-live probe
-    // is inconclusive, not a product failure — cancel instead of fail
-    if (MergeSqlTargets.liveSessionCount > before)
-      cancel(s"GC did not collect the probe session after $tries rounds")
   }
 
   test("DELETE/UPDATE on unregistered names fall through to Spark's own path") {
@@ -454,20 +418,20 @@ class MergeSqlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!u.getMessage.contains("graft"), u.getMessage)
   }
 
-  test("Catalog.registerView names are MERGE-able and merge reads the current version") {
+  test("lake. names are MERGE-able and merge reads the current version") {
     val root = scratchDir("msqlcat")
     val cat = Catalog(spark, root)
     cat.createSchema("silver")
     cat.table("silver", "dim").append(Seq((1, "a", 1.0)).toDF("k", "name", "bal"))
-    val view = cat.registerView("silver", "dim")
-    assert(view == "silver_dim")
-    // advance the table PAST the registered view's snapshot: MERGE must
-    // see the appended row (current version), not the view's pin
+    cat.attachSqlCatalog()
+    assert(spark.sql("SELECT count(*) FROM lake.silver.dim").head().getLong(0) == 1)
+    // advance the table after the attach and the first read: MERGE must
+    // see the appended row (current version)
     cat.table("silver", "dim").append(Seq((2, "b", 2.0)).toDF("k", "name", "bal"))
     Seq((2, "b9", 9.0), (7, "n", 7.0)).toDF("k", "name", "bal")
       .createOrReplaceTempView("s_cat")
     spark.sql(
-      """MERGE INTO silver_dim t USING s_cat s ON t.k = s.k
+      """MERGE INTO lake.silver.dim t USING s_cat s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     val got = cat.table("silver", "dim").read().collect()

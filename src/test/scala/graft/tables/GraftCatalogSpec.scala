@@ -1,5 +1,7 @@
 package graft.tables
 
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -416,5 +418,67 @@ class GraftCatalogSpec extends SparkSpec {
         "name => 'impossible', predicate => '1 = 0')").collect())
     intercept[Exception](spark.sql(
       s"CALL $name.system.create_tag(`table` => 'silver.facts', name => 'x/../y')").collect())
+  }
+
+  test("TIMESTAMP AS OF picks the snapshot readAsOfTimestamp picks, or fails the same way") {
+    val (cat, name) = freshCatalog("v2tsof")
+    cat.createSchema("gold")
+    val t = cat.table("gold", "dim")
+    (1 to 3).foreach { i =>
+      t.append(Seq((i, s"r$i")).toDF("k", "v"))
+      Thread.sleep(5) // distinct commit milliseconds
+    }
+    val commits = t.snapshots().orderBy("version").collect()
+      .map(_.getAs[java.sql.Timestamp]("committed_at").getTime).toSeq
+    assert(commits.size == 3 && commits.distinct.size == 3, s"commit times $commits")
+    def viaSql(ms: Long): Set[Int] =
+      spark.sql(s"SELECT k FROM $name.gold.dim TIMESTAMP AS OF timestamp_millis($ms)")
+        .collect().map(_.getInt(0)).toSet
+    def viaTable(ms: Long): Set[Int] = t.readAsOfTimestamp(ms).collect().map(_.getInt(0)).toSet
+    val between = commits.zip(commits.tail).map { case (a, b) => (a + b) / 2 }
+    (commits ++ between).foreach { ms =>
+      assert(viaSql(ms) == viaTable(ms), s"at $ms")
+    }
+    assert(viaSql(commits(1)) == Set(1, 2))
+    val before = commits.head - 1
+    val sqlErr = intercept[IllegalStateException](viaSql(before))
+    val tableErr = intercept[IllegalStateException](viaTable(before))
+    assert(sqlErr.getMessage == tableErr.getMessage, s"${sqlErr.getMessage} vs ${tableErr.getMessage}")
+  }
+
+  test("VERSION AS OF a version the log does not hold raises NoSuchTableException") {
+    val (cat, name) = freshCatalog("v2vmiss")
+    cat.createSchema("gold")
+    cat.table("gold", "dim").append(Seq((1, "a")).toDF("k", "v"))
+    intercept[NoSuchTableException](
+      spark.sql(s"SELECT k FROM $name.gold.dim VERSION AS OF 3").collect())
+  }
+
+  test("CREATE TABLE claims version 0: createIfAbsent then loses, a second CREATE fails") {
+    val (cat, name) = freshCatalog("v2create")
+    cat.createSchema("gold")
+    spark.sql(s"CREATE TABLE $name.gold.t (k INT, v STRING)")
+    val t = cat.table("gold", "t")
+    assert(!t.createIfAbsent(new org.apache.spark.sql.types.StructType().add("x", "long")))
+    intercept[TableAlreadyExistsException](spark.sql(s"CREATE TABLE $name.gold.t (k INT)"))
+    assert(t.read().columns.toSeq == Seq("k", "v"))
+  }
+
+  test("a log without a manifest is no table to the catalog, its procedures or LakeTable") {
+    val (cat, name) = freshCatalog("v2nolog")
+    cat.createSchema("gold")
+    cat.table("gold", "real").append(Seq((1, "a")).toDF("k", "v"))
+    val ghost = java.nio.file.Paths.get(cat.root, "gold", "ghost")
+    java.nio.file.Files.createDirectories(ghost.resolve("_graft_log"))
+    assert(!cat.table("gold", "ghost").exists)
+    val tables = spark.sql(s"SHOW TABLES IN $name.gold").collect().map(_.getString(1)).toSeq
+    assert(tables == Seq("real"), tables.mkString(","))
+    intercept[AnalysisException](spark.sql(s"SELECT * FROM $name.gold.ghost").collect())
+    val call = intercept[Exception](
+      spark.sql(s"CALL $name.system.compact(`table` => 'gold.ghost')").collect())
+    assert(call.getMessage.contains("no lake table at gold.ghost"), call.getMessage)
+    // and CREATE TABLE takes the name, as createIfAbsent would
+    spark.sql(s"CREATE TABLE $name.gold.ghost (k INT)")
+    assert(cat.table("gold", "ghost").exists)
   }
 }
