@@ -85,6 +85,9 @@ object Bench {
         // median of 3 back-to-back probes: a single sub-second count is
         // noisy enough (scheduler jitter) to trip a 2× drift on a quiet
         // box; real contention slows all three.
+        // The inferring read (not Testdata.read) on purpose: this probe
+        // measures the box, and its footer job keeps it comparable with
+        // earlier runs' calibration readings.
         val times = (1 to 3).map { _ =>
           val t0 = System.nanoTime()
           spark.read.parquet(s"$sfDir/$t.parquet").count()
@@ -116,7 +119,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
     // JVM/session warm-up so the first measured query isn't charged for
-    // codegen + executor spin-up
+    // codegen + executor spin-up. The inferring read (not Testdata.read)
+    // on purpose: it warms the same jobs as earlier runs' warm-up, so
+    // their per-query readings stay comparable.
     probeTable(sfDir).foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
     // optional comma-separated query filter for profiling single operators
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Sessions.tablePath
 import graft.sources.Testdata
 
 /** Analytics surface beyond the reference's tumbling windows: sliding
@@ -87,8 +86,7 @@ object AnalyticsQueries {
     * and grand total in one pass.
     */
   def rollupAgg(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(round(sum(col("l_quantity")), 4).as("sum_qty"), count(lit(1)).as("n_rows"))
 
@@ -223,7 +221,7 @@ object AnalyticsQueries {
     * tie-break (deterministic across engines).
     */
   def tfidfKeywords(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(tablePath(sfDir, "documents"))
+    val docs = Testdata.read(spark, sfDir, "documents")
     val n = docs.count()
     val terms = docs.select(
       col("doc_id"),
@@ -312,8 +310,7 @@ object AnalyticsQueries {
     * rightmost column aggregated), checked by the oracle hash.
     */
   def groupingSets(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .createOrReplaceTempView("li_grouping_sets")
     spark.sql(
       """SELECT l_returnflag, l_linestatus,
@@ -572,7 +569,7 @@ object AnalyticsQueries {
           .cast("long"),
         lit(w.toLong))
     val probeKeys = Seq(1L, 17L, 42L, 123L, 1999L, 99999L)
-    val keys = spark.read.parquet(tablePath(sfDir, "lineitem")).select(col("l_partkey"))
+    val keys = Testdata.read(spark, sfDir, "lineitem").select(col("l_partkey"))
     val sketch = keys.agg(
       graft.functions.Sketches
         .cmsSketch((0 until d).map(i => bucket(i, col("l_partkey"))), w)
@@ -635,7 +632,7 @@ object AnalyticsQueries {
     * `q_approx_distinct_kmv` next to exact distinct counts.
     */
   def heavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    val terms = spark.read.parquet(tablePath(sfDir, "documents"))
+    val terms = Testdata.read(spark, sfDir, "documents")
       .select(col("lang"), explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
     terms
       .groupBy(col("lang"))
@@ -802,7 +799,7 @@ object AnalyticsQueries {
     * EXCEPT a nation — all as keys, fully deterministic.
     */
   def setOps(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = spark.read.parquet(tablePath(sfDir, "customer"))
+    val c = Testdata.read(spark, sfDir, "customer")
     val auto = c.filter(col("c_mktsegment") === "AUTOMOBILE").select(col("c_custkey"))
     val building = c.filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
     val rich = c.filter(col("c_acctbal") > 1000).select(col("c_custkey"))
@@ -830,8 +827,7 @@ object AnalyticsQueries {
     */
   def weightedAvg(spark: SparkSession, sfDir: String): DataFrame = {
     val wavg = udaf(graft.functions.Aggregators.WeightedAvg)
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         round(wavg(col("l_extendedprice"), col("l_quantity")), 4).as("wavg_price"),
@@ -851,8 +847,7 @@ object AnalyticsQueries {
     */
   def typedPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"), col("l_returnflag"))
       .as[LineitemSlim]
       .filter(li => li.l_quantity > 30.0)
@@ -884,11 +879,11 @@ object AnalyticsQueries {
     */
   def cogroupReconcile(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val orders = spark.read.parquet(tablePath(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
       .filter(col("o_orderkey") % 2 === 0)
       .as[OrderSlim]
-    val lines = spark.read.parquet(tablePath(sfDir, "lineitem"))
+    val lines = Testdata.read(spark, sfDir, "lineitem")
       .select(
         col("l_orderkey"),
         expr("cast(round(l_extendedprice * 100) as bigint)").as("cents"))
@@ -933,7 +928,7 @@ object AnalyticsQueries {
     */
   def orcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = graft.util.TempDirs.scratch("orc")
-    spark.read.parquet(tablePath(sfDir, "part")).write.mode("overwrite").orc(dir)
+    Testdata.read(spark, sfDir, "part").write.mode("overwrite").orc(dir)
     spark.read
       .orc(dir)
       .filter(col("p_size") >= 25)
@@ -952,7 +947,7 @@ object AnalyticsQueries {
     */
   def jsonlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = graft.util.TempDirs.scratch("jsonl")
-    val d = spark.read.parquet(tablePath(sfDir, "documents"))
+    val d = Testdata.read(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
     d.write.mode("overwrite").json(dir)
     spark.read.schema(d.schema).json(dir)
@@ -968,7 +963,7 @@ object AnalyticsQueries {
     */
   def jsonlGzipRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = graft.util.TempDirs.scratch("jsonlgz")
-    val d = spark.read.parquet(tablePath(sfDir, "documents"))
+    val d = Testdata.read(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
     d.write.mode("overwrite").option("compression", "gzip").json(dir)
     spark.read.schema(d.schema).json(dir)
@@ -1041,8 +1036,7 @@ object AnalyticsQueries {
     * partition-arrival-dependent and must never be exposed).
     */
   def collectSet(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         // Deterministic set aggregation, serialized: the sorted distinct
@@ -1063,8 +1057,7 @@ object AnalyticsQueries {
     * pairs — the inverse of pivot, one Expand pass, no shuffle.
     */
   def unpivotMetrics(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("l_extendedprice"), col("l_discount"))
       .unpivot(
@@ -1120,8 +1113,7 @@ object AnalyticsQueries {
     * linestatus) plus the grouping_id disambiguator (NULL-vs-subtotal).
     */
   def cubeAgg(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(
         round(sum(col("l_quantity")), 4).as("sum_qty"),
@@ -1138,8 +1130,7 @@ object AnalyticsQueries {
     * per group — the deterministic complement to approx_percentile.
     */
   def quantiles(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         round(expr("percentile(l_extendedprice, 0.25)"), 4).as("p25"),
@@ -1222,8 +1213,7 @@ object AnalyticsQueries {
       ("band_100k_200k", 100000.0, 200000.0),
       ("band_200k_300k", 200000.0, 300000.0),
       ("band_300k_plus", 300000.0, Double.MaxValue)).toDF("band", "lo", "hi")
-    spark.read
-      .parquet(tablePath(sfDir, "orders"))
+    Testdata.read(spark, sfDir, "orders")
       .join(broadcast(bands), col("o_totalprice") >= col("lo") && col("o_totalprice") < col("hi"))
       .groupBy(col("band"))
       .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 4).as("sum_price"))
@@ -1243,8 +1233,7 @@ object AnalyticsQueries {
     * pass, no value-discovery scan).
     */
   def pivotAgg(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .groupBy(col("l_returnflag"))
       .pivot("l_linestatus", Seq("F", "O"))
       .agg(round(sum(col("l_quantity")), 4))
@@ -1302,11 +1291,9 @@ object AnalyticsQueries {
     */
   def pagerankPurchases(spark: SparkSession, sfDir: String): DataFrame = {
     val micro = 1000000L
-    val orders = spark.read
-      .parquet(tablePath(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
-    val li = spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    val li = Testdata.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))
     // build the directed edge list in ONE pass: each distinct
     // undirected pair explodes into both directions inline, so the
@@ -1453,8 +1440,7 @@ object AnalyticsQueries {
     // for the edge build). The per-order array is bounded by
     // items/order exactly like the join fan-out was, so the shape is
     // unchanged at scale.
-    val edges = spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    val edges = Testdata.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .groupBy(col("o")).agg(array_sort(array_distinct(collect_list(col("p")))).as("ps"))
       // C(k,2) expansion as ONE compiled loop per order
@@ -1572,11 +1558,9 @@ object AnalyticsQueries {
       spark: SparkSession,
       sfDir: String,
       bloomPruneAt: Long = 4000000L): DataFrame = {
-    val orders = spark.read
-      .parquet(tablePath(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
-    val li = spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    val li = Testdata.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"))
     // single-pass edge build (same r19 fix as pagerankPurchases): each
     // distinct undirected pair explodes into both directions inline,
@@ -1998,7 +1982,7 @@ object AnalyticsQueries {
     */
   def profileTable(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Profile.profile(
-      spark.read.parquet(tablePath(sfDir, "orders")))
+      Testdata.read(spark, sfDir, "orders"))
 
   val profileTableSql: String = {
     def numCol(c: String) =

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Sessions.tablePath
 import graft.operators.Ops
 import graft.sources.Testdata
 import graft.tables.{Catalog, Incremental, LakeTable, Merge}
@@ -30,8 +29,6 @@ import graft.tables.{Catalog, Incremental, LakeTable, Merge}
   *     for, instead of the reference's arrival-order `first`/`last`.
   */
 object CoreQueries {
-
-  private def p(sfDir: String, t: String) = tablePath(sfDir, t)
 
   /** Unique scratch dir for queries that need a LakeTable round trip. */
   private def scratch(tag: String): String = graft.util.TempDirs.scratch(tag)
@@ -66,8 +63,7 @@ object CoreQueries {
     * two low-cardinality group keys — the plan that survives 100 TB.
     */
   def aggPricingSummary(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .filter(col("l_shipdate") <= lit("1998-09-02"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -99,14 +95,11 @@ object CoreQueries {
     */
   def tpchShippingPriority(spark: SparkSession, sfDir: String): DataFrame = {
     val cutoff = lit("1998-03-15")
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .filter(col("c_mktsegment") === "BUILDING")
-    val orders = spark.read
-      .parquet(p(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .filter(col("o_orderdate") < cutoff)
-    val lineitem = spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val lineitem = Testdata.read(spark, sfDir, "lineitem")
       .filter(col("l_shipdate") > cutoff)
     lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
@@ -145,18 +138,17 @@ object CoreQueries {
     * the cross-dimension constraint that makes join ORDER matter.
     */
   def tpchLocalVolume(spark: SparkSession, sfDir: String): DataFrame = {
-    val region = spark.read.parquet(p(sfDir, "region")).filter(col("r_name") === "ASIA")
-    val nation = spark.read.parquet(p(sfDir, "nation"))
+    val region = Testdata.read(spark, sfDir, "region").filter(col("r_name") === "ASIA")
+    val nation = Testdata.read(spark, sfDir, "nation")
     val asiaNations = nation
       .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"), col("n_name"))
-    val customer = spark.read.parquet(p(sfDir, "customer"))
-    val supplier = spark.read.parquet(p(sfDir, "supplier"))
-    val orders = spark.read
-      .parquet(p(sfDir, "orders"))
+    val customer = Testdata.read(spark, sfDir, "customer")
+    val supplier = Testdata.read(spark, sfDir, "supplier")
+    val orders = Testdata.read(spark, sfDir, "orders")
       .filter(
         col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1997-01-01"))
-    val lineitem = spark.read.parquet(p(sfDir, "lineitem"))
+    val lineitem = Testdata.read(spark, sfDir, "lineitem")
     lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(supplier, col("l_suppkey") === col("s_suppkey"))
@@ -188,14 +180,12 @@ object CoreQueries {
     * the cut engine-independent.
     */
   def tpchReturnedItems(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read.parquet(p(sfDir, "customer"))
-    val nation = spark.read.parquet(p(sfDir, "nation"))
-    val orders = spark.read
-      .parquet(p(sfDir, "orders"))
+    val customer = Testdata.read(spark, sfDir, "customer")
+    val nation = Testdata.read(spark, sfDir, "nation")
+    val orders = Testdata.read(spark, sfDir, "orders")
       .filter(
         col("o_orderdate") >= lit("1996-10-01") && col("o_orderdate") < lit("1997-01-01"))
-    val lineitem = spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val lineitem = Testdata.read(spark, sfDir, "lineitem")
       .filter(col("l_returnflag") === "R")
     lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
@@ -229,9 +219,9 @@ object CoreQueries {
     * integral doubles so the threshold compare is exact cross-engine.
     */
   def tpchLargeVolume(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read.parquet(p(sfDir, "customer"))
-    val orders = spark.read.parquet(p(sfDir, "orders"))
-    val lineitem = spark.read.parquet(p(sfDir, "lineitem"))
+    val customer = Testdata.read(spark, sfDir, "customer")
+    val orders = Testdata.read(spark, sfDir, "orders")
+    val lineitem = Testdata.read(spark, sfDir, "lineitem")
     val big = lineitem
       .groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).as("total_qty"))
@@ -279,11 +269,10 @@ object CoreQueries {
     * loop).
     */
   def tpchOrderPriority(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = spark.read
-      .parquet(p(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .filter(
         col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1996-04-01"))
-    val lineitem = spark.read.parquet(p(sfDir, "lineitem"))
+    val lineitem = Testdata.read(spark, sfDir, "lineitem")
     orders
       .join(
         lineitem,
@@ -311,12 +300,10 @@ object CoreQueries {
     * carries only returned lines; plans as LEFT ANTI on the order key.
     */
   def tpchWaitingOrders(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = spark.read
-      .parquet(p(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .filter(
         col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1996-04-01"))
-    val returned = spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val returned = Testdata.read(spark, sfDir, "lineitem")
       .filter(col("l_returnflag") === "R")
     orders
       .join(returned, col("o_orderkey") === col("l_orderkey"), "left_anti")
@@ -345,8 +332,8 @@ object CoreQueries {
     * and two small key-space aggs.
     */
   def tpchCustomerDistribution(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read.parquet(p(sfDir, "customer"))
-    val orders = spark.read.parquet(p(sfDir, "orders"))
+    val customer = Testdata.read(spark, sfDir, "customer")
+    val orders = Testdata.read(spark, sfDir, "orders")
     customer
       .join(
         orders,
@@ -379,9 +366,8 @@ object CoreQueries {
     * differ in the last ulp across partial-aggregation orders).
     */
   def tpchSalesOpportunity(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read.parquet(p(sfDir, "customer"))
-    val urgent = spark.read
-      .parquet(p(sfDir, "orders"))
+    val customer = Testdata.read(spark, sfDir, "customer")
+    val urgent = Testdata.read(spark, sfDir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_custkey"))
     val avgBal = customer
@@ -420,20 +406,17 @@ object CoreQueries {
     * same value set in both engines — no summation, no ulp risk).
     */
   def tpchMinCostSupplier(spark: SparkSession, sfDir: String): DataFrame = {
-    val parts = spark.read
-      .parquet(p(sfDir, "part"))
+    val parts = Testdata.read(spark, sfDir, "part")
       .filter(col("p_size") === 15 && col("p_type") === "SMALL")
-    val euro = spark.read
-      .parquet(p(sfDir, "supplier"))
+    val euro = Testdata.read(spark, sfDir, "supplier")
       .join(
-        broadcast(spark.read.parquet(p(sfDir, "nation"))),
+        broadcast(Testdata.read(spark, sfDir, "nation")),
         col("s_nationkey") === col("n_nationkey"))
       .join(
-        broadcast(spark.read.parquet(p(sfDir, "region")).filter(col("r_name") === "EUROPE")),
+        broadcast(Testdata.read(spark, sfDir, "region").filter(col("r_name") === "EUROPE")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-    val offers = spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val offers = Testdata.read(spark, sfDir, "lineitem")
       .join(broadcast(parts.select(col("p_partkey"))), col("l_partkey") === col("p_partkey"), "left_semi")
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(min(col("l_extendedprice")).as("cost"))
@@ -483,8 +466,7 @@ object CoreQueries {
     * of the other columns is read.
     */
   def tpchForecastRevenue(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .filter(
         col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1997-01-01") &&
           col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
@@ -510,22 +492,18 @@ object CoreQueries {
     * query plan.
     */
   def tpchVolumeShipping(spark: SparkSession, sfDir: String): DataFrame = {
-    val nation = spark.read.parquet(p(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
     val twoNations = nation.filter(col("n_name").isin("NATION_1", "NATION_2"))
-    val supp = spark.read
-      .parquet(p(sfDir, "supplier"))
+    val supp = Testdata.read(spark, sfDir, "supplier")
       .join(broadcast(twoNations), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val cust = spark.read
-      .parquet(p(sfDir, "customer"))
+    val cust = Testdata.read(spark, sfDir, "customer")
       .join(broadcast(twoNations), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    val orders = spark.read
-      .parquet(p(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("cust_nation"))
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1998-01-01"))
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(orders, col("l_orderkey") === col("o_orderkey"))
@@ -563,32 +541,27 @@ object CoreQueries {
     * quotient is computed from identical doubles.
     */
   def tpchMarketShare(spark: SparkSession, sfDir: String): DataFrame = {
-    val promoParts = spark.read
-      .parquet(p(sfDir, "part"))
+    val promoParts = Testdata.read(spark, sfDir, "part")
       .filter(col("p_type") === "PROMO")
       .select(col("p_partkey"))
-    val supp = spark.read
-      .parquet(p(sfDir, "supplier"))
+    val supp = Testdata.read(spark, sfDir, "supplier")
       .join(
-        broadcast(spark.read.parquet(p(sfDir, "nation"))),
+        broadcast(Testdata.read(spark, sfDir, "nation")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val asiaCust = spark.read
-      .parquet(p(sfDir, "customer"))
+    val asiaCust = Testdata.read(spark, sfDir, "customer")
       .join(
         broadcast(
-          spark.read.parquet(p(sfDir, "nation"))
+          Testdata.read(spark, sfDir, "nation")
             .join(
-              broadcast(spark.read.parquet(p(sfDir, "region")).filter(col("r_name") === "ASIA")),
+              broadcast(Testdata.read(spark, sfDir, "region").filter(col("r_name") === "ASIA")),
               col("n_regionkey") === col("r_regionkey"))),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"))
-    val ordersAsia = spark.read
-      .parquet(p(sfDir, "orders"))
+    val ordersAsia = Testdata.read(spark, sfDir, "orders")
       .join(broadcast(asiaCust), col("o_custkey") === col("c_custkey"), "left_semi")
       .select(col("o_orderkey"), col("o_orderdate"))
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .join(broadcast(promoParts), col("l_partkey") === col("p_partkey"), "left_semi")
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(ordersAsia, col("l_orderkey") === col("o_orderkey"))
@@ -629,21 +602,17 @@ object CoreQueries {
     * just (orderkey, year) into it.
     */
   def tpchProductProfit(spark: SparkSession, sfDir: String): DataFrame = {
-    val redParts = spark.read
-      .parquet(p(sfDir, "part"))
+    val redParts = Testdata.read(spark, sfDir, "part")
       .filter(col("p_name").like("red%"))
       .select(col("p_partkey"))
-    val supp = spark.read
-      .parquet(p(sfDir, "supplier"))
+    val supp = Testdata.read(spark, sfDir, "supplier")
       .join(
-        broadcast(spark.read.parquet(p(sfDir, "nation"))),
+        broadcast(Testdata.read(spark, sfDir, "nation")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name"))
-    val orders = spark.read
-      .parquet(p(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .join(broadcast(redParts), col("l_partkey") === col("p_partkey"), "left_semi")
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(orders, col("l_orderkey") === col("o_orderkey"))
@@ -678,14 +647,12 @@ object CoreQueries {
     * engine-identical.
     */
   def tpchImportantParts(spark: SparkSession, sfDir: String): DataFrame = {
-    val suppN3 = spark.read
-      .parquet(p(sfDir, "supplier"))
+    val suppN3 = Testdata.read(spark, sfDir, "supplier")
       .join(
-        broadcast(spark.read.parquet(p(sfDir, "nation")).filter(col("n_name") === "NATION_3")),
+        broadcast(Testdata.read(spark, sfDir, "nation").filter(col("n_name") === "NATION_3")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
-    val perPart = spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val perPart = Testdata.read(spark, sfDir, "lineitem")
       .join(broadcast(suppN3), col("l_suppkey") === col("s_suppkey"), "left_semi")
       .groupBy(col("l_partkey"))
       .agg(sum(col("l_extendedprice")).as("raw_value"))
@@ -718,12 +685,10 @@ object CoreQueries {
     */
   def tpchPriorityShipmode(spark: SparkSession, sfDir: String): DataFrame = {
     val highPriority = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    spark.read
-      .parquet(p(sfDir, "orders"))
+    Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"))
       .join(
-        spark.read
-          .parquet(p(sfDir, "lineitem"))
+        Testdata.read(spark, sfDir, "lineitem")
           .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1997-01-01"))
           .select(col("l_orderkey"), col("l_linestatus")),
         col("o_orderkey") === col("l_orderkey"))
@@ -755,9 +720,8 @@ object CoreQueries {
     * division (the Q8 ratio discipline).
     */
   def tpchPromoRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    val partTypes = spark.read.parquet(p(sfDir, "part")).select(col("p_partkey"), col("p_type"))
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val partTypes = Testdata.read(spark, sfDir, "part").select(col("p_partkey"), col("p_type"))
+    Testdata.read(spark, sfDir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-03-01") && col("l_shipdate") < lit("1996-04-01"))
       .join(broadcast(partTypes), col("l_partkey") === col("p_partkey"))
       .withColumn("volume", col("l_extendedprice") * (lit(1) - col("l_discount")))
@@ -783,14 +747,12 @@ object CoreQueries {
     * ties all surface, ordered by supplier key.
     */
   def tpchTopSupplier(spark: SparkSession, sfDir: String): DataFrame = {
-    val revenue = spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val revenue = Testdata.read(spark, sfDir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1996-04-01"))
       .groupBy(col("l_suppkey"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("total_revenue"))
     val maxRevenue = revenue.agg(max(col("total_revenue")).as("max_revenue"))
-    spark.read
-      .parquet(p(sfDir, "supplier"))
+    Testdata.read(spark, sfDir, "supplier")
       .join(revenue, col("s_suppkey") === col("l_suppkey"))
       .join(broadcast(maxRevenue))
       .filter(col("total_revenue") === col("max_revenue"))
@@ -819,17 +781,14 @@ object CoreQueries {
     * qualifying parts' rows.
     */
   def tpchPartsSupplierCount(spark: SparkSession, sfDir: String): DataFrame = {
-    val excluded = spark.read
-      .parquet(p(sfDir, "supplier"))
+    val excluded = Testdata.read(spark, sfDir, "supplier")
       .filter(col("s_acctbal") < 0)
       .select(col("s_suppkey"))
-    val parts16 = spark.read
-      .parquet(p(sfDir, "part"))
+    val parts16 = Testdata.read(spark, sfDir, "part")
       .filter(
         col("p_brand") =!= "Brand#1" && col("p_type") =!= "PROMO" &&
           col("p_size").isin(3, 9, 14, 19, 23, 36, 45, 49))
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"))
       .join(broadcast(parts16.select(col("p_partkey"))), col("l_partkey") === col("p_partkey"), "left_semi")
       .join(broadcast(excluded), col("l_suppkey") === col("s_suppkey"), "left_anti")
@@ -862,12 +821,10 @@ object CoreQueries {
     * compared quantities are integer-valued.
     */
   def tpchSmallQtyRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    val parts12 = spark.read
-      .parquet(p(sfDir, "part"))
+    val parts12 = Testdata.read(spark, sfDir, "part")
       .filter(col("p_brand") === "Brand#12")
       .select(col("p_partkey"))
-    val li12 = spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val li12 = Testdata.read(spark, sfDir, "lineitem")
       .join(broadcast(parts12), col("l_partkey") === col("p_partkey"), "left_semi")
       .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
     val avgQty = li12
@@ -894,12 +851,10 @@ object CoreQueries {
     * disjunction only resolves post-join.
     */
   def tpchDisjunctiveRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    val parts = spark.read
-      .parquet(p(sfDir, "part"))
+    val parts = Testdata.read(spark, sfDir, "part")
       .filter(col("p_brand").isin("Brand#2", "Brand#13", "Brand#24") && col("p_size").between(1, 15))
       .select(col("p_partkey"), col("p_brand"), col("p_size"))
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .filter(col("l_quantity").between(1, 30))
       .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
       .filter(
@@ -925,14 +880,12 @@ object CoreQueries {
     * semi-joins the candidate keys.
     */
   def tpchPromotionSuppliers(spark: SparkSession, sfDir: String): DataFrame = {
-    val redParts = spark.read
-      .parquet(p(sfDir, "part"))
+    val redParts = Testdata.read(spark, sfDir, "part")
       .filter(col("p_name").like("red%"))
       .select(col("p_partkey"))
     val in1996 =
       col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1997-01-01")
-    val candidates = spark.read
-      .parquet(p(sfDir, "lineitem"))
+    val candidates = Testdata.read(spark, sfDir, "lineitem")
       .join(broadcast(redParts), col("l_partkey") === col("p_partkey"), "left_semi")
       .groupBy(col("l_suppkey"), col("l_partkey"))
       .agg(
@@ -940,10 +893,9 @@ object CoreQueries {
         sum(col("l_quantity")).as("qty_total"))
       .filter(col("qty96") > lit(0.5) * col("qty_total"))
       .select(col("l_suppkey"))
-    spark.read
-      .parquet(p(sfDir, "supplier"))
+    Testdata.read(spark, sfDir, "supplier")
       .join(
-        broadcast(spark.read.parquet(p(sfDir, "nation")).filter(col("n_name") === "NATION_2")),
+        broadcast(Testdata.read(spark, sfDir, "nation").filter(col("n_name") === "NATION_2")),
         col("s_nationkey") === col("n_nationkey"))
       .join(candidates, col("s_suppkey") === col("l_suppkey"), "left_semi")
       .select(col("s_name"), round(col("s_acctbal"), 4).as("s_acctbal"))
@@ -979,8 +931,7 @@ object CoreQueries {
     * scan (PushedFilters + pruned ReadSchema — P11 plus pushdown audit).
     */
   def filterPushdown(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read
-      .parquet(p(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .filter(
         col("l_returnflag") === "R" &&
           col("l_shipdate") >= lit("1995-01-01") &&
@@ -1046,7 +997,7 @@ object CoreQueries {
   /** Tolerant map-driven rename (P4): one mapping hits, one misses. */
   def renameCols(spark: SparkSession, sfDir: String): DataFrame =
     Ops.renameCols(
-      spark.read.parquet(p(sfDir, "nation")),
+      Testdata.read(spark, sfDir, "nation"),
       Map("n_name" -> "nation_name", "no_such_col" -> "zzz"))
 
   val renameColsSql: String =
@@ -1173,9 +1124,9 @@ object CoreQueries {
     * Both dims are broadcast; the fact side never shuffles.
     */
   def joinStar(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read.parquet(p(sfDir, "customer"))
-    val nation = spark.read.parquet(p(sfDir, "nation"))
-    val region = spark.read.parquet(p(sfDir, "region"))
+    val customer = Testdata.read(spark, sfDir, "customer")
+    val nation = Testdata.read(spark, sfDir, "nation")
+    val region = Testdata.read(spark, sfDir, "region")
     customer
       .join(broadcast(nation), customer("c_nationkey") === nation("n_nationkey"), "left")
       .join(broadcast(region), nation("n_regionkey") === region("r_regionkey"), "left")
@@ -1201,8 +1152,8 @@ object CoreQueries {
     * key is derived so unmatched keys exercise left-join NULL semantics.
     */
   def joinSnowflakeIterated(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read.parquet(p(sfDir, "customer"))
-    val dim = spark.read.parquet(p(sfDir, "nation")).select(col("n_nationkey"), col("n_name"))
+    val customer = Testdata.read(spark, sfDir, "customer")
+    val dim = Testdata.read(spark, sfDir, "nation").select(col("n_nationkey"), col("n_name"))
     val fact = customer
       .withColumn("nk_1", col("c_nationkey"))
       .withColumn("nk_2", col("c_nationkey") + 40) // mostly unmatched -> NULLs
@@ -1224,8 +1175,8 @@ object CoreQueries {
     * contract, then aggregated.
     */
   def incrementalScan(spark: SparkSession, sfDir: String): DataFrame = {
-    val lineitem = spark.read.parquet(p(sfDir, "lineitem"))
-    val orders = spark.read.parquet(p(sfDir, "orders"))
+    val lineitem = Testdata.read(spark, sfDir, "lineitem")
+    val orders = Testdata.read(spark, sfDir, "orders")
     Incremental
       .highWatermark(lineitem, orders.filter(col("o_orderstatus") === "F"), "l_shipdate", "o_orderdate")
       .groupBy(col("l_returnflag"))
@@ -1454,7 +1405,7 @@ object CoreQueries {
     * set algebra.
     */
   def tableChanges(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = spark.read.parquet(p(sfDir, "customer"))
+    val cust = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val t = graft.tables.LakeTable(spark, scratch("cdf"))
     t.append(cust.filter(col("c_custkey") % 2 === 0)) // v0
@@ -1490,8 +1441,7 @@ object CoreQueries {
     */
   def csvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = scratch("csv")
-    spark.read
-      .parquet(p(sfDir, "region"))
+    Testdata.read(spark, sfDir, "region")
       .coalesce(1)
       .write
       .mode("overwrite")
@@ -1514,8 +1464,7 @@ object CoreQueries {
     */
   def csvInfer(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = scratch("csvinf")
-    spark.read
-      .parquet(p(sfDir, "nation"))
+    Testdata.read(spark, sfDir, "nation")
       .coalesce(1)
       .write
       .mode("overwrite")
@@ -1541,8 +1490,7 @@ object CoreQueries {
   def scd2Versions(spark: SparkSession, sfDir: String): DataFrame = {
     val t1 = Timestamp.valueOf("2020-01-01 00:00:00")
     val t2 = Timestamp.valueOf("2020-02-01 00:00:00")
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = LakeTable(spark, scratch("scd2"))
     Merge.mergeScd2(table, customer, Seq("c_custkey"), Seq("c_acctbal"), t1)
@@ -1590,8 +1538,7 @@ object CoreQueries {
     import spark.implicits._
     val t1 = Timestamp.valueOf("2020-01-01 00:00:00")
     val t2 = Timestamp.valueOf("2020-02-01 00:00:00")
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = LakeTable(spark, scratch("scd2pit"))
     Merge.mergeScd2(table, customer, Seq("c_custkey"), Seq("c_acctbal"), t1)
@@ -1642,8 +1589,7 @@ object CoreQueries {
     * key; everything else survives untouched.
     */
   def scd1Upsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = LakeTable(spark, scratch("scd1"))
     Merge.mergeScd1(table, customer, Seq("c_custkey"))
@@ -1859,13 +1805,11 @@ object CoreQueries {
     * bite.
     */
   def mergeSchemaDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = LakeTable(spark, scratch("scd1drift"))
     Merge.mergeScd1Evolve(table, customer, Seq("c_custkey"))
-    val drifted = spark.read
-      .parquet(p(sfDir, "customer"))
+    val drifted = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment").as("c_segment"))
     val updates = drifted
       .filter(col("c_custkey") % 4 === 0)
@@ -1896,8 +1840,7 @@ object CoreQueries {
     * Merge.mergeScd1.
     */
   def mergeSql(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = sqlTarget(spark, "mergesql", "merge_target")
     // first load as literal SQL too — the reference's empty-table branch
@@ -1934,8 +1877,7 @@ object CoreQueries {
   def mergeSqlScd2(spark: SparkSession, sfDir: String): DataFrame = {
     val t1 = Timestamp.valueOf("2020-01-01 00:00:00")
     val t2 = Timestamp.valueOf("2020-02-01 00:00:00")
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = sqlTarget(spark, "mergesql2", "scd2_target")
     Merge.mergeScd2(table, customer, Seq("c_custkey"), Seq("c_acctbal"), t1)
@@ -1986,8 +1928,7 @@ object CoreQueries {
     * on the target row id for the cardinality rule, in one write job.
     */
   def mergeSqlFullSync(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = sqlTarget(spark, "mergefullsync", "fullsync_target")
     table.append(customer)
@@ -2031,8 +1972,7 @@ object CoreQueries {
     * Oracle is the complement SELECT over the same parquet.
     */
   def deleteSql(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = sqlTarget(spark, "deletesql", "delete_target")
     customer.createOrReplaceTempView("delete_first_load")
@@ -2052,8 +1992,7 @@ object CoreQueries {
     * Oracle is the equivalent CASE projection.
     */
   def updateSql(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     val table = sqlTarget(spark, "updatesql", "update_target")
     customer.createOrReplaceTempView("update_first_load")
@@ -2073,7 +2012,7 @@ object CoreQueries {
     * `VERSION AS OF` 0 — only the first batch is visible.
     */
   def timeTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    val nation = spark.read.parquet(p(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
     val table = LakeTable(spark, scratch("tt"))
     table.append(nation)
     table.append(nation.withColumn("n_nationkey", col("n_nationkey") + 100))
@@ -2090,8 +2029,7 @@ object CoreQueries {
     * (LakeTable.replacePartitions narrows older commit scopes).
     */
   def scd1Partitioned(spark: SparkSession, sfDir: String): DataFrame = {
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(
         col("c_custkey"),
         col("c_name"),
@@ -2126,8 +2064,7 @@ object CoreQueries {
   def scd2Partitioned(spark: SparkSession, sfDir: String): DataFrame = {
     val t1 = Timestamp.valueOf("2020-01-01 00:00:00")
     val t2 = Timestamp.valueOf("2020-02-01 00:00:00")
-    val customer = spark.read
-      .parquet(p(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .select(
         col("c_custkey"),
         col("c_name"),
@@ -2173,7 +2110,7 @@ object CoreQueries {
     * (commit timestamps excluded — wall clock).
     */
   def snapshotsListing(spark: SparkSession, sfDir: String): DataFrame = {
-    val nation = spark.read.parquet(p(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
     val table = LakeTable(spark, scratch("snap"))
     table.append(nation)
     table.append(nation)

@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Sessions.tablePath
 import graft.ext.{Clustering, Dedup, Embeddings, LanguageModel, Multimodal, Sampling, Similarity, TextAnalysis}
+import graft.sources.Testdata
 
 /** Training-data-pipeline extension queries (the BASELINE north star):
   * text analysis, dedup family, similarity search, multimodal plumbing
@@ -71,10 +71,10 @@ object ExtQueries {
   }
 
   private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(tablePath(sfDir, "documents"))
+    Testdata.read(spark, sfDir, "documents")
 
   private def embs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(tablePath(sfDir, "embeddings"))
+    Testdata.read(spark, sfDir, "embeddings")
 
   /** documents ∪ exact copies (doc_id%7=0, shifted id): exact-dedup input. */
   private def corpusExactDups(d: DataFrame): DataFrame =
@@ -876,7 +876,7 @@ object ExtQueries {
 
   /** JSON-path extraction from the events `props` payload column. */
   def jsonPath(spark: SparkSession, sfDir: String): DataFrame =
-    graft.sources.Testdata
+    Testdata
       .events(spark, sfDir)
       .select(
         col("event_id"),
@@ -1498,7 +1498,7 @@ object ExtQueries {
     * unbounded `levenshtein` under the same ≤ 1 predicate.
     */
   def fuzzyJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val parts = spark.read.parquet(tablePath(sfDir, "part"))
+    val parts = Testdata.read(spark, sfDir, "part")
       .select(col("p_partkey"), lower(col("p_name")).as("name"))
     val probes = parts
       .filter(col("p_partkey") % 3 === 0 && length(col("name")) >= 4)
@@ -1678,7 +1678,7 @@ object ExtQueries {
 
   private[graft] def fuzzyJoinQGram(
       spark: SparkSession, sfDir: String, dispatchAt: Double): DataFrame = {
-    val parts = spark.read.parquet(tablePath(sfDir, "part"))
+    val parts = Testdata.read(spark, sfDir, "part")
       .select(col("p_partkey"), lower(col("p_name")).as("name"))
     val probes = parts
       .filter(col("p_partkey") % 3 === 0 && length(col("name")) >= 4)
@@ -1804,7 +1804,7 @@ object ExtQueries {
     * probe-repartition plan shape.
     */
   def fuzzyJoinDeletes(spark: SparkSession, sfDir: String): DataFrame = {
-    val parts = spark.read.parquet(tablePath(sfDir, "part"))
+    val parts = Testdata.read(spark, sfDir, "part")
       .select(col("p_partkey"), lower(col("p_name")).as("name"))
     val probes = parts
       .filter(col("p_partkey") % 3 === 0 && length(col("name")) >= 4)
@@ -2862,8 +2862,7 @@ object ExtQueries {
     */
   def skewProfile(spark: SparkSession, sfDir: String): DataFrame = {
     def profile(table: String, keyCol: String): DataFrame =
-      spark.read
-        .parquet(tablePath(sfDir, table))
+      Testdata.read(spark, sfDir, table)
         .groupBy(col(keyCol).as("k"))
         .agg(count(lit(1)).as("cnt"))
         .agg(

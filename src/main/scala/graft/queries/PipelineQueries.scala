@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Sessions.tablePath
+import graft.sources.Testdata
 import graft.tables.{LakeTable, Merge}
 
 /** End-to-end lakehouse pipeline over the testdata star schema: bronze
@@ -22,9 +22,9 @@ object PipelineQueries {
 
   def pipelineDim(spark: SparkSession, sfDir: String): DataFrame = {
     val root = graft.util.TempDirs.scratch("pipe")
-    val customer = spark.read.parquet(tablePath(sfDir, "customer"))
-    val nation = spark.read.parquet(tablePath(sfDir, "nation"))
-    val region = spark.read.parquet(tablePath(sfDir, "region"))
+    val customer = Testdata.read(spark, sfDir, "customer")
+    val nation = Testdata.read(spark, sfDir, "nation")
+    val region = Testdata.read(spark, sfDir, "region")
 
     // bronze: append with ingestion metadata, partitioned by ingest date
     val bronze = LakeTable(spark, s"$root/bronze/raw_customer")

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Sessions.tablePath
 import graft.operators.Skew
 import graft.sources.Testdata
 import graft.streaming.StreamJobs
@@ -209,11 +208,9 @@ object ScaleQueries {
     * salt is an execution detail, not a semantic one).
     */
   def skewSaltedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = spark.read
-      .parquet(tablePath(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .withColumnRenamed("o_custkey", "custkey")
-    val customer = spark.read
-      .parquet(tablePath(sfDir, "customer"))
+    val customer = Testdata.read(spark, sfDir, "customer")
       .withColumnRenamed("c_custkey", "custkey")
       .select(col("custkey"), col("c_name"), col("c_mktsegment"))
     Skew
@@ -249,15 +246,15 @@ object ScaleQueries {
     // the bucketed write itself the bottleneck — 8 buckets measured 17×
     // on 10× data at sf1→sf10 because 60M rows sort through 8 tasks.
     // The count probe is parquet-metadata-only.
-    val liRows = spark.read.parquet(tablePath(sfDir, "lineitem")).count()
+    val liRows = Testdata.read(spark, sfDir, "lineitem").count()
     val buckets = math.max(8L, math.min(256L, liRows / 1000000L * 8L)).toInt
-    spark.read.parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_extendedprice"))
       .repartition(buckets, col("l_orderkey"))
       .write.mode("overwrite").bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
       .option("path", graft.util.TempDirs.scratch(s"bkt-li-$tag"))
       .saveAsTable(t1)
-    spark.read.parquet(tablePath(sfDir, "orders"))
+    Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"))
       .repartition(buckets, col("o_orderkey"))
       .write.mode("overwrite").bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
@@ -285,8 +282,7 @@ object ScaleQueries {
     * in a different job (cross-job pruning over a lakehouse table).
     */
   def bloomPruneJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val urgent = spark.read
-      .parquet(tablePath(sfDir, "orders"))
+    val urgent = Testdata.read(spark, sfDir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderpriority"))
     // size the filter from the actual build-side cardinality: a constant
@@ -295,8 +291,7 @@ object ScaleQueries {
     val bloom = urgent.stat.bloomFilter("o_orderkey", nKeys, 0.01)
     // compiled probe expression (deserialized once per task), not a
     // ScalaUDF: keeps the hot pre-shuffle filter out of the interpreter
-    spark.read
-      .parquet(tablePath(sfDir, "lineitem"))
+    Testdata.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_extendedprice"))
       .filter(graft.functions.VectorExprs.bloomMightContain(bloom, col("l_orderkey")))
       .join(urgent, col("l_orderkey") === col("o_orderkey"))
@@ -317,8 +312,7 @@ object ScaleQueries {
     */
   def deleteWhere(spark: SparkSession, sfDir: String): DataFrame = {
     val table = graft.tables.LakeTable(spark, graft.util.TempDirs.scratch("delw"))
-    val orders = spark.read
-      .parquet(tablePath(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderpriority"))
     table.append(orders, partitionBy = Seq("o_orderstatus"))
     // delete all F-status rows (whole partition vanishes) AND every very
@@ -376,8 +370,7 @@ object ScaleQueries {
     */
   def bloomPointLookup(spark: SparkSession, sfDir: String): DataFrame = {
     val table = graft.tables.LakeTable(spark, graft.util.TempDirs.scratch("bloomlk"))
-    val orders = spark.read
-      .parquet(tablePath(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
     table.append(
       orders,
@@ -406,8 +399,7 @@ object ScaleQueries {
     */
   def deleteDv(spark: SparkSession, sfDir: String): DataFrame = {
     val table = graft.tables.LakeTable(spark, graft.util.TempDirs.scratch("deldv"))
-    val orders = spark.read
-      .parquet(tablePath(sfDir, "orders"))
+    val orders = Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     table.append(orders)
     table.deleteWhereDV(col("o_totalprice") > 400000.0)
@@ -433,7 +425,7 @@ object ScaleQueries {
     */
   def schemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
     val table = Catalog(spark, graft.util.TempDirs.scratch("sevo")).table("silver", "nation_evo")
-    val nation = spark.read.parquet(tablePath(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
     table.append(nation.select(col("n_nationkey"), col("n_name")))
     table.append(nation.select(col("n_nationkey"), col("n_name"), col("n_regionkey")))
     table.read()
@@ -450,8 +442,8 @@ object ScaleQueries {
   def sqlOverCatalog(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("cat"))
     cat.createSchema("gold")
-    cat.table("gold", "nation").append(spark.read.parquet(tablePath(sfDir, "nation")))
-    cat.table("gold", "region").append(spark.read.parquet(tablePath(sfDir, "region")))
+    cat.table("gold", "nation").append(Testdata.read(spark, sfDir, "nation"))
+    cat.table("gold", "region").append(Testdata.read(spark, sfDir, "region"))
     cat.attachSqlCatalog("lake")
     cat.sql(
       """SELECT r.r_name AS region_name, count(*) AS n_nations
@@ -473,9 +465,9 @@ object ScaleQueries {
     val root = graft.util.TempDirs.scratch("catv2")
     val cat = Catalog(spark, root)
     cat.createSchema("gold")
-    val nation = spark.read.parquet(tablePath(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
     cat.table("gold", "nation").append(nation.filter(col("n_nationkey") % 2 === 0))
-    cat.table("gold", "region").append(spark.read.parquet(tablePath(sfDir, "region")))
+    cat.table("gold", "region").append(Testdata.read(spark, sfDir, "region"))
     cat.attachSqlCatalog("lake")
     // second wave after attach: the SQL read below must see it
     cat.table("gold", "nation").append(nation.filter(col("n_nationkey") % 2 =!= 0))
@@ -497,7 +489,7 @@ object ScaleQueries {
   def sqlTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("sqltt"))
     cat.createSchema("gold")
-    val nation = spark.read.parquet(tablePath(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
     val t = cat.table("gold", "nation")
     t.append(nation)
     t.append(nation.withColumn("n_nationkey", col("n_nationkey") + 100))
@@ -518,7 +510,7 @@ object ScaleQueries {
   def ctasSql(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("ctas"))
     cat.createSchema("gold")
-    cat.table("gold", "nation").append(spark.read.parquet(tablePath(sfDir, "nation")))
+    cat.table("gold", "nation").append(Testdata.read(spark, sfDir, "nation"))
     cat.attachSqlCatalog("lake")
     cat.sql(
       """CREATE TABLE lake.gold.nation_named AS
@@ -541,7 +533,7 @@ object ScaleQueries {
   def alterSql(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("altersql"))
     cat.createSchema("gold")
-    val nation = spark.read.parquet(tablePath(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
     cat.table("gold", "nation").append(nation)
     cat.attachSqlCatalog("lake")
@@ -582,7 +574,7 @@ object ScaleQueries {
   def snapshotsMetaSql(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("snapmeta"))
     cat.createSchema("gold")
-    val nation = spark.read.parquet(tablePath(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
     val t = cat.table("gold", "nation")
     t.append(nation)
     t.append(nation)
@@ -611,7 +603,7 @@ object ScaleQueries {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("pddl"))
     cat.createSchema("gold")
     cat.attachSqlCatalog("lake")
-    spark.read.parquet(tablePath(sfDir, "orders"))
+    Testdata.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
       .createOrReplaceTempView("pddl_src")
     cat.sql(
@@ -687,7 +679,7 @@ object ScaleQueries {
   def callMaintenance(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("callm"))
     cat.createSchema("gold")
-    val nation = spark.read.parquet(tablePath(sfDir, "nation"))
+    val nation = Testdata.read(spark, sfDir, "nation")
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
     val t = cat.table("gold", "nation")
     (0 to 4).foreach(r => t.append(nation.filter(col("n_regionkey") === r)))
@@ -778,7 +770,7 @@ object ScaleQueries {
     val cat = Catalog(spark, graft.util.TempDirs.scratch("sqlpd"))
     cat.createSchema("gold")
     cat.table("gold", "orders").append(
-      spark.read.parquet(tablePath(sfDir, "orders"))
+      Testdata.read(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus")))
     cat.attachSqlCatalog("lake")
     cat.sql(

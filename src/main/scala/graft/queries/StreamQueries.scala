@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -84,6 +84,7 @@ object StreamQueries {
     StreamJobs.stageEnvelope(input, Seq("event_type", "event_id"), s"$wd/stage")
     val bronze = StreamJobs.runIngest(spark, eventsSchema, "ts", wd, partitioned = true)
     spark.read
+      .schema(StreamJobs.ingestedSchema(spark, eventsSchema, "ts"))
       .parquet(bronze)
       .select(
         col("event_id"),
@@ -365,7 +366,7 @@ object StreamQueries {
     events.filter(col("ts") >= cut).write.mode("append").parquet(src)
     StreamJobs.runStreamingFunnel(spark, src, eventsSchemaNoProps, checkpoint, out)
     val sent = 4102444800L
-    val finalStates = spark.read.parquet(out)
+    val finalStates = spark.read.schema(Encoders.product[StreamJobs.FunnelState].schema).parquet(out)
       .groupBy(col("user_id"))
       .agg(max(struct(col("n"), col("s"), col("c"), col("p"))).as("f"))
     finalStates.agg(
@@ -507,7 +508,7 @@ object StreamQueries {
     StreamJobs.runStreamingEwma(spark, src, eventsSchemaNoProps, checkpoint, out)
     events.filter(col("ts") >= cut).write.mode("append").parquet(src)
     StreamJobs.runStreamingEwma(spark, src, eventsSchemaNoProps, checkpoint, out)
-    spark.read.parquet(out)
+    spark.read.schema(Encoders.product[StreamJobs.EwmaState].schema).parquet(out)
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("ewma"))).as("s"))
       .select(
@@ -537,7 +538,7 @@ object StreamQueries {
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType)))
-    val d = spark.read.parquet(graft.Sessions.tablePath(sfDir, "documents"))
+    val d = Testdata.read(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val wave1 = d.filter(col("doc_id") % 3 =!= 2)
       .unionByName(d.filter(col("doc_id") % 10 === 0)
@@ -733,7 +734,7 @@ object StreamQueries {
   def streamQualityGate(spark: SparkSession, sfDir: String): DataFrame = {
     val wd = workDir("squality")
     val src = s"$wd/src"
-    val d = spark.read.parquet(graft.Sessions.tablePath(sfDir, "documents"))
+    val d = Testdata.read(spark, sfDir, "documents")
     d.write.mode("overwrite").parquet(src)
     StreamJobs.runStatelessTransform(
       spark, src, d.schema,

@@ -1,21 +1,27 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 import graft.Sessions.tablePath
 
 /** Readers for the driver-generated testdata corpus (TESTDATA.md).
   *
+  * Every table is read with its schema passed in: the schema comes from
+  * one parquet footer read on the driver, so building the DataFrame
+  * runs no Spark job (a schema-less `spark.read.parquet` runs one to
+  * read that same footer).
+  *
   * `events.parquet` has shipped with two different `ts` encodings across
-  * testdata generations, so the reader probes the parquet footer and
-  * branches:
+  * testdata generations, so its reader checks the footer and branches:
   *
   *   - parquet TIMESTAMP(NANOS): Spark can't read it natively
   *     (PARQUET_TYPE_ILLEGAL); the documented escape hatch
@@ -37,71 +43,94 @@ import graft.Sessions.tablePath
   */
 object Testdata {
 
+  /** The one reader of a testdata table: what `spark.read.parquet` of
+    * `<sfDir>/<table>.parquet` reads (`events` through [[events]]).
+    */
   def read(spark: SparkSession, sfDir: String, table: String): DataFrame =
     table match {
       case "events" => events(spark, sfDir)
-      case t => spark.read.parquet(tablePath(sfDir, t))
+      case t => asStored(spark, tablePath(sfDir, t))
     }
 
-  /** Does any `ts` column in the footprint carry TIMESTAMP(NANOS)?
-    * Probes one parquet footer under `path` (file or directory) with
-    * parquet-hadoop directly — cheap, and independent of the Spark
-    * conf whose value the answer decides.
-    *
-    * Contract: local-filesystem paths with a UNIFORM ts encoding across
-    * part files (true of the driver-generated testdata this reads; a
-    * remote URI would need the Hadoop FileSystem API instead of
-    * java.nio). The probed file is the lexicographically first .parquet
-    * so the answer is deterministic regardless of directory-walk order.
+  /** The parquet table at `path` with the schema its footer declares:
+    * what `spark.read.parquet(path)` reads. A tool that copies testdata
+    * as stored (`GenScale`) reads `events` through this too.
     */
-  private def hasNanosTs(spark: SparkSession, path: String): Boolean = {
-    val p = java.nio.file.Paths.get(path)
-    val file =
-      if (java.nio.file.Files.isDirectory(p)) {
-        // recurse: a partitioned layout keeps its part files in subdirs
-        val walk = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          val candidates = walk.iterator().asScala.filter { c =>
-            c.toString.endsWith(".parquet") && java.nio.file.Files.isRegularFile(c)
-          }
-          if (candidates.isEmpty) return false
-          candidates.minBy(_.toString)
-        } finally walk.close()
-      } else p
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toString), new Configuration()))
-    try {
-      val fields = reader.getFileMetaData.getSchema.getFields
-      (0 until fields.size()).exists { i =>
-        val f = fields.get(i)
-        f.getName == "ts" && (f.getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == TimeUnit.NANOS
-          case _ => false
-        })
-      }
-    } finally reader.close()
+  private[graft] def asStored(spark: SparkSession, path: String): DataFrame = {
+    val (file, meta) = footer(spark, path)
+    spark.read.schema(sparkSchema(spark, file, meta)).parquet(path)
   }
 
-  /** Events table reader, branching on the parquet ts encoding (see
-    * [[hasNanosTs]]). Note: the first nanos-encoded read flips
-    * `spark.sql.legacy.parquet.nanosAsLong` on for the REST of the
-    * session — strict fail-loudly behavior for unrelated raw nanos
-    * reads holds only until that first call; afterwards they decode as
-    * LongType like any legacy read.
+  /** Events table reader, branching on the parquet ts encoding of the
+    * same footer its schema comes from. Note: the first nanos-encoded
+    * read flips `spark.sql.legacy.parquet.nanosAsLong` on for the REST
+    * of the session — strict fail-loudly behavior for unrelated raw
+    * nanos reads holds only until that first call; afterwards they
+    * decode as LongType like any legacy read.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val path = tablePath(sfDir, "events")
-    if (hasNanosTs(spark, path))
+    val (file, meta) = footer(spark, path)
+    // before the schema conversion, which reads the conf
+    if (hasNanosTs(meta))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path)
+    val raw = spark.read.schema(sparkSchema(spark, file, meta)).parquet(path)
     raw.schema("ts").dataType match {
       case LongType => // nanos-as-long escape hatch: truncate to micros
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => // micros NTZ: reinterpret in session TZ (UTC)
         raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
+    }
+  }
+
+  /** The footer of the one data file Spark's schema inference reads
+    * under `path`: the file itself, or a directory's lexicographically
+    * first data file at any depth (a partitioned layout keeps its part
+    * files in subdirectories), skipping the names Spark's file listing
+    * hides. Reached through the session's Hadoop configuration. A glob,
+    * a missing path and a directory with no data file fail here.
+    */
+  private def footer(spark: SparkSession, path: String): (Path, ParquetMetadata) = {
+    require(!path.exists("{}[]*?\\".contains(_)), s"not one testdata table but a glob: $path")
+    val root = new Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def dataFiles(dir: Path): Iterator[Path] =
+      fs.listStatus(dir).iterator.filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
+        if (s.isDirectory) dataFiles(s.getPath) else Iterator(s.getPath)
+      }
+    val file =
+      if (fs.getFileStatus(root).isFile) root
+      else dataFiles(root).minByOption(_.toString)
+        .getOrElse(throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try (file, reader.getFooter)
+    finally reader.close()
+  }
+
+  /** The schema Spark's inference derives from this footer under the
+    * session's parquet settings.
+    */
+  private def sparkSchema(spark: SparkSession, file: Path, meta: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, meta), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
+  /** Does a top-level `ts` column carry TIMESTAMP(NANOS)? The answer
+    * decides a conf the schema conversion reads, so it comes from the
+    * parquet schema itself. Part files share one encoding (true of the
+    * driver-generated testdata), so one footer answers for all.
+    */
+  private def hasNanosTs(meta: ParquetMetadata): Boolean = {
+    val fields = meta.getFileMetaData.getSchema.getFields
+    (0 until fields.size()).exists { i =>
+      val f = fields.get(i)
+      f.getName == "ts" && (f.getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == TimeUnit.NANOS
+        case _ => false
+      })
     }
   }
 }

@@ -88,7 +88,8 @@ object StreamJobs {
   private[graft] object Sink {
     /** An in-memory table named by the runner: the stopped query's
       * `name`. The name comes from the checkpoint dir, which every
-      * memory-sink job makes fresh per call.
+      * memory-sink job makes fresh per call: its tag and UUID, as in
+      * `agg_<uuid>`.
       */
     case object Memory extends Sink
     /** A function over each micro-batch and its id. */
@@ -136,7 +137,10 @@ object StreamJobs {
       transformWithState: Boolean = false,
       availableNow: Boolean = false,
       flush: Option[() => Unit] = None): StreamingQuery = {
-    val name = Files.createDirectories(Paths.get(checkpoint)).getFileName.toString.replace('-', '_')
+    // the job's tag leads the name (`agg_<uuid>`): progress readers split
+    // a run's batches by query on it
+    val name = Files.createDirectories(Paths.get(checkpoint)).getFileName.toString
+      .stripPrefix("checkpoint-").replace('-', '_')
     val confs = Seq(
       "spark.sql.shuffle.partitions" -> StatePartitions.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
@@ -290,6 +294,13 @@ object StreamJobs {
     bronze
   }
 
+  /** The columns [[runIngest]] writes to bronze: the payload and its
+    * date parts.
+    */
+  def ingestedSchema(spark: SparkSession, payloadSchema: StructType, tsCol: String): StructType =
+    graft.operators.Ops.datePartCols(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], payloadSchema), tsCol).schema
+
   /** Stream-static join: enrich a stream against a static (batch)
     * dimension — stateless, no watermark needed; the static side is
     * broadcast per micro-batch, so the stream never shuffles. The
@@ -343,17 +354,18 @@ object StreamJobs {
           transform(batch).write.mode("overwrite").parquet(dest.toString)
         }
       })
-    // empty source → foreachBatch never fired → no committed batch dirs
-    // and schema inference would throw; derive the result schema by
-    // applying the transform to an empty batch instead (the sibling
-    // memory-sink runners return empty tables the same way). Reading the
-    // committed leaf dirs as explicit roots keeps the batch dir name out
-    // of the schema (no partition-column inference).
+    // the transform over an empty batch names the result schema: the
+    // committed batch dirs are read with it, and an empty source (no
+    // committed batch dir) returns it empty, as the sibling memory-sink
+    // runners do. Reading the committed leaf dirs as explicit roots
+    // keeps the batch dir name out of the schema (no partition-column
+    // inference).
+    val empty = transform(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sourceSchema))
     val batchDirs = Option(new java.io.File(out).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && new java.io.File(f, "_SUCCESS").exists())
-    if (batchDirs.nonEmpty) spark.read.parquet(batchDirs.map(_.toString): _*)
-    else transform(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sourceSchema)).limit(0)
+    if (batchDirs.nonEmpty) spark.read.schema(empty.schema).parquet(batchDirs.map(_.toString): _*)
+    else empty.limit(0)
   }
 
   /** Stateless streaming transform: stream the source, apply a pure
@@ -936,7 +948,7 @@ object StreamJobs {
       .withColumn(keyCol, lit(sentinelKey))
     stageEnvelope(sentinel, Seq(keyCol, idCol), stage)
     val bronze = runIngest(spark, payloadSchema, tsCol, workDir)
-    val bronzeSchema = spark.read.parquet(bronze).schema
+    val bronzeSchema = ingestedSchema(spark, payloadSchema, tsCol)
 
     runStatefulAgg(
       spark, bronze, bronzeSchema, tsCol, workDir, () => (),

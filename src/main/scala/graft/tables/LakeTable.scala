@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** A minimal lakehouse table: parquet data + a JSON commit log.
   *
@@ -273,7 +273,7 @@ final class LakeTable(val spark: SparkSession, val root: String) {
               val bad = dir.filter(!coalesce(expr(p), lit(false))).count()
               if (bad > 0) Some(n -> bad) else None
             }
-            (statsOf(Seq(commitName), present, colMapping), vi, None)
+            (statsOf(Seq(commitName), physSchema, present, colMapping), vi, None)
         }
     }
     if (violations.nonEmpty) {
@@ -485,16 +485,18 @@ final class LakeTable(val spark: SparkSession, val root: String) {
 
   /** Manifest-level (min, max) stats for the just-written commit dir:
     * one agg over the NEW files only (parquet footer stats make this
-    * near-free), never a scan of the table. Columns without a non-null
+    * near-free), never a scan of the table. The files are read with the
+    * physical schema they were written with. Columns without a non-null
     * value are simply absent from the result.
     */
   private def statsOf(
       newDirs: Seq[String],
+      physSchema: StructType,
       statsCols: Seq[String],
       colMapping: Map[String, String] = Map.empty): Map[String, (String, String)] = {
     if (statsCols.isEmpty || newDirs.isEmpty) return Map.empty
     val paths = newDirs.map(d => dataDir.resolve(d).toString)
-    val batch0 = spark.read.option("basePath", paths.head).parquet(paths: _*)
+    val batch0 = spark.read.option("basePath", paths.head).schema(physSchema).parquet(paths: _*)
     // files store physical names — project ONLY the probed columns back
     // to their logical names (never a blanket phys→log rename fold: a
     // mapping like {c→a, a→a__g2} collides mid-fold, and an old file
@@ -1309,8 +1311,8 @@ final class LakeTable(val spark: SparkSession, val root: String) {
       if (m.dvFiles.isEmpty) base
       else {
         val dv = spark.read
+          .schema(DvSchema)
           .parquet(m.dvFiles.map(f => dvDir.resolve(f).toString): _*)
-          .select(col("file_rel"), col("row_idx"))
         base.join(
           dv,
           base("__dv_file") === dv("file_rel") && base("__dv_idx") === dv("row_idx"),
@@ -1761,7 +1763,8 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     // of the same job. The files carry physical names; stats stay keyed
     // by LOGICAL name (the readBetween probe key).
     def physOf(c: String): String = prev.colMapping.getOrElse(c, c)
-    val written = spark.read.option("basePath", dest.toString).parquet(dest.toString)
+    val written = spark.read.option("basePath", dest.toString).schema(physDf.schema)
+      .parquet(dest.toString)
     val present = statsCols.filter(c => written.columns.contains(physOf(c)))
     val destAbs = dest.toAbsolutePath
     val fileRows: Array[org.apache.spark.sql.Row] =
@@ -2181,6 +2184,12 @@ object LakeTable {
 
   /** The batch flag `append(skipIfEmpty = true)` adds: every row counts. */
   private val AppendFlag = "__graft_append_row"
+
+  /** A deletion-vector sidecar's rows: a data file, relative to the
+    * data dir, and the index of a deleted row in it.
+    */
+  private val DvSchema = StructType(Seq(
+    StructField("file_rel", StringType), StructField("row_idx", LongType)))
 
   /** Parquet bloom-filter write options for point-lookup columns —
     * pass to `append(writeOptions = ...)`. Each column gets a split-

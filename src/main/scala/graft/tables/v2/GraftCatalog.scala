@@ -77,7 +77,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
 
   override def loadTable(ident: Identifier): Table = {
     val p = dirOf(ident.namespace() :+ ident.name())
-    if (LakeTable.isTable(p)) return new GraftSqlTable(p.toString)
+    // one log listing: the tip both decides that the table exists and
+    // gives the table its schema
+    LakeTable(SparkSession.active, p.toString).tip() match {
+      case Some(m) => return GraftSqlTable.atTip(p.toString, m)
+      case None =>
+    }
     // Iceberg-style metadata tables: `lake.<ns>.<t>.snapshots` /
     // `.files` — the trailing identifier selects a metadata relation of
     // the table named by the prefix (the reference queries the same
@@ -414,8 +419,13 @@ object GraftCatalog {
   * that committed snapshot — SQL time travel with the exact semantics
   * of the programmatic `read(versionAsOf = Some(n))`.
   */
-final class GraftSqlTable(rootPath: String, versionAsOf: Option[Long] = None)
+final class GraftSqlTable private (
+    rootPath: String,
+    versionAsOf: Option[Long],
+    tipAtLoad: Option[LakeTable.Manifest])
   extends Table with SupportsRead {
+
+  def this(rootPath: String, versionAsOf: Option[Long] = None) = this(rootPath, versionAsOf, None)
 
   /** Table root on disk (for registry lookups, e.g. the MV rewrite). */
   def root: String = rootPath
@@ -428,7 +438,7 @@ final class GraftSqlTable(rootPath: String, versionAsOf: Option[Long] = None)
   override def name(): String =
     versionAsOf.fold(rootPath)(v => s"$rootPath@v$v")
 
-  private lazy val manifest: LakeTable.Manifest = {
+  private lazy val manifest: LakeTable.Manifest = tipAtLoad.getOrElse {
     val t = LakeTable(SparkSession.active, rootPath)
     versionAsOf match {
       case Some(v) =>
@@ -1039,6 +1049,12 @@ object GraftMetaTable {
 }
 
 object GraftSqlTable {
+  /** The current version of the table at `rootPath`, whose manifest
+    * `tip` the caller has already read.
+    */
+  private[v2] def atTip(rootPath: String, tip: LakeTable.Manifest): GraftSqlTable =
+    new GraftSqlTable(rootPath, None, Some(tip))
+
   // snapshot sizes keyed by (root, version, probe limit) — commit dirs
   // are immutable so entries never go stale; bounded by periodic clear
   private[v2] val sizeCache =

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.Testdata
+
 /** Scale-rehearsal data generator: replicate an sf directory `copies`×
   * into a new directory with shifted key spaces, for measuring
   * per-query cost slopes beyond the largest driver-shipped SF.
@@ -47,7 +49,7 @@ object GenScale {
 
     def replicate(table: String)(mutate: (DataFrame, Int) => DataFrame): Unit = {
       if (onlyTables.exists(!_.contains(table))) return
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = Testdata.asStored(spark, s"$src/$table.parquet")
       val out = (0 until copies).map(i => mutate(base, i)).reduce(_ unionByName _)
       out.write.mode("overwrite").parquet(s"$dst/$table.parquet")
       println(s"[gen] $table: ${base.count()} -> ${out.count()} rows")
@@ -55,7 +57,7 @@ object GenScale {
 
     // dims: verbatim single copy (fact copies reference the same keys)
     Seq("nation", "region").filter(t => onlyTables.forall(_.contains(t))).foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      Testdata.asStored(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
     }
 

@@ -1,9 +1,11 @@
 package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.lit
@@ -56,5 +58,40 @@ trait SparkSpec extends AnyFunSuite {
       assert(marked.await(30, TimeUnit.SECONDS), "marker execution never reported")
       seenRuns.asScala.toSeq
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The number of Spark jobs `f` starts, SQL or not (a schema-inferring
+    * file read runs its job outside any SQL execution). Marker jobs
+    * named by their description bound the count, as the marker actions
+    * of [[executionsRunBy]] do.
+    */
+  def jobsStartedBy(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val (start, end) = (s"$tag-start", s"$tag-end")
+    var started = false // read and set on the listener bus's thread only
+    val jobs = new AtomicInteger()
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))) match {
+          case Some(`start`) => started = true
+          case Some(`end`) => marked.countDown()
+          case _ => if (started) jobs.incrementAndGet()
+        }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(start)
+      f
+      marker(end)
+      assert(marked.await(30, TimeUnit.SECONDS), "marker job never reported")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 }

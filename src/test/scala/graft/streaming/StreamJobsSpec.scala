@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.streaming.runtime.IncrementalExecution
 import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -227,6 +229,27 @@ class StreamJobsSpec extends SparkSpec {
     val firstBatch = scala.io.Source.fromFile(new java.io.File(aggCheckpoint.head, "offsets/0"))
     val logged = try firstBatch.mkString finally firstBatch.close()
     assert(logged.contains(s""""$providerKey":"$rocksDb""""), logged)
+  }
+
+  test("a windowed aggregation's memory query is named agg_<uuid>, fresh per run") {
+    // progress readers tell the aggregation hop's batches from the
+    // ingest hop's by this name
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = names.add(e.name)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val src = s"${scratchDir("agg-name")}/src"
+    Seq((1L, mk("2024-01-01 10:00:10"), "A", 5.0), (2L, mk("2024-03-01 00:00:00"), "__sentinel__", 0.0))
+      .toDF("id", "ts", "sym", "v").write.parquet(src)
+    spark.streams.addListener(listener)
+    try (1 to 2).foreach { _ =>
+      StreamJobs.runWindowedAgg(
+        spark, src, schema, "ts", "id", "sym", "v", scratchDir("agg-name"), () => ()).collect()
+    } finally spark.streams.removeListener(listener)
+    val seen = names.toArray(Array.empty[String]).toSeq
+    assert(seen.size == 2 && seen.forall(_.startsWith("agg_")) && seen.distinct.size == 2, seen)
   }
 
   test("stateful streams run without AQE and leave the session's AQE setting alone") {
